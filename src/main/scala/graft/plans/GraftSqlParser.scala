@@ -630,20 +630,20 @@ case class TxLogDetailCommand(table: String) extends LeafRunnableCommand {
     AttributeReference("declares_schema", BooleanType, nullable = false)(),
     AttributeReference("n_rows", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
-    val vs = TxLog.versions(spark, table)
-    require(vs.nonEmpty, s"txlog: no commits in $table")
-    val live = TxLog.snapshotFiles(spark, table)
+    // one listing, one snapshot: every column describes the same version
+    val log = TxLog.listLog(spark, table)
+    require(log.commits.nonEmpty, s"txlog: no commits in $table")
+    val snap = TxLog.replay(spark, table, log, None)
     val root = new org.apache.hadoop.fs.Path(table)
     val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = live.map(p => fsys.getFileStatus(
+    val bytes = snap.files.map(p => fsys.getFileStatus(
       new org.apache.hadoop.fs.Path(table, p)).getLen).sum
-    Seq(Row(table, vs.last, TxLog.earliestReadableVersion(spark, table),
-      vs.size.toLong, live.size.toLong, bytes,
-      TxLog.dvAt(spark, table, None).size.toLong,
-      TxLog.schemaAt(spark, table).isDefined,
+    Seq(Row(table, snap.version, TxLog.earliestReadableVersion(spark, table),
+      log.commits.size.toLong, snap.files.size.toLong, bytes,
+      snap.liveDvs.size.toLong, snap.schema.isDefined,
       // exact, metadata-only ([[TxLog.countRows]]): the log's recorded
       // per-file counts minus the dv mask — no data scan
-      TxLog.countRows(spark, table)))
+      TxLog.countRowsIn(spark, table, snap)._1))
   }
 }
 

@@ -86,6 +86,12 @@ case class MergeNotMatchedInsert(cond: Option[String],
   *
   * Commit format: `_log/%08d.json`, one action per line:
   * `{"a":"add","p":"<relative path>"}` / `{"a":"remove","p":"..."}`.
+  * Checkpoint format ([[checkpointEvery]]): `_log/%08d.ckpt`, the same
+  * line format, the only one there is; a parquet `_log/%08d.ckptpq`
+  * written by an older build is not listed, so a read replays from an
+  * earlier `.ckpt` or from commit 0 (commits are never deleted).
+  * Metadata reads list `_log` once ([[listLog]]) and fold the newest
+  * checkpoint plus the commit suffix once into a [[Snapshot]].
   */
 object TxLog {
 
@@ -97,17 +103,30 @@ object TxLog {
 
   private def logDir(table: String) = new Path(table, "_log")
 
-  /** Sorted commit versions present in the log. */
-  def versions(spark: SparkSession, table: String): Seq[Long] = {
+  private def commitPath(table: String, version: Long) =
+    new Path(logDir(table), f"$version%08d.json")
+
+  /** One listing of `_log`: the sorted commit versions and the sorted
+    * versions that carry a checkpoint. */
+  private[graft] final case class LogListing(commits: Seq[Long],
+                                             checkpoints: Seq[Long])
+
+  /** The only place the log directory is listed. */
+  private[graft] def listLog(spark: SparkSession, table: String): LogListing = {
     val dir = logDir(table)
     val f = fs(spark, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.endsWith(".json"))
-      .map(_.stripSuffix(".json").toLong)
-      .sorted
+    if (!f.exists(dir)) LogListing(Seq.empty, Seq.empty)
+    else {
+      val names = f.listStatus(dir).toSeq.map(_.getPath.getName)
+      def versionsOf(ext: String) =
+        names.filter(_.endsWith(ext)).map(_.stripSuffix(ext).toLong).sorted
+      LogListing(versionsOf(".json"), versionsOf(".ckpt"))
+    }
   }
+
+  /** Sorted commit versions present in the log. */
+  def versions(spark: SparkSession, table: String): Seq[Long] =
+    listLog(spark, table).commits
 
   /** Atomically create `path` holding `content` — the per-version
     * commit claim. Returns false iff the file already exists (another
@@ -186,7 +205,7 @@ object TxLog {
         stats.map(s => s"""{"a":"stats","p":"$s"}""") ++
         dvs.map(s => s"""{"a":"dv","p":"$s"}""") ++
         metas.map(m => s"""{"a":"meta","p":"$m"}""")
-    tryCreateExclusive(spark, new Path(logDir(table), f"$version%08d.json"),
+    tryCreateExclusive(spark, commitPath(table, version),
       lines.mkString("\n") + "\n")
   }
 
@@ -210,7 +229,7 @@ object TxLog {
                   asOf: Option[Long] = None): Map[String, String] = {
     val acc = scala.collection.mutable.LinkedHashMap.empty[String, String]
     versions(spark, table).filter(v => asOf.forall(v <= _)).foreach { v =>
-      readLogFile(spark, new Path(logDir(table), f"$v%08d.json")).foreach {
+      readLogFile(spark, commitPath(table, v)).foreach {
         case ("meta", payload) =>
           val cut = payload.indexOf('|')
           require(cut > 0, s"txlog: malformed meta payload in $table: $payload")
@@ -655,117 +674,24 @@ object TxLog {
     }
   }
 
-  /** How often a compacted snapshot of the live file set is written
-    * next to the log (`_log/%08d.ckpt`, same line format, adds only):
-    * reads replay last-checkpoint + suffix instead of the full commit
-    * prefix, making driver-side read latency O(checkpointEvery) in
-    * commit count instead of O(commits) — the cost that grows without
-    * bound on a long-lived table fed by streaming micro-batch commits
-    * (each [[appendSink]] batch is one commit). The public lakehouse
-    * answer (Delta's `_last_checkpoint`, Iceberg's snapshot manifests),
-    * reduced to this log's two-field format. */
+  /** How often a compacted snapshot of the table state is written next
+    * to the log (`_log/%08d.ckpt`, the commit line format: the declared
+    * schema, the live adds, their stats and their bound deletion
+    * vectors): reads replay last-checkpoint + suffix instead of the full
+    * commit prefix, making driver-side read latency O(checkpointEvery)
+    * in commit count instead of O(commits) — the cost that grows
+    * without bound on a long-lived table fed by streaming micro-batch
+    * commits (each [[appendSink]] batch is one commit). The public
+    * lakehouse answer (Delta's `_last_checkpoint`, Iceberg's snapshot
+    * manifests), reduced to this log's two-field format. */
   val checkpointEvery: Long = 10L
 
   private def ckptPath(table: String, version: Long) =
     new Path(logDir(table), f"$version%08d.ckpt")
 
-  private def ckptPqPath(table: String, version: Long) =
-    new Path(logDir(table), f"$version%08d.ckptpq")
-
-  /** Sorted versions that have a checkpoint snapshot (either format). */
-  def checkpointVersions(spark: SparkSession, table: String): Seq[Long] = {
-    val dir = logDir(table)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .collect {
-        case n if n.endsWith(".ckpt") => n.stripSuffix(".ckpt").toLong
-        case n if n.endsWith(".ckptpq") => n.stripSuffix(".ckptpq").toLong
-      }
-      .distinct.sorted
-  }
-
-  /** The session toggle for the checkpoint WRITE format: "text" (the
-    * line format — human-greppable, O(1) to open) or "parquet" (the
-    * public Delta design: columnar + compressed, the right shape once
-    * the live-file count makes the driver-side replay parse the
-    * bottleneck — measured in PERF.md). Readers auto-detect per
-    * checkpoint, so a table may carry a mix across its history. */
-  val CheckpointFormatKey = "spark.graft.txlog.checkpointFormat"
-
-  /** Read checkpoint `version`'s actions, whichever format it was
-    * written in. Parquet checkpoints are read DRIVER-SIDE through
-    * parquet-hadoop directly (no Spark job — replay latency must stay
-    * in the metadata path's microsecond-to-millisecond budget). */
-  private def readCheckpoint(spark: SparkSession, table: String,
-                             version: Long): Seq[(String, String)] = {
-    val txt = ckptPath(table, version)
-    if (fs(spark, txt).exists(txt)) return readLogFile(spark, txt)
-    val pq = ckptPqPath(table, version)
-    // same write-once contract as commits → same path-keyed cache
-    val cached = logParseCache.get(pq.toString)
-    if (cached != null) return cached
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), pq)
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .build()
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-      var g = reader.read()
-      while (g != null) {
-        buf += ((g.getString("a", 0), g.getString("p", 0)))
-        g = reader.read()
-      }
-      val parsed = buf.toSeq
-      if (logParseCache.size() > 65536) logParseCache.clear()
-      logParseCache.put(pq.toString, parsed)
-      parsed
-    } finally reader.close()
-  }
-
-  private val ckptParquetSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      "message graft_ckpt { required binary a (UTF8); required binary p (UTF8); }")
-
-  /** Write checkpoint `version` as ONE parquet file, driver-side,
-    * behind the same atomic-publish contract as commits: full content
-    * to a temp file, then hard-link (local) / rename (HDFS-like) into
-    * place — a racing reader can never see a partial checkpoint, and
-    * losing the claim to a twin is fine (content is a deterministic
-    * function of the log prefix). */
-  private def writeCheckpointParquet(spark: SparkSession, table: String,
-                                     version: Long,
-                                     lines: Seq[(String, String)]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    val target = ckptPqPath(table, version)
-    val tmp = new Path(logDir(table), f".$version%08d.ckptpq.${uniq()}.tmp")
-    val writer = ExampleParquetWriter.builder(tmp)
-      .withConf(spark.sparkContext.hadoopConfiguration)
-      .withType(ckptParquetSchema)
-      .build()
-    try {
-      val factory = new SimpleGroupFactory(ckptParquetSchema)
-      lines.foreach { case (a, p) =>
-        val g = factory.newGroup()
-        g.append("a", a); g.append("p", p)
-        writer.write(g)
-      }
-    } finally writer.close()
-    val f = fs(spark, target)
-    if (f.getUri.getScheme == "file") {
-      val local = java.nio.file.Paths.get(target.toUri.getPath)
-      val tmpLocal = java.nio.file.Paths.get(tmp.toUri.getPath)
-      try { java.nio.file.Files.createLink(local, tmpLocal); () }
-      catch { case _: java.nio.file.FileAlreadyExistsException => () }
-      f.delete(tmp, false) // hadoop-side delete clears the .crc sidecar too
-      ()
-    } else {
-      if (!f.rename(tmp, target)) f.delete(tmp, false)
-      ()
-    }
-  }
+  /** Sorted versions that have a checkpoint snapshot. */
+  def checkpointVersions(spark: SparkSession, table: String): Seq[Long] =
+    listLog(spark, table).checkpoints
 
   /** Parsed log files, cached by absolute path. Commit files and
     * checkpoints are WRITE-ONCE (published atomically via hard-link /
@@ -797,173 +723,149 @@ object TxLog {
     parsed
   }
 
-  /** Write the live-set snapshot for `version` (called by the commit
-    * paths on the [[checkpointEvery]] cadence; idempotent — a crash
-    * between commit and checkpoint just means the next read replays a
-    * slightly longer suffix, and the NEXT eligible commit writes one). */
-  /** All recorded stats payloads as of `asOf`, keyed (path, col) with
-    * the LAST recording winning — checkpoint + suffix replay. */
-  private def statsPayloadsAt(spark: SparkSession, table: String,
-                              asOf: Option[Long]): Seq[String] = {
-    val vs = versions(spark, table)
-    if (vs.isEmpty) return Seq.empty
-    val target = asOf.getOrElse(vs.last)
-    val startCkpt = checkpointVersions(spark, table).filter(_ <= target).lastOption
-    val acc = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
-    def fold(payload: String): Unit = {
-      val t = payload.split('|')
-      // 4 fields = integral min/max; 5 with trailing "s" = base64 string
-      // bounds; 5 with trailing "p" = base64 partition value; 5 with
-      // trailing "bf" = per-file bloom sidecar reference
-      require(t.length == 4 || (t.length == 5 &&
-        (t(4) == "s" || t(4) == "p" || t(4) == BloomSuffix)),
-        s"txlog: malformed stats payload in $table: $payload")
-      // a bloom reference COEXISTS with the same column's value bounds
-      // (both can be recorded for one file) — distinct last-wins slot
-      val cls = if (t.length == 5 && t(4) == BloomSuffix) "\u0000bf" else ""
-      acc((t(0), t(1) + cls)) = payload
-    }
-    startCkpt.foreach { cv =>
-      readCheckpoint(spark, table, cv).foreach {
-        case ("stats", s) => fold(s)
-        case _ => ()
-      }
-    }
-    vs.filter(v => v <= target && startCkpt.forall(v > _)).foreach { v =>
-      readLogFile(spark, new Path(logDir(table), f"$v%08d.json")).foreach {
-        case ("stats", s) => fold(s)
-        case _ => ()
-      }
-    }
-    acc.values.toSeq
-  }
-
-  /** Deletion-vector bindings as of `asOf`, keyed by data-file relative
-    * path with the LAST binding winning (a later MOR delete on the same
-    * file re-points it at a dv set that CONTAINS the earlier positions;
-    * a [[restore]] may legitimately re-point BACK to an earlier — or no
-    * — vector, which the same last-wins fold handles) — checkpoint +
-    * suffix replay, same shape as [[statsPayloadsAt]]. Payload format:
-    * `fileRel|dvDirRel`, with dvDirRel `-` meaning UNBOUND (the restore
-    * sentinel; [[dvAt]] filters it out). */
+  /** Deletion-vector payload format: `fileRel|dvDirRel`, with dvDirRel
+    * `-` meaning UNBOUND (the [[restore]] sentinel; [[dvAt]] filters it
+    * out). */
   private[sources] val DvUnbound = "-"
 
-  private[sources] def dvPayloadsAt(spark: SparkSession, table: String,
-                                    asOf: Option[Long]): Seq[(String, String)] = {
-    val vs = versions(spark, table)
-    if (vs.isEmpty) return Seq.empty
-    val target = asOf.getOrElse(vs.last)
-    val startCkpt = checkpointVersions(spark, table).filter(_ <= target).lastOption
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def fold(payload: String): Unit = {
-      val t = payload.split('|')
-      require(t.length == 2, s"txlog: malformed dv payload in $table: $payload")
-      acc(t(0)) = t(1)
+  /** The table state at one version, produced by ONE checkpoint +
+    * suffix fold ([[replay]]); every metadata accessor is a field read
+    * of it.
+    *  - `files`: live relative paths, first-added order;
+    *  - `schema`: the declared schema (None until a schema evolution
+    *    commits one — legacy tables read with the inferred parquet
+    *    schema);
+    *  - `stats`: recorded stats payloads, the LAST per (file, column)
+    *    winning (a bloom reference keeps its own slot beside the
+    *    column's value bounds);
+    *  - `dvs`: deletion-vector bindings, the LAST per file winning (a
+    *    later MOR delete re-points a file at a vector that CONTAINS the
+    *    earlier positions; a [[restore]] may re-point it BACK to an
+    *    earlier — or no — vector), [[DvUnbound]] sentinels included. */
+  private[graft] final case class Snapshot(version: Long, files: Seq[String],
+                                           schema: Option[StructType],
+                                           stats: Seq[String],
+                                           dvs: Seq[(String, String)]) {
+    lazy val liveSet: Set[String] = files.toSet
+
+    /** Live files' bound deletion-vector dirs ([[dvAt]]). */
+    lazy val liveDvs: Map[String, String] =
+      dvs.filter(p => liveSet.contains(p._1) && p._2 != DvUnbound).toMap
+
+    /** Physical name of logical column `c` (itself when the table
+      * declares no mapping — the legacy identity). */
+    def physical(c: String): String =
+      schema.flatMap(_.fields.find(_.name == c)).map(physicalName).getOrElse(c)
+  }
+
+  /** Fold the newest checkpoint at or before `asOf` (default: the latest
+    * listed commit) and the commit suffix after it into a [[Snapshot]].
+    * Lenient: an empty log folds to an empty snapshot, and a version the
+    * log does not hold folds whatever precedes it ([[snapshot]] is the
+    * loud entry). */
+  private[graft] def replay(spark: SparkSession, table: String,
+                            log: LogListing, asOf: Option[Long]): Snapshot = {
+    val target = asOf.getOrElse(log.commits.lastOption.getOrElse(-1L))
+    val startCkpt = log.checkpoints.filter(_ <= target).lastOption
+    val live = scala.collection.mutable.LinkedHashSet.empty[String]
+    var schema: Option[String] = None
+    val stats = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
+    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def fold(action: String, payload: String): Unit = action match {
+      case "add" => live += payload
+      case "remove" => live -= payload
+      case "schema" => schema = Some(payload)
+      case "stats" =>
+        val t = payload.split('|')
+        // 4 fields = integral min/max; 5 with trailing "s" = base64 string
+        // bounds; 5 with trailing "p" = base64 partition value; 5 with
+        // trailing "bf" = per-file bloom sidecar reference
+        require(t.length == 4 || (t.length == 5 &&
+          (t(4) == "s" || t(4) == "p" || t(4) == BloomSuffix)),
+          s"txlog: malformed stats payload in $table: $payload")
+        val cls = if (t.length == 5 && t(4) == BloomSuffix) "\u0000bf" else ""
+        stats((t(0), t(1) + cls)) = payload
+      case "dv" =>
+        val t = payload.split('|')
+        require(t.length == 2, s"txlog: malformed dv payload in $table: $payload")
+        dvs(t(0)) = t(1)
+      case _ => () // tag / txn / meta: commit markers, not table state
     }
     startCkpt.foreach { cv =>
-      readCheckpoint(spark, table, cv).foreach {
-        case ("dv", s) => fold(s)
-        case _ => ()
+      readLogFile(spark, ckptPath(table, cv)).foreach {
+        case (a @ ("add" | "schema" | "stats" | "dv"), p) => fold(a, p)
+        case (a, p) => throw new IllegalArgumentException(
+          s"txlog: checkpoint $cv carries non-add action $a for $p")
       }
     }
-    vs.filter(v => v <= target && startCkpt.forall(v > _)).foreach { v =>
-      readLogFile(spark, new Path(logDir(table), f"$v%08d.json")).foreach {
-        case ("dv", s) => fold(s)
-        case _ => ()
-      }
+    log.commits.filter(v => v <= target && startCkpt.forall(v > _)).foreach { v =>
+      readLogFile(spark, commitPath(table, v)).foreach { case (a, p) => fold(a, p) }
     }
-    acc.toSeq
+    Snapshot(target, live.toSeq, schema.map(decodeSchema), stats.values.toSeq,
+      dvs.toSeq)
+  }
+
+  /** Both directions fail loudly: a too-early version has no commits to
+    * replay; a too-late one names a snapshot that does not exist
+    * (silently answering with the latest would un-pin a pinned read). */
+  private def requireListed(log: LogListing, v: Long): Unit = {
+    require(log.commits.exists(_ <= v),
+      s"txlog: no commits at or before version $v")
+    require(v <= log.commits.last, // nonEmpty: the require above threw otherwise
+      s"txlog: version $v does not exist yet (latest: ${log.commits.last})")
+  }
+
+  /** The [[Snapshot]] at `asOf` (default: latest) from one listing and
+    * one fold; loud on a pinned version the log does not hold. */
+  private[graft] def snapshot(spark: SparkSession, table: String,
+                              asOf: Option[Long] = None): Snapshot = {
+    val log = listLog(spark, table)
+    asOf.foreach(requireListed(log, _))
+    replay(spark, table, log, asOf)
   }
 
   /** Live files' deletion-vector dirs as of `asOf` (empty for a table
-    * that never saw a MOR delete — the common case pays one log replay
-    * it was already doing). */
+    * that never saw a MOR delete). */
   def dvAt(spark: SparkSession, table: String,
-           asOf: Option[Long] = None): Map[String, String] = {
-    val live = snapshotFiles(spark, table, asOf).toSet
-    dvPayloadsAt(spark, table, asOf)
-      .filter(p => live.contains(p._1) && p._2 != DvUnbound).toMap
-  }
+           asOf: Option[Long] = None): Map[String, String] =
+    snapshot(spark, table, asOf).liveDvs
 
+  /** Write the table-state snapshot for `version` (called by the commit
+    * paths on the [[checkpointEvery]] cadence; idempotent — a crash
+    * between commit and checkpoint just means the next read replays a
+    * slightly longer suffix, and the NEXT eligible commit writes one). */
   private def maybeCheckpoint(spark: SparkSession, table: String,
                               version: Long): Unit = {
     if (version > 0 && version % checkpointEvery == 0) {
-      val live = snapshotFiles(spark, table, Some(version))
-      // the checkpoint carries the schema effective at its version, so
-      // schemaAt's checkpoint-plus-suffix replay stays O(checkpointEvery)
-      val schemaLine = schemaAt(spark, table, Some(version))
-        .map(s => ("schema", encodeSchema(s))).toSeq
-      // ...and the live files' recorded stats, so statsAt's replay does too
-      val liveSet = live.toSet
-      val statsLines = statsPayloadsAt(spark, table, Some(version))
-        .filter(s => liveSet.contains(s.split('|')(0)))
-        .map(("stats", _))
-      // ...and the live files' deletion-vector bindings, for dvAt's replay
-      // (unbound sentinels are dead weight in a from-scratch snapshot)
-      val dvLines = dvPayloadsAt(spark, table, Some(version))
-        .filter { case (file, dv) => liveSet.contains(file) && dv != DvUnbound }
-        .map { case (file, dv) => ("dv", s"$file|$dv") }
-      val lines = schemaLine ++ live.map(("add", _)) ++ statsLines ++ dvLines
+      val snap = snapshot(spark, table, Some(version))
+      val live = snap.liveSet
+      // the schema, the live files, their stats and their bound vectors:
+      // a from-scratch state, so stats of removed files and unbound
+      // sentinels are dead weight
+      val lines = snap.schema.map(s => ("schema", encodeSchema(s))).toSeq ++
+        snap.files.map(("add", _)) ++
+        snap.stats.filter(s => live.contains(s.split('|')(0))).map(("stats", _)) ++
+        snap.dvs.collect { case (file, dv) if live.contains(file) && dv != DvUnbound =>
+          ("dv", s"$file|$dv")
+        }
       // ATOMIC publication (same hazard as commits): a plain
       // create+write+close lets a racing reader replay a truncated
       // prefix of the .ckpt and silently drop live files from its
       // snapshot. Checkpoint content at a version is deterministic
       // (pure function of the log prefix), so losing the claim to a
       // concurrent twin is fine — the file that exists is identical.
-      spark.conf.get(CheckpointFormatKey, "text") match {
-        case "parquet" => writeCheckpointParquet(spark, table, version, lines)
-        case _ => tryCreateExclusive(spark, ckptPath(table, version),
-          lines.map { case (a, p) => s"""{"a":"$a","p":"$p"}""" }
-            .mkString("\n") + "\n")
-      }
+      tryCreateExclusive(spark, ckptPath(table, version),
+        lines.map { case (a, p) => s"""{"a":"$a","p":"$p"}""" }
+          .mkString("\n") + "\n")
       ()
     }
   }
 
-  /** Replay the log up to and including `asOf` (default: latest);
-    * returns the live RELATIVE file paths in first-added order.
-    * Starts from the newest checkpoint at or before the target version
-    * (if one exists) and replays only the commit SUFFIX after it. */
+  /** The live RELATIVE file paths as of `asOf` (default: latest), in
+    * first-added order; loud on a version the log does not hold. */
   def snapshotFiles(spark: SparkSession, table: String,
-                    asOf: Option[Long] = None): Seq[String] = {
-    val vs = versions(spark, table)
-    asOf.foreach { v =>
-      // both directions fail loudly: a too-early version has no commits
-      // to replay; a too-late one names a snapshot that does not exist
-      // (silently answering with the latest would un-pin a pinned read)
-      require(vs.exists(_ <= v),
-        s"txlog: no commits at or before version $v")
-      require(v <= vs.last, // vs nonEmpty here: the require above threw otherwise
-        s"txlog: version $v does not exist yet (latest: ${vs.last})")
-    }
-    val target = asOf.getOrElse(if (vs.isEmpty) -1L else vs.last)
-    val startCkpt = checkpointVersions(spark, table).filter(_ <= target).lastOption
-    val live = scala.collection.mutable.LinkedHashSet.empty[String]
-    startCkpt.foreach { cv =>
-      readCheckpoint(spark, table, cv).foreach {
-        case ("add", p) => live += p
-        case ("schema", _) => () // carried for schemaAt's suffix replay
-        case ("stats", _) => () // file stats, handled by statsPayloadsAt
-        case ("dv", _) => () // deletion-vector binding, handled by dvPayloadsAt
-        case (a, p) => throw new IllegalArgumentException(
-          s"txlog: checkpoint $cv carries non-add action $a for $p")
-      }
-    }
-    val replay = vs.filter(v => v <= target && startCkpt.forall(v > _))
-    for (v <- replay) {
-      readLogFile(spark, new Path(logDir(table), f"$v%08d.json")).foreach {
-        case ("add", p) => live += p
-        case ("remove", p) => live -= p
-        case ("tag", _) => () // commit-kind marker, not a file action
-        case ("schema", _) => () // schema marker, handled by schemaAt
-        case ("txn", _) => () // idempotence marker, see lastCommittedBatch
-        case ("stats", _) => () // file stats, handled by statsPayloadsAt
-        case ("dv", _) => () // deletion-vector binding, see dvPayloadsAt
-        case ("meta", _) => () // small-metadata channel, see commitMetas
-      }
-    }
-    live.toSeq
-  }
+                    asOf: Option[Long] = None): Seq[String] =
+    snapshot(spark, table, asOf).files
 
   // ---------------------------------------------------------------------
   // COLUMN MAPPING (the public Delta column-mapping 'name' mode): each
@@ -1029,8 +931,7 @@ object TxLog {
     * the table declares no mapping — the legacy identity). */
   private def resolvePhysical(spark: SparkSession, table: String, c: String,
                               asOf: Option[Long] = None): String =
-    schemaAt(spark, table, asOf)
-      .flatMap(_.fields.find(_.name == c)).map(physicalName).getOrElse(c)
+    replay(spark, table, listLog(spark, table), asOf).physical(c)
 
   /** logical → physical name map of the table's current declared schema
     * (empty when no mapping is declared) — for readers that resolve
@@ -1049,32 +950,11 @@ object TxLog {
   private def encodeSchema(s: org.apache.spark.sql.types.StructType): String =
     java.util.Base64.getEncoder.encodeToString(s.json.getBytes("UTF-8"))
 
-  /** The table's DECLARED schema as of `asOf` (None until a schema
-    * evolution commits one — legacy tables read with the inferred
-    * parquet schema, exactly as before). Replays checkpoint + suffix
-    * like [[snapshotFiles]]; the LAST schema action at or before the
-    * target wins. */
+  /** The table's DECLARED schema as of `asOf` ([[Snapshot.schema]]);
+    * lenient: None on an empty table. */
   def schemaAt(spark: SparkSession, table: String,
-               asOf: Option[Long] = None
-              ): Option[org.apache.spark.sql.types.StructType] = {
-    val vs = versions(spark, table)
-    if (vs.isEmpty) return None
-    val target = asOf.getOrElse(vs.last)
-    val startCkpt = checkpointVersions(spark, table).filter(_ <= target).lastOption
-    var schema: Option[org.apache.spark.sql.types.StructType] = None
-    startCkpt.foreach { cv =>
-      readCheckpoint(spark, table, cv).foreach {
-        case ("schema", b) => schema = Some(decodeSchema(b))
-        case _ => ()
-      }
-    }
-    for (v <- vs.filter(v => v <= target && startCkpt.forall(v > _)))
-      readLogFile(spark, new Path(logDir(table), f"$v%08d.json")).foreach {
-        case ("schema", b) => schema = Some(decodeSchema(b))
-        case _ => ()
-      }
-    schema
-  }
+               asOf: Option[Long] = None): Option[StructType] =
+    replay(spark, table, listLog(spark, table), asOf).schema
 
   /** List the parquet files a data write produced, as table-relative
     * paths. */
@@ -1217,7 +1097,7 @@ object TxLog {
       // high-water line IS the signal to re-mint)
       val latestNow = versions(spark, table).lastOption.fold(-1L)(identity)
       val boundaryLanded = (checkedBoundaryAt + 1 to latestNow).exists(cv =>
-        readLogFile(spark, new Path(logDir(table), f"$cv%08d.json")).exists {
+        readLogFile(spark, commitPath(table, cv)).exists {
           case ("meta", p) => p.startsWith(CheckKeyPrefix) ||
             p.startsWith(GenKeyPrefix) || p.startsWith(IdentityKeyPrefix)
           case _ => false
@@ -1369,7 +1249,7 @@ object TxLog {
       val latest = versions(spark, table).last
       val schemaConflict = versions(spark, table)
         .filter(x => x >= intended && x <= latest)
-        .find(cv => readLogFile(spark, new Path(logDir(table), f"$cv%08d.json"))
+        .find(cv => readLogFile(spark, commitPath(table, cv))
           .exists(_._1 == "schema"))
       schemaConflict.foreach { cv =>
         fs(spark, dataDir).delete(dataDir, true)
@@ -1509,7 +1389,7 @@ object TxLog {
       val latest = versions(spark, table).last
       val schemaConflict = versions(spark, table)
         .filter(x => x >= intended && x <= latest)
-        .find(cv => readLogFile(spark, new Path(logDir(table), f"$cv%08d.json"))
+        .find(cv => readLogFile(spark, commitPath(table, cv))
           .exists(_._1 == "schema"))
       schemaConflict.foreach { cv =>
         throw new TxLogConcurrentModificationException(
@@ -1660,16 +1540,18 @@ object TxLog {
       s"txlog: version ${asOf.get} was vacuumed (earliest readable: $wm)")
     // resolve `latest` ONCE and pin every constituent to it — the key
     // and the plan must describe the same version even when a racing
-    // writer lands a commit mid-construction
-    val resolved = asOf.orElse(versions(spark, table).lastOption)
+    // writer lands a commit mid-construction. A pinned cache hit never
+    // lists the log; a miss lists it once for key and snapshot together.
+    lazy val log = listLog(spark, table)
+    val resolved = asOf.orElse(log.commits.lastOption)
     val key = resolved.map(v =>
       (System.identityHashCode(spark).toString, table, v))
     key.flatMap(k => Option(readPlanCache.get(k))).getOrElse {
-      val files = snapshotFiles(spark, table, resolved)
-      val declared = schemaAt(spark, table, resolved)
-      require(files.nonEmpty || declared.nonEmpty,
+      asOf.foreach(requireListed(log, _))
+      val snap = replay(spark, table, log, resolved)
+      require(snap.files.nonEmpty || snap.schema.nonEmpty,
         s"txlog: empty snapshot for $table at $asOf")
-      val df = scanLive(spark, table, files, declared, dvAt(spark, table, resolved))
+      val df = scanLive(spark, table, snap.files, snap.schema, snap.liveDvs)
       key.foreach { k =>
         if (readPlanCache.size() > 8192) readPlanCache.clear()
         readPlanCache.put(k, df)
@@ -1678,9 +1560,6 @@ object TxLog {
     }
   }
 
-  /** One commit that writes `df` and swaps it in for the entire
-    * current live set. Shared by [[compact]] (df = current snapshot)
-    * and [[overwrite]] (df = a new snapshot, e.g. a MERGE result). */
   /** Latest committed version (loud on an empty table). */
   def latestVersion(spark: SparkSession, table: String): Long = {
     val vs = versions(spark, table)
@@ -1693,13 +1572,6 @@ object TxLog {
     require(versions(spark, table).nonEmpty,
       s"txlog: cannot $tag an empty table (no commits in $table)")
 
-  /** One rewrite commit: lands `df` and removes version `baseVersion`'s
-    * ENTIRE live set, through the OCC loop. The caller must derive `df`
-    * from the same pinned base when the rewrite's content is a function
-    * of the table (compaction!) — pinning data and remove-set to one
-    * version is what makes a concurrent append safe: either it lands
-    * before (and our base includes it) or after (and the OCC loop keeps
-    * its files live alongside ours). */
   /** A declared schema constrains what ANY write may land: every landed
     * column must exist in it at a widenable-into type, else the
     * declared read would silently drop it (new column) or fail at scan
@@ -1724,6 +1596,13 @@ object TxLog {
       }
     }
 
+  /** One rewrite commit: lands `df` and removes version `baseVersion`'s
+    * ENTIRE live set, through the OCC loop. The caller must derive `df`
+    * from the same pinned base when the rewrite's content is a function
+    * of the table (compaction!) — pinning data and remove-set to one
+    * version is what makes a concurrent append safe: either it lands
+    * before (and our base includes it) or after (and the OCC loop keeps
+    * its files live alongside ours). */
   private def replaceCommitAt(spark: SparkSession, table: String,
                               baseVersion: Long, df: DataFrame, tag: String,
                               write: (DataFrame, String) => Unit,
@@ -1776,6 +1655,9 @@ object TxLog {
       extraTxns = extraTxns, metas = idMetas)
   }
 
+  /** One commit that writes `df` and swaps it in for the entire
+    * current live set. Shared by [[compact]] (df = current snapshot)
+    * and [[overwrite]] (df = a new snapshot, e.g. a MERGE result). */
   private def replaceCommit(spark: SparkSession, table: String,
                             df: DataFrame, tag: String,
                             write: (DataFrame, String) => Unit =
@@ -1837,7 +1719,7 @@ object TxLog {
           // a remove stales our remove-set; a dv binding stales any
           // rewrite too (our data was derived without it — landing would
           // silently resurrect the rows it deleted)
-          val actions = readLogFile(spark, new Path(logDir(table), f"$cv%08d.json"))
+          val actions = readLogFile(spark, commitPath(table, cv))
           actions.exists(a => a._1 == "remove" || a._1 == "dv")
         }
       }
@@ -2125,7 +2007,8 @@ object TxLog {
     require(targetBytes > 0, "txlog: targetBytes must be positive")
     requireNonEmpty(spark, table, "compact")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
+    val snap = snapshot(spark, table, Some(base))
+    val live = snap.files
     val f = fs(spark, new Path(table))
     val sizes = live.map(p =>
       p -> f.getFileStatus(new Path(table, p)).getLen).toMap
@@ -2138,12 +2021,10 @@ object TxLog {
     // under StreamingOptimize.maintain each pointless commit retriggers
     // the next, an infinite rewrite loop). Only rewrite when files merge.
     if (small.size <= numOut) return base
-    val dvs = dvAt(spark, table, Some(base))
-    val packed = scanLive(spark, table, small,
-      schemaAt(spark, table, Some(base)), dvs.filter(kv => small.contains(kv._1)))
+    val packed = scanLive(spark, table, small, snap.schema, snap.liveDvs)
     val rel = f"data/v${base + 1}%08d-compact-${uniq()}"
     val dataDir = new Path(table, rel)
-    physicalize(packed, schemaAt(spark, table, Some(base)))
+    physicalize(packed, snap.schema)
       .repartition(numOut).write.parquet(dataDir.toString)
     val written = writtenFiles(spark, table, rel)
     commitRewrite(spark, table, base, written, small, "compact", dataDir,
@@ -2156,37 +2037,30 @@ object TxLog {
     * simply absent (readers must treat absence as "cannot skip"). */
   def statsAt(spark: SparkSession, table: String, statsCol: String,
               asOf: Option[Long] = None): Map[String, (Long, Long)] =
-    statsForLive(spark, table, statsCol,
-      snapshotFiles(spark, table, asOf).toSet, asOf)
+    statsIn(snapshot(spark, table, asOf), statsCol)
 
-  /** [[statsAt]] with the live set already in hand — callers that have
-    * just replayed the snapshot (pruneFiles, readWhere, deleteWhere)
-    * avoid a second identical log replay. */
-  private def statsForLive(spark: SparkSession, table: String, statsCol: String,
-                           live: Set[String],
-                           asOf: Option[Long]): Map[String, (Long, Long)] = {
+  /** [[statsAt]] over a snapshot already in hand. */
+  private def statsIn(snap: Snapshot, statsCol: String): Map[String, (Long, Long)] = {
     // payloads are keyed by PHYSICAL name (rename-stable) — resolve
-    val phys = resolvePhysical(spark, table, statsCol, asOf)
-    statsPayloadsAt(spark, table, asOf).flatMap { payload =>
+    val phys = snap.physical(statsCol)
+    snap.stats.flatMap { payload =>
       payload.split('|') match {
-        case Array(p, c, mn, mx) if c == phys && live.contains(p) =>
+        case Array(p, c, mn, mx) if c == phys && snap.liveSet.contains(p) =>
           Some(p -> ((mn.toLong, mx.toLong)))
         case _ => None
       }
     }.toMap
   }
 
-  /** [[statsForLive]] for STRING-bounded columns: recorded UTF-8 byte
-    * bounds per live file. */
-  private def stringStatsForLive(spark: SparkSession, table: String,
-                                 statsCol: String, live: Set[String],
-                                 asOf: Option[Long]
-                                ): Map[String, (Array[Byte], Array[Byte])] = {
-    val phys = resolvePhysical(spark, table, statsCol, asOf)
+  /** [[statsIn]] for STRING-bounded columns: recorded UTF-8 byte bounds
+    * per live file. */
+  private def stringStatsIn(snap: Snapshot, statsCol: String
+                           ): Map[String, (Array[Byte], Array[Byte])] = {
+    val phys = snap.physical(statsCol)
     val dec = java.util.Base64.getDecoder
-    statsPayloadsAt(spark, table, asOf).flatMap { payload =>
+    snap.stats.flatMap { payload =>
       payload.split('|') match {
-        case Array(p, c, mn, mx, "s") if c == phys && live.contains(p) =>
+        case Array(p, c, mn, mx, "s") if c == phys && snap.liveSet.contains(p) =>
           Some(p -> ((dec.decode(mn), dec.decode(mx))))
         case _ => None
       }
@@ -2201,8 +2075,9 @@ object TxLog {
                                       statsCol: String, lo: String, hi: String,
                                       asOf: Option[Long] = None
                                      ): (Seq[String], Int) = {
-    val live = snapshotFiles(spark, table, asOf)
-    val stats = stringStatsForLive(spark, table, statsCol, live.toSet, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
+    val stats = stringStatsIn(snap, statsCol)
     val (lb, hb) = (lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
     val kept = live.filter { p =>
       stats.get(p).forall { case (mn, mx) =>
@@ -2221,11 +2096,7 @@ object TxLog {
                       asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (kept, _) = pruneFilesString(spark, table, statsCol, lo, hi, asOf)
-    val base =
-      if (kept.isEmpty) read(spark, table, asOf).limit(0)
-      else scanLive(spark, table, kept, schemaAt(spark, table, asOf),
-        dvAt(spark, table, asOf))
-    base.filter(col(statsCol).between(lo, hi))
+    readFiles(spark, table, kept, asOf).filter(col(statsCol).between(lo, hi))
   }
 
   /** The live files a `statsCol LIKE 'prefix%'` read must scan: a
@@ -2238,8 +2109,9 @@ object TxLog {
                                       statsCol: String, prefix: String,
                                       asOf: Option[Long] = None
                                      ): (Seq[String], Int) = {
-    val live = snapshotFiles(spark, table, asOf)
-    val stats = stringStatsForLive(spark, table, statsCol, live.toSet, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
+    val stats = stringStatsIn(snap, statsCol)
     val p = prefix.getBytes("UTF-8")
     val upper: Option[Array[Byte]] = {
       var i = p.length - 1
@@ -2270,9 +2142,9 @@ object TxLog {
                                      preds: Seq[(String, Long, Long)],
                                      asOf: Option[Long] = None): (Seq[String], Int) = {
     require(preds.nonEmpty, "txlog: no pruning predicates")
-    val live = snapshotFiles(spark, table, asOf)
-    val statsByCol = preds.map(_._1).distinct
-      .map(c => c -> statsForLive(spark, table, c, live.toSet, asOf)).toMap
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
+    val statsByCol = preds.map(_._1).distinct.map(c => c -> statsIn(snap, c)).toMap
     val kept = live.filter { p =>
       preds.forall { case (c, lo, hi) =>
         statsByCol(c).get(p).forall { case (mn, mx) => mx >= lo && mn <= hi }
@@ -2298,14 +2170,7 @@ object TxLog {
                    asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     val (kept, _) = pruneFilesMulti(spark, table, preds, asOf)
-    val base =
-      if (kept.isEmpty) {
-        // empty frame with the right schema: read the full (possibly
-        // empty-filtered) table rather than inventing a schema
-        read(spark, table, asOf).limit(0)
-      } else scanLive(spark, table, kept, schemaAt(spark, table, asOf),
-        dvAt(spark, table, asOf))
-    preds.foldLeft(base) { case (df, (c, lo, hi)) =>
+    preds.foldLeft(readFiles(spark, table, kept, asOf)) { case (df, (c, lo, hi)) =>
       df.filter(col(c).between(lo, hi))
     }
   }
@@ -2347,9 +2212,8 @@ object TxLog {
     * counted per (file → its own bound dir), never across dirs (an old
     * dir may still hold a superseded copy of another file's positions). */
   private def dvMaskedCounts(spark: SparkSession, table: String,
-                             asOf: Option[Long]): Map[String, Long] = {
+                             dvs: Map[String, String]): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
-    val dvs = dvAt(spark, table, asOf)
     if (dvs.isEmpty) return Map.empty
     dvs.groupBy(_._2).flatMap { case (dir, bound) =>
       val names = bound.keys.map(f => new Path(f).getName).toSeq
@@ -2371,13 +2235,14 @@ object TxLog {
   private[graft] def partitionedCounts(spark: SparkSession, table: String,
                                        partCol: String, asOf: Option[Long]
                                       ): Option[Map[String, Long]] = {
-    val live = snapshotFiles(spark, table, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
     if (live.isEmpty) return Some(Map.empty)
-    val pv = partitionValuesAt(spark, table, partCol, asOf)
+    val pv = partitionValuesIn(snap, partCol)
     if (!live.forall(pv.contains)) return None
-    val rows = statsForLive(spark, table, RowsStatsCol, live.toSet, asOf)
+    val rows = statsIn(snap, RowsStatsCol)
     if (!live.forall(rows.contains)) return None
-    val masked = dvMaskedCounts(spark, table, asOf)
+    val masked = dvMaskedCounts(spark, table, snap.liveDvs)
     Some(live.groupBy(pv).map { case (v, fs) =>
       v -> fs.map(f => rows(f)._1 - masked.getOrElse(f, 0L)).sum
     })
@@ -2394,12 +2259,13 @@ object TxLog {
                                        partCol: String, statsCol: String,
                                        asOf: Option[Long]
                                       ): Option[Map[String, (Long, Long)]] = {
-    val live = snapshotFiles(spark, table, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
     if (live.isEmpty) return Some(Map.empty)
-    if (dvAt(spark, table, asOf).nonEmpty) return None
-    val pv = partitionValuesAt(spark, table, partCol, asOf)
+    if (snap.liveDvs.nonEmpty) return None
+    val pv = partitionValuesIn(snap, partCol)
     if (!live.forall(pv.contains)) return None
-    val st = statsForLive(spark, table, statsCol, live.toSet, asOf)
+    val st = statsIn(snap, statsCol)
     if (!live.forall(st.contains)) return None
     Some(live.groupBy(pv).map { case (v, fs) =>
       v -> ((fs.map(st(_)._1).min, fs.map(st(_)._2).max))
@@ -2410,14 +2276,18 @@ object TxLog {
     * footers because the log carried no record — 0 on tables written by
     * this engine — , files whose dv mask was subtracted). */
   def countRowsDetail(spark: SparkSession, table: String,
-                      asOf: Option[Long] = None): (Long, Int, Int) = {
-    val live = snapshotFiles(spark, table, asOf)
-    val recorded = statsForLive(spark, table, RowsStatsCol, live.toSet, asOf)
-    val missing = live.filterNot(recorded.contains)
+                      asOf: Option[Long] = None): (Long, Int, Int) =
+    countRowsIn(spark, table, snapshot(spark, table, asOf))
+
+  /** [[countRowsDetail]] over a snapshot already in hand. */
+  private[graft] def countRowsIn(spark: SparkSession, table: String,
+                                 snap: Snapshot): (Long, Int, Int) = {
+    val recorded = statsIn(snap, RowsStatsCol)
+    val missing = snap.files.filterNot(recorded.contains)
     val fromLog = recorded.values.map(_._1).sum
     val fromFooter = rowCountLines(spark, table, missing)
       .map(_.split('|')(2).toLong).sum
-    val masked = dvMaskedCounts(spark, table, asOf)
+    val masked = dvMaskedCounts(spark, table, snap.liveDvs)
     (fromLog + fromFooter - masked.values.sum, missing.size, masked.size)
   }
 
@@ -2437,16 +2307,17 @@ object TxLog {
   def minMaxSkipping(spark: SparkSession, table: String, statsCol: String,
                      asOf: Option[Long] = None): (Long, Long, Int) = {
     import org.apache.spark.sql.functions.{col, max, min}
-    val live = snapshotFiles(spark, table, asOf)
-    val stats = statsForLive(spark, table, statsCol, live.toSet, asOf)
-    val dvs = dvAt(spark, table, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
+    val stats = statsIn(snap, statsCol)
+    val dvs = snap.liveDvs
     val (clean, dirty) = live.partition(f =>
       stats.contains(f) && !dvs.contains(f))
     val cleanBounds = clean.map(stats)
     val scanned =
       if (dirty.isEmpty) None
       else {
-        val r = scanLive(spark, table, dirty, schemaAt(spark, table, asOf),
+        val r = scanLive(spark, table, dirty, snap.schema,
           dvs.filter(kv => dirty.contains(kv._1)))
           .agg(min(col(statsCol)), max(col(statsCol))).head()
         if (r.isNullAt(0)) None // every dirty row was masked out
@@ -2575,11 +2446,11 @@ object TxLog {
     require(fpp > 0 && fpp < 0.5, s"txlog: bloom fpp out of range: $fpp")
     requireNonEmpty(spark, table, "rebloom")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val existing = bloomForLive(spark, table, bloomCol, live.toSet, Some(base))
-    val missing = live.filterNot(existing.contains)
+    val snap = snapshot(spark, table, Some(base))
+    val existing = bloomsIn(snap, bloomCol)
+    val missing = snap.files.filterNot(existing.contains)
     if (missing.isEmpty) return base
-    val phys = resolvePhysical(spark, table, bloomCol, Some(base))
+    val phys = snap.physical(bloomCol)
     require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
       s"txlog: bloom column name unsupported by the line format: $phys")
     import scala.jdk.CollectionConverters._
@@ -2625,16 +2496,15 @@ object TxLog {
     require(statsCols.nonEmpty, "txlog: restat needs at least one column")
     requireNonEmpty(spark, table, "restat")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val payloads = statsPayloadsAt(spark, table, Some(base))
+    val snap = snapshot(spark, table, Some(base))
     val lines = statsCols.flatMap { c =>
-      val phys = resolvePhysical(spark, table, c, Some(base))
-      val covered = payloads.flatMap(_.split('|') match {
+      val phys = snap.physical(c)
+      val covered = snap.stats.flatMap(_.split('|') match {
         case Array(f, pc, _, _) if pc == phys => Some(f)
         case Array(f, pc, _, _, "s") if pc == phys => Some(f)
         case _ => None // partition values / blooms serve other rungs
       }).toSet
-      footerStats(spark, table, live.filterNot(covered), c)
+      footerStats(spark, table, snap.files.filterNot(covered), c)
     }
     if (lines.isEmpty) return base
     commitRewrite(spark, table, base, Seq.empty, Seq.empty, "compact",
@@ -2645,27 +2515,23 @@ object TxLog {
   /** Live files' bloom sidecar references for `bloomCol` as of `asOf`
     * (file → sidecar dir; empty when the column was never bloomed —
     * readers treat absence as "cannot skip"). */
-  private def bloomForLive(spark: SparkSession, table: String,
-                           bloomCol: String, live: Set[String],
-                           asOf: Option[Long]): Map[String, String] = {
-    val phys = resolvePhysical(spark, table, bloomCol, asOf)
-    statsPayloadsAt(spark, table, asOf).flatMap { payload =>
+  private def bloomsIn(snap: Snapshot, bloomCol: String): Map[String, String] = {
+    val phys = snap.physical(bloomCol)
+    snap.stats.flatMap { payload =>
       payload.split('|') match {
         case Array(p, c, sidecar, _, `BloomSuffix`)
-          if c == phys && live.contains(p) => Some(p -> sidecar)
+          if c == phys && snap.liveSet.contains(p) => Some(p -> sidecar)
         case _ => None
       }
     }.toMap
   }
 
-  /** Bloom sidecar dirs referenced by `asOf`'s live bloom lines — the
-    * vacuum protection set (mirror of the dv-dir rule). */
-  private def bloomDirsAt(spark: SparkSession, table: String,
-                          asOf: Option[Long]): Set[String] = {
-    val live = snapshotFiles(spark, table, asOf).toSet
-    statsPayloadsAt(spark, table, asOf).flatMap { payload =>
+  /** Bloom sidecar dirs referenced by the snapshot's live bloom lines —
+    * the vacuum protection set (mirror of the dv-dir rule). */
+  private def bloomDirsIn(snap: Snapshot): Set[String] = {
+    snap.stats.flatMap { payload =>
       payload.split('|') match {
-        case Array(p, _, sidecar, _, `BloomSuffix`) if live.contains(p) =>
+        case Array(p, _, sidecar, _, `BloomSuffix`) if snap.liveSet.contains(p) =>
           Some(sidecar)
         case _ => None
       }
@@ -2684,11 +2550,12 @@ object TxLog {
                       asOf: Option[Long] = None): (Seq[String], Int) = {
     require(value != null, "txlog: bloom probe value must be non-null " +
       "(equality to NULL matches no row)")
-    val live = snapshotFiles(spark, table, asOf)
-    val blooms = bloomForLive(spark, table, bloomCol, live.toSet, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
+    val blooms = bloomsIn(snap, bloomCol)
     if (blooms.isEmpty) return (live, live.size)
     import org.apache.spark.sql.functions.{lit, xxhash64}
-    val colType = schemaAt(spark, table, asOf)
+    val colType = snap.schema
       .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
       .getOrElse(read(spark, table, asOf).schema(bloomCol).dataType)
     val probeHash = spark.range(1)
@@ -2722,28 +2589,26 @@ object TxLog {
                          asOf: Option[Long] = None): (Seq[String], Int) = {
     require(values.nonEmpty, "txlog: bloom multi-probe needs values")
     import org.apache.spark.sql.functions.{col, xxhash64}
-    val colType = schemaAt(spark, table, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val colType = snap.schema
       .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
       .getOrElse(read(spark, table, asOf).schema(bloomCol).dataType)
     import spark.implicits._
     val hashes = values.map(_.toString).toDF("v")
       .select(xxhash64(col("v").cast(colType))).collect().map(_.getLong(0))
-    pruneFilesBloomHashes(spark, table, bloomCol, hashes, asOf)
-      .getOrElse {
-        val l = snapshotFiles(spark, table, asOf)
-        (l, l.size)
-      }
+    pruneFilesBloomHashes(spark, table, snap, bloomCol, hashes)
+      .getOrElse((snap.files, snap.files.size))
   }
 
   /** [[pruneFilesBloomAny]] over pre-computed xxhash64 probe hashes;
-    * None when the column carries no filters at `asOf` (callers keep
+    * None when the column carries no filters in `snap` (callers keep
     * their full scan). */
   private def pruneFilesBloomHashes(spark: SparkSession, table: String,
-                                    bloomCol: String, hashes: Array[Long],
-                                    asOf: Option[Long]
+                                    snap: Snapshot, bloomCol: String,
+                                    hashes: Array[Long]
                                    ): Option[(Seq[String], Int)] = {
-    val live = snapshotFiles(spark, table, asOf)
-    val blooms = bloomForLive(spark, table, bloomCol, live.toSet, asOf)
+    val live = snap.files
+    val blooms = bloomsIn(snap, bloomCol)
     if (blooms.isEmpty) return None
     val sidecars = blooms.values.toSeq.distinct
       .map(p => new Path(table, p).toString)
@@ -2785,16 +2650,17 @@ object TxLog {
                                      filters: Seq[org.apache.spark.sql.sources.Filter],
                                      asOf: Option[Long]): Seq[String] = {
     import org.apache.spark.sql.sources._
-    val live = snapshotFiles(spark, table, asOf)
+    val snap = snapshot(spark, table, asOf)
+    val live = snap.files
     if (filters.isEmpty || live.isEmpty) return live
-    // ONE extra log fold answers which rungs recorded ANYTHING for which
+    // the snapshot's stats answer which rungs recorded ANYTHING for which
     // physical column — a rung is consulted only when it can possibly
     // prune, so a table (or column) with no stats/blooms/partition
     // values pays nothing beyond this fold: the common catalog read
     // stays one replay, never one-replay-per-rung-per-predicate (and the
     // bloom probe's hashing job never launches for unbloomed columns)
     val recorded: Set[(String, Char)] =
-      statsPayloadsAt(spark, table, asOf).flatMap(_.split('|') match {
+      snap.stats.flatMap(_.split('|') match {
         case Array(_, c, _, _) => Some((c, 'n'))
         case Array(_, c, _, _, "s") => Some((c, 's'))
         case Array(_, c, _, _, "p") => Some((c, 'p'))
@@ -2802,7 +2668,7 @@ object TxLog {
         case _ => None
       }).toSet
     def has(attr: String, rung: Char): Boolean =
-      recorded.contains((resolvePhysical(spark, table, attr, asOf), rung))
+      recorded.contains((snap.physical(attr), rung))
     def longOf(v: Any): Option[Long] = v match {
       case n: java.lang.Long => Some(n)
       case n: java.lang.Integer => Some(n.longValue)
@@ -2864,15 +2730,18 @@ object TxLog {
     live.filter(keptSet) // preserve first-added order
   }
 
-  /** Scan exactly `kept` (a [[pruneForFilters]] answer) under the
-    * declared schema with deletion vectors anti-applied — the catalog
-    * scan's row source. */
+  /** Scan exactly `kept` (a pruning answer) under the declared schema
+    * with deletion vectors anti-applied — the row source of the catalog
+    * scan and of every skipping read; an empty `kept` is the empty frame
+    * under the table's schema. */
   private[graft] def readFiles(spark: SparkSession, table: String,
                                kept: Seq[String],
                                asOf: Option[Long]): DataFrame =
     if (kept.isEmpty) read(spark, table, asOf).limit(0)
-    else scanLive(spark, table, kept, schemaAt(spark, table, asOf),
-      dvAt(spark, table, asOf).filter(kv => kept.contains(kv._1)))
+    else {
+      val snap = snapshot(spark, table, asOf)
+      scanLive(spark, table, kept, snap.schema, snap.liveDvs)
+    }
 
   /** Point-equality read with log-native bloom skipping — the
     * needle-in-haystack lookup ([[readWhere]]'s range twin for columns
@@ -2884,11 +2753,7 @@ object TxLog {
                       value: Any, asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val (kept, _) = pruneFilesBloom(spark, table, bloomCol, value, asOf)
-    val base =
-      if (kept.isEmpty) read(spark, table, asOf).limit(0)
-      else scanLive(spark, table, kept, schemaAt(spark, table, asOf),
-        dvAt(spark, table, asOf).filter(kv => kept.contains(kv._1)))
-    base.filter(col(bloomCol) === lit(value))
+    readFiles(spark, table, kept, asOf).filter(col(bloomCol) === lit(value))
   }
 
   // ---------------------------------------------------------------------
@@ -3116,14 +2981,13 @@ object TxLog {
     val base = latestVersion(spark, table)
     val snap = read(spark, table, Some(base))
     requirePartitionArgs(snap, partCols, statsCols)
-    val removes = snapshotFiles(spark, table, Some(base))
-    val declared = schemaAt(spark, table, Some(base))
-    val pParts = partCols.map(resolvePhysical(spark, table, _, Some(base)))
+    val state = snapshot(spark, table, Some(base))
     val rel = f"data/v${base + 1}%08d-compact-${uniq()}"
     val (files, partLines) = writePartitioned(spark, table,
-      physicalize(snap, declared), pParts, rel, onePerLeaf = true)
+      physicalize(snap, state.schema), partCols.map(state.physical), rel,
+      onePerLeaf = true)
     val stats = statsCols.flatMap(c => footerStats(spark, table, files.map(_._1), c))
-    commitRewrite(spark, table, base, files.map(_._1), removes, "compact",
+    commitRewrite(spark, table, base, files.map(_._1), state.files, "compact",
       new Path(table, rel), stats = partLines ++ stats)
   }
 
@@ -3146,9 +3010,9 @@ object TxLog {
     require(targetBytes > 0, s"txlog: target bytes must be positive")
     requireNonEmpty(spark, table, "compact")
     val base = latestVersion(spark, table)
-    val pv = partitionValuesAt(spark, table, partCol, Some(base))
-    val scope = snapshotFiles(spark, table, Some(base))
-      .filter(f => pv.get(f).contains(value))
+    val snap = snapshot(spark, table, Some(base))
+    val pv = partitionValuesIn(snap, partCol)
+    val scope = snap.files.filter(f => pv.get(f).contains(value))
     require(scope.nonEmpty,
       s"txlog: no live file of $table records $partCol=$value — nothing " +
         "to optimize (files appended without partition recording are " +
@@ -3157,15 +3021,15 @@ object TxLog {
     val bytes = scope.map(p =>
       fsys.getFileStatus(new Path(table, p)).getLen).sum
     val numFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    val dvs = dvAt(spark, table, Some(base)).filter(kv => scope.contains(kv._1))
+    val dvs = snap.liveDvs.filter(kv => scope.contains(kv._1))
     if (scope.size <= numFiles && dvs.isEmpty) return base
-    val declared = schemaAt(spark, table, Some(base))
+    val declared = snap.schema
     val rel = f"data/v${base + 1}%08d-compact-${uniq()}"
     physicalize(scanLive(spark, table, scope, declared, dvs)
       .repartition(numFiles), declared)
       .write.parquet(new Path(table, rel).toString)
     val files = writtenFiles(spark, table, rel)
-    val phys = resolvePhysical(spark, table, partCol, Some(base))
+    val phys = snap.physical(partCol)
     val enc = java.util.Base64.getEncoder
     val partLines = files.map(f =>
       s"$f|$phys|${enc.encodeToString(value.getBytes("UTF-8"))}|-|p")
@@ -3177,13 +3041,16 @@ object TxLog {
     * (files appended without partitioning are simply absent — readers
     * must treat absence as "cannot skip", like stats). */
   def partitionValuesAt(spark: SparkSession, table: String, partCol: String,
-                        asOf: Option[Long] = None): Map[String, String] = {
-    val phys = resolvePhysical(spark, table, partCol, asOf)
-    val live = snapshotFiles(spark, table, asOf).toSet
+                        asOf: Option[Long] = None): Map[String, String] =
+    partitionValuesIn(snapshot(spark, table, asOf), partCol)
+
+  private def partitionValuesIn(snap: Snapshot,
+                                partCol: String): Map[String, String] = {
+    val phys = snap.physical(partCol)
     val dec = java.util.Base64.getDecoder
-    statsPayloadsAt(spark, table, asOf).flatMap { payload =>
+    snap.stats.flatMap { payload =>
       payload.split('|') match {
-        case Array(p, c, v, _, "p") if c == phys && live.contains(p) =>
+        case Array(p, c, v, _, "p") if c == phys && snap.liveSet.contains(p) =>
           Some(p -> new String(dec.decode(v), "UTF-8"))
         case _ => None
       }
@@ -3197,9 +3064,9 @@ object TxLog {
                                          partCol: String, value: String,
                                          asOf: Option[Long] = None
                                         ): (Seq[String], Int) = {
-    val live = snapshotFiles(spark, table, asOf)
-    val pv = partitionValuesAt(spark, table, partCol, asOf)
-    (live.filter(p => pv.get(p).forall(_ == value)), live.size)
+    val snap = snapshot(spark, table, asOf)
+    val pv = partitionValuesIn(snap, partCol)
+    (snap.files.filter(p => pv.get(p).forall(_ == value)), snap.files.size)
   }
 
   /** Equality read on the partition column, COMPOSED with optional
@@ -3229,11 +3096,8 @@ object TxLog {
     val kept = if (preds.isEmpty) keptP
       else keptP intersect pruneFilesMulti(spark, table, preds, asOf)._1.toSet
     // preserve first-added order for deterministic multi-file scans
-    val keptOrdered = snapshotFiles(spark, table, asOf).filter(kept)
-    val base =
-      if (keptOrdered.isEmpty) read(spark, table, asOf).limit(0)
-      else scanLive(spark, table, keptOrdered, schemaAt(spark, table, asOf),
-        dvAt(spark, table, asOf))
+    val base = readFiles(spark, table,
+      snapshotFiles(spark, table, asOf).filter(kept), asOf)
     val eqFiltered = eqs.foldLeft(base) { case (df, (c, v)) =>
       df.filter(col(c).cast("string") === v)
     }
@@ -3260,8 +3124,9 @@ object TxLog {
     import org.apache.spark.sql.functions.col
     requireNonEmpty(spark, table, "delete")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val recorded = partitionValuesAt(spark, table, partCol, Some(base))
+    val snap = snapshot(spark, table, Some(base))
+    val live = snap.files
+    val recorded = partitionValuesIn(snap, partCol)
     val dropped = live.filter(p => recorded.get(p).contains(value))
     val unrecorded = live.filterNot(recorded.contains)
     if (dropped.isEmpty && unrecorded.isEmpty) return base
@@ -3269,19 +3134,19 @@ object TxLog {
       // the pure metadata case: one commit of removes, nothing written
       return commitRewrite(spark, table, base, Seq.empty, dropped, "delete",
         new Path(table, f"data/v${base + 1}%08d-delete-${uniq()}"))
-    val declared = schemaAt(spark, table, Some(base))
+    val declared = snap.schema
+    val unrecordedDvs = snap.liveDvs.filter(kv => unrecorded.contains(kv._1))
     // a value-less file might hold no matching row at all: probe before
     // paying a rewrite (and stay commit-free when nothing matches)
     val anyUnrecordedMatch = !scanLive(spark, table, unrecorded, declared,
-      dvAt(spark, table, Some(base)).filter(kv => unrecorded.contains(kv._1)))
+      unrecordedDvs)
       .filter(col(partCol).cast("string") <=> value).isEmpty
     if (!anyUnrecordedMatch) {
       if (dropped.isEmpty) return base
       return commitRewrite(spark, table, base, Seq.empty, dropped, "delete",
         new Path(table, f"data/v${base + 1}%08d-delete-${uniq()}"))
     }
-    val keptRows = scanLive(spark, table, unrecorded, declared,
-      dvAt(spark, table, Some(base)).filter(kv => unrecorded.contains(kv._1)))
+    val keptRows = scanLive(spark, table, unrecorded, declared, unrecordedDvs)
       .filter(!(col(partCol).cast("string") <=> value))
     val rel = f"data/v${base + 1}%08d-delete-${uniq()}"
     val dataDir = new Path(table, rel)
@@ -3308,16 +3173,15 @@ object TxLog {
                   lo: Long, hi: Long): Long = {
     requireNonEmpty(spark, table, "delete")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val stats = statsForLive(spark, table, statsCol, live.toSet, Some(base))
-    val touched = live.filter(p =>
+    val snap = snapshot(spark, table, Some(base))
+    val stats = statsIn(snap, statsCol)
+    val touched = snap.files.filter(p =>
       stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
     if (touched.isEmpty) return base // no file can contain a match
     import org.apache.spark.sql.functions.col
     // the rewrite must anti-apply any existing deletion vectors on the
     // touched files — a plain re-scan would resurrect MOR-deleted rows
-    val keptRows = scanLive(spark, table, touched,
-      schemaAt(spark, table, Some(base)), dvAt(spark, table, Some(base)))
+    val keptRows = scanLive(spark, table, touched, snap.schema, snap.liveDvs)
       .filter(!col(statsCol).between(lo, hi))
     val rel = f"data/v${base + 1}%08d-delete-${uniq()}"
     val dataDir = new Path(table, rel)
@@ -3341,7 +3205,7 @@ object TxLog {
     *
     * A repeat delete on an already-masked file re-binds it to a NEW
     * vector containing the UNION of old and new positions ("last
-    * binding wins, positions only accumulate" — [[dvPayloadsAt]]'s
+    * binding wins, positions only accumulate" — the [[Snapshot.dvs]]
     * replay contract). Stats recorded for the touched files stay valid:
     * deletion only shrinks a file's value range, so min/max remain
     * sound (possibly loose) pruning bounds. The change feed classifies
@@ -3354,12 +3218,12 @@ object TxLog {
     import org.apache.spark.sql.functions.col
     requireNonEmpty(spark, table, "delete")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val stats = statsForLive(spark, table, statsCol, live.toSet, Some(base))
-    val touched = live.filter(p =>
+    val snap = snapshot(spark, table, Some(base))
+    val stats = statsIn(snap, statsCol)
+    val touched = snap.files.filter(p =>
       stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
     if (touched.isEmpty) return base // no file can contain a match
-    val declared = schemaAt(spark, table, Some(base))
+    val declared = snap.schema
     val paths = touched.map(p => new Path(table, p).toString)
     // positions of the rows to delete, addressed physically: the raw
     // per-file row index (NOT dv-filtered — positions of already-deleted
@@ -3371,11 +3235,11 @@ object TxLog {
       case None => spark.read.parquet(paths: _*)
     }
     val newPos = raw
-      .filter(col(resolvePhysical(spark, table, statsCol, Some(base)))
+      .filter(col(snap.physical(statsCol))
         .between(lo, hi))
       .select(col("_metadata.file_name").as("file"),
         col("_metadata.row_index").as("pos"))
-    bindDeletionVectors(spark, table, base, newPos, touched)
+    bindDeletionVectors(spark, table, snap, newPos, touched)
   }
 
   /** The MOR-delete commit tail shared by the range and free-predicate
@@ -3384,7 +3248,7 @@ object TxLog {
     * dv bindings for exactly the files that have matches. Returns the
     * committed version, or `base` unchanged when nothing matched. */
   private def bindDeletionVectors(spark: SparkSession, table: String,
-                                  base: Long, newPosRaw: DataFrame,
+                                  snap: Snapshot, newPosRaw: DataFrame,
                                   scope: Seq[String],
                                   adds: Seq[String] = Seq.empty,
                                   tag: String = "delete",
@@ -3392,7 +3256,8 @@ object TxLog {
                                   schemaB64: Option[String] = None,
                                   metas: Seq[String] = Seq.empty): Long = {
     import org.apache.spark.sql.functions.{col, lit, max, sum}
-    val oldDvs = dvAt(spark, table, Some(base))
+    val base = snap.version
+    val oldDvs = snap.liveDvs
     val scopeNames = scope.map(p => p.split('/').last)
     // prior vectors for the re-masked files ride into the new vector,
     // so "last binding wins" stays exact
@@ -3450,29 +3315,13 @@ object TxLog {
                          predicateSql: String): Long = {
     import org.apache.spark.sql.functions.{col, expr}
     requireNonEmpty(spark, table, "delete")
-    val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val declared = schemaAt(spark, table, Some(base))
-    val paths = live.map(p => new Path(table, p).toString)
-    // physical scan (the _metadata struct needs the un-projected scan),
-    // then project logical names ALONGSIDE the address columns so the
-    // caller's predicate binds to what read() would show
-    val raw = declared match {
-      case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-    val addressed = raw
-      .withColumn("_g_dv_file", col("_metadata.file_name"))
-      .withColumn("_g_dv_pos", col("_metadata.row_index"))
-    val logical = declared.filter(mappingEnabled) match {
-      case None => addressed
-      case Some(s) => addressed.select(
-        s.fields.map(f => col(physicalName(f)).as(f.name)).toSeq ++
-          Seq(col("_g_dv_file"), col("_g_dv_pos")): _*)
-    }
-    val newPos = logical.filter(expr(predicateSql))
+    val snap = snapshot(spark, table, Some(latestVersion(spark, table)))
+    // positions of already-deleted rows may re-match: the union with the
+    // prior vectors dedups them
+    val newPos = addressedRows(spark, table, snap.files, snap.schema)
+      .filter(expr(predicateSql))
       .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    bindDeletionVectors(spark, table, base, newPos, live)
+    bindDeletionVectors(spark, table, snap, newPos, snap.files)
   }
 
   /** REPLACE WHERE (the public Delta `INSERT INTO … REPLACE WHERE` /
@@ -3532,13 +3381,28 @@ object TxLog {
     val idMetas = idCols.map { case (n, (s0, st, nx)) =>
       metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + nImg * st}")
     }
-    val declared = schemaAt(spark, table, Some(base))
+    val snap = snapshot(spark, table, Some(base))
     val rel = f"data/v${base + 1}%08d-replace-${uniq()}"
-    physicalize(images, declared).write.parquet(new Path(table, rel).toString)
+    physicalize(images, snap.schema).write.parquet(new Path(table, rel).toString)
     val adds = writtenFiles(spark, table, rel)
     // addresses of the replaced slice — the deleteWhereMorExpr scan
-    val live = snapshotFiles(spark, table, Some(base))
-    val paths = live.map(p => new Path(table, p).toString)
+    val newPos = addressedRows(spark, table, snap.files, snap.schema)
+      .filter(expr(predicateSql))
+      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+    bindDeletionVectors(spark, table, snap, newPos, snap.files, adds = adds,
+      tag = "merge", commitOnNoMatch = true, metas = idMetas)
+  }
+
+  /** The rows of `files` under their logical names ALONGSIDE the
+    * physical address columns (`_g_dv_file`, `_g_dv_pos`), deletion
+    * vectors NOT applied: a physical scan (the _metadata struct needs the
+    * un-projected scan), so a caller's predicate binds to what read()
+    * would show. */
+  private def addressedRows(spark: SparkSession, table: String,
+                            files: Seq[String],
+                            declared: Option[StructType]): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val paths = files.map(p => new Path(table, p).toString)
     val raw = declared match {
       case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
@@ -3546,16 +3410,12 @@ object TxLog {
     val addressed = raw
       .withColumn("_g_dv_file", col("_metadata.file_name"))
       .withColumn("_g_dv_pos", col("_metadata.row_index"))
-    val logical = declared.filter(mappingEnabled) match {
+    declared.filter(mappingEnabled) match {
       case None => addressed
       case Some(s) => addressed.select(
         s.fields.map(f => col(physicalName(f)).as(f.name)).toSeq ++
           Seq(col("_g_dv_file"), col("_g_dv_pos")): _*)
     }
-    val newPos = logical.filter(expr(predicateSql))
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    bindDeletionVectors(spark, table, base, newPos, live, adds = adds,
-      tag = "merge", commitOnNoMatch = true, metas = idMetas)
   }
 
   /** The live-row universe at `base`, addressed for MOR writes: logical
@@ -3565,25 +3425,11 @@ object TxLog {
     * UNBOUND stay live), so a dead physical copy can neither re-mask nor
     * re-image. Every MOR write (UPDATE / conditional MERGE) derives its
     * masks and images from this frame. */
-  private def liveAddressed(spark: SparkSession, table: String, base: Long,
-                            live: Seq[String],
-                            declared: Option[StructType]): DataFrame = {
+  private def liveAddressed(spark: SparkSession, table: String,
+                            snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val paths = live.map(p => new Path(table, p).toString)
-    val raw = declared match {
-      case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-    val addressed = raw
-      .withColumn("_g_dv_file", col("_metadata.file_name"))
-      .withColumn("_g_dv_pos", col("_metadata.row_index"))
-    val logical = declared.filter(mappingEnabled) match {
-      case None => addressed
-      case Some(s) => addressed.select(
-        s.fields.map(f => col(physicalName(f)).as(f.name)).toSeq ++
-          Seq(col("_g_dv_file"), col("_g_dv_pos")): _*)
-    }
-    val priorDvs = dvAt(spark, table, Some(base))
+    val logical = addressedRows(spark, table, snap.files, snap.schema)
+    val priorDvs = snap.liveDvs
     if (priorDvs.isEmpty) logical else {
       val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
       val dvRows = spark.read.parquet(
@@ -3612,8 +3458,8 @@ object TxLog {
       s"txlog: a column is assigned twice (${sets.map(_._1).mkString(", ")})")
     requireNonEmpty(spark, table, "update")
     val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val declared = schemaAt(spark, table, Some(base))
+    val snap = snapshot(spark, table, Some(base))
+    val declared = snap.schema
     val logicalCols = declared.map(_.fieldNames.toSeq).getOrElse(
       read(spark, table, Some(base)).columns.toSeq)
     sets.foreach { case (c, _) => require(logicalCols.contains(c),
@@ -3622,8 +3468,7 @@ object TxLog {
     // the matched subframe feeds BOTH the mask and the images; prior
     // deletion vectors anti-apply ([[liveAddressed]]) so an
     // already-deleted row can neither re-mask nor re-image
-    val matched = liveAddressed(spark, table, base, live, declared)
-      .filter(expr(predicateSql))
+    val matched = liveAddressed(spark, table, snap).filter(expr(predicateSql))
     val newPos = matched
       .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
     if (newPos.isEmpty) return base // probe-first: nothing matched
@@ -3657,7 +3502,7 @@ object TxLog {
     val dataDir = new Path(table, rel)
     physicalize(images, declared).write.parquet(dataDir.toString)
     val adds = writtenFiles(spark, table, rel)
-    try bindDeletionVectors(spark, table, base, newPos, live,
+    try bindDeletionVectors(spark, table, snap, newPos, snap.files,
       adds = adds, tag = "merge", commitOnNoMatch = true)
     catch { case e: Throwable =>
       fs(spark, dataDir).delete(dataDir, true) // no orphans on a lost race
@@ -3676,15 +3521,14 @@ object TxLog {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(keyCols.nonEmpty, "txlog: deleteKeysMor needs key columns")
     requireNonEmpty(spark, table, "delete")
-    val base = latestVersion(spark, table)
-    val live = snapshotFiles(spark, table, Some(base))
-    val declared = schemaAt(spark, table, Some(base))
-    val paths = live.map(p => new Path(table, p).toString)
+    val snap = snapshot(spark, table, Some(latestVersion(spark, table)))
+    val declared = snap.schema
+    val paths = snap.files.map(p => new Path(table, p).toString)
     val raw = declared match {
       case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
-    val pKeys = keyCols.map(k => resolvePhysical(spark, table, k, Some(base)))
+    val pKeys = keyCols.map(snap.physical)
     val batchKeys = physicalize(keys.select(keyCols.map(col): _*).distinct(),
       declared)
     val newPos = raw
@@ -3692,7 +3536,7 @@ object TxLog {
       .withColumn("_g_dv_pos", col("_metadata.row_index"))
       .join(broadcast(batchKeys), pKeys, "left_semi")
       .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    bindDeletionVectors(spark, table, base, newPos, live)
+    bindDeletionVectors(spark, table, snap, newPos, snap.files)
   }
 
   /** RESTORE the table to the state of `toVersion` as a NEW commit —
@@ -3729,18 +3573,18 @@ object TxLog {
     require(toVersion <= base,
       s"txlog: cannot restore $table to future version $toVersion (latest: $base)")
     if (toVersion == base) return base
-    val target = snapshotFiles(spark, table, Some(toVersion))
-    val cur = snapshotFiles(spark, table, Some(base)).toSet
-    val adds = target.filterNot(cur)
-    val removes = (cur -- target.toSet).toSeq
-    val targetDvs = dvAt(spark, table, Some(toVersion))
+    val target = snapshot(spark, table, Some(toVersion))
+    val head = snapshot(spark, table, Some(base))
+    val cur = head.files.toSet
+    val adds = target.files.filterNot(cur)
+    val removes = (cur -- target.files.toSet).toSeq
     // self-contained mask state: bind-or-unbind EVERY restored file, so
     // no later binding from the rolled-back range can leak through
-    val dvLines = target.map(fl => s"$fl|${targetDvs.getOrElse(fl, DvUnbound)}")
+    val dvLines = target.files.map(fl =>
+      s"$fl|${target.liveDvs.getOrElse(fl, DvUnbound)}")
     val schemaB64 = {
-      val tgtDecl = schemaAt(spark, table, Some(toVersion))
-      val headDecl = schemaAt(spark, table, Some(base))
-      if (tgtDecl == headDecl) None
+      val tgtDecl = target.schema
+      if (tgtDecl == head.schema) None
       else Some(encodeSchema(tgtDecl.getOrElse(StructType(
         read(spark, table, Some(toVersion)).schema.fields.map(_.copy(nullable = true))))))
     }
@@ -3813,13 +3657,12 @@ object TxLog {
     def abs(rel: String): String =
       if (new Path(rel).isAbsolute || rel.contains(":/")) rel // clone-of-clone
       else s"$srcRoot/$rel"
-    val live = snapshotFiles(spark, src, Some(v))
-    val adds = live.map(abs)
-    val dvLines = dvAt(spark, src, Some(v)).toSeq
+    val snap = snapshot(spark, src, Some(v))
+    val adds = snap.files.map(abs)
+    val dvLines = snap.liveDvs.toSeq
       .map { case (fl, dvDir) => s"${abs(fl)}|${abs(dvDir)}" }
-    val liveSet = live.toSet
-    val statsLines = statsPayloadsAt(spark, src, Some(v))
-      .filter(s => liveSet.contains(s.split('|')(0)))
+    val statsLines = snap.stats
+      .filter(s => snap.liveSet.contains(s.split('|')(0)))
       .map { s =>
         val t = s.split('|')
         // bloom lines carry a SECOND path (the sidecar dir) — rebase it
@@ -3828,7 +3671,7 @@ object TxLog {
           Seq(abs(t(0)), t(1), abs(t(2)), t(3), t(4)).mkString("|")
         else (abs(t(0)) +: t.drop(1)).mkString("|")
       }
-    val schemaB64 = schemaAt(spark, src, Some(v)).map(encodeSchema)
+    val schemaB64 = snap.schema.map(encodeSchema)
     val metaLines = commitMetas(spark, src, Some(v)).toSeq
       .map { case (k, value) => metaPayload(k, value) } :+
       metaPayload("clone-source", s"$srcRoot@$v")
@@ -3847,7 +3690,7 @@ object TxLog {
     val f = fs(spark, logDir(table))
     var maxTs = 0L
     val rows = vs.map { v =>
-      val path = new Path(logDir(table), f"$v%08d.json")
+      val path = commitPath(table, v)
       val actions = readLogFile(spark, path)
       val counts = actions.groupBy(_._1).view.mapValues(_.size).toMap
       val kind = actions.collectFirst { case ("tag", k) => k }.getOrElse(
@@ -3876,7 +3719,7 @@ object TxLog {
     var maxTs = 0L
     val stamped = vs.map { v =>
       maxTs = math.max(maxTs,
-        f.getFileStatus(new Path(logDir(table), f"$v%08d.json")).getModificationTime)
+        f.getFileStatus(commitPath(table, v)).getModificationTime)
       (v, maxTs)
     }
     stamped.takeWhile(_._2 <= tsMillis).lastOption.map(_._1).getOrElse(
@@ -3965,18 +3808,17 @@ object TxLog {
     }
     // fresh referenced set AFTER the listing: everything at or after
     // the cutoff — including commits that landed mid-walk — stays
-    val retainedVersions = versions(spark, table).filter(_ >= cutoff)
-    val referenced = retainedVersions
-      .flatMap(v => snapshotFiles(spark, table, Some(v))).toSet
+    val log = listLog(spark, table)
+    val retainedSnaps = log.commits.filter(_ >= cutoff)
+      .map(v => replay(spark, table, log, Some(v)))
+    val referenced = retainedSnaps.flatMap(_.files).toSet
     // deletion-vector sidecars referenced by any retained version's live
     // bindings must survive too — they are part of those snapshots'
-    // read path even though snapshotFiles doesn't list them
-    val referencedDvDirs = retainedVersions
-      .flatMap(v => dvAt(spark, table, Some(v)).values).toSet
+    // read path even though their files list does not name them
+    val referencedDvDirs = retainedSnaps.flatMap(_.liveDvs.values).toSet
     // ...and the bloom sidecars referenced by any retained version's
     // live bloom lines — same part-of-the-read-path rule as dv dirs
-    val referencedBloomDirs = retainedVersions
-      .flatMap(v => bloomDirsAt(spark, table, Some(v))).toSet
+    val referencedBloomDirs = retainedSnaps.flatMap(bloomDirsIn).toSet
     val referencedSidecarDirs = referencedDvDirs ++ referencedBloomDirs
     def underReferencedSidecar(rel: String): Boolean =
       referencedSidecarDirs.exists(d => rel.startsWith(d + "/"))
@@ -4029,15 +3871,15 @@ object TxLog {
   /** All (action, payload) lines of commit `version` — for consumers
     * that classify a commit themselves ([[TxLogStreamProvider]]'s CDF
     * mode plans delete-image partitions from the dv lines). */
-  private[sources] def commitActions(spark: SparkSession, table: String,
-                                     version: Long): Seq[(String, String)] =
-    readLogFile(spark, new Path(logDir(table), f"$version%08d.json"))
+  private[graft] def commitActions(spark: SparkSession, table: String,
+                                   version: Long): Seq[(String, String)] =
+    readLogFile(spark, commitPath(table, version))
 
   /** The kind tag of commit `version`: None for a plain append,
     * Some("compact"/"overwrite") for rewrites (untagged pre-r10 rewrite
     * commits read as None but still carry removes). */
   def commitKind(spark: SparkSession, table: String, version: Long): Option[String] =
-    readLogFile(spark, new Path(logDir(table), f"$version%08d.json"))
+    readLogFile(spark, commitPath(table, version))
       .collectFirst { case ("tag", k) => k }
 
   /** True iff commit `version` removes files — i.e. it rewrites prior
@@ -4045,7 +3887,7 @@ object TxLog {
     * Change-feed-style consumers ([[graft.operators.MatView]]) branch on
     * this to decide whether a delta fold is still exact. */
   def commitRemoves(spark: SparkSession, table: String, version: Long): Boolean =
-    readLogFile(spark, new Path(logDir(table), f"$version%08d.json"))
+    readLogFile(spark, commitPath(table, version))
       .exists(_._1 == "remove")
 
   /** True iff commit `version` changes already-delivered DATA — it
@@ -4053,14 +3895,8 @@ object TxLog {
     * file yet still deletes rows). This, not [[commitRemoves]], is the
     * predicate change-feed-style consumers must branch on. */
   def commitChangesData(spark: SparkSession, table: String, version: Long): Boolean =
-    readLogFile(spark, new Path(logDir(table), f"$version%08d.json"))
+    readLogFile(spark, commitPath(table, version))
       .exists(a => a._1 == "remove" || a._1 == "dv")
-
-  /** Dev probe accessor: the add-paths of one commit. */
-  private[graft] def commitAddsForProbe(spark: SparkSession, table: String,
-                                        version: Long): Seq[String] =
-    readLogFile(spark, new Path(logDir(table), f"$version%08d.json"))
-      .collect { case ("add", p) => p }
 
   /** True iff commit `version` touches ROWS at all (adds, removes, or
     * DV bindings). False for the row-invisible metadata commits —
@@ -4068,7 +3904,7 @@ object TxLog {
     * incremental consumer (a materialized-view refresh over a range of
     * only such commits is a no-op, not a "no row changes" error). */
   def commitTouchesRows(spark: SparkSession, table: String, version: Long): Boolean =
-    readLogFile(spark, new Path(logDir(table), f"$version%08d.json"))
+    readLogFile(spark, commitPath(table, version))
       .exists(a => a._1 == "add" || a._1 == "remove" || a._1 == "dv")
 
   /** The files a change-feed consumer should DELIVER for commit
@@ -4085,7 +3921,7 @@ object TxLog {
   private[sources] def appendedFiles(spark: SparkSession, table: String,
                                      version: Long,
                                      skipChangeCommits: Boolean = false): Seq[String] = {
-    val path = new Path(logDir(table), f"$version%08d.json")
+    val path = commitPath(table, version)
     val actions = readLogFile(spark, path)
     val kind = actions.collectFirst { case ("tag", k) => k }
     // a dv binding is a data change even with zero removes (MOR delete)
@@ -4190,7 +4026,8 @@ object TxLog {
   def readChangesCdf(spark: SparkSession, table: String,
                      fromExclusive: Long, toInclusive: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val vs = versions(spark, table)
+    val log = listLog(spark, table)
+    val vs = log.commits
     require(vs.nonEmpty, s"txlog: no commits in $table")
     require(toInclusive <= vs.last,
       s"txlog: version $toInclusive does not exist yet (latest: ${vs.last})")
@@ -4199,7 +4036,8 @@ object TxLog {
     val range = vs.filter(v => v > fromExclusive && v <= toInclusive)
     require(range.nonEmpty,
       s"txlog: no commits in ($fromExclusive, $toInclusive]")
-    val declared = schemaAt(spark, table, Some(toInclusive))
+    def at(v: Long): Snapshot = replay(spark, table, log, Some(v))
+    val declared = at(toInclusive).schema
     val wm = earliestReadableVersion(spark, table)
     // one slice reader: files scanned under the RANGE-END schema so
     // slices from both sides of an evolution/rename align (readChanges'
@@ -4218,7 +4056,7 @@ object TxLog {
       val newPos = spark.read
         .parquet(bound.map(_._2).distinct.map(p => new Path(table, p).toString): _*)
         .filter(col("file").isin(names: _*))
-      val prior = dvPayloadsAt(spark, table, Some(v - 1)).toMap
+      val prior = at(v - 1).dvs.toMap
       val priorDirs = bound.flatMap(b => prior.get(b._1))
         .filter(_ != DvUnbound).distinct
       val freshPlan = if (priorDirs.isEmpty) newPos
@@ -4254,7 +4092,7 @@ object TxLog {
       Some(logicalize(imaged, declared))
     }
     val slices: Seq[DataFrame] = range.flatMap { v =>
-      val actions = readLogFile(spark, new Path(logDir(table), f"$v%08d.json"))
+      val actions = readLogFile(spark, commitPath(table, v))
       val kind = actions.collectFirst { case ("tag", k) => k }
       val adds = actions.collect { case ("add", p) => p }
       val removes = actions.collect { case ("remove", p) => p }
@@ -4279,18 +4117,16 @@ object TxLog {
           ins ++ morDeletes(v, dvLines).map(stamp(_, "delete", v)).toSeq
         case Some("delete") => // copy-on-write: touched-file-bounded diff
           requireReadable(v - 1)
-          val priorDvs = dvAt(spark, table, Some(v - 1))
-            .filter(kv => removes.contains(kv._1))
+          val priorDvs = at(v - 1).liveDvs.filter(kv => removes.contains(kv._1))
           val gone = slice(removes, priorDvs)
             .exceptAll(if (adds.isEmpty) slice(removes, priorDvs).limit(0)
               else slice(adds, Map.empty))
           Seq(stamp(gone, "delete", v))
         case _ => // overwrite / restore / legacy rewrite: full snapshot diff
           requireReadable(v - 1)
-          val pre = slice(snapshotFiles(spark, table, Some(v - 1)),
-            dvAt(spark, table, Some(v - 1)))
-          val post = slice(snapshotFiles(spark, table, Some(v)),
-            dvAt(spark, table, Some(v)))
+          val (before, after) = (at(v - 1), at(v))
+          val pre = slice(before.files, before.liveDvs)
+          val post = slice(after.files, after.liveDvs)
           Seq(stamp(post.exceptAll(pre), "insert", v),
             stamp(pre.exceptAll(post), "delete", v))
       }
@@ -4337,6 +4173,7 @@ object TxLog {
     // rejected — GENERATED ALWAYS means a source can never legitimately
     // carry the ids an upsert-by-id would need.
     val idCols = identityColumns(spark, table, Some(base)).toSeq.sortBy(_._1)
+    val snap = snapshot(spark, table, Some(base))
     idCols.foreach { case (n, _) => require(!keys.contains(n),
       s"txlog: merge into $table cannot key on identity column '$n' — " +
         "it is GENERATED ALWAYS AS IDENTITY, so a merge source never " +
@@ -4369,13 +4206,12 @@ object TxLog {
       requireFitsDeclared(spark, table, updates, "merge")
       None
     } else {
-      val cur = schemaAt(spark, table, Some(base))
-        .getOrElse(read(spark, table, Some(base)).schema)
+      val cur = snap.schema.getOrElse(read(spark, table, Some(base)).schema)
       keys.foreach(k => require(cur.fieldNames.contains(k),
         s"txlog: merge key '$k' is not a column of $table — a merge " +
           "cannot key on a column the evolution itself introduces"))
       val evolved = evolveSchema(cur, updates.schema)
-      val needsDeclare = schemaAt(spark, table, Some(base)) match {
+      val needsDeclare = snap.schema match {
         case Some(d) => evolved != d
         case None => evolved != StructType(cur.fields.map(_.copy(nullable = true)))
       }
@@ -4398,13 +4234,13 @@ object TxLog {
     // merge's scan cost tracks the TOUCHED files, not the table. Capped
     // at [[MaxMergeBloomProbes]] distinct keys (beyond that the
     // driver-side membership sweep stops paying for itself).
-    val liveAll = snapshotFiles(spark, table, Some(base))
+    val liveAll = snap.files
     val live = {
       import org.apache.spark.sql.functions.xxhash64
       // hash through the TABLE's key type: a legally narrower batch key
       // (upcast at physicalize time) must probe as the stored type, or
       // a hash mismatch would skip files that DO hold matches
-      val keyType = evolution.orElse(schemaAt(spark, table, Some(base)))
+      val keyType = evolution.orElse(snap.schema)
         .flatMap(_.fields.find(_.name == keys.head)).map(_.dataType)
       keyType match {
         case None => liveAll // undeclared legacy table: no safe probe type
@@ -4413,15 +4249,15 @@ object TxLog {
             .select(xxhash64(col(keys.head).cast(t))).distinct()
             .limit(MaxMergeBloomProbes + 1).collect().map(_.getLong(0))
           if (probeHashes.length > MaxMergeBloomProbes) liveAll
-          else pruneFilesBloomHashes(spark, table, keys.head, probeHashes,
-            Some(base)).map(_._1).getOrElse(liveAll)
+          else pruneFilesBloomHashes(spark, table, snap, keys.head, probeHashes)
+            .map(_._1).getOrElse(liveAll)
       }
     }
     // under an evolution the EVOLVED schema governs every read and
     // write below: old files scan with the new columns null / the
     // widened types promoted (the same read path a declared ADD
     // COLUMN produces), and the images land physicalized to it
-    val declared = evolution.orElse(schemaAt(spark, table, Some(base)))
+    val declared = evolution.orElse(snap.schema)
     // positions of the superseded rows: physical scan (the _metadata
     // struct needs the un-projected scan) + broadcast semi-join on the
     // batch's keys — the 100 TB side never shuffles
@@ -4430,7 +4266,7 @@ object TxLog {
       case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
-    val pKeys = keys.map(k => resolvePhysical(spark, table, k, Some(base)))
+    val pKeys = keys.map(snap.physical)
     val batchKeys = physicalize(updates.select(keys.map(col): _*).distinct(),
       declared)
     // the hidden _metadata struct resolves only on the scan itself —
@@ -4442,7 +4278,7 @@ object TxLog {
     // LIVE matched rows only (prior vectors anti-applied, per-file like
     // scanLive): dead physical copies from earlier merges must neither
     // trip the duplicate guard below nor depend on harmless re-masking
-    val priorDvs = dvAt(spark, table, Some(base))
+    val priorDvs = snap.liveDvs
     val liveMatched = (if (priorDvs.isEmpty) addressed else {
       val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
       val dvRows = spark.read.parquet(
@@ -4453,7 +4289,7 @@ object TxLog {
           addressed("_g_dv_pos") === dvRows("pos"), "left_anti")
     }).select(pKeys.map(col) ++
         idCols.map { case (n, _) =>
-          col(resolvePhysical(spark, table, n, Some(base))).as(s"_g_id_$n")
+          col(snap.physical(n)).as(s"_g_id_$n")
         } ++ Seq(col("_g_dv_file"), col("_g_dv_pos")): _*)
       .localCheckpoint(true) // narrow (keys+ids+address), consumed twice:
     // the guard and the mask. A keyed merge on a DUPLICATE-keyed target
@@ -4496,7 +4332,7 @@ object TxLog {
     val dataDir = new Path(table, rel)
     physicalize(images, declared).write.parquet(dataDir.toString)
     val adds = writtenFiles(spark, table, rel)
-    try bindDeletionVectors(spark, table, base, newPos, live,
+    try bindDeletionVectors(spark, table, snap, newPos, live,
       adds = adds, tag = "merge", commitOnNoMatch = true,
       schemaB64 = evolution.map(encodeSchema), metas = idMetas)
     catch { case e: Throwable =>
@@ -4582,9 +4418,10 @@ object TxLog {
     idCols.foreach { case (n, _) => require(!keys.contains(n),
       s"txlog: merge into $table cannot key on identity column '$n' — " +
         "it is GENERATED ALWAYS AS IDENTITY; key on the natural key") }
-    val live = snapshotFiles(spark, table, Some(base))
-    val declared = schemaAt(spark, table, Some(base))
-    val target = liveAddressed(spark, table, base, live, declared)
+    val snap = snapshot(spark, table, Some(base))
+    val live = snap.files
+    val declared = snap.schema
+    val target = liveAddressed(spark, table, snap)
     val tgtSchema = org.apache.spark.sql.types.StructType(
       target.schema.filterNot(f => f.name.startsWith("_g_dv_")))
     val logicalCols = tgtSchema.fieldNames.toSeq
@@ -4764,14 +4601,14 @@ object TxLog {
     if (images.isEmpty) {
       // delete-only (or nothing-fired) batch: mask without images (no
       // insert fired, so there is no identity advance to record)
-      return bindDeletionVectors(spark, table, base, allPos, live,
+      return bindDeletionVectors(spark, table, snap, allPos, live,
         tag = "merge")
     }
     val rel = f"data/v${base + 1}%08d-merge-${uniq()}"
     val dataDir = new Path(table, rel)
     physicalize(images, declared).write.parquet(dataDir.toString)
     val adds = writtenFiles(spark, table, rel)
-    try bindDeletionVectors(spark, table, base, allPos, live,
+    try bindDeletionVectors(spark, table, snap, allPos, live,
       adds = adds, tag = "merge", commitOnNoMatch = true, metas = idMetas)
     catch { case e: Throwable =>
       fs(spark, dataDir).delete(dataDir, true) // no orphans on a lost race
@@ -4802,7 +4639,7 @@ object TxLog {
     val ids = versions(spark, table)
       .filter(v => asOf.forall(v <= _))
       .flatMap { v =>
-        readLogFile(spark, new Path(logDir(table), f"$v%08d.json")).collect {
+        readLogFile(spark, commitPath(table, v)).collect {
           case ("txn", t) if t.startsWith(pre) => t.stripPrefix(pre).toLong
         }
       }

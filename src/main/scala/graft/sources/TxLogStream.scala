@@ -237,18 +237,19 @@ private[sources] class TxLogMicroBatchStream(table: String, schema: StructType,
     val dvLines = actions.collect { case ("dv", p) =>
       val t = p.split('|'); (t(0), t(1))
     }.filter(_._2 != TxLog.DvUnbound)
-    def inserts: Seq[InputPartition] = adds.map(rel =>
-      TxLogInputPartition(new Path(table, rel).toString, v))
-    def deletes: Seq[InputPartition] = {
-      if (dvLines.isEmpty) return Seq.empty
-      // the delete images reconstruct against v-1's vectors: a vacuum
-      // that reclaimed them must fail at planning, not mid-scan (the
-      // same loud contract as the batch readChangesCdf)
+    // the delete images reconstruct against v-1's vectors: a vacuum
+    // that reclaimed them must fail at planning, not mid-scan (the
+    // same loud contract as the batch readChangesCdf)
+    lazy val prior = {
       val wm = TxLog.earliestReadableVersion(spark, table)
       require(v - 1 >= wm,
         s"txlog: change-feed reconstruction for version $v of $table needs " +
           s"vacuumed version ${v - 1} (earliest readable: $wm)")
-      val prior = TxLog.dvPayloadsAt(spark, table, Some(v - 1)).toMap
+      TxLog.snapshot(spark, table, Some(v - 1)).dvs.toMap
+    }
+    def inserts: Seq[InputPartition] = adds.map(rel =>
+      TxLogInputPartition(new Path(table, rel).toString, v))
+    def deletes: Seq[InputPartition] =
       dvLines.map { case (fileRel, dvRel) =>
         TxLogCdfDeletePartition(
           file = new Path(table, fileRel).toString,
@@ -258,16 +259,10 @@ private[sources] class TxLogMicroBatchStream(table: String, schema: StructType,
             .map(p => new Path(table, p).toString),
           commitVersion = v)
       }
-    }
     // the pure-metadata DROP PARTITION (removes-only, nothing written):
     // every removed file's LIVE rows (prior vectors anti-applied) ARE
     // the delete images — one whole-file delete partition each
-    def droppedFiles: Seq[InputPartition] = {
-      val wm = TxLog.earliestReadableVersion(spark, table)
-      require(v - 1 >= wm,
-        s"txlog: change-feed reconstruction for version $v of $table needs " +
-          s"vacuumed version ${v - 1} (earliest readable: $wm)")
-      val prior = TxLog.dvPayloadsAt(spark, table, Some(v - 1)).toMap
+    def droppedFiles: Seq[InputPartition] =
       removes.map { fileRel =>
         TxLogCdfDroppedFilePartition(
           file = new Path(table, fileRel).toString,
@@ -276,7 +271,6 @@ private[sources] class TxLogMicroBatchStream(table: String, schema: StructType,
             .map(p => new Path(table, p).toString),
           commitVersion = v)
       }
-    }
     kind match {
       case Some("compact") => Seq.empty // rows unchanged by contract
       case None if removes.isEmpty && dvLines.isEmpty => inserts

@@ -45,7 +45,7 @@ class IdentityRaceProbe extends AnyFunSuite {
       import org.apache.hadoop.fs.Path
       for (v <- TxLog.versions(spark, t)) {
         val df = try {
-          val adds = TxLog.commitAddsForProbe(spark, t, v)
+          val adds = TxLog.commitActions(spark, t, v).collect { case ("add", p) => p }
           if (adds.isEmpty) "no adds"
           else spark.read.parquet(adds.map(p => s"$t/$p"): _*)
             .select("row_id").as[Long].collect().sorted.mkString(",")

@@ -187,42 +187,51 @@ class TxLogSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet == (0L to 9L).toSet)
   }
 
-  test("PARQUET checkpoints: same replay semantics, all payload kinds survive, formats mix") {
-    val t = freshTable("ckptpq")
-    spark.conf.set(TxLog.CheckpointFormatKey, "parquet")
-    try {
-      // stats + dv + schema all cross the cadence inside the checkpoint
-      (0 until 9).foreach(i => TxLog.appendWithStats(spark, t,
-        Seq((i.toLong, s"v$i")).toDF("id", "s"), "id"))
-      TxLog.deleteWhereMorExpr(spark, t, "id = 3") // v9: dv binding
-      TxLog.append(spark, t, Seq((100L, "x")).toDF("id", "s")) // v10 → ckpt
-      assert(TxLog.checkpointVersions(spark, t) == Seq(10L))
-      val f = new Path(t, "_log").getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(f.exists(new Path(t, f"_log/${10L}%08d.ckptpq")) &&
-        !f.exists(new Path(t, f"_log/${10L}%08d.ckpt")),
-        "the checkpoint must be the parquet file, not text")
-      val viaCkpt = TxLog.snapshotFiles(spark, t)
-      val statsViaCkpt = TxLog.statsAt(spark, t, "id")
-      val dvViaCkpt = TxLog.dvAt(spark, t)
-      val rowsViaCkpt = TxLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
-      f.delete(new Path(t, f"_log/${10L}%08d.ckptpq"), false)
-      assert(TxLog.snapshotFiles(spark, t) == viaCkpt,
-        "parquet-checkpointed replay must equal full replay, incl. order")
-      assert(TxLog.statsAt(spark, t, "id") == statsViaCkpt,
-        "stats must survive the parquet checkpoint")
-      assert(TxLog.dvAt(spark, t) == dvViaCkpt,
-        "dv bindings must survive the parquet checkpoint")
-      assert(TxLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
-        == rowsViaCkpt)
-      assert(!rowsViaCkpt.contains(3L), "the MOR delete must hold either way")
-      // formats MIX across history: flip back to text, cross the cadence
-      // again — readers auto-detect per checkpoint
-      spark.conf.set(TxLog.CheckpointFormatKey, "text")
-      (0 until 10).foreach(i => TxLog.append(spark, t,
-        Seq((200L + i, "y")).toDF("id", "s")))
-      assert(TxLog.checkpointVersions(spark, t) == Seq(20L))
-      assert(TxLog.read(spark, t).count() == 19L)
-    } finally spark.conf.unset(TxLog.CheckpointFormatKey)
+  test("checkpointed replay ≡ full replay at every version, all payload kinds") {
+    val t = freshTable("ckptall")
+    // stats + dv + schema all cross the cadence inside the checkpoints
+    (0 until 8).foreach(i => TxLog.appendWithStats(spark, t,
+      Seq((i.toLong, s"v$i")).toDF("id", "s"), "id"))
+    TxLog.deleteWhereMorExpr(spark, t, "id = 3") // v8: dv binding
+    TxLog.appendWithStats(spark, t, Seq((8L, "v8")).toDF("id", "s"), "id")
+    TxLog.append(spark, t, Seq((100L, "x")).toDF("id", "s")) // v10 → ckpt
+    assert(TxLog.checkpointVersions(spark, t) == Seq(10L))
+    assert(!TxLog.read(spark, t).collect().map(_.getLong(0)).contains(3L),
+      "the MOR delete must hold through the checkpoint")
+    // v11: restore to v7 re-binds every restored file to the unbound
+    // sentinel, so the id-3 row comes back
+    assert(TxLog.restore(spark, t, 7L) == 11L)
+    assert(TxLog.dvAt(spark, t).isEmpty)
+    TxLog.addColumn(spark, t, "n", org.apache.spark.sql.types.LongType) // v12
+    TxLog.deleteWhereMorExpr(spark, t, "id = 5") // v13
+    (0 until 7).foreach(i => TxLog.append(spark, t,
+      Seq((200L + i, "y", i.toLong)).toDF("id", "s", "n"))) // v14..v20
+    assert(TxLog.checkpointVersions(spark, t) == Seq(10L, 20L))
+    val vs = TxLog.versions(spark, t)
+    def state(v: Long) = (TxLog.snapshotFiles(spark, t, Some(v)),
+      TxLog.schemaAt(spark, t, Some(v)), TxLog.statsAt(spark, t, "id", Some(v)),
+      TxLog.dvAt(spark, t, Some(v)))
+    val viaCkpt = vs.map(state)
+    val rowsViaCkpt = TxLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
+    assert(rowsViaCkpt == ((0L to 7L).filter(_ != 5L) ++ (200L to 206L)))
+    assert(viaCkpt(10)._4.size == 1 && viaCkpt(11)._4.isEmpty &&
+      viaCkpt(20)._4.size == 1, "dv bindings: bound, unbound by restore, re-bound")
+    assert(viaCkpt(11)._2.isEmpty && viaCkpt(20)._2.exists(_.fieldNames.contains("n")))
+    assert(viaCkpt(20)._3.size == 8, "the restored files' stats survive v20's checkpoint")
+    // ground truth: delete every checkpoint; a leftover parquet
+    // checkpoint of an older build is never listed, so it cannot matter
+    val f = new Path(t, "_log").getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(10L, 20L).foreach(c => assert(f.delete(new Path(t, f"_log/$c%08d.ckpt"), false)))
+    val stale = f.create(new Path(t, f"_log/${20L}%08d.ckptpq"))
+    stale.write("not a checkpoint".getBytes("UTF-8"))
+    stale.close()
+    assert(TxLog.checkpointVersions(spark, t).isEmpty)
+    vs.zip(viaCkpt).foreach { case (v, expected) =>
+      assert(state(v) == expected,
+        s"checkpointed replay at v$v must equal full replay, incl. file order")
+    }
+    assert(TxLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
+      == rowsViaCkpt)
   }
 
   test("corrupt commit lines and format-hostile paths fail loudly") {
