@@ -200,11 +200,11 @@ object MatView {
     * equal their source's latest version — one commit on EITHER side
     * and the query reads the sources again. */
   private[graft] def isFreshJoin(spark: SparkSession, mv: String,
-                                 fact: String, dim: String): Boolean =
-    TxLog.lastCommittedBatch(spark, mv, MvjFactId)
-      .contains(TxLog.latestVersion(spark, fact)) &&
-      TxLog.lastCommittedBatch(spark, mv, MvjDimId)
-        .contains(TxLog.latestVersion(spark, dim))
+                                 fact: String, dim: String): Boolean = {
+    val applied = TxLog.snapshot(spark, mv).txns
+    applied.get(MvjFactId).contains(TxLog.latestVersion(spark, fact)) &&
+      applied.get(MvjDimId).contains(TxLog.latestVersion(spark, dim))
+  }
 
   /** The persisted definition's SOURCE TABLES (src, or fact + dim) —
     * what a continuous maintainer of a named view must subscribe to
@@ -335,7 +335,10 @@ object MatView {
     def retry() =
       refreshOnce(spark, src, mv, keyCols, valCol, keyExprs, attemptsLeft - 1)
     val srcLatest = TxLog.latestVersion(spark, src)
-    if (TxLog.versions(spark, mv).isEmpty) {
+    // ONE snapshot pairs the view's version with its marker — a racer's
+    // newer commit must not pair its watermark with our older state
+    val mvSnap = TxLog.snapshot(spark, mv)
+    if (mvSnap.version < 0) {
       // the definition rides in the BUILD commit's metadata channel, so
       // a later refresh needs no re-supplied plan (REFRESH MATERIALIZED
       // VIEW resolves it via [[refreshNamed]])
@@ -349,12 +352,9 @@ object MatView {
         "build"
       else retry() // another builder won: fold on top of ITS state
     } else {
-      val mvBase = TxLog.latestVersion(spark, mv)
-      // the marker AS OF the pinned view version — a racer's newer
-      // commit must not pair its watermark with our older snapshot
-      val applied = TxLog.lastCommittedBatch(spark, mv, MvAppId, Some(mvBase))
-        .getOrElse(throw new IllegalStateException(
-          s"txlog: $mv carries no $MvAppId marker — not a MatView table"))
+      val mvBase = mvSnap.version
+      val applied = mvSnap.txns.getOrElse(MvAppId, throw new IllegalStateException(
+        s"txlog: $mv carries no $MvAppId marker — not a MatView table"))
       if (applied >= srcLatest) return "noop"
       val range = TxLog.versions(spark, src).filter(v => v > applied && v <= srcLatest)
       // classify the unapplied commits: compactions fold to nothing;
@@ -550,7 +550,8 @@ object MatView {
     def retry() = refreshDistinctOnce(spark, src, mv, keyCols, valCol,
       attemptsLeft - 1)
     val srcLatest = TxLog.latestVersion(spark, src)
-    if (TxLog.versions(spark, mv).isEmpty) {
+    val mvSnap = TxLog.snapshot(spark, mv) // version and marker together
+    if (mvSnap.version < 0) {
       // the definition rides the BUILD commit's metadata, so REFRESH
       // MATERIALIZED VIEW / continuous maintenance need no re-supplied
       // plan (refreshNamed dispatches on the ndv flavor key)
@@ -561,10 +562,9 @@ object MatView {
           encodeDef(src, keyCols, valCol))))) "build"
       else retry()
     } else {
-      val mvBase = TxLog.latestVersion(spark, mv)
-      val applied = TxLog.lastCommittedBatch(spark, mv, MvdAppId, Some(mvBase))
-        .getOrElse(throw new IllegalStateException(
-          s"txlog: $mv carries no $MvdAppId marker — not a distinct-MV table"))
+      val mvBase = mvSnap.version
+      val applied = mvSnap.txns.getOrElse(MvdAppId, throw new IllegalStateException(
+        s"txlog: $mv carries no $MvdAppId marker — not a distinct-MV table"))
       if (applied >= srcLatest) return "noop"
       val range = TxLog.versions(spark, src)
         .filter(v => v > applied && v <= srcLatest)
@@ -741,7 +741,8 @@ object MatView {
       TxLog.read(spark, dim, Some(dimLatest)),
       joinKeys, keyCols, valCol, factFilter, joinType)
     val marks = Seq((MvjFactId, factLatest), (MvjDimId, dimLatest))
-    if (TxLog.versions(spark, mv).isEmpty) {
+    val mvSnap = TxLog.snapshot(spark, mv) // version and markers together
+    if (mvSnap.version < 0) {
       // the join definition rides in the BUILD commit's metadata, so
       // REFRESH MATERIALIZED VIEW resolves it via [[refreshNamed]]
       if (TxLog.appendIfEmpty(spark, mv, fullView, MvjAppId,
@@ -752,13 +753,11 @@ object MatView {
         "build"
       else retry()
     } else {
-      val mvBase = TxLog.latestVersion(spark, mv)
-      val appliedFact = TxLog.lastCommittedBatch(spark, mv, MvjFactId, Some(mvBase))
-        .getOrElse(throw new IllegalStateException(
-          s"txlog: $mv carries no $MvjFactId marker — not a join-MV table"))
-      val appliedDim = TxLog.lastCommittedBatch(spark, mv, MvjDimId, Some(mvBase))
-        .getOrElse(throw new IllegalStateException(
-          s"txlog: $mv carries no $MvjDimId marker — not a join-MV table"))
+      val mvBase = mvSnap.version
+      val appliedFact = mvSnap.txns.getOrElse(MvjFactId, throw new IllegalStateException(
+        s"txlog: $mv carries no $MvjFactId marker — not a join-MV table"))
+      val appliedDim = mvSnap.txns.getOrElse(MvjDimId, throw new IllegalStateException(
+        s"txlog: $mv carries no $MvjDimId marker — not a join-MV table"))
       if (appliedFact >= factLatest && appliedDim >= dimLatest) return "noop"
       def commitPinned(view: DataFrame, mode: String): String =
         try {
@@ -773,9 +772,10 @@ object MatView {
               // state landed, not ours. Compare the per-component
               // markers directly; retry while either is still behind,
               // so the skipped-but-newer watermark always gets folded.
-              val af = TxLog.lastCommittedBatch(spark, mv, MvjFactId).getOrElse(-1L)
-              val ad = TxLog.lastCommittedBatch(spark, mv, MvjDimId).getOrElse(-1L)
-              if (af >= factLatest && ad >= dimLatest) mode else retry()
+              val now = TxLog.snapshot(spark, mv)
+              if (now.landed(MvjFactId, factLatest) && now.landed(MvjDimId, dimLatest))
+                mode
+              else retry()
           }
         } catch {
           case _: graft.sources.TxLogConcurrentModificationException => retry()

@@ -58,11 +58,11 @@ case class MergeNotMatchedInsert(cond: Option[String],
   * pinning is lineage for a 100 TB corpus).
   *
   * Scale shape: the LOG is driver-side (one tiny JSON file per commit,
-  * listed and replayed in version order — bounded by commit count, the
-  * same contract real lakehouse clients have), while the DATA path
-  * never leaves executors: reads are a plain multi-file parquet scan of
-  * the live set (pushdown/pruning intact), writes are normal
-  * distributed parquet writes.
+  * folded in version order from the newest checkpoint — bounded by the
+  * checkpoint cadence, the contract real lakehouse clients have), while
+  * the DATA path never leaves executors: reads are a plain multi-file
+  * parquet scan of the live set (pushdown/pruning intact), writes are
+  * normal distributed parquet writes.
   *
   * CONCURRENCY (multi-writer, optimistic): the commit file itself is
   * the lock — version N commits by ATOMICALLY creating `_log/N.json`
@@ -86,12 +86,14 @@ case class MergeNotMatchedInsert(cond: Option[String],
   *
   * Commit format: `_log/%08d.json`, one action per line:
   * `{"a":"add","p":"<relative path>"}` / `{"a":"remove","p":"..."}`.
-  * Checkpoint format ([[checkpointEvery]]): `_log/%08d.ckpt`, the same
-  * line format, the only one there is; a parquet `_log/%08d.ckptpq`
-  * written by an older build is not listed, so a read replays from an
-  * earlier `.ckpt` or from commit 0 (commits are never deleted).
-  * Metadata reads list `_log` once ([[listLog]]) and fold the newest
-  * checkpoint plus the commit suffix once into a [[Snapshot]].
+  * Checkpoint format ([[checkpointEvery]]): `_log/%08d.checkpoint`, the
+  * same line format, carrying the whole folded state (metas and txn
+  * high-water marks included); a `.ckpt` or `.ckptpq` written by an
+  * older build is not listed, so a read replays from commit 0 (commits
+  * are never deleted). Every metadata read lists `_log` once
+  * ([[listLog]]) and folds the newest checkpoint plus the commit suffix
+  * once into a [[Snapshot]]; every write gates against the snapshot of
+  * the version it commits on top of.
   */
 object TxLog {
 
@@ -120,7 +122,7 @@ object TxLog {
       val names = f.listStatus(dir).toSeq.map(_.getPath.getName)
       def versionsOf(ext: String) =
         names.filter(_.endsWith(ext)).map(_.stripSuffix(ext).toLong).sorted
-      LogListing(versionsOf(".json"), versionsOf(".ckpt"))
+      LogListing(versionsOf(".json"), versionsOf(".checkpoint"))
     }
   }
 
@@ -221,26 +223,13 @@ object TxLog {
   }
 
   /** All commit-metadata entries of `table` up to `asOf`, LAST value per
-    * key winning — the durable small-metadata channel (a materialized
-    * view's persisted definition rides here). Driver-side log scan,
-    * bounded by commit count like [[versions]]; meta lines live in the
-    * commit files themselves, which vacuum never deletes. */
+    * key winning (a cleared key reads as "") — the durable
+    * small-metadata channel (a materialized view's persisted definition
+    * rides here). A field read of the [[Snapshot]] fold; checkpoints
+    * carry the metas, so the cost is bounded by [[checkpointEvery]]. */
   def commitMetas(spark: SparkSession, table: String,
-                  asOf: Option[Long] = None): Map[String, String] = {
-    val acc = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    versions(spark, table).filter(v => asOf.forall(v <= _)).foreach { v =>
-      readLogFile(spark, commitPath(table, v)).foreach {
-        case ("meta", payload) =>
-          val cut = payload.indexOf('|')
-          require(cut > 0, s"txlog: malformed meta payload in $table: $payload")
-          acc(payload.substring(0, cut)) = new String(
-            java.util.Base64.getDecoder.decode(payload.substring(cut + 1)),
-            "UTF-8")
-        case _ => ()
-      }
-    }
-    acc.toMap
-  }
+                  asOf: Option[Long] = None): Map[String, String] =
+    stateAt(spark, table, asOf).metas
 
   // ─────────────────────────────────────────────────────────────────
   // CHECK constraints (the Delta-style write-boundary gate): persisted
@@ -253,17 +242,10 @@ object TxLog {
 
   private val CheckKeyPrefix = "check-"
 
-  private def prefixed(metas: Map[String, String],
-                       prefix: String): Map[String, String] =
-    metas.collect {
-      case (k, v) if k.startsWith(prefix) && v.nonEmpty =>
-        k.substring(prefix.length) -> v
-    }
-
   /** The table's active CHECK constraints: name → SQL expression. */
   def checkConstraints(spark: SparkSession, table: String,
                        asOf: Option[Long] = None): Map[String, String] =
-    prefixed(commitMetas(spark, table, asOf), CheckKeyPrefix)
+    stateAt(spark, table, asOf).checks
 
   /** ADD CONSTRAINT `name` CHECK (`exprSql`): validates the expression
     * (resolves against the current schema, boolean-typed,
@@ -277,38 +259,23 @@ object TxLog {
                          exprSql: String): Long = {
     requireConstraintName(name)
     // validate against a PINNED snapshot and claim only one version past
-    // it — claim success then IMPLIES the validation covered every
-    // committed row. A generic meta-only loop would leapfrog concurrent
-    // commits unvalidated: a violating append landing between the
-    // validation scan and the meta commit would yield an active
-    // constraint over violating data (the appendCommit side re-checks
+    // it ([[commitMetaOnly]]) — claim success then IMPLIES the validation
+    // covered every committed row: a violating append landing between
+    // the validation scan and the meta commit fails our claim, and the
+    // retry re-validates ALL rows (the appendCommit side re-checks
     // constraints that land while IT retries; this is the mirror-image
     // duty on the constraint side — r15 advice).
-    def validate(): Long = {
-      require(!checkConstraints(spark, table).contains(name),
-        s"txlog: constraint '$name' already exists on $table — DROP it first")
-      val base = latestVersion(spark, table)
-      val snap = read(spark, table, Some(base))
-      val cond = resolveConstraint(spark, table, snap, name, exprSql)
-      val bad = snap.filter(!cond).count() // NULL-passing: cond is coalesced
-      require(bad == 0L,
-        s"txlog: cannot add constraint '$name' CHECK ($exprSql) to $table — " +
-          s"$bad existing rows violate it")
-      base
-    }
-    val metas = Seq(metaPayload(CheckKeyPrefix + name, exprSql))
-    var v = validate() + 1
-    var attempts = 0
-    while (!tryCommit(spark, table, v, Seq.empty, Seq.empty, None, None,
-      metas = metas)) {
-      attempts += 1
-      require(attempts < maxCommitAttempts,
-        s"txlog: add constraint $name on $table still contended after " +
-          s"$attempts attempts")
-      v = validate() + 1 // rows landed since the last scan: re-validate ALL
-    }
-    maybeCheckpoint(spark, table, v)
-    v
+    commitMetaOnly(spark, table, Seq(metaPayload(CheckKeyPrefix + name, exprSql)),
+      s"add constraint $name", check = { head =>
+        require(!head.checks.contains(name),
+          s"txlog: constraint '$name' already exists on $table — DROP it first")
+        val rows = read(spark, table, Some(head.version))
+        val cond = resolveConstraint(table, rows, name, exprSql)
+        val bad = rows.filter(!cond).count() // NULL-passing: cond is coalesced
+        require(bad == 0L,
+          s"txlog: cannot add constraint '$name' CHECK ($exprSql) to $table — " +
+            s"$bad existing rows violate it")
+      })
   }
 
   /** DROP CONSTRAINT `name` — a metadata-only commit clearing the key
@@ -316,9 +283,10 @@ object TxLog {
   def dropCheckConstraint(spark: SparkSession, table: String,
                           name: String): Long = {
     requireConstraintName(name)
-    require(checkConstraints(spark, table).contains(name),
+    val have = checkConstraints(spark, table)
+    require(have.contains(name),
       s"txlog: no constraint '$name' on $table " +
-        s"(have: ${checkConstraints(spark, table).keys.toSeq.sorted.mkString(", ")})")
+        s"(have: ${have.keys.toSeq.sorted.mkString(", ")})")
     commitMetaOnly(spark, table, Seq(metaPayload(CheckKeyPrefix + name, "")),
       s"drop constraint $name")
   }
@@ -331,7 +299,7 @@ object TxLog {
   /** Resolve + vet one constraint expression against `frame`'s schema:
     * boolean-typed, deterministic, analyzable. Returns the VIOLATION-
     * free predicate (NULL-passing, per SQL CHECK). */
-  private def resolveConstraint(spark: SparkSession, table: String,
+  private def resolveConstraint(table: String,
                                 frame: DataFrame, name: String,
                                 exprSql: String): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.functions.{coalesce, expr, lit}
@@ -356,29 +324,26 @@ object TxLog {
     coalesce(cond, lit(true))
   }
 
-  /** Enforce the table's constraints (as of `asOf`) against the new
-    * row images in `df`: ONE aggregate pass counting violations per
-    * constraint, loud with name + expression + count on any hit, so
-    * nothing lands. The incoming batch is the increment, not the
-    * table, so the extra scan costs the batch — the only enforcement
-    * shape that holds at 100 TB. */
-  private def requireSatisfiesConstraints(spark: SparkSession, table: String,
-                                          df: DataFrame, what: String,
-                                          asOf: Option[Long] = None,
-                                          pre: Option[Map[String, String]] = None): Unit = {
+  /** Enforce `snap`'s constraints against the new row images in `df`:
+    * ONE aggregate pass counting violations per constraint, loud with
+    * name + expression + count on any hit, so nothing lands. The
+    * incoming batch is the increment, not the table, so the extra scan
+    * costs the batch — the only enforcement shape that holds at 100 TB. */
+  private def requireSatisfiesConstraints(table: String, snap: Snapshot,
+                                          df: DataFrame, what: String): Unit = {
     import org.apache.spark.sql.functions.{lit, sum, when}
-    val cs = pre.getOrElse(checkConstraints(spark, table, asOf)).toSeq.sortBy(_._1)
+    val cs = snap.checks.toSeq.sortBy(_._1)
     if (cs.isEmpty) return
     // a batch may carry a SUBSET of declared columns (the rest read as
     // null) — the constraint must see exactly those nulls, so pad the
     // frame with typed null literals instead of failing resolution
-    val padded = schemaAt(spark, table).fold(df) { d =>
+    val padded = snap.schema.fold(df) { d =>
       val have = df.columns.toSet
       d.fields.filterNot(f => have.contains(f.name)).foldLeft(df)((acc, f) =>
         acc.withColumn(f.name, lit(null).cast(f.dataType)))
     }
     val aggs = cs.map { case (n, e) =>
-      sum(when(!resolveConstraint(spark, table, padded, n, e), 1L)
+      sum(when(!resolveConstraint(table, padded, n, e), 1L)
         .otherwise(0L)).as(s"v_$n")
     }
     val row = padded.agg(aggs.head, aggs.tail: _*).head()
@@ -403,7 +368,7 @@ object TxLog {
   /** The table's generated columns: name → SQL expression. */
   def generatedColumns(spark: SparkSession, table: String,
                        asOf: Option[Long] = None): Map[String, String] =
-    prefixed(commitMetas(spark, table, asOf), GenKeyPrefix)
+    stateAt(spark, table, asOf).gens
 
   /** ADD COLUMN `name` `dataType` GENERATED ALWAYS AS (`exprSql`) — one
     * commit carrying the widened schema AND the persisted expression.
@@ -417,53 +382,53 @@ object TxLog {
   def addGeneratedColumn(spark: SparkSession, table: String, name: String,
                          dataType: DataType, exprSql: String): Long = {
     import org.apache.spark.sql.functions.expr
-    requireConstraintName(name)
-    val declared = schemaAt(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"txlog: $table declares no schema — createTable first, then " +
-          "declare generated columns, then land data"))
-    require(!declared.fieldNames.contains(name),
-      s"txlog: column '$name' already exists on $table")
-    def requireEmpty(): Unit = require(
-      snapshotFiles(spark, table).isEmpty,
-      s"txlog: cannot add generated column '$name' to $table — data " +
-        "already landed, and stored generated values cannot be " +
-        "backfilled without a full rewrite (declare generated columns " +
-        "before the first append)")
-    requireEmpty()
-    val probe = read(spark, table)
-    val resolved =
-      try probe.select(expr(exprSql).as(name))
-      catch {
-        case e: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"txlog: generated column '$name' AS ($exprSql) does not " +
-              s"resolve against $table: ${e.getMessage}")
-      }
-    require(resolved.queryExecution.analyzed.expressions.forall(_.deterministic),
-      s"txlog: generated column '$name' AS ($exprSql) is nondeterministic")
-    val got = resolved.schema.head.dataType
-    require(got == dataType || widens(got, dataType),
-      s"txlog: generated column '$name' AS ($exprSql) produces " +
-        s"${got.catalogString}, which the declared " +
-        s"${dataType.catalogString} cannot hold losslessly")
-    val widened = StructType(declared.fields :+
-      org.apache.spark.sql.types.StructField(name, dataType, nullable = true))
-    val schemaB64 = Some(encodeSchema(widened))
-    val metas = Seq(metaPayload(GenKeyPrefix + name, exprSql))
-    var v = latestVersion(spark, table) + 1
-    var attempts = 0
-    while (!tryCommit(spark, table, v, Seq.empty, Seq.empty, None, schemaB64,
-      metas = metas)) {
-      attempts += 1
-      require(attempts < maxCommitAttempts,
-        s"txlog: generated-column add on $table still contended after " +
-          s"$attempts attempts")
-      requireEmpty() // a racing first append must not slip under us
-      v = math.max(v + 1, versions(spark, table).last + 1)
-    }
-    maybeCheckpoint(spark, table, v)
-    v
+    declareColumn(spark, table, "generated", StructField(name, dataType),
+      metaPayload(GenKeyPrefix + name, exprSql), vet = { snap =>
+        val resolved =
+          try read(spark, table, Some(snap.version)).select(expr(exprSql).as(name))
+          catch {
+            case e: org.apache.spark.sql.AnalysisException =>
+              throw new IllegalArgumentException(
+                s"txlog: generated column '$name' AS ($exprSql) does not " +
+                  s"resolve against $table: ${e.getMessage}")
+          }
+        require(resolved.queryExecution.analyzed.expressions.forall(_.deterministic),
+          s"txlog: generated column '$name' AS ($exprSql) is nondeterministic")
+        val got = resolved.schema.head.dataType
+        require(got == dataType || widens(got, dataType),
+          s"txlog: generated column '$name' AS ($exprSql) produces " +
+            s"${got.catalogString}, which the declared " +
+            s"${dataType.catalogString} cannot hold losslessly")
+      })
+  }
+
+  /** Declare an engine-owned `field` (GENERATED ALWAYS / IDENTITY): ONE
+    * metadata commit carrying the widened schema AND the column's `meta`
+    * entry. Legal only on a table with a declared schema that holds NO
+    * live data (a later add cannot backfill stored values without
+    * rewriting every file; at 100 TB that must be an explicit rewrite,
+    * not a side effect) — re-checked on every base the claim lands on,
+    * so a racing first append cannot slip under the declaration. `vet`
+    * checks the declaration against the table it extends. */
+  private def declareColumn(spark: SparkSession, table: String, kind: String,
+                            field: StructField, meta: String,
+                            vet: Snapshot => Unit = _ => ()): Long = {
+    requireConstraintName(field.name)
+    val snap = snapshot(spark, table)
+    val declared = snap.schema.getOrElse(throw new IllegalArgumentException(
+      s"txlog: $table declares no schema — createTable first, then " +
+        s"declare $kind columns, then land data"))
+    require(!declared.fieldNames.contains(field.name),
+      s"txlog: column '${field.name}' already exists on $table")
+    def requireEmpty(s: Snapshot): Unit = require(s.files.isEmpty,
+      s"txlog: cannot add $kind column '${field.name}' to $table — data " +
+        "already landed, and stored values cannot be backfilled without a " +
+        s"full rewrite (declare $kind columns before the first append)")
+    requireEmpty(snap)
+    vet(snap)
+    commitMetaOnly(spark, table, Seq(meta), s"$kind-column add",
+      Some(encodeSchema(StructType(declared.fields :+ field))),
+      check = requireEmpty)
   }
 
   /** Enforce/complete the generated columns on a batch of NEW row
@@ -472,13 +437,12 @@ object TxLog {
     * (null-safe equality — loud with the mismatch count, so an update
     * that changed a source column but kept a stale stored value cannot
     * land). */
-  private def applyGeneratedColumns(spark: SparkSession, table: String,
-                                    df: DataFrame, what: String,
-                                    pre: Option[Map[String, String]] = None): DataFrame = {
+  private def applyGeneratedColumns(table: String, snap: Snapshot,
+                                    df: DataFrame, what: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, sum, when}
-    val gens = pre.getOrElse(generatedColumns(spark, table)).toSeq.sortBy(_._1)
+    val gens = snap.gens.toSeq.sortBy(_._1)
     if (gens.isEmpty) return df
-    val declared = schemaAt(spark, table).getOrElse(return df)
+    val declared = snap.schema.getOrElse(return df)
     def genType(n: String) = declared.fields.find(_.name == n).map(_.dataType)
       .getOrElse(throw new IllegalStateException(
         s"txlog: generated column '$n' has no declared field on $table"))
@@ -526,17 +490,10 @@ object TxLog {
 
   private val IdentityKeyPrefix = "identity-"
 
-  private def identityFrom(metas: Map[String, String]): Map[String, (Long, Long, Long)] =
-    prefixed(metas, IdentityKeyPrefix).map { case (n, v) =>
-      val t = v.split('|')
-      require(t.length == 3, s"txlog: malformed identity meta for $n: $v")
-      n -> ((t(0).toLong, t(1).toLong, t(2).toLong))
-    }
-
   /** The table's identity columns: name → (startWith, stepBy, next). */
   def identityColumns(spark: SparkSession, table: String,
                       asOf: Option[Long] = None): Map[String, (Long, Long, Long)] =
-    identityFrom(commitMetas(spark, table, asOf))
+    stateAt(spark, table, asOf).identities
 
   /** ADD COLUMN `name` BIGINT GENERATED ALWAYS AS IDENTITY — same
     * declare-before-data contract as [[addGeneratedColumn]] (one commit
@@ -544,39 +501,9 @@ object TxLog {
     * re-checked in the claim loop). */
   def addIdentityColumn(spark: SparkSession, table: String, name: String,
                         startWith: Long = 1L, stepBy: Long = 1L): Long = {
-    requireConstraintName(name)
     require(stepBy != 0L, "txlog: identity INCREMENT BY must be nonzero")
-    val declared = schemaAt(spark, table).getOrElse(
-      throw new IllegalArgumentException(
-        s"txlog: $table declares no schema — createTable first, then " +
-          "declare identity columns, then land data"))
-    require(!declared.fieldNames.contains(name),
-      s"txlog: column '$name' already exists on $table")
-    def requireEmpty(): Unit = require(
-      snapshotFiles(spark, table).isEmpty,
-      s"txlog: cannot add identity column '$name' to $table — data " +
-        "already landed and cannot be backfilled (declare identity " +
-        "columns before the first append)")
-    requireEmpty()
-    val widened = StructType(declared.fields :+
-      org.apache.spark.sql.types.StructField(name,
-        org.apache.spark.sql.types.LongType, nullable = true))
-    val schemaB64 = Some(encodeSchema(widened))
-    val metas = Seq(metaPayload(IdentityKeyPrefix + name,
-      s"$startWith|$stepBy|$startWith"))
-    var v = latestVersion(spark, table) + 1
-    var attempts = 0
-    while (!tryCommit(spark, table, v, Seq.empty, Seq.empty, None, schemaB64,
-      metas = metas)) {
-      attempts += 1
-      require(attempts < maxCommitAttempts,
-        s"txlog: identity-column add on $table still contended after " +
-          s"$attempts attempts")
-      requireEmpty()
-      v = math.max(v + 1, versions(spark, table).last + 1)
-    }
-    maybeCheckpoint(spark, table, v)
-    v
+    declareColumn(spark, table, "identity", StructField(name, LongType),
+      metaPayload(IdentityKeyPrefix + name, s"$startWith|$stepBy|$startWith"))
   }
 
   /** Mint ids for one identity column over the whole batch: global
@@ -607,19 +534,30 @@ object TxLog {
     base.sparkSession.createDataFrame(rdd, schema2)
   }
 
-  /** Commit carrying ONLY meta lines (constraint add/drop) — untagged
-    * and file-free, so the change feed sees it as empty and
-    * incremental consumers fold nothing ([[commitTouchesRows]]). */
+  /** Commit carrying ONLY meta lines (and, for a column declaration,
+    * the widened schema) — untagged and file-free, so the change feed
+    * sees it as empty and incremental consumers fold nothing
+    * ([[commitTouchesRows]]). `check` vets each base snapshot and the
+    * claim goes to exactly its version + 1, so claim success implies
+    * the check saw every commit below the new one; a lost claim
+    * re-checks against a fresh snapshot. */
   private def commitMetaOnly(spark: SparkSession, table: String,
-                             metas: Seq[String], what: String): Long = {
-    var v = latestVersion(spark, table) + 1
+                             metas: Seq[String], what: String,
+                             schemaB64: Option[String] = None,
+                             check: Snapshot => Unit = _ => ()): Long = {
+    def claim(): Long = {
+      val head = latestSnapshot(spark, table, what)
+      check(head)
+      head.version + 1
+    }
+    var v = claim()
     var attempts = 0
-    while (!tryCommit(spark, table, v, Seq.empty, Seq.empty, None, None,
+    while (!tryCommit(spark, table, v, Seq.empty, Seq.empty, None, schemaB64,
       metas = metas)) {
       attempts += 1
       require(attempts < maxCommitAttempts,
         s"txlog: $what of $table still contended after $attempts attempts")
-      v = math.max(v + 1, versions(spark, table).last + 1)
+      v = claim()
     }
     maybeCheckpoint(spark, table, v)
     v
@@ -674,20 +612,22 @@ object TxLog {
     }
   }
 
-  /** How often a compacted snapshot of the table state is written next
-    * to the log (`_log/%08d.ckpt`, the commit line format: the declared
-    * schema, the live adds, their stats and their bound deletion
-    * vectors): reads replay last-checkpoint + suffix instead of the full
-    * commit prefix, making driver-side read latency O(checkpointEvery)
-    * in commit count instead of O(commits) — the cost that grows
-    * without bound on a long-lived table fed by streaming micro-batch
-    * commits (each [[appendSink]] batch is one commit). The public
-    * lakehouse answer (Delta's `_last_checkpoint`, Iceberg's snapshot
-    * manifests), reduced to this log's two-field format. */
+  /** How often the folded [[Snapshot]] is written next to the log
+    * (`_log/%08d.checkpoint`, the commit line format: the declared
+    * schema, the live adds, their stats and bound deletion vectors,
+    * every meta key's last value — cleared keys included — and each
+    * appId's txn high-water mark): every metadata read and write gate
+    * folds last-checkpoint + suffix instead of the full commit prefix,
+    * making the metadata cost O(checkpointEvery) in commit count
+    * instead of O(commits) — the cost that grows without bound on a
+    * long-lived table fed by streaming micro-batch commits (each
+    * [[appendSink]] batch is one commit). The public lakehouse answer
+    * (Delta's `_last_checkpoint`, Iceberg's snapshot manifests), reduced
+    * to this log's two-field format. */
   val checkpointEvery: Long = 10L
 
   private def ckptPath(table: String, version: Long) =
-    new Path(logDir(table), f"$version%08d.ckpt")
+    new Path(logDir(table), f"$version%08d.checkpoint")
 
   /** Sorted versions that have a checkpoint snapshot. */
   def checkpointVersions(spark: SparkSession, table: String): Seq[Long] =
@@ -699,9 +639,9 @@ object TxLog {
     * files and orphans, never the log; fixture table dirs are unique
     * per invocation), so one parse serves the file's whole life. The
     * r17 measure pass found the metadata path re-opening the same
-    * commit files dozens of times per lifecycle row — every
-    * [[commitMetas]] gate (CHECK / identity / generated) replays the
-    * full log, every read replays checkpoint + suffix — and JobProfile
+    * commit files dozens of times per lifecycle row — every read and
+    * write gate folds checkpoint + suffix, and the per-commit readers
+    * (history, change feed, OCC) re-open commits — and JobProfile
     * attributed ~half of each qw row's wall to exactly these
     * driver-side gaps (guide §1.2: per-task — here per-action — work).
     * Same bounding idiom as [[footerCache]]. */
@@ -741,11 +681,16 @@ object TxLog {
     *  - `dvs`: deletion-vector bindings, the LAST per file winning (a
     *    later MOR delete re-points a file at a vector that CONTAINS the
     *    earlier positions; a [[restore]] may re-point it BACK to an
-    *    earlier — or no — vector), [[DvUnbound]] sentinels included. */
+    *    earlier — or no — vector), [[DvUnbound]] sentinels included;
+    *  - `metas`: the commit-metadata channel, the LAST value per key
+    *    winning, cleared keys kept as "";
+    *  - `txns`: each appId's highest committed batchId. */
   private[graft] final case class Snapshot(version: Long, files: Seq[String],
                                            schema: Option[StructType],
                                            stats: Seq[String],
-                                           dvs: Seq[(String, String)]) {
+                                           dvs: Seq[(String, String)],
+                                           metas: Map[String, String],
+                                           txns: Map[String, Long]) {
     lazy val liveSet: Set[String] = files.toSet
 
     /** Live files' bound deletion-vector dirs ([[dvAt]]). */
@@ -756,6 +701,38 @@ object TxLog {
       * declares no mapping — the legacy identity). */
     def physical(c: String): String =
       schema.flatMap(_.fields.find(_.name == c)).map(physicalName).getOrElse(c)
+
+    /** True iff `appId` already committed `batchId` (or a later batch). */
+    def landed(appId: String, batchId: Long): Boolean =
+      txns.get(appId).exists(_ >= batchId)
+
+    private def prefixed(prefix: String): Map[String, String] =
+      metas.collect {
+        case (k, v) if k.startsWith(prefix) && v.nonEmpty =>
+          k.substring(prefix.length) -> v
+      }
+
+    /** Active CHECK constraints: name → SQL expression. */
+    lazy val checks: Map[String, String] = prefixed(CheckKeyPrefix)
+
+    /** Generated columns: name → SQL expression. */
+    lazy val gens: Map[String, String] = prefixed(GenKeyPrefix)
+
+    /** Identity columns: name → (startWith, stepBy, next). */
+    lazy val identities: Map[String, (Long, Long, Long)] =
+      prefixed(IdentityKeyPrefix).map { case (n, v) =>
+        val t = v.split('|')
+        require(t.length == 3, s"txlog: malformed identity meta for $n: $v")
+        n -> ((t(0).toLong, t(1).toLong, t(2).toLong))
+      }
+
+    /** The write-boundary declarations (CHECK / generated / identity
+      * metas): a write gated against one value must re-gate when a
+      * commit it lands on top of changed them. */
+    lazy val boundary: Map[String, String] = metas.filter { case (k, _) =>
+      k.startsWith(CheckKeyPrefix) || k.startsWith(GenKeyPrefix) ||
+        k.startsWith(IdentityKeyPrefix)
+    }
   }
 
   /** Fold the newest checkpoint at or before `asOf` (default: the latest
@@ -771,6 +748,8 @@ object TxLog {
     var schema: Option[String] = None
     val stats = scala.collection.mutable.LinkedHashMap.empty[(String, String), String]
     val dvs = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val metas = scala.collection.mutable.Map.empty[String, String]
+    val txns = scala.collection.mutable.Map.empty[String, Long]
     def fold(action: String, payload: String): Unit = action match {
       case "add" => live += payload
       case "remove" => live -= payload
@@ -789,20 +768,30 @@ object TxLog {
         val t = payload.split('|')
         require(t.length == 2, s"txlog: malformed dv payload in $table: $payload")
         dvs(t(0)) = t(1)
-      case _ => () // tag / txn / meta: commit markers, not table state
+      case "meta" =>
+        val cut = payload.indexOf('|')
+        require(cut > 0, s"txlog: malformed meta payload in $table: $payload")
+        metas(payload.substring(0, cut)) = new String(
+          java.util.Base64.getDecoder.decode(payload.substring(cut + 1)), "UTF-8")
+      case "txn" =>
+        val cut = payload.indexOf(':')
+        require(cut > 0, s"txlog: malformed txn payload in $table: $payload")
+        val (app, b) = (payload.substring(0, cut), payload.substring(cut + 1).toLong)
+        txns(app) = txns.get(app).fold(b)(math.max(_, b))
+      case _ => () // tag: a commit marker, not table state
     }
     startCkpt.foreach { cv =>
       readLogFile(spark, ckptPath(table, cv)).foreach {
-        case (a @ ("add" | "schema" | "stats" | "dv"), p) => fold(a, p)
-        case (a, p) => throw new IllegalArgumentException(
+        case (a @ ("remove" | "tag"), p) => throw new IllegalArgumentException(
           s"txlog: checkpoint $cv carries non-add action $a for $p")
+        case (a, p) => fold(a, p)
       }
     }
     log.commits.filter(v => v <= target && startCkpt.forall(v > _)).foreach { v =>
       readLogFile(spark, commitPath(table, v)).foreach { case (a, p) => fold(a, p) }
     }
     Snapshot(target, live.toSeq, schema.map(decodeSchema), stats.values.toSeq,
-      dvs.toSeq)
+      dvs.toSeq, metas.toMap, txns.toMap)
   }
 
   /** Both directions fail loudly: a too-early version has no commits to
@@ -816,12 +805,29 @@ object TxLog {
   }
 
   /** The [[Snapshot]] at `asOf` (default: latest) from one listing and
-    * one fold; loud on a pinned version the log does not hold. */
+    * one fold; loud on a pinned version the log does not hold. The
+    * latest of a table with no commits is the empty version -1. */
   private[graft] def snapshot(spark: SparkSession, table: String,
                               asOf: Option[Long] = None): Snapshot = {
     val log = listLog(spark, table)
     asOf.foreach(requireListed(log, _))
     replay(spark, table, log, asOf)
+  }
+
+  /** The lenient [[Snapshot]] at `asOf` (an empty table, or a version
+    * the log does not hold, folds whatever precedes it). */
+  private def stateAt(spark: SparkSession, table: String,
+                      asOf: Option[Long]): Snapshot =
+    replay(spark, table, listLog(spark, table), asOf)
+
+  /** The latest [[Snapshot]] — the base a write commits on top of —
+    * from one listing; loud on a table with no commits. */
+  private def latestSnapshot(spark: SparkSession, table: String,
+                             what: String): Snapshot = {
+    val log = listLog(spark, table)
+    require(log.commits.nonEmpty,
+      s"txlog: cannot $what an empty table (no commits in $table)")
+    replay(spark, table, log, None)
   }
 
   /** Live files' deletion-vector dirs as of `asOf` (empty for a table
@@ -839,15 +845,18 @@ object TxLog {
     if (version > 0 && version % checkpointEvery == 0) {
       val snap = snapshot(spark, table, Some(version))
       val live = snap.liveSet
-      // the schema, the live files, their stats and their bound vectors:
-      // a from-scratch state, so stats of removed files and unbound
-      // sentinels are dead weight
+      // the schema, the live files, their stats and their bound vectors,
+      // the metas and the txn high-water marks: a from-scratch state, so
+      // stats of removed files and unbound sentinels are dead weight
+      // (sorted metas and txns keep the content a function of the prefix)
       val lines = snap.schema.map(s => ("schema", encodeSchema(s))).toSeq ++
         snap.files.map(("add", _)) ++
         snap.stats.filter(s => live.contains(s.split('|')(0))).map(("stats", _)) ++
         snap.dvs.collect { case (file, dv) if live.contains(file) && dv != DvUnbound =>
           ("dv", s"$file|$dv")
-        }
+        } ++
+        snap.metas.toSeq.sorted.map { case (k, v) => ("meta", metaPayload(k, v)) } ++
+        snap.txns.toSeq.sorted.map { case (app, b) => ("txn", s"$app:$b") }
       // ATOMIC publication (same hazard as commits): a plain
       // create+write+close lets a racing reader replay a truncated
       // prefix of the .ckpt and silently drop live files from its
@@ -927,12 +936,6 @@ object TxLog {
           col(c).as(byLogical.getOrElse(c, c))).toSeq: _*)
     }
 
-  /** The physical name of logical column `c` as of `asOf` (itself when
-    * the table declares no mapping — the legacy identity). */
-  private def resolvePhysical(spark: SparkSession, table: String, c: String,
-                              asOf: Option[Long] = None): String =
-    replay(spark, table, listLog(spark, table), asOf).physical(c)
-
   /** logical → physical name map of the table's current declared schema
     * (empty when no mapping is declared) — for readers that resolve
     * parquet columns by name themselves ([[TxLogStream]]). */
@@ -954,7 +957,7 @@ object TxLog {
     * lenient: None on an empty table. */
   def schemaAt(spark: SparkSession, table: String,
                asOf: Option[Long] = None): Option[StructType] =
-    replay(spark, table, listLog(spark, table), asOf).schema
+    stateAt(spark, table, asOf).schema
 
   /** List the parquet files a data write produced, as table-relative
     * paths. */
@@ -987,163 +990,111 @@ object TxLog {
     * the next free version until it lands (an append's adds depend on
     * no prior state, so it can never truly conflict). Optional txn
     * marker (idempotent flavors) and optional per-file stats columns.
+    * Every gate — txn marker, generated columns, declared schema, CHECK
+    * constraints, identity high-water — reads ONE [[Snapshot]], and the
+    * claim goes to exactly its version + 1, so claim success implies
+    * the gates saw every commit below the new one.
     *
-    * Returns None ONLY in the txn-marked duplicate race: while retrying
-    * the claim, a commit that beat this writer carries the same appId at
-    * batchId >= ours — the zombie-twin replaying the same micro-batch.
-    * The initial check in [[appendIdempotent]] is check-then-act; two
-    * twins can both pass it, so the loop re-examines the commits that
-    * beat it (Delta raises ConcurrentTransactionException here; we
-    * resolve it as "already committed", which is strictly safer than
-    * landing twice). The orphaned data dir is deleted. */
+    * Returns None when the txn marker already landed: in the snapshot
+    * (a replayed batch, detected before any gate job runs) or in a
+    * commit that beat this writer's claim — the zombie twin replaying
+    * the same micro-batch (Delta raises ConcurrentTransactionException
+    * here; we resolve it as "already committed", which is strictly
+    * safer than landing twice). The orphaned data dir is deleted. */
   private def appendCommit(spark: SparkSession, table: String, dfIn: DataFrame,
                            what: String, txn: Option[(String, Long)],
                            statsCols: Seq[String],
-                           writeBatch: Option[(DataFrame, String) =>
+                           writeBatch: Option[(DataFrame, String, Snapshot) =>
                              (Seq[String], Seq[String])] = None): Option[Long] = {
-    // ORDER MATTERS: the versions read comes FIRST, the metadata read
-    // SECOND. A commit landing after the versions read occupies a
-    // version >= intended, so our first claim FAILS and the loop
-    // re-checks; a metadata read taken before the versions read could
-    // miss a constraint/generated/identity commit that our claim then
-    // silently follows with stale gates or stale ids (the identity
-    // race spec caught exactly this under full-suite contention).
-    val intended = versions(spark, table).lastOption.fold(0L)(_ + 1)
-    // ONE log scan serves all three write-boundary features
-    val metasNow = commitMetas(spark, table)
-    var df = applyGeneratedColumns(spark, table, dfIn, what,
-      Some(prefixed(metasNow, GenKeyPrefix)))
-    requireFitsDeclared(spark, table, df, what)
-    requireSatisfiesConstraints(spark, table, df, what,
-      pre = Some(prefixed(metasNow, CheckKeyPrefix)))
+    var snap = snapshot(spark, table)
+    def replayed(s: Snapshot) = txn.exists { case (app, b) => s.landed(app, b) }
+    if (replayed(snap)) return None
+    def gated(): DataFrame = {
+      val d = applyGeneratedColumns(table, snap, dfIn, what)
+      requireFitsDeclared(snap, d, what)
+      requireSatisfiesConstraints(table, snap, d, what)
+      d
+    }
+    var df = gated()
     statsCols.foreach(c => require(df.schema.fieldNames.contains(c) ||
-      identityFrom(metasNow).contains(c),
+      snap.identities.contains(c),
       s"txlog: stats column '$c' is not in the appended schema " +
         s"(${df.schema.fieldNames.mkString(", ")}) nor engine-derived"))
-    var checkedBoundaryAt = intended - 1
-    // close the zombie-twin window: a twin's commit landing between the
-    // caller's fast-path marker scan and the `versions` read above would
-    // make the first tryCommit succeed at twin.version+1 WITHOUT ever
-    // entering the in-loop re-check — so re-check here. A twin landing
-    // after THIS scan occupies a version >= intended, fails our first
-    // tryCommit, and is caught by the in-loop re-check: window closed.
-    txn.foreach { case (app, b) =>
-      if (lastCommittedBatch(spark, table, app).exists(_ >= b)) return None
-    }
-    // identity minting: reserve [next, next + n·step) against the
-    // observed high-water; a lost claim re-reads it and RE-ASSIGNS
-    // (re-writing the data dir) before retrying, so ids stay unique
-    var idCols = identityFrom(metasNow).toSeq.sortBy(_._1)
-    var idNext: Map[String, Long] =
-      idCols.map { case (n, (_, _, nx)) => n -> nx }.toMap
-    def minted(frame: DataFrame): DataFrame =
-      idCols.foldLeft(frame) { case (acc, (n, (_, st, _))) =>
-        assignIdentityIds(acc, n, idNext(n), st)
+    // identity minting reserves [next, next + n·step) against the
+    // snapshot's high-water; `writeBatch` lets a layout-owning flavor
+    // (partitioned / bloom append) land its own file shape from the
+    // minted logical frame + rel, returning (files, extra stats-channel
+    // lines); the default is the plain parquet write
+    def land(): (Path, Seq[String], Seq[String], Seq[String]) = {
+      val idCols = snap.identities.toSeq.sortBy(_._1)
+      val dfW = idCols.foldLeft(df) { case (acc, (n, (_, st, nx))) =>
+        assignIdentityIds(acc, n, nx, st)
       }
-    var dfW = if (idCols.isEmpty) df else minted(df)
-    var batchN = if (idCols.isEmpty) 0L else dfW.count()
-    def idMetas: Seq[String] = idCols.map { case (n, (s0, st, _)) =>
-      metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${idNext(n) + batchN * st}")
-    }
-    var rel = f"data/v$intended%08d-${uniq()}"
-    // `writeBatch` lets a layout-owning flavor (partitioned append) land
-    // its own file shape while riding THIS loop's boundary recheck —
-    // it receives the minted logical frame + rel and returns (files,
-    // extra stats-channel lines); the default is the plain parquet write
-    def writeData(): (Seq[String], Seq[String]) = {
+      val batchN = if (idCols.isEmpty) 0L else dfW.count()
+      val idMetas = idCols.map { case (n, (s0, st, nx)) =>
+        metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + batchN * st}")
+      }
+      val rel = f"data/v${snap.version + 1}%08d-${uniq()}"
       val (files, stats) = writeBatch match {
-        case Some(wb) => wb(dfW, rel)
+        case Some(wb) => wb(dfW, rel, snap)
         case None =>
-          physicalize(dfW, schemaAt(spark, table))
-            .write.parquet(new Path(table, rel).toString)
+          physicalize(dfW, snap.schema).write.parquet(new Path(table, rel).toString)
           val files = writtenFiles(spark, table, rel)
-          val stats = statsCols.flatMap { c =>
-            val forCol = footerStats(spark, table, files, c)
-            // a stats request that records nothing would silently void the
-            // skipping contract forever — fail at write time instead
-            require(files.isEmpty || forCol.nonEmpty,
-              s"txlog: no parquet footer carried statistics for '$c' — " +
-                "the files would be permanently unprunable")
-            forCol
-          }
-          (files, stats)
+          (files, requiredStats(spark, table, snap, files, statsCols))
       }
       // every data-landing commit records its files' row counts, so
       // COUNT(*) is a log fold forever after ([[countRows]])
-      (files, stats ++ rowCountLines(spark, table, files))
+      (new Path(table, rel), files, stats ++ rowCountLines(spark, table, files),
+        idMetas)
     }
-    var (files, stats) = writeData()
-    var v = intended
+    var (dir, files, stats, idMetas) = land()
     var attempts = 0
-    while (!tryCommit(spark, table, v, files, Seq.empty, None, None, txn.toSeq,
-      stats, metas = idMetas)) {
+    // claim ONLY the version right past the gating snapshot — never
+    // leapfrog: a claim above an ungated commit would silently follow
+    // stale gates / duplicate ids (the identity race probe caught
+    // exactly that interleaving); anything landing there first fails
+    // the claim and the loop re-reads
+    while (!tryCommit(spark, table, snap.version + 1, files, Seq.empty, None,
+      None, txn.toSeq, stats, metas = idMetas)) {
       attempts += 1
       require(attempts < maxCommitAttempts,
         s"txlog: $what to $table still contended after $attempts attempts")
-      txn.foreach { case (app, b) =>
-        if (lastCommittedBatch(spark, table, app).exists(_ >= b)) {
-          val dir = new Path(table, rel)
-          fs(spark, dir).delete(dir, true) // the twin landed it: no orphans
-          return None
-        }
+      val fresh = snapshot(spark, table)
+      if (replayed(fresh)) {
+        fs(spark, dir).delete(dir, true) // the twin landed it: no orphans
+        return None
       }
       // a write-boundary change that landed while we retried must gate
       // THIS batch too: an ADD CONSTRAINT re-validates, a generated /
       // identity declaration (possible while the table is still empty)
       // re-derives the frame, and an identity high-water advance
-      // re-mints — one unified recheck, run only when a commit that
-      // beat us carries one of the three meta prefixes (a plain
-      // contending append on an identity table always does: its
-      // high-water line IS the signal to re-mint)
-      val latestNow = versions(spark, table).lastOption.fold(-1L)(identity)
-      val boundaryLanded = (checkedBoundaryAt + 1 to latestNow).exists(cv =>
-        readLogFile(spark, commitPath(table, cv)).exists {
-          case ("meta", p) => p.startsWith(CheckKeyPrefix) ||
-            p.startsWith(GenKeyPrefix) || p.startsWith(IdentityKeyPrefix)
-          case _ => false
-        })
-      if (boundaryLanded) {
-        val fresh = commitMetas(spark, table)
-        val df2 =
-          try {
-            val d2 = applyGeneratedColumns(spark, table, dfIn, what,
-              Some(prefixed(fresh, GenKeyPrefix)))
-            requireFitsDeclared(spark, table, d2, what)
-            requireSatisfiesConstraints(spark, table, d2, what,
-              pre = Some(prefixed(fresh, CheckKeyPrefix)))
-            d2
-          } catch {
-            case e: IllegalArgumentException =>
-              val dir = new Path(table, rel)
-              fs(spark, dir).delete(dir, true) // gated data never lands
-              throw e
-          }
-        df = df2
-        idCols = identityFrom(fresh).toSeq.sortBy(_._1)
-        idNext = idCols.map { case (n, (_, _, nx)) => n -> nx }.toMap
-        val dir = new Path(table, rel)
+      // re-mints (a contending append on an identity table always
+      // advances it). Gated data never lands, so the dir goes first.
+      val regate = fresh.boundary != snap.boundary
+      snap = fresh
+      if (regate) {
         fs(spark, dir).delete(dir, true)
-        dfW = if (idCols.isEmpty) df else minted(df)
-        batchN = if (idCols.isEmpty) 0L else dfW.count()
-        rel = f"data/v$intended%08d-${uniq()}"
-        val re = writeData()
-        files = re._1
-        stats = re._2
+        df = gated()
+        val re = land()
+        dir = re._1; files = re._2; stats = re._3; idMetas = re._4
       }
-      checkedBoundaryAt = latestNow
-      // claim ONLY the version immediately past what we scanned — never
-      // leapfrog: `max(v+1, last+1)` could jump PAST a commit that
-      // landed after the scan (between the recheck read and our claim),
-      // and a successful claim above an unscanned commit silently
-      // follows stale gates / duplicate ids (the identity race probe
-      // caught exactly this interleaving). Claiming checkedBoundaryAt+1
-      // makes claim success IMPLY the scan was complete: anything that
-      // lands there first fails our claim and the loop rescans.
-      v = checkedBoundaryAt + 1
     }
-    maybeCheckpoint(spark, table, v)
-    Some(v)
+    maybeCheckpoint(spark, table, snap.version + 1)
+    Some(snap.version + 1)
   }
+
+  /** Per-file stats lines for `statsCols` over freshly written `files`
+    * — loud when a requested column records nothing, which would void
+    * the skipping contract for those files forever. */
+  private def requiredStats(spark: SparkSession, table: String, snap: Snapshot,
+                            files: Seq[String], statsCols: Seq[String]): Seq[String] =
+    statsCols.flatMap { c =>
+      val forCol = footerStats(spark, table, files, snap.physical(c))
+      require(files.isEmpty || forCol.nonEmpty,
+        s"txlog: no parquet footer carried statistics for '$c' — " +
+          "the files would be permanently unprunable")
+      forCol
+    }
 
   // ---------------------------------------------------------------------
   // Schema evolution (add-column with null backfill, numeric widening)
@@ -1220,10 +1171,10 @@ object TxLog {
     * [[TxLogConcurrentModificationException]] (two merges cannot be
     * assumed to compose). */
   def appendEvolve(spark: SparkSession, table: String, df: DataFrame): Long = {
-    val vs = versions(spark, table)
-    if (vs.isEmpty) return append(spark, table, df)
-    val declared = schemaAt(spark, table)
-    val cur = declared.getOrElse(read(spark, table).schema)
+    val snap = snapshot(spark, table)
+    if (snap.version < 0) return append(spark, table, df)
+    val declared = snap.schema
+    val cur = declared.getOrElse(read(spark, table, Some(snap.version)).schema)
     val evolved = evolveSchema(cur, df.schema)
     val needsDeclare = declared match {
       case Some(d) => evolved != d
@@ -1232,7 +1183,7 @@ object TxLog {
     // no schema change (or the change is already declared): the commit
     // carries no schema action — a plain append
     if (!needsDeclare) return append(spark, table, df)
-    val intended = vs.last + 1
+    val intended = snap.version + 1
     val rel = f"data/v$intended%08d-${uniq()}"
     val dataDir = new Path(table, rel)
     physicalize(df, Some(evolved)).write.parquet(dataDir.toString)
@@ -1246,21 +1197,30 @@ object TxLog {
       attempts += 1
       require(attempts < maxCommitAttempts,
         s"txlog: evolving append to $table still contended after $attempts attempts")
-      val latest = versions(spark, table).last
-      val schemaConflict = versions(spark, table)
-        .filter(x => x >= intended && x <= latest)
-        .find(cv => readLogFile(spark, commitPath(table, cv))
-          .exists(_._1 == "schema"))
-      schemaConflict.foreach { cv =>
-        fs(spark, dataDir).delete(dataDir, true)
-        throw new TxLogConcurrentModificationException(
-          s"txlog: schema evolution of $table lost to a concurrent schema " +
-            s"change at version $cv — re-read the table and retry")
-      }
-      v = math.max(v + 1, latest + 1)
+      v = math.max(v + 1, nextSchemaClaim(spark, table, intended,
+        "schema evolution", () => fs(spark, dataDir).delete(dataDir, true)))
     }
     maybeCheckpoint(spark, table, v)
     v
+  }
+
+  /** A schema-carrying commit lost its claim: from ONE listing, abort
+    * (after `cleanup`) if any commit since `intended` declared a schema
+    * — two schema changes cannot be assumed to compose — else return the
+    * next free version. */
+  private def nextSchemaClaim(spark: SparkSession, table: String,
+                              intended: Long, what: String,
+                              cleanup: () => Unit): Long = {
+    val commits = listLog(spark, table).commits
+    commits.filter(_ >= intended)
+      .find(cv => readLogFile(spark, commitPath(table, cv)).exists(_._1 == "schema"))
+      .foreach { cv =>
+        cleanup()
+        throw new TxLogConcurrentModificationException(
+          s"txlog: $what of $table lost to a concurrent schema change at " +
+            s"version $cv — re-read the table and retry")
+      }
+    commits.last + 1
   }
 
   /** CREATE an empty table with a DECLARED schema, as commit 0 carrying
@@ -1386,28 +1346,21 @@ object TxLog {
       attempts += 1
       require(attempts < maxCommitAttempts,
         s"txlog: $what of $table still contended after $attempts attempts")
-      val latest = versions(spark, table).last
-      val schemaConflict = versions(spark, table)
-        .filter(x => x >= intended && x <= latest)
-        .find(cv => readLogFile(spark, commitPath(table, cv))
-          .exists(_._1 == "schema"))
-      schemaConflict.foreach { cv =>
-        throw new TxLogConcurrentModificationException(
-          s"txlog: $what of $table lost to a concurrent schema change at " +
-            s"version $cv — re-read the table and retry")
-      }
-      v = math.max(v + 1, latest + 1)
+      v = math.max(v + 1, nextSchemaClaim(spark, table, intended, what, () => ()))
     }
     maybeCheckpoint(spark, table, v)
     v
   }
 
-  /** The declared schema rename/drop operate on: the committed one, or
-    * the inferred current schema for a never-evolved table — stamped
-    * with physical names either way (the mapping upgrade). */
-  private def mappedCurrentSchema(spark: SparkSession, table: String): StructType =
-    withPhysicals(schemaAt(spark, table)
-      .getOrElse(StructType(read(spark, table).schema.fields.map(_.copy(nullable = true)))))
+  /** The declared schema a column change operates on: the latest
+    * committed one, or the inferred current schema (all fields
+    * nullable) for a never-evolved table; loud on an empty table. */
+  private def currentSchema(spark: SparkSession, table: String,
+                            what: String): StructType = {
+    val snap = latestSnapshot(spark, table, what)
+    snap.schema.getOrElse(StructType(read(spark, table, Some(snap.version))
+      .schema.fields.map(_.copy(nullable = true))))
+  }
 
   /** RENAME COLUMN — metadata-only, zero data rewritten: the declared
     * field keeps its PHYSICAL name (what the parquet files carry) and
@@ -1418,9 +1371,8 @@ object TxLog {
     * column mapping (pins physical = current name for every field). */
   def renameColumn(spark: SparkSession, table: String,
                    from: String, to: String): Long = {
-    requireNonEmpty(spark, table, "rename")
     require(from != to, s"txlog: rename to the same name: $from")
-    val cur = mappedCurrentSchema(spark, table)
+    val cur = withPhysicals(currentSchema(spark, table, "rename"))
     require(cur.fieldNames.contains(from),
       s"txlog: no column '$from' to rename (have: ${cur.fieldNames.mkString(", ")})")
     require(!cur.fieldNames.contains(to),
@@ -1438,9 +1390,7 @@ object TxLog {
     * name can never resurrect the dropped bytes. */
   def addColumn(spark: SparkSession, table: String, name: String,
                 dataType: DataType): Long = {
-    requireNonEmpty(spark, table, "add-column")
-    val cur = schemaAt(spark, table).getOrElse(
-      StructType(read(spark, table).schema.fields.map(_.copy(nullable = true))))
+    val cur = currentSchema(spark, table, "add-column")
     require(!cur.fieldNames.contains(name),
       s"txlog: column '$name' already exists " +
         s"(have: ${cur.fieldNames.mkString(", ")})")
@@ -1459,9 +1409,7 @@ object TxLog {
     * would need a 100 TB rewrite this library refuses to do silently. */
   def widenColumn(spark: SparkSession, table: String, name: String,
                   to: DataType): Long = {
-    requireNonEmpty(spark, table, "widen")
-    val cur = schemaAt(spark, table).getOrElse(
-      StructType(read(spark, table).schema.fields.map(_.copy(nullable = true))))
+    val cur = currentSchema(spark, table, "widen")
     val f = cur.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
         s"txlog: no column '$name' to widen " +
@@ -1486,8 +1434,7 @@ object TxLog {
     * dropped data ([[evolveSchema]]). Time travel to a pre-drop version
     * still reads the column. */
   def dropColumn(spark: SparkSession, table: String, name: String): Long = {
-    requireNonEmpty(spark, table, "drop")
-    val cur = mappedCurrentSchema(spark, table)
+    val cur = withPhysicals(currentSchema(spark, table, "drop"))
     require(cur.fieldNames.contains(name),
       s"txlog: no column '$name' to drop (have: ${cur.fieldNames.mkString(", ")})")
     require(cur.fields.length > 1,
@@ -1496,11 +1443,6 @@ object TxLog {
     commitSchemaOnly(spark, table, dropped, s"drop $name")
   }
 
-  /** Read the table at `asOf` (default: latest snapshot). An empty
-    * snapshot with a DECLARED schema ([[createTable]], or evolution on
-    * an emptied table) reads as an empty frame with the right columns;
-    * an empty snapshot with no declaration has no schema to produce one
-    * and throws — honest for a data table. */
   /** Constructed read plans, cached by (session, table, resolved
     * version). A PINNED snapshot is a deterministic function of the
     * immutable log prefix — live set, declared schema and dv bindings
@@ -1533,6 +1475,11 @@ object TxLog {
     ()
   }
 
+  /** Read the table at `asOf` (default: latest snapshot). An empty
+    * snapshot with a DECLARED schema ([[createTable]], or evolution on
+    * an emptied table) reads as an empty frame with the right columns;
+    * an empty snapshot with no declaration has no schema to produce one
+    * and throws — honest for a data table. */
   def read(spark: SparkSession, table: String,
            asOf: Option[Long] = None): DataFrame = {
     val wm = earliestReadableVersion(spark, table)
@@ -1567,11 +1514,6 @@ object TxLog {
     vs.last
   }
 
-  private def requireNonEmpty(spark: SparkSession, table: String,
-                              tag: String): Unit =
-    require(versions(spark, table).nonEmpty,
-      s"txlog: cannot $tag an empty table (no commits in $table)")
-
   /** A declared schema constrains what ANY write may land: every landed
     * column must exist in it at a widenable-into type, else the
     * declared read would silently drop it (new column) or fail at scan
@@ -1579,9 +1521,9 @@ object TxLog {
     * through appendEvolve; every commit path (append, idempotent
     * append, rewrite) funnels through this guard so the loud-early
     * contract holds for all of them. */
-  private def requireFitsDeclared(spark: SparkSession, table: String,
-                                  df: DataFrame, what: String): Unit =
-    schemaAt(spark, table).foreach { d =>
+  private def requireFitsDeclared(snap: Snapshot, df: DataFrame,
+                                  what: String): Unit =
+    snap.schema.foreach { d =>
       val byName = d.fields.map(f => f.name -> f).toMap
       df.schema.fields.foreach { f =>
         byName.get(f.name) match {
@@ -1596,15 +1538,15 @@ object TxLog {
       }
     }
 
-  /** One rewrite commit: lands `df` and removes version `baseVersion`'s
-    * ENTIRE live set, through the OCC loop. The caller must derive `df`
-    * from the same pinned base when the rewrite's content is a function
-    * of the table (compaction!) — pinning data and remove-set to one
-    * version is what makes a concurrent append safe: either it lands
-    * before (and our base includes it) or after (and the OCC loop keeps
-    * its files live alongside ours). */
+  /** One rewrite commit: lands `df` and removes `base`'s ENTIRE live
+    * set, through the OCC loop; every gate reads `base`. The caller
+    * must derive `df` from the same pinned base when the rewrite's
+    * content is a function of the table (compaction!) — pinning data
+    * and remove-set to one version is what makes a concurrent append
+    * safe: either it lands before (and our base includes it) or after
+    * (and the OCC loop keeps its files live alongside ours). */
   private def replaceCommitAt(spark: SparkSession, table: String,
-                              baseVersion: Long, df: DataFrame, tag: String,
+                              base: Snapshot, df: DataFrame, tag: String,
                               write: (DataFrame, String) => Unit,
                               txn: Option[(String, Long)] = None,
                               statsCols: Seq[String] = Seq.empty,
@@ -1613,22 +1555,18 @@ object TxLog {
     // columns; the row-invisible rewrites (compact / clustering)
     // re-land rows that already passed (their ids ride through their
     // own columns — no identity work)
-    val df0 =
-      if (tag == "overwrite") applyGeneratedColumns(spark, table, df, tag)
-      else df
+    val overwrite = tag == "overwrite"
+    val df0 = if (overwrite) applyGeneratedColumns(table, base, df, tag) else df
     // identity columns under OVERWRITE (r16): the incoming rows are all
     // NEW row images — every existing id is RETIRED (never reused) and
     // the batch mints fresh ids CONTINUING the sequence from the
-    // high-water observed at `baseVersion` (monotonic, Delta parity;
+    // high-water observed at `base` (monotonic, Delta parity;
     // contiguity holds within the batch, gaps across retirals are the
     // documented identity contract). Race-proof without a re-mint loop:
     // an overwrite is serializable — commitRewrite aborts on ANY
-    // intervening commit, so landing at baseVersion+1 proves no other
+    // intervening commit, so landing at base + 1 proves no other
     // writer advanced the sequence since the read.
-    val idCols =
-      if (tag == "overwrite")
-        identityColumns(spark, table, Some(baseVersion)).toSeq.sortBy(_._1)
-      else Seq.empty
+    val idCols = if (overwrite) base.identities.toSeq.sortBy(_._1) else Seq.empty
     val (df1, idMetas) = if (idCols.isEmpty) (df0, Seq.empty[String])
     else {
       val pinned = df0.localCheckpoint(true) // count + write below
@@ -1640,18 +1578,16 @@ object TxLog {
         metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + mintN * st}")
       })
     }
-    requireFitsDeclared(spark, table, df1, tag)
-    if (tag == "overwrite")
-      requireSatisfiesConstraints(spark, table, df1, tag)
-    val removes = snapshotFiles(spark, table, Some(baseVersion))
-    val rel = f"data/v${baseVersion + 1}%08d-$tag-${uniq()}"
+    requireFitsDeclared(base, df1, tag)
+    if (overwrite) requireSatisfiesConstraints(table, base, df1, tag)
+    val rel = f"data/v${base.version + 1}%08d-$tag-${uniq()}"
     val dataDir = new Path(table, rel)
     // write callbacks that key on columns (clustered/z-order rewrites)
     // receive the PHYSICAL frame and must use physical key names
-    write(physicalize(df1, schemaAt(spark, table)), dataDir.toString)
+    write(physicalize(df1, base.schema), dataDir.toString)
     val files = writtenFiles(spark, table, rel)
-    commitRewrite(spark, table, baseVersion, files, removes, tag, dataDir, txn,
-      statsCols.flatMap(footerStats(spark, table, files, _)),
+    commitRewrite(spark, table, base.version, files, base.files, tag, dataDir, txn,
+      statsCols.flatMap(c => footerStats(spark, table, files, base.physical(c))),
       extraTxns = extraTxns, metas = idMetas)
   }
 
@@ -1661,12 +1597,8 @@ object TxLog {
   private def replaceCommit(spark: SparkSession, table: String,
                             df: DataFrame, tag: String,
                             write: (DataFrame, String) => Unit =
-                              (d, p) => d.write.parquet(p)): Long = {
-    requireNonEmpty(spark, table, tag)
-    // declared-schema guard is applied in replaceCommitAt (shared with
-    // the idempotent overwrite path)
-    replaceCommitAt(spark, table, latestVersion(spark, table), df, tag, write)
-  }
+                              (d, p) => d.write.parquet(p)): Long =
+    replaceCommitAt(spark, table, latestSnapshot(spark, table, tag), df, tag, write)
 
   /** The rewrite-side OCC loop (public Delta-protocol conflict rules):
     * claim base+1; on losing, classify the intervening commits —
@@ -1697,15 +1629,15 @@ object TxLog {
       attempts += 1
       require(attempts < maxCommitAttempts,
         s"txlog: $tag of $table still contended after $attempts attempts")
-      val latest = versions(spark, table).last
-      val intervening = versions(spark, table)
-        .filter(x => x > baseVersion && x <= latest)
+      val log = listLog(spark, table)
+      val latest = log.commits.last
+      val intervening = log.commits.filter(_ > baseVersion)
       // the zombie-twin case first (same appId committed this batchId
       // already — e.g. two drivers replaying one micro-batch): resolve
       // as "already committed" rather than as a retryable conflict, so
       // the idempotent entry points return None instead of landing twice
       txn.foreach { case (app, b) =>
-        if (lastCommittedBatch(spark, table, app).exists(_ >= b)) {
+        if (replay(spark, table, log, None).landed(app, b)) {
           fs(spark, dataDir).delete(dataDir, true)
           throw new TxLogDuplicateBatchException(
             s"txlog: batch $b of $app already committed to $table")
@@ -1745,10 +1677,9 @@ object TxLog {
     // pin base and data to ONE version: compacting "the latest" while
     // an append races in would otherwise remove the append's files
     // without carrying its rows (the lost-update the OCC spec plants)
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table)
+    val base = latestSnapshot(spark, table, "compact")
     replaceCommitAt(spark, table, base,
-      read(spark, table, Some(base)).repartition(numFiles), "compact",
+      read(spark, table, Some(base.version)).repartition(numFiles), "compact",
       (d, p) => d.write.parquet(p))
   }
 
@@ -1768,11 +1699,10 @@ object TxLog {
   def compactClustered(spark: SparkSession, table: String,
                        files: Int, keys: String*): Long = {
     require(keys.nonEmpty, "txlog: compactClustered needs at least one key")
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table) // pinned with the data (see compact)
+    val base = latestSnapshot(spark, table, "compact") // pinned with the data (see compact)
     // the write callback sees the PHYSICAL frame: resolve key names
-    val pKeys = keys.map(resolvePhysical(spark, table, _, Some(base)))
-    replaceCommitAt(spark, table, base, read(spark, table, Some(base)), "compact",
+    val pKeys = keys.map(base.physical)
+    replaceCommitAt(spark, table, base, read(spark, table, Some(base.version)), "compact",
       // writeRangeClustered's overwrite mode is irrelevant here (fresh
       // per-version dir) but harmless; reusing it keeps the layout
       // contract (disjoint file ranges, ClusteredWriteSpec) in one place.
@@ -1788,12 +1718,6 @@ object TxLog {
   // every footer" and "read one small log and scan 2 files".
   // ---------------------------------------------------------------------
 
-  /** Per-file min/max of integral column `statsCol` for the given
-    * relative paths, read from the parquet footers ONCE at write time
-    * (each payload: `path|col|min|max` — the stats-line format).
-    * Payloads are keyed by the PHYSICAL column name: a later rename
-    * changes only the logical name, so every previously recorded stat
-    * stays valid and addressable (readers resolve logical → physical). */
   /** Parquet footers, cached by absolute path. Data files are WRITE-ONCE
     * (every commit attempt lands in a fresh `data/vNNN-<uniq>` dir; an
     * aborted claim deletes its dir and re-mints a NEW path), so a footer
@@ -1837,9 +1761,14 @@ object TxLog {
       }
     }
 
+  /** Per-file min/max of the column physically named `phys` for the
+    * given relative paths, read from the parquet footers ONCE at write
+    * time (each payload: `path|col|min|max` — the stats-line format).
+    * Payloads are keyed by the PHYSICAL column name: a later rename
+    * changes only the logical name, so every previously recorded stat
+    * stays valid and addressable (readers resolve logical → physical). */
   private def footerStats(spark: SparkSession, table: String,
-                          rels: Seq[String], statsCol: String): Seq[String] = {
-    val phys = resolvePhysical(spark, table, statsCol)
+                          rels: Seq[String], phys: String): Seq[String] = {
     require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
       s"txlog: stats column name unsupported by the line format: $phys")
     import scala.jdk.CollectionConverters._
@@ -1917,10 +1846,9 @@ object TxLog {
   def compactClusteredWithStats(spark: SparkSession, table: String,
                                 files: Int, keys: String*): Long = {
     require(keys.nonEmpty, "txlog: compactClustered needs at least one key")
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table)
-    val pKeys = keys.map(resolvePhysical(spark, table, _, Some(base)))
-    replaceCommitAt(spark, table, base, read(spark, table, Some(base)), "compact",
+    val base = latestSnapshot(spark, table, "compact")
+    val pKeys = keys.map(base.physical)
+    replaceCommitAt(spark, table, base, read(spark, table, Some(base.version)), "compact",
       (d, p) => FileFormats.writeRangeClustered(d, p, files, pKeys: _*),
       statsCols = keys)
   }
@@ -1957,9 +1885,8 @@ object TxLog {
                             colA: String, colB: String,
                             write: (DataFrame, String, Int, String, String) => Unit): Long = {
     import org.apache.spark.sql.functions.{max, min}
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table)
-    val snap = read(spark, table, Some(base))
+    val base = latestSnapshot(spark, table, "compact")
+    val snap = read(spark, table, Some(base.version))
     // NORMALIZE both axes into the same 20-bit domain before
     // interleaving: raw values of very different magnitudes (a 14-bit
     // key against an 11-bit one) would make every significant
@@ -1979,8 +1906,7 @@ object TxLog {
       s"(((`$c`) - ${lo}L) * ${bits}L) div ${math.max(hi - lo, 0L) + 1}L"
     // the write callback sees the PHYSICAL frame: z-expressions must
     // reference physical names
-    val (pA, pB) = (resolvePhysical(spark, table, colA, Some(base)),
-      resolvePhysical(spark, table, colB, Some(base)))
+    val (pA, pB) = (base.physical(colA), base.physical(colB))
     replaceCommitAt(spark, table, base, snap, "compact",
       (d, p) => write(d, p, files,
         norm(pA, aMin, aMax), norm(pB, bMin, bMax)),
@@ -2005,9 +1931,8 @@ object TxLog {
   def optimizeBinPack(spark: SparkSession, table: String, targetBytes: Long,
                       statsCols: String*): Long = {
     require(targetBytes > 0, "txlog: targetBytes must be positive")
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "compact")
+    val base = snap.version
     val live = snap.files
     val f = fs(spark, new Path(table))
     val sizes = live.map(p =>
@@ -2028,7 +1953,7 @@ object TxLog {
       .repartition(numOut).write.parquet(dataDir.toString)
     val written = writtenFiles(spark, table, rel)
     commitRewrite(spark, table, base, written, small, "compact", dataDir,
-      stats = statsCols.flatMap(footerStats(spark, table, written, _)))
+      stats = statsCols.flatMap(c => footerStats(spark, table, written, snap.physical(c))))
   }
 
   /** Live files' recorded (min, max) for `statsCol` as of `asOf` —
@@ -2371,31 +2296,25 @@ object TxLog {
                          statsCols: String*): Long = {
     require(fpp > 0 && fpp < 0.5, s"txlog: bloom fpp out of range: $fpp")
     appendCommit(spark, table, df, "append", None, statsCols,
-      writeBatch = Some { (dfW, rel) =>
+      writeBatch = Some { (dfW, rel, snap) =>
         require(dfW.schema.fieldNames.contains(bloomCol),
           s"txlog: bloom column '$bloomCol' is not in the appended schema " +
             s"(${dfW.schema.fieldNames.mkString(", ")})")
-        physicalize(dfW, schemaAt(spark, table))
+        physicalize(dfW, snap.schema)
           .write.parquet(new Path(table, rel).toString)
         val files = writtenFiles(spark, table, rel)
-        val stats = statsCols.flatMap { c =>
-          val forCol = footerStats(spark, table, files, c)
-          require(files.isEmpty || forCol.nonEmpty,
-            s"txlog: no parquet footer carried statistics for '$c' — " +
-              "the files would be permanently unprunable")
-          forCol
-        }
-        (files, stats ++ buildBloomLines(spark, table, rel, files, bloomCol, fpp))
+        (files, requiredStats(spark, table, snap, files, statsCols) ++
+          buildBloomLines(spark, table, rel, files, snap.physical(bloomCol), fpp))
       }).get
   }
 
-  /** Build the per-file bloom sidecar for the files of one freshly
-    * written batch dir `rel`; returns their stats-channel lines. */
+  /** Build the per-file bloom sidecar over the column physically named
+    * `phys` for the files of one freshly written batch dir `rel`;
+    * returns their stats-channel lines. */
   private def buildBloomLines(spark: SparkSession, table: String, rel: String,
-                              files: Seq[String], bloomCol: String,
+                              files: Seq[String], phys: String,
                               fpp: Double): Seq[String] = {
     if (files.isEmpty) return Seq.empty
-    val phys = resolvePhysical(spark, table, bloomCol)
     require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
       s"txlog: bloom column name unsupported by the line format: $phys")
     // size every filter for the batch's largest file, from footer row
@@ -2444,9 +2363,8 @@ object TxLog {
   def rebloom(spark: SparkSession, table: String, bloomCol: String,
               fpp: Double = 0.01): Long = {
     require(fpp > 0 && fpp < 0.5, s"txlog: bloom fpp out of range: $fpp")
-    requireNonEmpty(spark, table, "rebloom")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "rebloom")
+    val base = snap.version
     val existing = bloomsIn(snap, bloomCol)
     val missing = snap.files.filterNot(existing.contains)
     if (missing.isEmpty) return base
@@ -2494,9 +2412,8 @@ object TxLog {
     * [[footerStats]] emits). */
   def restat(spark: SparkSession, table: String, statsCols: String*): Long = {
     require(statsCols.nonEmpty, "txlog: restat needs at least one column")
-    requireNonEmpty(spark, table, "restat")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "restat")
+    val base = snap.version
     val lines = statsCols.flatMap { c =>
       val phys = snap.physical(c)
       val covered = snap.stats.flatMap(_.split('|') match {
@@ -2504,7 +2421,7 @@ object TxLog {
         case Array(f, pc, _, _, "s") if pc == phys => Some(f)
         case _ => None // partition values / blooms serve other rungs
       }).toSet
-      footerStats(spark, table, snap.files.filterNot(covered), c)
+      footerStats(spark, table, snap.files.filterNot(covered), phys)
     }
     if (lines.isEmpty) return base
     commitRewrite(spark, table, base, Seq.empty, Seq.empty, "compact",
@@ -2872,19 +2789,18 @@ object TxLog {
     (files, partLines)
   }
 
-  /** Validate the partitioned-append arguments. `engineCols` names the
-    * columns the WRITE BOUNDARY itself will add to the batch before it
-    * lands — GENERATED ALWAYS derivations and IDENTITY columns — so
+  /** Validate the partitioned-append arguments against the frame that
+    * lands — for an append, the one the WRITE BOUNDARY already completed
+    * with GENERATED ALWAYS derivations and IDENTITY columns — so
     * partitioning (or recording stats) BY a derived column works, the
     * Delta idiom `PARTITIONED BY (date_bucket)` where date_bucket is
     * GENERATED ALWAYS AS (…): the value exists in every landed file
     * even though the incoming batch never carries it (r16). */
   private def requirePartitionArgs(df: DataFrame, partCols: Seq[String],
-                                   statsCols: Seq[String],
-                                   engineCols: Set[String] = Set.empty): Unit = {
+                                   statsCols: Seq[String]): Unit = {
     require(partCols.nonEmpty, "txlog: at least one partition column")
     require(partCols.distinct == partCols, "txlog: duplicate partition columns")
-    val have = df.schema.fieldNames.toSet ++ engineCols
+    val have = df.schema.fieldNames.toSet
     partCols.foreach(c => require(have.contains(c),
       s"txlog: partition column '$c' is neither in the batch nor " +
         "engine-derived (generated/identity)"))
@@ -2929,8 +2845,7 @@ object TxLog {
                                   statsCols: Seq[String] = Seq.empty
                                  ): Option[Long] = {
     requireAppId(appId)
-    if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId)) None
-    else appendPartitionedCommit(spark, table, df, partCols, statsCols,
+    appendPartitionedCommit(spark, table, df, partCols, statsCols,
       Some((appId, batchId)))
   }
 
@@ -2939,9 +2854,6 @@ object TxLog {
                                       statsCols: Seq[String],
                                       txn: Option[(String, Long)]
                                      ): Option[Long] = {
-    requirePartitionArgs(df, partCols, statsCols,
-      engineCols = generatedColumns(spark, table).keySet ++
-        identityColumns(spark, table).keySet)
     // funnel through appendCommit's OCC loop: the partitioned flavor
     // thereby inherits the SAME write-boundary discipline as a plain
     // append — constraints/generated/identity commits that land while
@@ -2950,19 +2862,16 @@ object TxLog {
     // r16 this path had its own leapfrogging loop with no recheck, so
     // an ADD CONSTRAINT racing a violating partitioned append could
     // admit the batch on the quiet (and identity was rejected outright).
+    // The arguments are validated against the MINTED frame, which
+    // already carries the generated and identity columns.
     appendCommit(spark, table, df, "partitioned append", txn, statsCols,
-      writeBatch = Some { (dfW: DataFrame, rel: String) =>
-        val phys = physicalize(dfW, schemaAt(spark, table))
-        val pParts = partCols.map(resolvePhysical(spark, table, _))
-        val (files, partLines) =
-          writePartitioned(spark, table, phys, pParts, rel, onePerLeaf = false)
-        val stats = statsCols.flatMap { c =>
-          val forCol = footerStats(spark, table, files.map(_._1), c)
-          require(files.isEmpty || forCol.nonEmpty,
-            s"txlog: no parquet footer carried statistics for '$c'")
-          forCol
-        }
-        (files.map(_._1), partLines ++ stats)
+      writeBatch = Some { (dfW: DataFrame, rel: String, snap: Snapshot) =>
+        requirePartitionArgs(dfW, partCols, statsCols)
+        val (files, partLines) = writePartitioned(spark, table,
+          physicalize(dfW, snap.schema), partCols.map(snap.physical), rel,
+          onePerLeaf = false)
+        (files.map(_._1),
+          partLines ++ requiredStats(spark, table, snap, files.map(_._1), statsCols))
       })
   }
 
@@ -2977,16 +2886,16 @@ object TxLog {
   def compactPartitioned(spark: SparkSession, table: String,
                          partCols: Seq[String],
                          statsCols: Seq[String] = Seq.empty): Long = {
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table)
+    val state = latestSnapshot(spark, table, "compact")
+    val base = state.version
     val snap = read(spark, table, Some(base))
     requirePartitionArgs(snap, partCols, statsCols)
-    val state = snapshot(spark, table, Some(base))
     val rel = f"data/v${base + 1}%08d-compact-${uniq()}"
     val (files, partLines) = writePartitioned(spark, table,
       physicalize(snap, state.schema), partCols.map(state.physical), rel,
       onePerLeaf = true)
-    val stats = statsCols.flatMap(c => footerStats(spark, table, files.map(_._1), c))
+    val stats = statsCols.flatMap(c =>
+      footerStats(spark, table, files.map(_._1), state.physical(c)))
     commitRewrite(spark, table, base, files.map(_._1), state.files, "compact",
       new Path(table, rel), stats = partLines ++ stats)
   }
@@ -3008,9 +2917,8 @@ object TxLog {
                        value: String,
                        targetBytes: Long = 128L << 20): Long = {
     require(targetBytes > 0, s"txlog: target bytes must be positive")
-    requireNonEmpty(spark, table, "compact")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "compact")
+    val base = snap.version
     val pv = partitionValuesIn(snap, partCol)
     val scope = snap.files.filter(f => pv.get(f).contains(value))
     require(scope.nonEmpty,
@@ -3122,9 +3030,8 @@ object TxLog {
   def deletePartition(spark: SparkSession, table: String, partCol: String,
                       value: String): Long = {
     import org.apache.spark.sql.functions.col
-    requireNonEmpty(spark, table, "delete")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "delete")
+    val base = snap.version
     val live = snap.files
     val recorded = partitionValuesIn(snap, partCol)
     val dropped = live.filter(p => recorded.get(p).contains(value))
@@ -3171,9 +3078,8 @@ object TxLog {
     * current version unchanged when no file can contain a match. */
   def deleteWhere(spark: SparkSession, table: String, statsCol: String,
                   lo: Long, hi: Long): Long = {
-    requireNonEmpty(spark, table, "delete")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "delete")
+    val base = snap.version
     val stats = statsIn(snap, statsCol)
     val touched = snap.files.filter(p =>
       stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
@@ -3188,7 +3094,7 @@ object TxLog {
     keptRows.write.parquet(dataDir.toString)
     val written = writtenFiles(spark, table, rel)
     commitRewrite(spark, table, base, written, touched, "delete", dataDir,
-      stats = footerStats(spark, table, written, statsCol))
+      stats = footerStats(spark, table, written, snap.physical(statsCol)))
   }
 
   /** DELETE FROM … WHERE `statsCol` BETWEEN lo AND hi, MERGE-ON-READ:
@@ -3216,9 +3122,8 @@ object TxLog {
   def deleteWhereMor(spark: SparkSession, table: String, statsCol: String,
                      lo: Long, hi: Long): Long = {
     import org.apache.spark.sql.functions.col
-    requireNonEmpty(spark, table, "delete")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "delete")
+    val base = snap.version
     val stats = statsIn(snap, statsCol)
     val touched = snap.files.filter(p =>
       stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
@@ -3314,8 +3219,7 @@ object TxLog {
   def deleteWhereMorExpr(spark: SparkSession, table: String,
                          predicateSql: String): Long = {
     import org.apache.spark.sql.functions.{col, expr}
-    requireNonEmpty(spark, table, "delete")
-    val snap = snapshot(spark, table, Some(latestVersion(spark, table)))
+    val snap = latestSnapshot(spark, table, "delete")
     // positions of already-deleted rows may re-match: the union with the
     // prior vectors dedups them
     val newPos = addressedRows(spark, table, snap.files, snap.schema)
@@ -3346,12 +3250,11 @@ object TxLog {
   def replaceWhere(spark: SparkSession, table: String, df: DataFrame,
                    predicateSql: String): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not, sum, when}
-    requireNonEmpty(spark, table, "merge")
-    val base = latestVersion(spark, table)
-    val metasNow = commitMetas(spark, table)
+    val snap = latestSnapshot(spark, table, "merge")
+    val base = snap.version
     // identity: explicit values rejected (GENERATED ALWAYS), fresh ids
     // minted for every image — all images are NEW rows by definition
-    val idCols = identityFrom(metasNow).toSeq.sortBy(_._1)
+    val idCols = snap.identities.toSeq.sortBy(_._1)
     val cleaned = idCols.foldLeft(df) { case (acc, (n, _)) =>
       if (!acc.columns.contains(n)) acc
       else {
@@ -3363,11 +3266,9 @@ object TxLog {
         acc.drop(n)
       }
     }
-    val images0 = applyGeneratedColumns(spark, table, cleaned, "merge",
-      Some(prefixed(metasNow, GenKeyPrefix)))
-    requireFitsDeclared(spark, table, images0, "merge")
-    requireSatisfiesConstraints(spark, table, images0, "merge",
-      pre = Some(prefixed(metasNow, CheckKeyPrefix)))
+    val images0 = applyGeneratedColumns(table, snap, cleaned, "merge")
+    requireFitsDeclared(snap, images0, "merge")
+    requireSatisfiesConstraints(table, snap, images0, "merge")
     val outside = images0
       .filter(not(coalesce(expr(predicateSql), lit(false)))).count()
     require(outside == 0L,
@@ -3381,7 +3282,6 @@ object TxLog {
     val idMetas = idCols.map { case (n, (s0, st, nx)) =>
       metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + nImg * st}")
     }
-    val snap = snapshot(spark, table, Some(base))
     val rel = f"data/v${base + 1}%08d-replace-${uniq()}"
     physicalize(images, snap.schema).write.parquet(new Path(table, rel).toString)
     val adds = writtenFiles(spark, table, rel)
@@ -3456,9 +3356,8 @@ object TxLog {
     require(sets.nonEmpty, "txlog: UPDATE needs at least one assignment")
     require(sets.map(_._1).distinct.size == sets.size,
       s"txlog: a column is assigned twice (${sets.map(_._1).mkString(", ")})")
-    requireNonEmpty(spark, table, "update")
-    val base = latestVersion(spark, table)
-    val snap = snapshot(spark, table, Some(base))
+    val snap = latestSnapshot(spark, table, "update")
+    val base = snap.version
     val declared = snap.schema
     val logicalCols = declared.map(_.fieldNames.toSeq).getOrElse(
       read(spark, table, Some(base)).columns.toSeq)
@@ -3481,23 +3380,23 @@ object TxLog {
     // stored values are RECOMPUTED from the updated images — dropping
     // them first makes applyGeneratedColumns take its compute path, so
     // an update to a source column can never leave a stale derivation
-    val gens = generatedColumns(spark, table).keySet
+    val gens = snap.gens.keySet
     sets.foreach { case (c, _) => require(!gens.contains(c),
       s"txlog: cannot assign to generated column '$c' — it is " +
         "GENERATED ALWAYS and recomputed from its expression") }
     // identity ids are STABLE under update: images carry the existing
     // values; only assignment to the column itself is forbidden
-    val idents = identityColumns(spark, table).keySet
+    val idents = snap.identities.keySet
     sets.foreach { case (c, _) => require(!idents.contains(c),
       s"txlog: cannot assign to identity column '$c' — it is " +
         "GENERATED ALWAYS AS IDENTITY") }
-    val images = applyGeneratedColumns(spark, table,
+    val images = applyGeneratedColumns(table, snap,
       matched.select(logicalCols.map(c =>
         setsByCol.get(c).map(v => expr(v).as(c)).getOrElse(col(c))): _*)
         .drop(gens.toSeq: _*),
       "update")
-    requireFitsDeclared(spark, table, images, "update")
-    requireSatisfiesConstraints(spark, table, images, "update")
+    requireFitsDeclared(snap, images, "update")
+    requireSatisfiesConstraints(table, snap, images, "update")
     val rel = f"data/v${base + 1}%08d-update-${uniq()}"
     val dataDir = new Path(table, rel)
     physicalize(images, declared).write.parquet(dataDir.toString)
@@ -3520,8 +3419,7 @@ object TxLog {
                     keyCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(keyCols.nonEmpty, "txlog: deleteKeysMor needs key columns")
-    requireNonEmpty(spark, table, "delete")
-    val snap = snapshot(spark, table, Some(latestVersion(spark, table)))
+    val snap = latestSnapshot(spark, table, "delete")
     val declared = snap.schema
     val paths = snap.files.map(p => new Path(table, p).toString)
     val raw = declared match {
@@ -3565,8 +3463,8 @@ object TxLog {
     * be. Callers that want the strict check can run
     * `read(table).filter(not(constraint)).count()` after restoring. */
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
-    requireNonEmpty(spark, table, "restore")
-    val base = latestVersion(spark, table)
+    val head = latestSnapshot(spark, table, "restore")
+    val base = head.version
     val wm = earliestReadableVersion(spark, table)
     require(toVersion >= wm,
       s"txlog: version $toVersion was vacuumed (earliest readable: $wm)")
@@ -3574,7 +3472,6 @@ object TxLog {
       s"txlog: cannot restore $table to future version $toVersion (latest: $base)")
     if (toVersion == base) return base
     val target = snapshot(spark, table, Some(toVersion))
-    val head = snapshot(spark, table, Some(base))
     val cur = head.files.toSet
     val adds = target.files.filterNot(cur)
     val removes = (cur -- target.files.toSet).toSeq
@@ -3640,8 +3537,10 @@ object TxLog {
     * clone start from a consistent base. */
   def shallowClone(spark: SparkSession, src: String, dst: String,
                    asOf: Option[Long] = None): Long = {
-    requireNonEmpty(spark, src, "clone")
-    val head = latestVersion(spark, src)
+    val log = listLog(spark, src)
+    require(log.commits.nonEmpty,
+      s"txlog: cannot clone an empty table (no commits in $src)")
+    val head = log.commits.last
     val v = asOf.getOrElse(head)
     val wm = earliestReadableVersion(spark, src)
     require(v >= wm,
@@ -3657,7 +3556,7 @@ object TxLog {
     def abs(rel: String): String =
       if (new Path(rel).isAbsolute || rel.contains(":/")) rel // clone-of-clone
       else s"$srcRoot/$rel"
-    val snap = snapshot(spark, src, Some(v))
+    val snap = replay(spark, src, log, Some(v))
     val adds = snap.files.map(abs)
     val dvLines = snap.liveDvs.toSeq
       .map { case (fl, dvDir) => s"${abs(fl)}|${abs(dvDir)}" }
@@ -3672,7 +3571,7 @@ object TxLog {
         else (abs(t(0)) +: t.drop(1)).mkString("|")
       }
     val schemaB64 = snap.schema.map(encodeSchema)
-    val metaLines = commitMetas(spark, src, Some(v)).toSeq
+    val metaLines = snap.metas.toSeq
       .map { case (k, value) => metaPayload(k, value) } :+
       metaPayload("clone-source", s"$srcRoot@$v")
     require(tryCommit(spark, dst, 0L, adds, Seq.empty, Some("clone"),
@@ -3748,8 +3647,9 @@ object TxLog {
     * ONLY by older versions is deleted, and the read watermark rises so
     * a time travel into the vacuumed range fails LOUDLY at the API
     * (not with a missing-file scan error mid-job). The log files
-    * themselves stay (tiny, and replay needs the full prefix). */
-  /** `minFileAgeMs`: concurrency horizon — a data file younger than
+    * themselves stay (tiny, and replay needs the full prefix).
+    *
+    * `minFileAgeMs`: concurrency horizon — a data file younger than
     * this is never deleted even if unreferenced, because it may belong
     * to an IN-FLIGHT writer that has written data but not yet claimed
     * its commit (the public lakehouse retention-period idea; Delta
@@ -3759,8 +3659,9 @@ object TxLog {
     * for hours, and reclaiming its not-yet-committed files would let
     * the subsequent commit reference deleted files (silent corruption
     * until scan time). 0 keeps the single-writer behavior: delete
-    * every unreferenced file immediately. */
-  /** `dryRun`: report the files a real vacuum would reclaim, delete
+    * every unreferenced file immediately.
+    *
+    * `dryRun`: report the files a real vacuum would reclaim, delete
     * nothing, leave the watermark untouched — the Delta `VACUUM ...
     * DRY RUN` audit step before an irreversible retention trim. */
   def vacuum(spark: SparkSession, table: String,
@@ -3778,7 +3679,7 @@ object TxLog {
     // its files. What the re-read CANNOT see is a writer whose data
     // files exist but whose commit hasn't landed yet; that window is
     // covered by the age horizon, which is why minFileAgeMs defaults
-    // to 20 minutes (Delta's equivalent default is 7 days). Pass 0
+    // to 24 hours (Delta's equivalent default is 7 days). Pass 0
     // only in single-writer contexts: it disables the horizon entirely
     // (exact, immune to same-millisecond modification-time ties).
     val cutoff = retained.head
@@ -4159,8 +4060,8 @@ object TxLog {
                keys: Seq[String], evolve: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     require(keys.nonEmpty, "txlog: mergeMor needs at least one key column")
-    requireNonEmpty(spark, table, "merge")
-    val base = latestVersion(spark, table)
+    val snap = latestSnapshot(spark, table, "merge")
+    val base = snap.version
     // identity columns (r16): a MERGE is the default upsert idiom on an
     // identity table — matched keys KEEP their existing id untouched
     // (joined back from the same address scan that computes the mask),
@@ -4172,8 +4073,7 @@ object TxLog {
     // sequence since we read it. Keying ON an identity column is
     // rejected — GENERATED ALWAYS means a source can never legitimately
     // carry the ids an upsert-by-id would need.
-    val idCols = identityColumns(spark, table, Some(base)).toSeq.sortBy(_._1)
-    val snap = snapshot(spark, table, Some(base))
+    val idCols = snap.identities.toSeq.sortBy(_._1)
     idCols.foreach { case (n, _) => require(!keys.contains(n),
       s"txlog: merge into $table cannot key on identity column '$n' — " +
         "it is GENERATED ALWAYS AS IDENTITY, so a merge source never " +
@@ -4192,7 +4092,7 @@ object TxLog {
     }
     // complete/validate generated columns BEFORE evolution sees the
     // batch schema — a merge image must land the stored derivation
-    val updates = applyGeneratedColumns(spark, table, cleaned, "merge")
+    val updates = applyGeneratedColumns(table, snap, cleaned, "merge")
     // `evolve` (r15): `MERGE WITH SCHEMA EVOLUTION` — the batch's extra
     // columns are ADDED to the declared schema (old files read them as
     // null) and its wider numeric types WIDEN it (old files read
@@ -4203,7 +4103,7 @@ object TxLog {
     // own schema. Without the flag, a batch beyond the declared schema
     // stays a loud error (requireFitsDeclared) — evolution is opt-in.
     val evolution: Option[StructType] = if (!evolve) {
-      requireFitsDeclared(spark, table, updates, "merge")
+      requireFitsDeclared(snap, updates, "merge")
       None
     } else {
       val cur = snap.schema.getOrElse(read(spark, table, Some(base)).schema)
@@ -4216,11 +4116,11 @@ object TxLog {
         case None => evolved != StructType(cur.fields.map(_.copy(nullable = true)))
       }
       if (!needsDeclare) {
-        requireFitsDeclared(spark, table, updates, "merge")
+        requireFitsDeclared(snap, updates, "merge")
         None
       } else Some(evolved)
     }
-    requireSatisfiesConstraints(spark, table, updates, "merge")
+    requireSatisfiesConstraints(table, snap, updates, "merge")
     val dup = updates.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
       .filter(col("n") > 1).limit(1).collect()
     require(dup.isEmpty,
@@ -4405,20 +4305,19 @@ object TxLog {
       "txlog: merge needs at least one WHEN clause")
     keys.foreach(k => require(source.columns.contains(k),
       s"txlog: merge source carries no key column '$k'"))
-    requireNonEmpty(spark, table, "merge")
-    val base = latestVersion(spark, table)
+    val snap = latestSnapshot(spark, table, "merge")
+    val base = snap.version
     // identity columns (r16): matched/by-source images keep the target
     // row's id untouched (they project the target's columns, so the id
     // rides through — SET naming it is rejected below, mirroring MOR
     // UPDATE); not-matched INSERT images mint fresh ids against the
     // high-water at `base`, whose advance rides inside the merge commit
     // — serializable like mergeMor, so no re-mint loop is needed.
-    val idCols = identityColumns(spark, table, Some(base)).toSeq.sortBy(_._1)
+    val idCols = snap.identities.toSeq.sortBy(_._1)
     val idents = idCols.map(_._1).toSet
     idCols.foreach { case (n, _) => require(!keys.contains(n),
       s"txlog: merge into $table cannot key on identity column '$n' — " +
         "it is GENERATED ALWAYS AS IDENTITY; key on the natural key") }
-    val snap = snapshot(spark, table, Some(base))
     val live = snap.files
     val declared = snap.schema
     val target = liveAddressed(spark, table, snap)
@@ -4594,10 +4493,10 @@ object TxLog {
           metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + mintN * st}")
         })
       }
-    val images = applyGeneratedColumns(spark, table,
+    val images = applyGeneratedColumns(table, snap,
       insMinted.fold(withBs)(withBs.unionByName(_)), "merge")
-    requireFitsDeclared(spark, table, images, "merge")
-    requireSatisfiesConstraints(spark, table, images, "merge")
+    requireFitsDeclared(snap, images, "merge")
+    requireSatisfiesConstraints(table, snap, images, "merge")
     if (images.isEmpty) {
       // delete-only (or nothing-fired) batch: mask without images (no
       // insert fired, so there is no identity advance to record)
@@ -4629,21 +4528,14 @@ object TxLog {
       !appId.contains(':'),
       s"txlog: appId must be nonempty without quote/backslash/colon: $appId")
 
-  /** Highest batchId `appId` has committed to `table` (None if never).
-    * Driver-side scan of the commit log's txn markers — bounded by
-    * commit count, the same contract as version listing. */
+  /** Highest batchId `appId` has committed to `table` as of `asOf`
+    * (None if never). A field read of the [[Snapshot]] fold;
+    * checkpoints carry every appId's high-water mark, so the cost is
+    * bounded by [[checkpointEvery]]. */
   def lastCommittedBatch(spark: SparkSession, table: String,
                          appId: String, asOf: Option[Long] = None): Option[Long] = {
     requireAppId(appId)
-    val pre = appId + ":"
-    val ids = versions(spark, table)
-      .filter(v => asOf.forall(v <= _))
-      .flatMap { v =>
-        readLogFile(spark, commitPath(table, v)).collect {
-          case ("txn", t) if t.startsWith(pre) => t.stripPrefix(pre).toLong
-        }
-      }
-    if (ids.isEmpty) None else Some(ids.max)
+    stateAt(spark, table, asOf).txns.get(appId)
   }
 
   /** Append `df` as batch `batchId` of writer `appId` — EXACTLY-ONCE
@@ -4657,10 +4549,6 @@ object TxLog {
   def appendIdempotent(spark: SparkSession, table: String, df: DataFrame,
                        appId: String, batchId: Long): Option[Long] = {
     requireAppId(appId)
-    // fast path; the race between this check and the commit claim (two
-    // zombie twins both passing it) is re-checked INSIDE appendCommit's
-    // OCC loop, which returns None when the twin's marker is found
-    if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId)) return None
     appendCommit(spark, table, df, "idempotent append",
       Some((appId, batchId)), Seq.empty)
   }
@@ -4681,11 +4569,12 @@ object TxLog {
     // version 0, and declaring an identity column requires a committed
     // schema (createTable) — i.e. at least one prior commit, which makes
     // the version-0 claim below fail. No guard needed.
-    val df1 = applyGeneratedColumns(spark, table, df, "append")
-    requireFitsDeclared(spark, table, df1, "append")
-    requireSatisfiesConstraints(spark, table, df1, "append")
+    val snap = snapshot(spark, table)
+    val df1 = applyGeneratedColumns(table, snap, df, "append")
+    requireFitsDeclared(snap, df1, "append")
+    requireSatisfiesConstraints(table, snap, df1, "append")
     val rel = f"data/v00000000-${uniq()}"
-    physicalize(df1, schemaAt(spark, table))
+    physicalize(df1, snap.schema)
       .write.parquet(new Path(table, rel).toString)
     val files = writtenFiles(spark, table, rel)
     if (tryCommit(spark, table, 0L, files, Seq.empty, None, None,
@@ -4710,9 +4599,11 @@ object TxLog {
                             extraTxns: Seq[(String, Long)] = Seq.empty): Option[Long] = {
     requireAppId(appId)
     extraTxns.foreach(t => requireAppId(t._1))
-    if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId)) return None
-    requireNonEmpty(spark, table, "overwrite")
-    try Some(replaceCommitAt(spark, table, baseVersion, df,
+    val head = latestSnapshot(spark, table, "overwrite")
+    if (head.landed(appId, batchId)) return None
+    val base =
+      if (baseVersion == head.version) head else snapshot(spark, table, Some(baseVersion))
+    try Some(replaceCommitAt(spark, table, base, df,
       "overwrite", (d, p) => d.write.parquet(p), Some((appId, batchId)),
       extraTxns = extraTxns))
     catch { case _: TxLogDuplicateBatchException => None }
@@ -4725,9 +4616,9 @@ object TxLog {
   def overwriteIdempotent(spark: SparkSession, table: String, df: DataFrame,
                           appId: String, batchId: Long): Option[Long] = {
     requireAppId(appId)
-    if (lastCommittedBatch(spark, table, appId).exists(_ >= batchId)) return None
-    requireNonEmpty(spark, table, "overwrite")
-    try Some(replaceCommitAt(spark, table, latestVersion(spark, table), df,
+    val head = latestSnapshot(spark, table, "overwrite")
+    if (head.landed(appId, batchId)) return None
+    try Some(replaceCommitAt(spark, table, head, df,
       "overwrite", (d, p) => d.write.parquet(p), Some((appId, batchId))))
     catch { case _: TxLogDuplicateBatchException => None }
   }

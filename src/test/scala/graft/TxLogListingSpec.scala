@@ -69,6 +69,20 @@ class TxLogListingSpec extends SparkSpec {
     assert(pinned == 1, s"pinned read listed _log $pinned times")
   }
 
+  test("appendIdempotent lists _log once, for a new and for a replayed batch") {
+    val t = grown("idem")
+    def batch = Seq((300L, "z", 3L)).toDF("id", "s", "n")
+    val fresh = ListingCounts.during(spark, t) {
+      assert(TxLog.appendIdempotent(spark, t, batch, "app", 1L).contains(13L))
+    }
+    assert(fresh == 1, s"a new batch listed _log $fresh times")
+    val replayed = ListingCounts.during(spark, t) {
+      assert(TxLog.appendIdempotent(spark, t, batch, "app", 1L).isEmpty)
+    }
+    assert(replayed == 1, s"a replayed batch listed _log $replayed times")
+    assert(TxLog.versions(spark, t).last == 13L)
+  }
+
   test("DESCRIBE DETAIL lists _log once") {
     val t = grown("detail")
     var row: org.apache.spark.sql.Row = null

@@ -165,7 +165,7 @@ class TxLogSpec extends SparkSpec {
     val atV9 = TxLog.snapshotFiles(spark, t, asOf = Some(9L)) // pre-ckpt: full replay path
     // ground truth: remove the checkpoint and force the full-replay path
     val f = new Path(t, "_log").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.delete(new Path(t, f"_log/${10L}%08d.ckpt"), false)
+    f.delete(new Path(t, f"_log/${10L}%08d.checkpoint"), false)
     assert(TxLog.snapshotFiles(spark, t) == withCkpt,
       "checkpointed read must equal full replay, incl. file order")
     assert(TxLog.snapshotFiles(spark, t, asOf = Some(10L)) == atV10)
@@ -189,12 +189,18 @@ class TxLogSpec extends SparkSpec {
 
   test("checkpointed replay ≡ full replay at every version, all payload kinds") {
     val t = freshTable("ckptall")
-    // stats + dv + schema all cross the cadence inside the checkpoints
-    (0 until 8).foreach(i => TxLog.appendWithStats(spark, t,
-      Seq((i.toLong, s"v$i")).toDF("id", "s"), "id"))
+    // stats + dv + schema + metas (an active and a cleared CHECK) + txn
+    // marks of two appIds all cross the cadence inside the checkpoints
+    (0 until 5).foreach(i => TxLog.appendWithStats(spark, t,
+      Seq((i.toLong, s"v$i")).toDF("id", "s"), "id")) // v0..v4
+    TxLog.addCheckConstraint(spark, t, "pos", "id >= 0") // v5
+    TxLog.addCheckConstraint(spark, t, "small", "id < 1000") // v6
+    assert(TxLog.appendIdempotent(spark, t, Seq((5L, "v5")).toDF("id", "s"),
+      "app-a", 1L).contains(7L))
     TxLog.deleteWhereMorExpr(spark, t, "id = 3") // v8: dv binding
-    TxLog.appendWithStats(spark, t, Seq((8L, "v8")).toDF("id", "s"), "id")
-    TxLog.append(spark, t, Seq((100L, "x")).toDF("id", "s")) // v10 → ckpt
+    TxLog.dropCheckConstraint(spark, t, "pos") // v9: a cleared key
+    assert(TxLog.appendIdempotent(spark, t, Seq((100L, "x")).toDF("id", "s"),
+      "app-b", 7L).contains(10L)) // v10 → ckpt
     assert(TxLog.checkpointVersions(spark, t) == Seq(10L))
     assert(!TxLog.read(spark, t).collect().map(_.getLong(0)).contains(3L),
       "the MOR delete must hold through the checkpoint")
@@ -204,27 +210,48 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.dvAt(spark, t).isEmpty)
     TxLog.addColumn(spark, t, "n", org.apache.spark.sql.types.LongType) // v12
     TxLog.deleteWhereMorExpr(spark, t, "id = 5") // v13
-    (0 until 7).foreach(i => TxLog.append(spark, t,
-      Seq((200L + i, "y", i.toLong)).toDF("id", "s", "n"))) // v14..v20
+    def batch(id: Long) = Seq((id, "y", id)).toDF("id", "s", "n")
+    assert(TxLog.appendIdempotent(spark, t, batch(200L), "app-a", 2L).contains(14L))
+    assert(TxLog.appendIdempotent(spark, t, batch(299L), "app-a", 2L).isEmpty,
+      "a replayed batch lands nothing")
+    TxLog.addCheckConstraint(spark, t, "big", "id < 10000") // v15
+    TxLog.dropCheckConstraint(spark, t, "small") // v16
+    assert(TxLog.appendIdempotent(spark, t, batch(201L), "app-b", 8L).contains(17L))
+    TxLog.append(spark, t, batch(202L)) // v18
+    assert(TxLog.appendIdempotent(spark, t, batch(203L), "app-a", 3L).contains(19L))
+    TxLog.append(spark, t, batch(204L)) // v20 → ckpt
     assert(TxLog.checkpointVersions(spark, t) == Seq(10L, 20L))
     val vs = TxLog.versions(spark, t)
     def state(v: Long) = (TxLog.snapshotFiles(spark, t, Some(v)),
       TxLog.schemaAt(spark, t, Some(v)), TxLog.statsAt(spark, t, "id", Some(v)),
-      TxLog.dvAt(spark, t, Some(v)))
+      TxLog.dvAt(spark, t, Some(v)), TxLog.commitMetas(spark, t, Some(v)),
+      TxLog.lastCommittedBatch(spark, t, "app-a", Some(v)),
+      TxLog.lastCommittedBatch(spark, t, "app-b", Some(v)))
     val viaCkpt = vs.map(state)
     val rowsViaCkpt = TxLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
-    assert(rowsViaCkpt == ((0L to 7L).filter(_ != 5L) ++ (200L to 206L)))
+    assert(rowsViaCkpt == ((0L to 4L) ++ (200L to 204L)))
     assert(viaCkpt(10)._4.size == 1 && viaCkpt(11)._4.isEmpty &&
       viaCkpt(20)._4.size == 1, "dv bindings: bound, unbound by restore, re-bound")
     assert(viaCkpt(11)._2.isEmpty && viaCkpt(20)._2.exists(_.fieldNames.contains("n")))
-    assert(viaCkpt(20)._3.size == 8, "the restored files' stats survive v20's checkpoint")
-    // ground truth: delete every checkpoint; a leftover parquet
-    // checkpoint of an older build is never listed, so it cannot matter
+    assert(viaCkpt(20)._3.size == 5, "the restored files' stats survive v20's checkpoint")
+    assert(viaCkpt(10)._5 == Map("check-pos" -> "", "check-small" -> "id < 1000"))
+    assert(viaCkpt(20)._5 ==
+      Map("check-pos" -> "", "check-small" -> "", "check-big" -> "id < 10000"))
+    assert((viaCkpt(10)._6, viaCkpt(10)._7) == ((Some(1L), Some(7L))))
+    assert((viaCkpt(20)._6, viaCkpt(20)._7) == ((Some(3L), Some(8L))))
+    assert(TxLog.checkConstraints(spark, t) == Map("big" -> "id < 10000"))
+    // ground truth: delete every checkpoint; checkpoints an older build
+    // wrote (`.ckpt` without metas or txn marks, parquet `.ckptpq`) are
+    // never listed, so they cannot matter
     val f = new Path(t, "_log").getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(10L, 20L).foreach(c => assert(f.delete(new Path(t, f"_log/$c%08d.ckpt"), false)))
-    val stale = f.create(new Path(t, f"_log/${20L}%08d.ckptpq"))
-    stale.write("not a checkpoint".getBytes("UTF-8"))
-    stale.close()
+    def logFile(name: String) = java.nio.file.Paths.get(t, "_log", name)
+    val oldFormat = java.nio.file.Files.readAllLines(logFile(f"${20L}%08d.checkpoint"))
+    Seq(10L, 20L).foreach(c =>
+      assert(f.delete(new Path(t, f"_log/$c%08d.checkpoint"), false)))
+    oldFormat.removeIf(l => l.contains("\"a\":\"meta\"") || l.contains("\"a\":\"txn\""))
+    java.nio.file.Files.write(logFile(f"${20L}%08d.ckpt"), oldFormat)
+    java.nio.file.Files.write(logFile(f"${20L}%08d.ckptpq"),
+      "not a checkpoint".getBytes("UTF-8"))
     assert(TxLog.checkpointVersions(spark, t).isEmpty)
     vs.zip(viaCkpt).foreach { case (v, expected) =>
       assert(state(v) == expected,
@@ -232,6 +259,43 @@ class TxLogSpec extends SparkSpec {
     }
     assert(TxLog.read(spark, t).collect().map(_.getLong(0)).sorted.toSeq
       == rowsViaCkpt)
+  }
+
+  test("metadata at or after a checkpoint needs no earlier commit") {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val t = freshTable("ckptmeta")
+    TxLog.createTable(spark, t, StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType)))) // v0
+    TxLog.addIdentityColumn(spark, t, "rid") // v1
+    TxLog.addCheckConstraint(spark, t, "pos", "id >= 0") // v2
+    (0L until 10L).foreach(b => assert(TxLog.appendIdempotent(spark, t,
+      Seq((b, s"v$b")).toDF("id", "s"), "ingest", b).contains(b + 3))) // v3..v12
+    assert(TxLog.checkpointVersions(spark, t) == Seq(10L))
+    // a copy whose log starts at the checkpoint: every commit that
+    // declared the schema, the identity column, the constraint and the
+    // first txn marks is gone
+    val copy = freshTable("ckptmeta-copy")
+    val src = java.nio.file.Paths.get(t)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      val dst = java.nio.file.Paths.get(copy).resolve(src.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+      else java.nio.file.Files.copy(p, dst)
+    } finally walk.close()
+    (0L until 10L).foreach(v => java.nio.file.Files.delete(
+      java.nio.file.Paths.get(copy, "_log", f"$v%08d.json")))
+    assert(TxLog.versions(spark, copy) == (10L to 12L))
+    def meta(table: String) = (TxLog.commitMetas(spark, table),
+      TxLog.checkConstraints(spark, table), TxLog.identityColumns(spark, table),
+      TxLog.lastCommittedBatch(spark, table, "ingest"),
+      TxLog.schemaAt(spark, table), TxLog.snapshotFiles(spark, table))
+    assert(meta(copy) == meta(t))
+    assert(TxLog.identityColumns(spark, copy)("rid")._3 == 11L)
+    val e = intercept[IllegalArgumentException](TxLog.append(spark, copy,
+      Seq((-1L, "bad")).toDF("id", "s")))
+    assert(e.getMessage.contains("violates CHECK constraint 'pos'"), e.getMessage)
+    assert(TxLog.appendIdempotent(spark, copy, Seq((9L, "dup")).toDF("id", "s"),
+      "ingest", 9L).isEmpty, "the checkpoint carries the txn high-water")
   }
 
   test("corrupt commit lines and format-hostile paths fail loudly") {
