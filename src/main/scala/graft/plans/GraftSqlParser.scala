@@ -482,10 +482,8 @@ case class TxLogOptimizeCommand(table: String,
     val v = zorder match {
       case None => TxLog.optimizeBinPack(spark, table, target)
       case Some((a, b)) =>
-        val root = new org.apache.hadoop.fs.Path(table)
-        val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val bytes = TxLog.snapshotFiles(spark, table).map(p =>
-          fsys.getFileStatus(new org.apache.hadoop.fs.Path(table, p)).getLen).sum
+        val snap = TxLog.snapshot(spark, table)
+        val bytes = TxLog.fileSizes(spark, table, snap, snap.files).sum
         val files = math.max(1L, (bytes + target - 1) / target).toInt
         if (hilbert) TxLog.optimizeHilbert(spark, table, files, a, b)
         else TxLog.optimizeZOrder(spark, table, files, a, b)
@@ -634,10 +632,7 @@ case class TxLogDetailCommand(table: String) extends LeafRunnableCommand {
     val log = TxLog.listLog(spark, table)
     require(log.commits.nonEmpty, s"txlog: no commits in $table")
     val snap = TxLog.replay(spark, table, log, None)
-    val root = new org.apache.hadoop.fs.Path(table)
-    val fsys = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = snap.files.map(p => fsys.getFileStatus(
-      new org.apache.hadoop.fs.Path(table, p)).getLen).sum
+    val bytes = TxLog.fileSizes(spark, table, snap, snap.files).sum
     Seq(Row(table, snap.version, TxLog.earliestReadableVersion(spark, table),
       log.commits.size.toLong, snap.files.size.toLong, bytes,
       snap.liveDvs.size.toLong, snap.schema.isDefined,

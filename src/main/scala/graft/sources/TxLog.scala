@@ -61,7 +61,9 @@ case class MergeNotMatchedInsert(cond: Option[String],
   * folded in version order from the newest checkpoint — bounded by the
   * checkpoint cadence, the contract real lakehouse clients have), while
   * the DATA path never leaves executors: reads are a plain multi-file
-  * parquet scan of the live set (pushdown/pruning intact), writes are
+  * parquet scan of the live set (pushdown/pruning intact) built from the
+  * log alone — every landed file's size rides in its commit, so planning
+  * neither lists nor stats storage ([[scanFiles]]) — and writes are
   * normal distributed parquet writes.
   *
   * CONCURRENCY (multi-writer, optimistic): the commit file itself is
@@ -697,6 +699,27 @@ object TxLog {
     lazy val liveDvs: Map[String, String] =
       dvs.filter(p => liveSet.contains(p._1) && p._2 != DvUnbound).toMap
 
+    /** Recorded (size, modification time) of data files and
+      * deletion-vector sidecar files ([[SizeStatsCol]] lines). */
+    lazy val sizes: Map[String, (Long, Long)] = recordedSizes(stats)
+
+    /** The recorded sidecar files of each bound deletion-vector dir. */
+    lazy val dvFiles: Map[String, Seq[String]] = {
+      val dirs = dvs.map(_._2).toSet
+      sizes.keys.toSeq.filter(f => dirs.contains(parentOf(f))).sorted
+        .groupBy(parentOf)
+    }
+
+    /** The stats lines of live files and of live deletion-vector
+      * sidecars: all a from-scratch copy of this state needs. */
+    lazy val liveStats: Seq[String] = {
+      val dirs = liveDvs.values.toSet
+      stats.filter { s =>
+        val f = s.split('|')(0)
+        liveSet.contains(f) || dirs.contains(parentOf(f))
+      }
+    }
+
     /** Physical name of logical column `c` (itself when the table
       * declares no mapping — the legacy identity). */
     def physical(c: String): String =
@@ -845,13 +868,14 @@ object TxLog {
     if (version > 0 && version % checkpointEvery == 0) {
       val snap = snapshot(spark, table, Some(version))
       val live = snap.liveSet
-      // the schema, the live files, their stats and their bound vectors,
-      // the metas and the txn high-water marks: a from-scratch state, so
-      // stats of removed files and unbound sentinels are dead weight
-      // (sorted metas and txns keep the content a function of the prefix)
+      // the schema, the live files, their stats and their bound vectors
+      // (with the vectors' sidecar sizes), the metas and the txn
+      // high-water marks: a from-scratch state, so stats of removed files
+      // and unbound sentinels are dead weight (sorted metas and txns keep
+      // the content a function of the prefix)
       val lines = snap.schema.map(s => ("schema", encodeSchema(s))).toSeq ++
         snap.files.map(("add", _)) ++
-        snap.stats.filter(s => live.contains(s.split('|')(0))).map(("stats", _)) ++
+        snap.liveStats.map(("stats", _)) ++
         snap.dvs.collect { case (file, dv) if live.contains(file) && dv != DvUnbound =>
           ("dv", s"$file|$dv")
         } ++
@@ -1042,9 +1066,10 @@ object TxLog {
           val files = writtenFiles(spark, table, rel)
           (files, requiredStats(spark, table, snap, files, statsCols))
       }
-      // every data-landing commit records its files' row counts, so
-      // COUNT(*) is a log fold forever after ([[countRows]])
-      (new Path(table, rel), files, stats ++ rowCountLines(spark, table, files),
+      // every data-landing commit records its files' row counts and
+      // sizes, so COUNT(*) is a log fold ([[countRows]]) and a scan is
+      // built from the log ([[scanFiles]]) forever after
+      (new Path(table, rel), files, stats ++ landedLines(spark, table, files),
         idMetas)
     }
     var (dir, files, stats, idMetas) = land()
@@ -1174,7 +1199,7 @@ object TxLog {
     val snap = snapshot(spark, table)
     if (snap.version < 0) return append(spark, table, df)
     val declared = snap.schema
-    val cur = declared.getOrElse(read(spark, table, Some(snap.version)).schema)
+    val cur = declared.getOrElse(inferredSchema(spark, table, snap.files))
     val evolved = evolveSchema(cur, df.schema)
     val needsDeclare = declared match {
       case Some(d) => evolved != d
@@ -1189,7 +1214,7 @@ object TxLog {
     physicalize(df, Some(evolved)).write.parquet(dataDir.toString)
     val files = writtenFiles(spark, table, rel)
     val schemaB64 = Some(encodeSchema(evolved))
-    val counts = rowCountLines(spark, table, files)
+    val counts = landedLines(spark, table, files)
     var v = intended
     var attempts = 0
     while (!tryCommit(spark, table, v, files, Seq.empty, None, schemaB64,
@@ -1276,45 +1301,138 @@ object TxLog {
     commitMetas(spark, table).get(PartitionColsKey)
       .map(_.split(",").toSeq).getOrElse(Seq.empty)
 
-  /** Scan `files` (relative paths) under the optional declared schema,
-    * ANTI-APPLYING each file's deletion vector: files bound to a dv dir
-    * are read WITH the parquet metadata columns (`_metadata.file_name`,
-    * `_metadata.row_index` — stable physical row positions, the public
-    * Delta deletion-vector addressing idea) and left-anti joined against
-    * the dv rows (file_name, pos); unbound files scan plain. The dv
-    * frame is a handful of rows per targeted file and is broadcast, so
-    * the read-side cost of merge-on-read is one map-side hash probe —
-    * never a shuffle of the 100 TB side. */
-  private def scanLive(spark: SparkSession, table: String, files: Seq[String],
-                       declared: Option[StructType],
+  /** The file index of a scan built from the log: `files` with their
+    * recorded sizes and modification times, answered with no
+    * file-system call (the public Delta TahoeFileIndex idea). The root
+    * paths are the files themselves, as `InMemoryFileIndex` gives for a
+    * scan of explicit file paths; case-class equality (by path) keeps
+    * two scans of the same files equal for exchange reuse and the cache
+    * manager, as `InMemoryFileIndex`'s root-path equality does. */
+  private final case class LogFileIndex(
+      files: Seq[org.apache.hadoop.fs.FileStatus])
+    extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
+      PartitionDirectory}
+    def rootPaths: Seq[Path] = files.map(_.getPath)
+    def listFiles(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+                  dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
+                 ): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
+        files.map(FileStatusWithMetadata(_))))
+    def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = files.map(_.getLen).sum
+    def partitionSchema: StructType = new StructType()
+  }
+
+  /** `rels`' file statuses (qualified paths) from their recorded
+    * (size, modification time) in `sizes`; a file with no record — one
+    * landed by a build that did not record sizes — is stat'd. */
+  private def fileStatuses(spark: SparkSession, table: String, rels: Seq[String],
+                           sizes: Map[String, (Long, Long)]
+                          ): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val f = fs(spark, new Path(table))
+    rels.map { rel =>
+      val p = new Path(table, rel)
+      sizes.get(rel) match {
+        case Some((len, mtime)) => new org.apache.hadoop.fs.FileStatus(len, false,
+          0, 1, mtime, p.makeQualified(f.getUri, f.getWorkingDirectory))
+        case None => fs(spark, p).getFileStatus(p)
+      }
+    }
+  }
+
+  /** The byte sizes of `files` (recorded in `snap`): what bin-packing
+    * and DESCRIBE DETAIL size from, with no stat per file. */
+  private[graft] def fileSizes(spark: SparkSession, table: String, snap: Snapshot,
+                               files: Seq[String]): Seq[Long] =
+    fileStatuses(spark, table, files, snap.sizes).map(_.getLen)
+
+  /** The schema Spark's parquet inference gives a scan of `rels` with no
+    * declared schema, derived the way that inference does — from the
+    * footer of the first file by qualified path: its stored Spark schema,
+    * else the converted parquet schema, all fields nullable — but read
+    * through [[footerOf]] (cached at write time), so no Spark job. */
+  private def inferredSchema(spark: SparkSession, table: String,
+                             rels: Seq[String]): StructType = {
+    require(rels.nonEmpty,
+      s"txlog: no files to infer the schema of $table from (it declares none)")
+    val f = fs(spark, new Path(table))
+    val first = new Path(table, rels.minBy(r => new Path(table, r)
+      .makeQualified(f.getUri, f.getWorkingDirectory).toString))
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    org.apache.spark.sql.GraftSqlShims.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(first, footerOf(spark, first).md),
+      new ParquetToSparkSchemaConverter(conf)))
+  }
+
+  /** The one scan builder for table data and sidecars: a parquet relation
+    * over exactly `rels` (relative paths) whose file index comes from the
+    * log ([[LogFileIndex]], sizes from `sizes`), under the PHYSICAL form
+    * of the declared schema — files written before an add-column read
+    * the new column as null, files written before a widening read
+    * promoted (native in Spark 4's vectorized parquet reader) — or,
+    * undeclared, the [[inferredSchema]]. Construction launches no Spark
+    * job and makes no file-system call for recorded files. */
+  private def scanFiles(spark: SparkSession, table: String, rels: Seq[String],
+                        declared: Option[StructType],
+                        sizes: Map[String, (Long, Long)]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation}
+    val dataSchema = declared.map(s => org.apache.spark.sql.GraftSqlShims
+      .asNullable(physicalSchema(s))).getOrElse(inferredSchema(spark, table, rels))
+    org.apache.spark.sql.GraftSqlShims.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      LogFileIndex(fileStatuses(spark, table, rels, sizes)), new StructType(),
+      dataSchema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      Map.empty)(spark)))
+  }
+
+  /** The deletion-vector sidecar convention: every writer lands exactly
+    * these two columns, deleted positions per data-file name. */
+  private val DvSchema = StructType(Seq(
+    StructField("file", org.apache.spark.sql.types.StringType),
+    StructField("pos", LongType)))
+
+  /** The (file, pos) rows of deletion-vector dirs `dirs`, scanned from
+    * the sidecar files `snap` records for them; a dir bound by a build
+    * that did not record its sidecar is listed. */
+  private def dvScan(spark: SparkSession, table: String, snap: Snapshot,
+                     dirs: Seq[String]): DataFrame =
+    scanFiles(spark, table, dirs.distinct.flatMap(d =>
+      snap.dvFiles.getOrElse(d, writtenFiles(spark, table, d))),
+      Some(DvSchema), snap.sizes)
+
+  /** Scan `files` (relative paths, recorded in `snap`) under the
+    * optional declared schema, ANTI-APPLYING each file's deletion
+    * vector: files bound to a dv dir are read WITH the parquet metadata
+    * columns (`_metadata.file_name`, `_metadata.row_index` — stable
+    * physical row positions, the public Delta deletion-vector
+    * addressing idea) and left-anti joined against the dv rows
+    * (file_name, pos); unbound files scan plain. Every scan is built
+    * from the log ([[scanFiles]]): the files' sizes and the vectors'
+    * sidecar files are recorded, so construction lists nothing, stats
+    * nothing and launches no job. The dv frame is a handful of rows per
+    * targeted file and is broadcast, so the read-side cost of
+    * merge-on-read is one map-side hash probe — never a shuffle of the
+    * 100 TB side. */
+  private def scanLive(spark: SparkSession, table: String, snap: Snapshot,
+                       files: Seq[String], declared: Option[StructType],
                        dvs: Map[String, String]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     // files are read under the PHYSICAL schema (identical to the
     // declared one unless a rename/drop enabled column mapping); logical
     // names come back via logicalize at the END, after the dv anti-join
     // — the hidden _metadata struct is only reachable on the raw scan
-    def plainRead(rels: Seq[String]): DataFrame = {
-      val paths = rels.map(p => new Path(table, p).toString)
-      declared match {
-        // declared schema: files written before an add-column read the new
-        // column as null; files written before a widening read promoted
-        // (int32→long etc. — native in Spark 4's vectorized parquet reader)
-        case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-    }
+    def plainRead(rels: Seq[String]): DataFrame =
+      scanFiles(spark, table, rels, declared, snap.sizes)
     val (masked, clean) = files.partition(dvs.contains)
     if (masked.isEmpty) return logicalize(plainRead(files), declared)
-    val dvDirs = masked.map(dvs).distinct
-      .map(p => new Path(table, p).toString)
-    // (file, pos): deleted positions. The schema is the dv sidecar
-    // convention (every writer lands exactly these two columns), stated
-    // explicitly so plan construction never opens a footer to infer it
-    // — the r17 measure pass clocked DV-read construction at ~2× the
-    // plain read's, and reads are constructed once per guard job.
-    val dvRows = spark.read.schema(
-      StructType(Seq(StructField("file", org.apache.spark.sql.types.StringType),
-        StructField("pos", LongType)))).parquet(dvDirs: _*)
+    // (file, pos): deleted positions
+    val dvRows = dvScan(spark, table, snap, masked.map(dvs))
     val scanned = plainRead(masked)
     val cols = scanned.columns
     require(!cols.contains("_g_dv_file") && !cols.contains("_g_dv_pos"),
@@ -1358,8 +1476,8 @@ object TxLog {
   private def currentSchema(spark: SparkSession, table: String,
                             what: String): StructType = {
     val snap = latestSnapshot(spark, table, what)
-    snap.schema.getOrElse(StructType(read(spark, table, Some(snap.version))
-      .schema.fields.map(_.copy(nullable = true))))
+    snap.schema.getOrElse(StructType(inferredSchema(spark, table, snap.files)
+      .fields.map(_.copy(nullable = true))))
   }
 
   /** RENAME COLUMN — metadata-only, zero data rewritten: the declared
@@ -1443,68 +1561,42 @@ object TxLog {
     commitSchemaOnly(spark, table, dropped, s"drop $name")
   }
 
-  /** Constructed read plans, cached by (session, table, resolved
-    * version). A PINNED snapshot is a deterministic function of the
-    * immutable log prefix — live set, declared schema and dv bindings
-    * cannot change for a fixed version — and DataFrames are immutable,
-    * so the same plan object serves every re-read. The r17 measure pass
-    * clocked plan CONSTRUCTION (file-index build + dv-mask assembly) at
-    * 60–140 ms per call, paid dozens of times per certification
-    * lifecycle for the SAME (table, version); execution on top of a
-    * cached plan was ~20 ms. Vacuum safety is unchanged: the watermark
-    * gate runs on every call, before the cache. Bounded like
-    * [[footerCache]]. */
-  private val readPlanCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long), DataFrame]()
-
   /** Forget every cached artifact under `table`. The ONE operation that
     * breaks the write-once-path assumption behind [[logParseCache]] /
-    * [[readPlanCache]] / [[footerCache]] is DROP TABLE: it deletes the
-    * whole directory and a fresh CREATE may reuse the path, minting new
-    * commit files at the SAME deterministic names (00000000.json …).
-    * Called from [[TxLogCatalog.dropTable]]; every other delete in the
-    * engine targets uniq()-suffixed data dirs that are never re-minted. */
+    * [[footerCache]] is DROP TABLE: it deletes the whole directory and a
+    * fresh CREATE may reuse the path, minting new commit files at the
+    * SAME deterministic names (00000000.json …). Called from
+    * [[TxLogCatalog.dropTable]]; every other delete in the engine
+    * targets uniq()-suffixed data dirs that are never re-minted. */
   private[sources] def invalidateTableCaches(table: String): Unit = {
     val prefix = new Path(table).toString
     logParseCache.keySet.removeIf((k: String) =>
       k == prefix || k.startsWith(prefix + "/"))
     footerCache.keySet.removeIf((k: String) =>
       k == prefix || k.startsWith(prefix + "/"))
-    readPlanCache.keySet.removeIf(
-      (k: (String, String, Long)) => new Path(k._2).toString == prefix)
     ()
   }
 
-  /** Read the table at `asOf` (default: latest snapshot). An empty
-    * snapshot with a DECLARED schema ([[createTable]], or evolution on
-    * an emptied table) reads as an empty frame with the right columns;
-    * an empty snapshot with no declaration has no schema to produce one
-    * and throws — honest for a data table. */
+  /** Read the table at `asOf` (default: latest snapshot): one `_log`
+    * listing, one fold, and a scan built from the snapshot alone
+    * ([[scanLive]]) — every live file's size is recorded in the log
+    * (files landed by a build that did not record sizes are stat'd
+    * once per read), an undeclared table's schema comes from a cached
+    * footer, so construction launches no Spark job and makes no
+    * file-system call under `data/`, whatever the live-file count. An
+    * empty snapshot with a DECLARED schema ([[createTable]], or
+    * evolution on an emptied table) reads as an empty frame with the
+    * right columns; an empty snapshot with no declaration has no schema
+    * to produce one and throws — honest for a data table. */
   def read(spark: SparkSession, table: String,
            asOf: Option[Long] = None): DataFrame = {
     val wm = earliestReadableVersion(spark, table)
     require(asOf.forall(_ >= wm),
       s"txlog: version ${asOf.get} was vacuumed (earliest readable: $wm)")
-    // resolve `latest` ONCE and pin every constituent to it — the key
-    // and the plan must describe the same version even when a racing
-    // writer lands a commit mid-construction. A pinned cache hit never
-    // lists the log; a miss lists it once for key and snapshot together.
-    lazy val log = listLog(spark, table)
-    val resolved = asOf.orElse(log.commits.lastOption)
-    val key = resolved.map(v =>
-      (System.identityHashCode(spark).toString, table, v))
-    key.flatMap(k => Option(readPlanCache.get(k))).getOrElse {
-      asOf.foreach(requireListed(log, _))
-      val snap = replay(spark, table, log, resolved)
-      require(snap.files.nonEmpty || snap.schema.nonEmpty,
-        s"txlog: empty snapshot for $table at $asOf")
-      val df = scanLive(spark, table, snap.files, snap.schema, snap.liveDvs)
-      key.foreach { k =>
-        if (readPlanCache.size() > 8192) readPlanCache.clear()
-        readPlanCache.put(k, df)
-      }
-      df
-    }
+    val snap = snapshot(spark, table, asOf)
+    require(snap.files.nonEmpty || snap.schema.nonEmpty,
+      s"txlog: empty snapshot for $table at $asOf")
+    scanLive(spark, table, snap, snap.files, snap.schema, snap.liveDvs)
   }
 
   /** Latest committed version (loud on an empty table). */
@@ -1619,9 +1711,9 @@ object TxLog {
                                    extraTxns: Seq[(String, Long)] = Seq.empty,
                                    schemaB64: Option[String] = None,
                                    metas: Seq[String] = Seq.empty): Long = {
-    // every data-landing commit records its files' row counts
-    // ([[countRows]]); rewrites funnel here, appends through appendCommit
-    val statsAll = stats ++ rowCountLines(spark, table, adds)
+    // every data-landing commit records its files' row counts and sizes
+    // ([[landedLines]]); rewrites funnel here, appends through appendCommit
+    val statsAll = stats ++ landedLines(spark, table, adds)
     var v = baseVersion + 1
     var attempts = 0
     while (!tryCommit(spark, table, v, adds, removes, Some(tag), schemaB64,
@@ -1718,6 +1810,17 @@ object TxLog {
   // every footer" and "read one small log and scan 2 files".
   // ---------------------------------------------------------------------
 
+  /** A data or sidecar file's parquet footer, with the size and
+    * modification time of the stat that opened it. */
+  private final case class FileFooter(
+      md: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      size: Long, mtime: Long) {
+    def rows: Long = {
+      import scala.jdk.CollectionConverters._
+      md.getBlocks.asScala.map(_.getRowCount).sum
+    }
+  }
+
   /** Parquet footers, cached by absolute path. Data files are WRITE-ONCE
     * (every commit attempt lands in a fresh `data/vNNN-<uniq>` dir; an
     * aborted claim deletes its dir and re-mints a NEW path), so a footer
@@ -1725,24 +1828,28 @@ object TxLog {
     * pass found each commit opening the same footers up to 3× (per stats
     * column + row counts + bloom sizing), and a 64-file clustering commit
     * paying ~190 redundant driver-side opens (guide §1.2: per-task work,
-    * after the algorithm). Bounded: footers are small (KBs), entries are
-    * dropped wholesale past a size far above any pack's file count. */
+    * after the algorithm). The write path opens every landed file's
+    * footer (row counts), so each entry also carries the size and
+    * modification time the commit records ([[landedLines]]), and an
+    * undeclared scan reads its schema from here ([[inferredSchema]]).
+    * Bounded: footers are small (KBs), entries are dropped wholesale past
+    * a size far above any pack's file count. */
   private val footerCache =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.parquet.hadoop.metadata.ParquetMetadata]()
+    new java.util.concurrent.ConcurrentHashMap[String, FileFooter]()
 
-  private def footerOf(spark: SparkSession, p: Path)
-      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+  private def footerOf(spark: SparkSession, p: Path): FileFooter = {
     val key = p.toString
     val hit = footerCache.get(key)
     if (hit != null) return hit
+    val st = fs(spark, p).getFileStatus(p)
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(p, spark.sparkContext.hadoopConfiguration))
-    val md = try r.getFooter finally r.close()
+        .fromStatus(st, spark.sparkContext.hadoopConfiguration))
+    val footer = try FileFooter(r.getFooter, st.getLen, st.getModificationTime)
+    finally r.close()
     if (footerCache.size() > 16384) footerCache.clear()
-    footerCache.put(key, md)
-    md
+    footerCache.put(key, footer)
+    footer
   }
 
   /** Warm [[footerOf]] for a batch of files in parallel — a clustering
@@ -1774,7 +1881,7 @@ object TxLog {
     import scala.jdk.CollectionConverters._
     prefetchFooters(spark, table, rels)
     rels.flatMap { rel =>
-      val footer = footerOf(spark, new Path(table, rel))
+      val footer = footerOf(spark, new Path(table, rel)).md
       locally {
         val raw = footer.getBlocks.asScala.flatMap { b =>
           b.getColumns.asScala.find(_.getPath.toDotString == phys).flatMap { c =>
@@ -1934,9 +2041,7 @@ object TxLog {
     val snap = latestSnapshot(spark, table, "compact")
     val base = snap.version
     val live = snap.files
-    val f = fs(spark, new Path(table))
-    val sizes = live.map(p =>
-      p -> f.getFileStatus(new Path(table, p)).getLen).toMap
+    val sizes = live.zip(fileSizes(spark, table, snap, live)).toMap
     val small = live.filter(sizes(_) < targetBytes)
     if (small.size < 2) return base // nothing worth packing
     val numOut = math.max(1L,
@@ -1946,7 +2051,7 @@ object TxLog {
     // under StreamingOptimize.maintain each pointless commit retriggers
     // the next, an infinite rewrite loop). Only rewrite when files merge.
     if (small.size <= numOut) return base
-    val packed = scanLive(spark, table, small, snap.schema, snap.liveDvs)
+    val packed = scanLive(spark, table, snap, small, snap.schema, snap.liveDvs)
     val rel = f"data/v${base + 1}%08d-compact-${uniq()}"
     val dataDir = new Path(table, rel)
     physicalize(packed, snap.schema)
@@ -2119,30 +2224,50 @@ object TxLog {
 
   private val RowsStatsCol = "_g_rows"
 
-  /** Per-file footer row counts of freshly written `files`, as stats
-    * lines — recorded by every data-landing commit path (metadata read;
-    * the write boundary already opens these footers for min/max). */
-  private def rowCountLines(spark: SparkSession, table: String,
-                            files: Seq[String]): Seq[String] = {
-    import scala.jdk.CollectionConverters._
+  /** The reserved stats key of a file's SIZE record, payload
+    * `file|_g_size|<bytes>|<modification ms>`: what a scan's file index
+    * needs ([[scanFiles]]), so reads never stat what the log landed.
+    * Recorded for every data file a commit lands and for every
+    * deletion-vector sidecar file; checkpoints keep the records of live
+    * files and live sidecars ([[Snapshot.liveStats]]). */
+  private val SizeStatsCol = "_g_size"
+
+  private def sizeLine(rel: String, footer: FileFooter): String =
+    s"$rel|$SizeStatsCol|${footer.size}|${footer.mtime}"
+
+  /** The row-count and size lines of freshly written data `files` —
+    * recorded by every data-landing commit path, from the footers the
+    * write boundary already opens (metadata read; no new I/O). */
+  private def landedLines(spark: SparkSession, table: String,
+                          files: Seq[String]): Seq[String] = {
     prefetchFooters(spark, table, files)
-    files.map { f =>
-      val n = footerOf(spark, new Path(table, f))
-        .getBlocks.asScala.map(_.getRowCount).sum
-      s"$f|$RowsStatsCol|$n|$n"
+    files.flatMap { f =>
+      val footer = footerOf(spark, new Path(table, f))
+      Seq(s"$f|$RowsStatsCol|${footer.rows}|${footer.rows}", sizeLine(f, footer))
     }
   }
+
+  /** file → (size, modification time) of the [[SizeStatsCol]] lines in
+    * `stats` (the last line per file wins). */
+  private def recordedSizes(stats: Seq[String]): Map[String, (Long, Long)] =
+    stats.flatMap(_.split('|') match {
+      case Array(f, SizeStatsCol, len, mtime) => Some(f -> ((len.toLong, mtime.toLong)))
+      case _ => None
+    }).toMap
+
+  /** The directory part of a relative path (a sidecar file's dv dir). */
+  private def parentOf(rel: String): String =
+    rel.substring(0, math.max(0, rel.lastIndexOf('/')))
 
   /** Rows each live masked file's CURRENT deletion vector hides —
     * counted per (file → its own bound dir), never across dirs (an old
     * dir may still hold a superseded copy of another file's positions). */
   private def dvMaskedCounts(spark: SparkSession, table: String,
-                             dvs: Map[String, String]): Map[String, Long] = {
+                             snap: Snapshot): Map[String, Long] = {
     import org.apache.spark.sql.functions.col
-    if (dvs.isEmpty) return Map.empty
-    dvs.groupBy(_._2).flatMap { case (dir, bound) =>
+    snap.liveDvs.groupBy(_._2).flatMap { case (dir, bound) =>
       val names = bound.keys.map(f => new Path(f).getName).toSeq
-      val got = spark.read.parquet(new Path(table, dir).toString)
+      val got = dvScan(spark, table, snap, Seq(dir))
         .filter(col("file").isin(names: _*))
         .groupBy("file").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -2167,7 +2292,7 @@ object TxLog {
     if (!live.forall(pv.contains)) return None
     val rows = statsIn(snap, RowsStatsCol)
     if (!live.forall(rows.contains)) return None
-    val masked = dvMaskedCounts(spark, table, snap.liveDvs)
+    val masked = dvMaskedCounts(spark, table, snap)
     Some(live.groupBy(pv).map { case (v, fs) =>
       v -> fs.map(f => rows(f)._1 - masked.getOrElse(f, 0L)).sum
     })
@@ -2210,9 +2335,9 @@ object TxLog {
     val recorded = statsIn(snap, RowsStatsCol)
     val missing = snap.files.filterNot(recorded.contains)
     val fromLog = recorded.values.map(_._1).sum
-    val fromFooter = rowCountLines(spark, table, missing)
-      .map(_.split('|')(2).toLong).sum
-    val masked = dvMaskedCounts(spark, table, snap.liveDvs)
+    prefetchFooters(spark, table, missing)
+    val fromFooter = missing.map(f => footerOf(spark, new Path(table, f)).rows).sum
+    val masked = dvMaskedCounts(spark, table, snap)
     (fromLog + fromFooter - masked.values.sum, missing.size, masked.size)
   }
 
@@ -2242,7 +2367,7 @@ object TxLog {
     val scanned =
       if (dirty.isEmpty) None
       else {
-        val r = scanLive(spark, table, dirty, snap.schema,
+        val r = scanLive(spark, table, snap, dirty, snap.schema,
           dvs.filter(kv => dirty.contains(kv._1)))
           .agg(min(col(statsCol)), max(col(statsCol))).head()
         if (r.isNullAt(0)) None // every dirty row was masked out
@@ -2319,11 +2444,8 @@ object TxLog {
       s"txlog: bloom column name unsupported by the line format: $phys")
     // size every filter for the batch's largest file, from footer row
     // counts alone (metadata read, same as footerStats)
-    import scala.jdk.CollectionConverters._
-    val maxRows = files.map { f =>
-      footerOf(spark, new Path(table, f))
-        .getBlocks.asScala.map(_.getRowCount).sum
-    }.max.max(1L)
+    val footers = files.map(f => f -> footerOf(spark, new Path(table, f)))
+    val maxRows = footers.map(_._2.rows).max.max(1L)
     // optimal bits for n items at fpp: -n·ln(p)/ln(2)²; clamp to keep a
     // single sidecar row bounded (16 MiB ≈ 100M items at 1%)
     val numBits = math.min(1L << 27, math.max(64L,
@@ -2331,7 +2453,10 @@ object TxLog {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.functions.{col, lit, xxhash64, call_function}
     val sidecarRel = s"$rel-bloom"
-    val scanned = spark.read.parquet(new Path(table, rel).toString)
+    // the batch's files, physically named, under the schema they were
+    // written with (a declared table's physical one)
+    val scanned = scanFiles(spark, table, files, None,
+      footers.map { case (f, ft) => f -> ((ft.size, ft.mtime)) }.toMap)
     require(!scanned.columns.contains("_g_bloom_file"),
       "txlog: table schema collides with the bloom build's internal column")
     scanned
@@ -2371,18 +2496,14 @@ object TxLog {
     val phys = snap.physical(bloomCol)
     require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
       s"txlog: bloom column name unsupported by the line format: $phys")
-    import scala.jdk.CollectionConverters._
-    val maxRows = missing.map { f =>
-      footerOf(spark, new Path(table, f))
-        .getBlocks.asScala.map(_.getRowCount).sum
-    }.max.max(1L)
+    val maxRows = missing.map(f => footerOf(spark, new Path(table, f)).rows).max.max(1L)
     val numBits = math.min(1L << 27, math.max(64L,
       math.ceil(-maxRows * math.log(fpp) / (math.log(2) * math.log(2))).toLong))
     graft.functions.GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.functions.{col, lit, xxhash64, call_function}
     val sidecarRel = f"data/v${base + 1}%08d-rebloom-${uniq()}"
     val sidecarDir = new Path(table, sidecarRel)
-    spark.read.parquet(missing.map(p => new Path(table, p).toString): _*)
+    scanFiles(spark, table, missing, None, snap.sizes)
       .withColumn("_g_bloom_file", col("_metadata.file_name"))
       .groupBy("_g_bloom_file")
       .agg(call_function("seen_filter_agg",
@@ -2474,16 +2595,10 @@ object TxLog {
     import org.apache.spark.sql.functions.{lit, xxhash64}
     val colType = snap.schema
       .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
-      .getOrElse(read(spark, table, asOf).schema(bloomCol).dataType)
+      .getOrElse(inferredSchema(spark, table, snap.files)(bloomCol).dataType)
     val probeHash = spark.range(1)
       .select(xxhash64(lit(value).cast(colType))).head().getLong(0)
-    // load each referenced sidecar once: (file → filter bytes), bounded
-    // by live-file count — driver-side metadata scale like the log
-    val sidecars = blooms.values.toSeq.distinct
-      .map(p => new Path(table, p).toString)
-    val filters: Map[String, Array[Byte]] =
-      spark.read.parquet(sidecars: _*).collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    val filters = bloomFilters(spark, table, blooms)
     val kept = live.filter { f =>
       if (!blooms.contains(f)) true // never bloomed: cannot skip
       else filters.get(new Path(f).getName).forall { bytes =>
@@ -2509,7 +2624,7 @@ object TxLog {
     val snap = snapshot(spark, table, asOf)
     val colType = snap.schema
       .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
-      .getOrElse(read(spark, table, asOf).schema(bloomCol).dataType)
+      .getOrElse(inferredSchema(spark, table, snap.files)(bloomCol).dataType)
     import spark.implicits._
     val hashes = values.map(_.toString).toDF("v")
       .select(xxhash64(col("v").cast(colType))).collect().map(_.getLong(0))
@@ -2527,11 +2642,7 @@ object TxLog {
     val live = snap.files
     val blooms = bloomsIn(snap, bloomCol)
     if (blooms.isEmpty) return None
-    val sidecars = blooms.values.toSeq.distinct
-      .map(p => new Path(table, p).toString)
-    val filters: Map[String, Array[Byte]] =
-      spark.read.parquet(sidecars: _*).collect()
-        .map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    val filters = bloomFilters(spark, table, blooms)
     val kept = live.filter { f =>
       if (!blooms.contains(f)) true
       else filters.get(new Path(f).getName).forall { bytes =>
@@ -2544,6 +2655,20 @@ object TxLog {
     }
     Some((kept, live.size))
   }
+
+  /** The bloom sidecar convention: one row per data-file name. */
+  private val BloomSchema = StructType(Seq(
+    StructField("file", org.apache.spark.sql.types.StringType),
+    StructField("filter", org.apache.spark.sql.types.BinaryType)))
+
+  /** Data-file name → filter bytes of the sidecars `blooms` references,
+    * each sidecar read once under the stated [[BloomSchema]] (bounded by
+    * live-file count — driver-side metadata scale like the log). */
+  private def bloomFilters(spark: SparkSession, table: String,
+                           blooms: Map[String, String]): Map[String, Array[Byte]] =
+    spark.read.schema(BloomSchema)
+      .parquet(blooms.values.toSeq.distinct.map(p => new Path(table, p).toString): _*)
+      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
 
   /** Probe-key ceiling for the bloom-accelerated merge: above this the
     * driver-side files × keys membership sweep costs more than it
@@ -2657,7 +2782,7 @@ object TxLog {
     if (kept.isEmpty) read(spark, table, asOf).limit(0)
     else {
       val snap = snapshot(spark, table, asOf)
-      scanLive(spark, table, kept, snap.schema, snap.liveDvs)
+      scanLive(spark, table, snap, kept, snap.schema, snap.liveDvs)
     }
 
   /** Point-equality read with log-native bloom skipping — the
@@ -2925,15 +3050,13 @@ object TxLog {
       s"txlog: no live file of $table records $partCol=$value — nothing " +
         "to optimize (files appended without partition recording are " +
         "never scoped)")
-    val fsys = fs(spark, new Path(table))
-    val bytes = scope.map(p =>
-      fsys.getFileStatus(new Path(table, p)).getLen).sum
+    val bytes = fileSizes(spark, table, snap, scope).sum
     val numFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     val dvs = snap.liveDvs.filter(kv => scope.contains(kv._1))
     if (scope.size <= numFiles && dvs.isEmpty) return base
     val declared = snap.schema
     val rel = f"data/v${base + 1}%08d-compact-${uniq()}"
-    physicalize(scanLive(spark, table, scope, declared, dvs)
+    physicalize(scanLive(spark, table, snap, scope, declared, dvs)
       .repartition(numFiles), declared)
       .write.parquet(new Path(table, rel).toString)
     val files = writtenFiles(spark, table, rel)
@@ -3045,7 +3168,7 @@ object TxLog {
     val unrecordedDvs = snap.liveDvs.filter(kv => unrecorded.contains(kv._1))
     // a value-less file might hold no matching row at all: probe before
     // paying a rewrite (and stay commit-free when nothing matches)
-    val anyUnrecordedMatch = !scanLive(spark, table, unrecorded, declared,
+    val anyUnrecordedMatch = !scanLive(spark, table, snap, unrecorded, declared,
       unrecordedDvs)
       .filter(col(partCol).cast("string") <=> value).isEmpty
     if (!anyUnrecordedMatch) {
@@ -3053,7 +3176,7 @@ object TxLog {
       return commitRewrite(spark, table, base, Seq.empty, dropped, "delete",
         new Path(table, f"data/v${base + 1}%08d-delete-${uniq()}"))
     }
-    val keptRows = scanLive(spark, table, unrecorded, declared, unrecordedDvs)
+    val keptRows = scanLive(spark, table, snap, unrecorded, declared, unrecordedDvs)
       .filter(!(col(partCol).cast("string") <=> value))
     val rel = f"data/v${base + 1}%08d-delete-${uniq()}"
     val dataDir = new Path(table, rel)
@@ -3087,7 +3210,7 @@ object TxLog {
     import org.apache.spark.sql.functions.col
     // the rewrite must anti-apply any existing deletion vectors on the
     // touched files — a plain re-scan would resurrect MOR-deleted rows
-    val keptRows = scanLive(spark, table, touched, snap.schema, snap.liveDvs)
+    val keptRows = scanLive(spark, table, snap, touched, snap.schema, snap.liveDvs)
       .filter(!col(statsCol).between(lo, hi))
     val rel = f"data/v${base + 1}%08d-delete-${uniq()}"
     val dataDir = new Path(table, rel)
@@ -3128,18 +3251,12 @@ object TxLog {
     val touched = snap.files.filter(p =>
       stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
     if (touched.isEmpty) return base // no file can contain a match
-    val declared = snap.schema
-    val paths = touched.map(p => new Path(table, p).toString)
     // positions of the rows to delete, addressed physically: the raw
     // per-file row index (NOT dv-filtered — positions of already-deleted
     // rows may re-match; the union dedups them). Raw = physical schema
     // and physical predicate name (the _metadata struct needs the
     // un-projected scan)
-    val raw = declared match {
-      case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-    val newPos = raw
+    val newPos = scanFiles(spark, table, touched, snap.schema, snap.sizes)
       .filter(col(snap.physical(statsCol))
         .between(lo, hi))
       .select(col("_metadata.file_name").as("file"),
@@ -3169,8 +3286,7 @@ object TxLog {
     val oldPos = oldDvs.filter { case (f, _) => scope.contains(f) }
       .values.toSeq.distinct match {
       case Nil => None
-      case dirs => Some(spark.read
-        .parquet(dirs.map(p => new Path(table, p).toString): _*)
+      case dirs => Some(dvScan(spark, table, snap, dirs)
         .filter(col("file").isin(scopeNames: _*)))
     }
     // ONE materialization for the whole commit tail (r17, guide §1.2/§2.4):
@@ -3205,8 +3321,12 @@ object TxLog {
     val bindings = scope
       .filter(p => matchedFiles.contains(p.split('/').last))
       .map(p => s"$p|$rel")
+    // the sidecar's files ride in the log with their sizes, so a masked
+    // read scans them without listing the dir ([[dvScan]])
+    val sidecar = writtenFiles(spark, table, rel)
+      .map(f => sizeLine(f, footerOf(spark, new Path(table, f))))
     commitRewrite(spark, table, base, adds, Seq.empty, tag, dvDir,
-      dvs = bindings, schemaB64 = schemaB64, metas = metas)
+      stats = sidecar, dvs = bindings, schemaB64 = schemaB64, metas = metas)
   }
 
   /** MOR DELETE with a FREE predicate over the table's logical columns
@@ -3222,7 +3342,7 @@ object TxLog {
     val snap = latestSnapshot(spark, table, "delete")
     // positions of already-deleted rows may re-match: the union with the
     // prior vectors dedups them
-    val newPos = addressedRows(spark, table, snap.files, snap.schema)
+    val newPos = addressedRows(spark, table, snap)
       .filter(expr(predicateSql))
       .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
     bindDeletionVectors(spark, table, snap, newPos, snap.files)
@@ -3286,7 +3406,7 @@ object TxLog {
     physicalize(images, snap.schema).write.parquet(new Path(table, rel).toString)
     val adds = writtenFiles(spark, table, rel)
     // addresses of the replaced slice — the deleteWhereMorExpr scan
-    val newPos = addressedRows(spark, table, snap.files, snap.schema)
+    val newPos = addressedRows(spark, table, snap)
       .filter(expr(predicateSql))
       .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
     bindDeletionVectors(spark, table, snap, newPos, snap.files, adds = adds,
@@ -3299,15 +3419,10 @@ object TxLog {
     * un-projected scan), so a caller's predicate binds to what read()
     * would show. */
   private def addressedRows(spark: SparkSession, table: String,
-                            files: Seq[String],
-                            declared: Option[StructType]): DataFrame = {
+                            snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val paths = files.map(p => new Path(table, p).toString)
-    val raw = declared match {
-      case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
-    val addressed = raw
+    val declared = snap.schema
+    val addressed = scanFiles(spark, table, snap.files, declared, snap.sizes)
       .withColumn("_g_dv_file", col("_metadata.file_name"))
       .withColumn("_g_dv_pos", col("_metadata.row_index"))
     declared.filter(mappingEnabled) match {
@@ -3328,12 +3443,11 @@ object TxLog {
   private def liveAddressed(spark: SparkSession, table: String,
                             snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val logical = addressedRows(spark, table, snap.files, snap.schema)
+    val logical = addressedRows(spark, table, snap)
     val priorDvs = snap.liveDvs
     if (priorDvs.isEmpty) logical else {
       val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
-      val dvRows = spark.read.parquet(
-        priorDvs.values.toSeq.distinct.map(p => new Path(table, p).toString): _*)
+      val dvRows = dvScan(spark, table, snap, priorDvs.values.toSeq)
         .filter(col("file").isin(boundNames: _*))
       logical.join(broadcast(dvRows),
         logical("_g_dv_file") === dvRows("file") &&
@@ -3360,7 +3474,7 @@ object TxLog {
     val base = snap.version
     val declared = snap.schema
     val logicalCols = declared.map(_.fieldNames.toSeq).getOrElse(
-      read(spark, table, Some(base)).columns.toSeq)
+      inferredSchema(spark, table, snap.files).fieldNames.toSeq)
     sets.foreach { case (c, _) => require(logicalCols.contains(c),
       s"txlog: UPDATE assigns unknown column '$c' " +
         s"(table has: ${logicalCols.mkString(", ")})") }
@@ -3420,16 +3534,10 @@ object TxLog {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(keyCols.nonEmpty, "txlog: deleteKeysMor needs key columns")
     val snap = latestSnapshot(spark, table, "delete")
-    val declared = snap.schema
-    val paths = snap.files.map(p => new Path(table, p).toString)
-    val raw = declared match {
-      case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
     val pKeys = keyCols.map(snap.physical)
     val batchKeys = physicalize(keys.select(keyCols.map(col): _*).distinct(),
-      declared)
-    val newPos = raw
+      snap.schema)
+    val newPos = scanFiles(spark, table, snap.files, snap.schema, snap.sizes)
       .withColumn("_g_dv_file", col("_metadata.file_name"))
       .withColumn("_g_dv_pos", col("_metadata.row_index"))
       .join(broadcast(batchKeys), pKeys, "left_semi")
@@ -3479,18 +3587,24 @@ object TxLog {
     // no later binding from the rolled-back range can leak through
     val dvLines = target.files.map(fl =>
       s"$fl|${target.liveDvs.getOrElse(fl, DvUnbound)}")
+    // the re-added files and the re-bound sidecars keep their size
+    // records (a checkpoint since the target may have dropped them)
+    val sizeLines = target.liveStats.filter { line =>
+      val t = line.split('|')
+      t(1) == SizeStatsCol && !cur.contains(t(0))
+    }
     val schemaB64 = {
       val tgtDecl = target.schema
       if (tgtDecl == head.schema) None
       else Some(encodeSchema(tgtDecl.getOrElse(StructType(
-        read(spark, table, Some(toVersion)).schema.fields.map(_.copy(nullable = true))))))
+        inferredSchema(spark, table, target.files).fields.map(_.copy(nullable = true))))))
     }
     val v = base + 1
     // serializable: "roll back to the state I read" is invalidated by
     // ANY commit that landed after the base (same rule as overwrite) —
     // a lost claim IS that commit; metadata-only, so nothing to clean
     if (!tryCommit(spark, table, v, adds, removes, Some("restore"),
-      schemaB64, Seq.empty, Seq.empty, dvLines))
+      schemaB64, Seq.empty, sizeLines, dvLines))
       throw new TxLogConcurrentModificationException(
         s"txlog: restore of $table to $toVersion lost to a concurrent " +
           "commit — re-read the table and retry")
@@ -3560,8 +3674,7 @@ object TxLog {
     val adds = snap.files.map(abs)
     val dvLines = snap.liveDvs.toSeq
       .map { case (fl, dvDir) => s"${abs(fl)}|${abs(dvDir)}" }
-    val statsLines = snap.stats
-      .filter(s => snap.liveSet.contains(s.split('|')(0)))
+    val statsLines = snap.liveStats
       .map { s =>
         val t = s.split('|')
         // bloom lines carry a SECOND path (the sidecar dir) — rebase it
@@ -3881,14 +3994,12 @@ object TxLog {
     // (pre-evolution files read the new column as null, promoted types)
     val declared = schemaAt(spark, table, Some(toInclusive))
     delivering.map { case (v, files) =>
-      val paths = files.map(p => new Path(table, p).toString)
-      val slice = declared match {
-        // physical read + logical rename: slices from both sides of a
-        // RENAME align under the range-end logical names
-        case Some(s) => logicalize(
-          spark.read.schema(physicalSchema(s)).parquet(paths: _*), declared)
-        case None => spark.read.parquet(paths: _*)
-      }
+      // the appending commit records its files' sizes
+      val sizes = recordedSizes(readLogFile(spark, commitPath(table, v))
+        .collect { case ("stats", p) => p })
+      // physical read + logical rename: slices from both sides of a
+      // RENAME align under the range-end logical names
+      val slice = logicalize(scanFiles(spark, table, files, declared, sizes), declared)
       slice.withColumn("_commit_version", org.apache.spark.sql.functions.lit(v))
     }.reduce(_ unionByName _)
   }
@@ -3940,11 +4051,11 @@ object TxLog {
     def at(v: Long): Snapshot = replay(spark, table, log, Some(v))
     val declared = at(toInclusive).schema
     val wm = earliestReadableVersion(spark, table)
-    // one slice reader: files scanned under the RANGE-END schema so
-    // slices from both sides of an evolution/rename align (readChanges'
-    // contract), with the given dv state anti-applied
-    def slice(files: Seq[String], dvs: Map[String, String]): DataFrame =
-      scanLive(spark, table, files, declared, dvs)
+    // one slice reader: files (recorded in `recs`) scanned under the
+    // RANGE-END schema so slices from both sides of an evolution/rename
+    // align (readChanges' contract), with the given dv state anti-applied
+    def slice(recs: Snapshot, files: Seq[String], dvs: Map[String, String]): DataFrame =
+      scanLive(spark, table, recs, files, declared, dvs)
     def stamp(df: DataFrame, kind: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(kind))
         .withColumn("_commit_version", lit(v))
@@ -3954,10 +4065,10 @@ object TxLog {
       val bound = bindings.filter(_._2 != DvUnbound)
       if (bound.isEmpty) return None
       val names = bound.map(_._1.split('/').last)
-      val newPos = spark.read
-        .parquet(bound.map(_._2).distinct.map(p => new Path(table, p).toString): _*)
+      val (now, before) = (at(v), at(v - 1))
+      val newPos = dvScan(spark, table, now, bound.map(_._2))
         .filter(col("file").isin(names: _*))
-      val prior = at(v - 1).dvs.toMap
+      val prior = before.dvs.toMap
       val priorDirs = bound.flatMap(b => prior.get(b._1))
         .filter(_ != DvUnbound).distinct
       val freshPlan = if (priorDirs.isEmpty) newPos
@@ -3965,8 +4076,7 @@ object TxLog {
           val priorNames = bound
             .filter(b => prior.get(b._1).exists(_ != DvUnbound))
             .map(_._1.split('/').last)
-          newPos.exceptAll(spark.read
-            .parquet(priorDirs.map(p => new Path(table, p).toString): _*)
+          newPos.exceptAll(dvScan(spark, table, before, priorDirs)
             .filter(col("file").isin(priorNames: _*)))
         }
       // ONE action where the r16 shape paid three (checkpoint + isEmpty +
@@ -3979,12 +4089,7 @@ object TxLog {
       if (freshRows.isEmpty) return None
       val fresh = spark.createDataFrame(
         java.util.Arrays.asList(freshRows: _*), freshPlan.schema)
-      val paths = bound.map(b => new Path(table, b._1).toString)
-      val raw = declared match {
-        case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-        case None => spark.read.parquet(paths: _*)
-      }
-      val imaged = raw
+      val imaged = scanFiles(spark, table, bound.map(_._1), declared, now.sizes)
         .withColumn("_g_dv_file", col("_metadata.file_name"))
         .withColumn("_g_dv_pos", col("_metadata.row_index"))
         .join(broadcast(fresh),
@@ -4007,27 +4112,31 @@ object TxLog {
         case Some("compact") => Seq.empty // rows unchanged by contract
         case None if removes.isEmpty && dvLines.isEmpty =>
           if (adds.isEmpty) Seq.empty // schema-only / marker-only commit
-          else { requireReadable(v); Seq(stamp(slice(adds, Map.empty), "insert", v)) }
+          else {
+            requireReadable(v)
+            Seq(stamp(slice(at(v), adds, Map.empty), "insert", v))
+          }
         case Some("delete") if removes.isEmpty =>
           requireReadable(v - 1)
           morDeletes(v, dvLines).map(stamp(_, "delete", v)).toSeq
         case Some("merge") =>
           requireReadable(v - 1)
           val ins = if (adds.isEmpty) Seq.empty
-            else Seq(stamp(slice(adds, Map.empty), "insert", v))
+            else Seq(stamp(slice(at(v), adds, Map.empty), "insert", v))
           ins ++ morDeletes(v, dvLines).map(stamp(_, "delete", v)).toSeq
         case Some("delete") => // copy-on-write: touched-file-bounded diff
           requireReadable(v - 1)
-          val priorDvs = at(v - 1).liveDvs.filter(kv => removes.contains(kv._1))
-          val gone = slice(removes, priorDvs)
-            .exceptAll(if (adds.isEmpty) slice(removes, priorDvs).limit(0)
-              else slice(adds, Map.empty))
+          val (before, after) = (at(v - 1), at(v))
+          val priorDvs = before.liveDvs.filter(kv => removes.contains(kv._1))
+          val gone = slice(before, removes, priorDvs)
+            .exceptAll(if (adds.isEmpty) slice(before, removes, priorDvs).limit(0)
+              else slice(after, adds, Map.empty))
           Seq(stamp(gone, "delete", v))
         case _ => // overwrite / restore / legacy rewrite: full snapshot diff
           requireReadable(v - 1)
           val (before, after) = (at(v - 1), at(v))
-          val pre = slice(before.files, before.liveDvs)
-          val post = slice(after.files, after.liveDvs)
+          val pre = slice(before, before.files, before.liveDvs)
+          val post = slice(after, after.files, after.liveDvs)
           Seq(stamp(post.exceptAll(pre), "insert", v),
             stamp(pre.exceptAll(post), "delete", v))
       }
@@ -4106,7 +4215,7 @@ object TxLog {
       requireFitsDeclared(snap, updates, "merge")
       None
     } else {
-      val cur = snap.schema.getOrElse(read(spark, table, Some(base)).schema)
+      val cur = snap.schema.getOrElse(inferredSchema(spark, table, snap.files))
       keys.foreach(k => require(cur.fieldNames.contains(k),
         s"txlog: merge key '$k' is not a column of $table — a merge " +
           "cannot key on a column the evolution itself introduces"))
@@ -4161,11 +4270,7 @@ object TxLog {
     // positions of the superseded rows: physical scan (the _metadata
     // struct needs the un-projected scan) + broadcast semi-join on the
     // batch's keys — the 100 TB side never shuffles
-    val paths = live.map(p => new Path(table, p).toString)
-    val raw = declared match {
-      case Some(s) => spark.read.schema(physicalSchema(s)).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val raw = scanFiles(spark, table, live, declared, snap.sizes)
     val pKeys = keys.map(snap.physical)
     val batchKeys = physicalize(updates.select(keys.map(col): _*).distinct(),
       declared)
@@ -4181,8 +4286,7 @@ object TxLog {
     val priorDvs = snap.liveDvs
     val liveMatched = (if (priorDvs.isEmpty) addressed else {
       val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
-      val dvRows = spark.read.parquet(
-        priorDvs.values.toSeq.distinct.map(p => new Path(table, p).toString): _*)
+      val dvRows = dvScan(spark, table, snap, priorDvs.values.toSeq)
         .filter(col("file").isin(boundNames: _*))
       addressed.join(broadcast(dvRows),
         addressed("_g_dv_file") === dvRows("file") &&
@@ -4578,7 +4682,7 @@ object TxLog {
       .write.parquet(new Path(table, rel).toString)
     val files = writtenFiles(spark, table, rel)
     if (tryCommit(spark, table, 0L, files, Seq.empty, None, None,
-      (appId, batchId) +: extraTxns, rowCountLines(spark, table, files),
+      (appId, batchId) +: extraTxns, landedLines(spark, table, files),
       metas = metas)) true
     else {
       val dir = new Path(table, rel)
