@@ -17,6 +17,10 @@ import graft.operators.TextPipeline
   *
   * Property checks from the parser (O13/O14) are ported in
   * `MapReduceApiSpec`.
+  *
+  * The corpus lives outside this repository. Where its directory is
+  * absent, the spec registers one test that reports itself canceled, so
+  * the missing port shows in the report instead of vanishing from it.
   */
 class GoldenCorpusSpec extends SparkSpec {
   private val testsDir = "/root/reference/map___reduce/tests"
@@ -40,7 +44,14 @@ class GoldenCorpusSpec extends SparkSpec {
   private def golden(id: Int): Seq[String] =
     Files.readAllLines(Paths.get(s"$testsDir/$id.out")).asScala.toSeq
 
-  for (id <- 1 to 25; c <- parseRun(id)) {
+  private val cases = (1 to 25).flatMap(parseRun)
+
+  if (cases.isEmpty) test("golden corpus") {
+    assume(Files.isDirectory(Paths.get(testsDir)), s"golden corpus $testsDir is absent")
+    fail(s"$testsDir holds none of the cases 1.run .. 25.run")
+  }
+
+  for (c <- cases) {
     test(s"golden ${c.id}: ${c.app} ${c.files.map(_.split('/').last).mkString(",")} " +
          s"M=${c.mappers} R=${c.reducers} P=${c.partitions}") {
       val actual: Seq[String] = c.app match {

@@ -1,36 +1,67 @@
 package graft
 
+import java.nio.file.Files
 import graft.mr.MapReduce
 import graft.mr.MapReduce.{HashPartition, SortedPartition32}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions.col
 
 /** Port of the reference parser's property checks (O13/O14,
   * `wordcount_parser.py:28-38`) plus unit coverage of the typed MR
   * surface itself.
+  *
+  * The spec writes its own deterministic inputs (`textFile`) in the
+  * shapes of the reference corpus (FIXTURES.md §1: newline-delimited
+  * numeric keys, duplicate-heavy files, tiny 3- and 4-line files). The
+  * checks here need an input of a given shape, not the reference's own
+  * bytes; byte-level parity with the reference outputs is
+  * `GoldenCorpusSpec`'s job.
   */
 class MapReduceApiSpec extends SparkSpec {
-  private val testsDir = "/root/reference/map___reduce/tests"
   import spark.implicits._
 
+  /** One newline-terminated text file holding `lines`, deleted at JVM exit. */
+  private def textFile(lines: Seq[String]): String = {
+    val f = Files.createTempFile("graft-mr", ".txt")
+    f.toFile.deleteOnExit()
+    Files.writeString(f, lines.mkString("", "\n", "\n"))
+    f.toString
+  }
+
+  /** Counts the values of each key, draining the run. */
+  private val countValues: (String, Iterator[String]) => Iterator[(String, String)] =
+    (k, vs) => { var n = 0; while (vs.hasNext) { vs.next(); n += 1 }; Iterator((k, n.toString)) }
+
   test("exactly-once emission per key (parser dup check)") {
-    val out = graft.operators.TextPipeline
-      .wordCount(spark, Seq(s"$testsDir/5.txt", s"$testsDir/10.txt"), 4)
-      .collect()
+    // dup-heavy numeric keys, repeated non-adjacently within each file and
+    // across the two: 1,000 distinct keys x 3, then 400 of them again x 2.5
+    val files = Seq(
+      textFile((0 until 3000).map(i => (i * 7 % 1000).toString)),
+      textFile((0 until 1000).map(i => (i * 13 % 400).toString)))
+    val out = graft.operators.TextPipeline.wordCount(spark, files, 4).collect()
     val keys = out.map(_.getString(0))
     assert(keys.distinct.length == keys.length, "a key was output twice")
   }
 
   test("effective mappers = min(numMappers, #files)  (tests/15.run: M=9, 3 files => 3)") {
-    val files = Seq(s"$testsDir/5.txt", s"$testsDir/10.txt", s"$testsDir/11.txt")
-    val capped = spark.read.textFile(files: _*).coalesce(math.min(9, files.size))
-    assert(capped.rdd.getNumPartitions == 3)
+    val files = (0 until 3).map(f => textFile((0 until 6).map(i => s"${f * 100 + i}")))
+    // each map task emits its own partition id as the key: the reduce then
+    // yields one key per map task that saw input
+    val mapTasks = MapReduce.run(
+      spark, files,
+      _ => Iterator((TaskContext.getPartitionId().toString, "1")),
+      countValues,
+      numPartitions = 2,
+      numMappers = 9)
+      .collect().map(_._1)
+    assert(mapTasks.distinct.length == 3)
   }
 
   test("reduce-side parallelism = numPartitions (tests/16.run: P=7)") {
     val out = MapReduce.run(
-      spark, Seq(s"$testsDir/5.txt"),
+      spark, Seq(textFile((0 until 1000).map(i => (i * 7 % 300).toString))),
       line => Iterator((line, "1")),
-      (k, vs) => { var n = 0; while (vs.hasNext) { vs.next(); n += 1 }; Iterator((k, n.toString)) },
+      countValues,
       numPartitions = 7)
     assert(out.rdd.getNumPartitions == 7)
   }
@@ -79,9 +110,13 @@ class MapReduceApiSpec extends SparkSpec {
     assert(df.collect().forall(_.getLong(0) == 0L))
   }
 
+  /** 4 lines, duplicates of a tiny key set, each key repeated
+    * non-adjacently: a run exists only after the sort groups them. */
+  private lazy val tinyDups = textFile(Seq("1", "2", "1", "2"))
+
   test("reducer sees values of one key as a contiguous streaming run (get_next contract)") {
     val seen = MapReduce.run(
-      spark, Seq(s"$testsDir/4.txt"), // 4 lines: duplicates of a tiny key set
+      spark, Seq(tinyDups),
       line => Iterator((line, "v")),
       (k, vs) => {
         var n = 0
@@ -95,11 +130,13 @@ class MapReduceApiSpec extends SparkSpec {
 
   test("unconsumed values are drained between runs") {
     val out = MapReduce.run(
-      spark, Seq(s"$testsDir/4.txt"),
+      spark, Seq(tinyDups),
       line => Iterator((line, "v")),
       (k, _) => Iterator((k, "x")), // never consumes the iterator
       numPartitions = 1)
-    val keys = out.collect().map(_._1)
+    // bounded: an undrained run is handed to the reducer again and again,
+    // so the output repeats its key without end instead of finishing
+    val keys = out.limit(100).collect().map(_._1)
     assert(keys.distinct.length == keys.length, "runs bled into each other")
   }
 
@@ -120,7 +157,12 @@ class MapReduceApiSpec extends SparkSpec {
   }
 
   test("result invariant under partition count (reference test-matrix axis)") {
-    val files = Seq(s"$testsDir/1.txt", s"$testsDir/2.txt", s"$testsDir/3.txt")
+    // three 3-line numeric files: random order, ascending, descending
+    // (with the atoi-overflow key); "3" is in all three, two more lines in two
+    val files = Seq(
+      textFile(Seq("523654", "3", "3456346")),
+      textFile(Seq("3", "523654", "3344556677")),
+      textFile(Seq("3333333333", "3456346", "3")))
     val results = Seq(1, 4, 7).map { p =>
       graft.operators.TextPipeline.wordCount(spark, files, p)
         .collect().map(r => (r.getString(0), r.getString(1))).toSeq
