@@ -175,7 +175,8 @@ object Bpe {
       // post-merge pairs, folded into the running count table
       val delta = pairsOf(affected.select("r", "freq"), -1)
         .unionByName(pairsOf(mergedAffected, 1))
-      // Two measured traps live in these cuts (BpeRoundProbe found both):
+      // Two measured traps live in these cuts (PERF.md, "BPE delta
+      // trainer: two measured pathologies found and fixed"):
       //  - they must be EAGER: with lazy cuts the two consumers of each
       //    round's words/counts race-recompute through the
       //    un-materialized chain — exponential wall (766 s at 16 steps);

@@ -311,7 +311,8 @@ object Graph {
     * pins refined ≡ plain on every case); the anti-join's REACHED side
     * is pruned the same way with a bloom of the positive sliver.
     *
-    * MEASURED honesty (KhopShuffleProbe, sort-merge regime forced):
+    * MEASURED honesty (PERF.md, "kHop bloom refinement"; sort-merge
+    * regime forced):
     * at every probe scale (1.5k–150k node graphs from sf0.1 orders)
     * total shuffle bytes are FLAT refined-vs-plain and wall is ~2×
     * (per-hop blob builds + extra materializations) — because the
@@ -329,10 +330,11 @@ object Graph {
     // (A pre-repartition(src) of the edge list was tried and measured:
     // under AQE a checkpointed frame's coalesced partitioning is not
     // reusable by later jobs' EnsureRequirements, so it only ADDED a
-    // shuffle — KhopShuffleProbe. The per-hop edge shuffle is the price
-    // of the localCheckpoint job boundary; at 100 TB the remedy is a
-    // BUCKETED edge table ([[graft.sources.Bucketing]]), which
-    // co-locates the join across jobs at the storage layer.)
+    // shuffle — PERF.md, "kHop bloom refinement". The per-hop edge
+    // shuffle is the price of the localCheckpoint job boundary; at
+    // 100 TB the remedy is a BUCKETED edge table
+    // ([[graft.sources.Bucketing]]), which co-locates the join across
+    // jobs at the storage layer.)
     val e = Dedup.cutLineage(
       edges.select(col("src").cast("long"), col("dst").cast("long")).distinct(),
       eager = true)

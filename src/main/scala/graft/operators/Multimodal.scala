@@ -253,8 +253,9 @@ object Multimodal {
     /** The SPI readers, resolved ONCE per JVM. `AudioSystem
       * .getAudioInputStream` re-consults the provider registry under a
       * shared lock on EVERY call — the round-6 10× smoke measured the
-      * decode at 28× super-linear, and AudioProbe isolated why: 32
-      * threads through that lock run 0.6× the speed of ONE thread (a
+      * decode at 28× super-linear (PERF.md, "Round-6 10× scale
+      * smoke"), and the isolated decode showed why: 32 threads
+      * through that lock run 0.6× the speed of ONE thread (a
       * lock convoy, ~53× per-record CPU inflation). Calling the
       * stateless readers directly restores linear thread scaling.
       * WAVE-first ordering: the other readers reject foreign bytes by

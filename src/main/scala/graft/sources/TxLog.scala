@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.util.sketch.BloomFilter
 
 /** A writer lost an optimistic-concurrency race it cannot retry
   * through: another commit landed that invalidates this writer's read
@@ -643,8 +644,8 @@ object TxLog {
     * r17 measure pass found the metadata path re-opening the same
     * commit files dozens of times per lifecycle row — every read and
     * write gate folds checkpoint + suffix, and the per-commit readers
-    * (history, change feed, OCC) re-open commits — and JobProfile
-    * attributed ~half of each qw row's wall to exactly these
+    * (history, change feed, OCC) re-open commits — and per-job
+    * profiling (PERF.md, "Round 17") attributed ~half of each qw row's wall to exactly these
     * driver-side gaps (guide §1.2: per-task — here per-action — work).
     * Same bounding idiom as [[footerCache]]. */
   private val logParseCache =
@@ -1589,14 +1590,26 @@ object TxLog {
     * right columns; an empty snapshot with no declaration has no schema
     * to produce one and throws — honest for a data table. */
   def read(spark: SparkSession, table: String,
-           asOf: Option[Long] = None): DataFrame = {
+           asOf: Option[Long] = None): DataFrame =
+    readPruned(spark, table, asOf)(_.files)
+
+  /** The read path of [[read]], every skipping reader and the catalog
+    * scan: the vacuum watermark check (loud, never a missing-file
+    * failure at execution), one snapshot, the files `kept` chooses from
+    * it, and [[scanLive]] on that SAME snapshot, so pruning and deletion
+    * vectors come from one version whatever commits land meanwhile. No
+    * kept file reads as the empty frame under the table's columns. */
+  private def readPruned(spark: SparkSession, table: String, asOf: Option[Long])(
+      kept: Snapshot => Seq[String]): DataFrame = {
     val wm = earliestReadableVersion(spark, table)
     require(asOf.forall(_ >= wm),
       s"txlog: version ${asOf.get} was vacuumed (earliest readable: $wm)")
     val snap = snapshot(spark, table, asOf)
     require(snap.files.nonEmpty || snap.schema.nonEmpty,
       s"txlog: empty snapshot for $table at $asOf")
-    scanLive(spark, table, snap, snap.files, snap.schema, snap.liveDvs)
+    val files = kept(snap)
+    if (files.nonEmpty) scanLive(spark, table, snap, files, snap.schema, snap.liveDvs)
+    else scanLive(spark, table, snap, snap.files, snap.schema, snap.liveDvs).limit(0)
   }
 
   /** Latest committed version (loud on an empty table). */
@@ -2097,25 +2110,61 @@ object TxLog {
     }.toMap
   }
 
-  /** The live files a string `[lo, hi]` range read must scan — the
-    * string twin of [[pruneFiles]]; bounds compare in UTF-8 byte order
-    * (= parquet's BINARY stats order = Spark's UTF8String order, so the
-    * skip can never disagree with the residual filter). */
+  // PRUNING RUNGS: functions of a snapshot in hand, each returning the
+  // live files it cannot rule out, in first-added order; absence of a
+  // record never skips. Readers pass rungs to [[readPruned]].
+
+  /** One rung over the snapshot at `asOf`: (kept, live count). */
+  private def pruned(spark: SparkSession, table: String, asOf: Option[Long])(
+      rung: Snapshot => Seq[String]): (Seq[String], Int) = {
+    val snap = snapshot(spark, table, asOf)
+    (rung(snap), snap.files.size)
+  }
+
+  /** Range rung: the live files whose recorded [min, max] intersects
+    * EVERY `(col, lo, hi)` — one predicate's miss skips the file (the
+    * AND-of-ranges pruning a Z-ordered layout is built for). */
+  private def keepRanges(snap: Snapshot,
+                         preds: Seq[(String, Long, Long)]): Seq[String] = {
+    val statsByCol = preds.map(_._1).distinct.map(c => c -> statsIn(snap, c)).toMap
+    snap.files.filter { p =>
+      preds.forall { case (c, lo, hi) =>
+        statsByCol(c).get(p).forall { case (mn, mx) => mx >= lo && mn <= hi }
+      }
+    }
+  }
+
+  /** String rung: the live files whose recorded UTF-8 byte bounds for
+    * `col` meet `[lo, hi]` (`[lo, hi)` when `hiExclusive`; no `hi` is
+    * unbounded). Bounds compare in UTF-8 byte order (= parquet's BINARY
+    * stats order = Spark's UTF8String order, so the skip can never
+    * disagree with the residual filter). */
+  private def keepBytes(snap: Snapshot, col: String, lo: Array[Byte],
+                        hi: Option[Array[Byte]], hiExclusive: Boolean): Seq[String] = {
+    val stats = stringStatsIn(snap, col)
+    snap.files.filter { p =>
+      stats.get(p).forall { case (mn, mx) =>
+        UnsignedBytes.compare(mx, lo) >= 0 && hi.forall { h =>
+          val c = UnsignedBytes.compare(mn, h)
+          if (hiExclusive) c < 0 else c <= 0
+        }
+      }
+    }
+  }
+
+  /** [[keepBytes]] for the string range `[lo, hi]`. */
+  private def keepString(snap: Snapshot, col: String, lo: String,
+                         hi: String): Seq[String] =
+    keepBytes(snap, col, lo.getBytes("UTF-8"), Some(hi.getBytes("UTF-8")),
+      hiExclusive = false)
+
+  /** The live files a string `[lo, hi]` range read must scan
+    * ([[keepString]]): (kept, live count). */
   private[graft] def pruneFilesString(spark: SparkSession, table: String,
                                       statsCol: String, lo: String, hi: String,
                                       asOf: Option[Long] = None
-                                     ): (Seq[String], Int) = {
-    val snap = snapshot(spark, table, asOf)
-    val live = snap.files
-    val stats = stringStatsIn(snap, statsCol)
-    val (lb, hb) = (lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))
-    val kept = live.filter { p =>
-      stats.get(p).forall { case (mn, mx) =>
-        UnsignedBytes.compare(mx, lb) >= 0 && UnsignedBytes.compare(mn, hb) <= 0
-      }
-    }
-    (kept, live.size)
-  }
+                                     ): (Seq[String], Int) =
+    pruned(spark, table, asOf)(keepString(_, statsCol, lo, hi))
 
   /** String-range read with log-native file skipping — [[readWhere]]
     * for a string column (the `WHERE lang BETWEEN 'de' AND 'fr'` shape
@@ -2125,62 +2174,18 @@ object TxLog {
                       lo: String, hi: String,
                       asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (kept, _) = pruneFilesString(spark, table, statsCol, lo, hi, asOf)
-    readFiles(spark, table, kept, asOf).filter(col(statsCol).between(lo, hi))
-  }
-
-  /** The live files a `statsCol LIKE 'prefix%'` read must scan: a
-    * prefix is the byte range `[p, next(p))` where `next(p)` strips
-    * trailing 0xFF bytes and increments the last remaining one (the
-    * smallest byte string greater than EVERY string carrying the
-    * prefix; an all-0xFF prefix has no upper bound). Conservative like
-    * every rung: no recorded bounds keeps the file. */
-  private[graft] def pruneFilesPrefix(spark: SparkSession, table: String,
-                                      statsCol: String, prefix: String,
-                                      asOf: Option[Long] = None
-                                     ): (Seq[String], Int) = {
-    val snap = snapshot(spark, table, asOf)
-    val live = snap.files
-    val stats = stringStatsIn(snap, statsCol)
-    val p = prefix.getBytes("UTF-8")
-    val upper: Option[Array[Byte]] = {
-      var i = p.length - 1
-      while (i >= 0 && p(i) == 0xFF.toByte) i -= 1
-      if (i < 0) None
-      else {
-        val u = p.take(i + 1)
-        u(i) = (u(i) + 1).toByte
-        Some(u)
-      }
-    }
-    val kept = live.filter { f =>
-      stats.get(f).forall { case (mn, mx) =>
-        UnsignedBytes.compare(mx, p) >= 0 &&
-          upper.forall(u => UnsignedBytes.compare(mn, u) < 0)
-      }
-    }
-    (kept, live.size)
+    readPruned(spark, table, asOf)(keepString(_, statsCol, lo, hi))
+      .filter(col(statsCol).between(lo, hi))
   }
 
   /** The live files a conjunction of `[lo, hi]` range predicates must
-    * scan: (kept, total live) — kept = EVERY predicate's recorded range
-    * intersects, or no stats recorded for that column (absence can
-    * never skip). A file is skipped as soon as ONE predicate's recorded
-    * range misses — the AND-of-ranges pruning a Z-ordered layout is
-    * built for. Exposed for the spec's pruning assertions. */
+    * scan ([[keepRanges]]): (kept, live count). Exposed for the spec's
+    * pruning assertions. */
   private[graft] def pruneFilesMulti(spark: SparkSession, table: String,
                                      preds: Seq[(String, Long, Long)],
                                      asOf: Option[Long] = None): (Seq[String], Int) = {
     require(preds.nonEmpty, "txlog: no pruning predicates")
-    val snap = snapshot(spark, table, asOf)
-    val live = snap.files
-    val statsByCol = preds.map(_._1).distinct.map(c => c -> statsIn(snap, c)).toMap
-    val kept = live.filter { p =>
-      preds.forall { case (c, lo, hi) =>
-        statsByCol(c).get(p).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
-    (kept, live.size)
+    pruned(spark, table, asOf)(keepRanges(_, preds))
   }
 
   private[graft] def pruneFiles(spark: SparkSession, table: String,
@@ -2199,9 +2204,9 @@ object TxLog {
                    preds: Seq[(String, Long, Long)],
                    asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val (kept, _) = pruneFilesMulti(spark, table, preds, asOf)
-    preds.foldLeft(readFiles(spark, table, kept, asOf)) { case (df, (c, lo, hi)) =>
-      df.filter(col(c).between(lo, hi))
+    require(preds.nonEmpty, "txlog: no pruning predicates")
+    preds.foldLeft(readPruned(spark, table, asOf)(keepRanges(_, preds))) {
+      case (df, (c, lo, hi)) => df.filter(col(c).between(lo, hi))
     }
   }
 
@@ -2429,16 +2434,18 @@ object TxLog {
           .write.parquet(new Path(table, rel).toString)
         val files = writtenFiles(spark, table, rel)
         (files, requiredStats(spark, table, snap, files, statsCols) ++
-          buildBloomLines(spark, table, rel, files, snap.physical(bloomCol), fpp))
+          buildBloomLines(spark, table, files, snap.physical(bloomCol), fpp,
+            s"$rel-bloom"))
       }).get
   }
 
-  /** Build the per-file bloom sidecar over the column physically named
-    * `phys` for the files of one freshly written batch dir `rel`;
-    * returns their stats-channel lines. */
-  private def buildBloomLines(spark: SparkSession, table: String, rel: String,
-                              files: Seq[String], phys: String,
-                              fpp: Double): Seq[String] = {
+  /** Build the per-file bloom sidecar `sidecarRel` over the column
+    * physically named `phys` for `files` (a freshly written batch, or
+    * [[rebloom]]'s unfiltered live files); returns their stats-channel
+    * lines. */
+  private def buildBloomLines(spark: SparkSession, table: String,
+                              files: Seq[String], phys: String, fpp: Double,
+                              sidecarRel: String): Seq[String] = {
     if (files.isEmpty) return Seq.empty
     require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
       s"txlog: bloom column name unsupported by the line format: $phys")
@@ -2452,9 +2459,8 @@ object TxLog {
       math.ceil(-maxRows * math.log(fpp) / (math.log(2) * math.log(2))).toLong))
     graft.functions.GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.functions.{col, lit, xxhash64, call_function}
-    val sidecarRel = s"$rel-bloom"
-    // the batch's files, physically named, under the schema they were
-    // written with (a declared table's physical one)
+    // the files, physically named, under the schema they were written
+    // with (a declared table's physical one)
     val scanned = scanFiles(spark, table, files, None,
       footers.map { case (f, ft) => f -> ((ft.size, ft.mtime)) }.toMap)
     require(!scanned.columns.contains("_g_bloom_file"),
@@ -2493,27 +2499,11 @@ object TxLog {
     val existing = bloomsIn(snap, bloomCol)
     val missing = snap.files.filterNot(existing.contains)
     if (missing.isEmpty) return base
-    val phys = snap.physical(bloomCol)
-    require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
-      s"txlog: bloom column name unsupported by the line format: $phys")
-    val maxRows = missing.map(f => footerOf(spark, new Path(table, f)).rows).max.max(1L)
-    val numBits = math.min(1L << 27, math.max(64L,
-      math.ceil(-maxRows * math.log(fpp) / (math.log(2) * math.log(2))).toLong))
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    import org.apache.spark.sql.functions.{col, lit, xxhash64, call_function}
     val sidecarRel = f"data/v${base + 1}%08d-rebloom-${uniq()}"
-    val sidecarDir = new Path(table, sidecarRel)
-    scanFiles(spark, table, missing, None, snap.sizes)
-      .withColumn("_g_bloom_file", col("_metadata.file_name"))
-      .groupBy("_g_bloom_file")
-      .agg(call_function("seen_filter_agg",
-        xxhash64(col(phys)), lit(maxRows), lit(numBits)).as("filter"))
-      .select(col("_g_bloom_file").as("file"), col("filter"))
-      .coalesce(1)
-      .write.parquet(sidecarDir.toString)
-    val lines = missing.map(f => s"$f|$phys|$sidecarRel|$numBits|$BloomSuffix")
+    val lines = buildBloomLines(spark, table, missing, snap.physical(bloomCol),
+      fpp, sidecarRel)
     commitRewrite(spark, table, base, Seq.empty, Seq.empty, "compact",
-      sidecarDir, stats = lines)
+      new Path(table, sidecarRel), stats = lines)
   }
 
   /** Rebuild per-file MIN/MAX STATS for every live file missing them —
@@ -2576,40 +2566,72 @@ object TxLog {
     }.toSet
   }
 
+  /** The probe hash: `c` as the column's stored type `t`, through the
+    * ENGINE's own xxhash64 the build uses, so probe and filter agree. */
+  private def bloomHash(c: Column, t: DataType): Column =
+    org.apache.spark.sql.functions.xxhash64(c.cast(t))
+
+  /** [[bloomHash]] of each of `values` as `bloomCol`'s type in `snap`:
+    * one constant projection over a local relation, however many. */
+  private def probeHashes(spark: SparkSession, table: String, snap: Snapshot,
+                          bloomCol: String, values: Seq[Any]): Seq[Long] = {
+    import org.apache.spark.sql.functions.{array, lit}
+    import spark.implicits._
+    val t = snap.schema
+      .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
+      .getOrElse(inferredSchema(spark, table, snap.files)(bloomCol).dataType)
+    Seq(0).toDF("_").select(array(values.map(v => bloomHash(lit(v), t)): _*))
+      .head().getSeq[Long](0)
+  }
+
+  /** The bloom sidecar convention: one row per data-file name. */
+  private val BloomSchema = StructType(Seq(
+    StructField("file", org.apache.spark.sql.types.StringType),
+    StructField("filter", org.apache.spark.sql.types.BinaryType)))
+
+  /** Live file → decoded bloom filter on `bloomCol` in `snap`, from one
+    * read of the column's sidecars under [[BloomSchema]]; files with no
+    * filter are absent. */
+  private def bloomFiltersIn(spark: SparkSession, table: String, snap: Snapshot,
+                             bloomCol: String): Map[String, BloomFilter] = {
+    val refs = bloomsIn(snap, bloomCol)
+    if (refs.isEmpty) return Map.empty
+    val bytes = spark.read.schema(BloomSchema)
+      .parquet(refs.values.toSeq.distinct.map(p => new Path(table, p).toString): _*)
+      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
+    refs.keys.flatMap { f =>
+      bytes.get(new Path(f).getName).filter(b => b != null && b.nonEmpty)
+        .map(b => f -> BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+    }.toMap
+  }
+
+  /** Bloom rung: the live files whose filter might hold one of `hashes`
+    * (taken only when some file has a filter), plus unfiltered files. */
+  private def keepBloom(snap: Snapshot, filters: Map[String, BloomFilter],
+                        hashes: => Seq[Long]): Seq[String] =
+    if (filters.isEmpty) snap.files
+    else {
+      val hs = hashes
+      snap.files.filter(f => filters.get(f).forall(bf => hs.exists(bf.mightContainLong)))
+    }
+
+  /** [[keepBloom]] for the probe `values` of `bloomCol`. */
+  private def keepBloomValues(spark: SparkSession, table: String, snap: Snapshot,
+                              bloomCol: String, values: Seq[Any]): Seq[String] = {
+    require(values.forall(_ != null), "txlog: bloom probe value must be " +
+      "non-null (equality to NULL matches no row)")
+    keepBloom(snap, bloomFiltersIn(spark, table, snap, bloomCol),
+      probeHashes(spark, table, snap, bloomCol, values))
+  }
+
   /** The live files an equality probe `bloomCol = value` must scan:
     * every file whose recorded filter might contain the probe, plus
     * every file with no filter (conservative keep). Returns
-    * (kept, live-count). The probe is hashed by the ENGINE itself
-    * (xxhash64 over the value cast to the column's type), so the
-    * driver-side check agrees bit-for-bit with the executor-side
-    * build. */
+    * (kept, live-count). */
   def pruneFilesBloom(spark: SparkSession, table: String, bloomCol: String,
                       value: Any,
-                      asOf: Option[Long] = None): (Seq[String], Int) = {
-    require(value != null, "txlog: bloom probe value must be non-null " +
-      "(equality to NULL matches no row)")
-    val snap = snapshot(spark, table, asOf)
-    val live = snap.files
-    val blooms = bloomsIn(snap, bloomCol)
-    if (blooms.isEmpty) return (live, live.size)
-    import org.apache.spark.sql.functions.{lit, xxhash64}
-    val colType = snap.schema
-      .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
-      .getOrElse(inferredSchema(spark, table, snap.files)(bloomCol).dataType)
-    val probeHash = spark.range(1)
-      .select(xxhash64(lit(value).cast(colType))).head().getLong(0)
-    val filters = bloomFilters(spark, table, blooms)
-    val kept = live.filter { f =>
-      if (!blooms.contains(f)) true // never bloomed: cannot skip
-      else filters.get(new Path(f).getName).forall { bytes =>
-        bytes == null || bytes.isEmpty ||
-          org.apache.spark.util.sketch.BloomFilter
-            .readFrom(new java.io.ByteArrayInputStream(bytes))
-            .mightContainLong(probeHash)
-      }
-    }
-    (kept, live.size)
-  }
+                      asOf: Option[Long] = None): (Seq[String], Int) =
+    pruned(spark, table, asOf)(keepBloomValues(spark, table, _, bloomCol, Seq(value)))
 
   /** Multi-probe bloom prune: the live files that might contain AT
     * LEAST ONE of `values` in `bloomCol` — [[pruneFilesBloom]] for a
@@ -2620,55 +2642,8 @@ object TxLog {
                          values: Seq[Any],
                          asOf: Option[Long] = None): (Seq[String], Int) = {
     require(values.nonEmpty, "txlog: bloom multi-probe needs values")
-    import org.apache.spark.sql.functions.{col, xxhash64}
-    val snap = snapshot(spark, table, asOf)
-    val colType = snap.schema
-      .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
-      .getOrElse(inferredSchema(spark, table, snap.files)(bloomCol).dataType)
-    import spark.implicits._
-    val hashes = values.map(_.toString).toDF("v")
-      .select(xxhash64(col("v").cast(colType))).collect().map(_.getLong(0))
-    pruneFilesBloomHashes(spark, table, snap, bloomCol, hashes)
-      .getOrElse((snap.files, snap.files.size))
+    pruned(spark, table, asOf)(keepBloomValues(spark, table, _, bloomCol, values))
   }
-
-  /** [[pruneFilesBloomAny]] over pre-computed xxhash64 probe hashes;
-    * None when the column carries no filters in `snap` (callers keep
-    * their full scan). */
-  private def pruneFilesBloomHashes(spark: SparkSession, table: String,
-                                    snap: Snapshot, bloomCol: String,
-                                    hashes: Array[Long]
-                                   ): Option[(Seq[String], Int)] = {
-    val live = snap.files
-    val blooms = bloomsIn(snap, bloomCol)
-    if (blooms.isEmpty) return None
-    val filters = bloomFilters(spark, table, blooms)
-    val kept = live.filter { f =>
-      if (!blooms.contains(f)) true
-      else filters.get(new Path(f).getName).forall { bytes =>
-        bytes == null || bytes.isEmpty || {
-          val bf = org.apache.spark.util.sketch.BloomFilter
-            .readFrom(new java.io.ByteArrayInputStream(bytes))
-          hashes.exists(bf.mightContainLong)
-        }
-      }
-    }
-    Some((kept, live.size))
-  }
-
-  /** The bloom sidecar convention: one row per data-file name. */
-  private val BloomSchema = StructType(Seq(
-    StructField("file", org.apache.spark.sql.types.StringType),
-    StructField("filter", org.apache.spark.sql.types.BinaryType)))
-
-  /** Data-file name → filter bytes of the sidecars `blooms` references,
-    * each sidecar read once under the stated [[BloomSchema]] (bounded by
-    * live-file count — driver-side metadata scale like the log). */
-  private def bloomFilters(spark: SparkSession, table: String,
-                           blooms: Map[String, String]): Map[String, Array[Byte]] =
-    spark.read.schema(BloomSchema)
-      .parquet(blooms.values.toSeq.distinct.map(p => new Path(table, p).toString): _*)
-      .collect().map(r => r.getString(0) -> r.getAs[Array[Byte]](1)).toMap
 
   /** Probe-key ceiling for the bloom-accelerated merge: above this the
     * driver-side files × keys membership sweep costs more than it
@@ -2676,31 +2651,39 @@ object TxLog {
   private val MaxMergeBloomProbes = 100000
 
   // ---------------------------------------------------------------------
-  // LOG-NATIVE SKIPPING FOR THE SQL SURFACE: the catalog's scan
-  // ([[TxLogCatalog]]) hands its pushed-down filters to
-  // [[pruneForFilters]], which composes every skipping rung this log
-  // records — numeric min/max stats, string byte bounds, partition
-  // values, per-file bloom filters — into ONE kept-file set. Strictly
-  // conservative: a rung that cannot answer keeps its files, unknown
-  // filter shapes prune nothing, and Spark re-applies every filter on
-  // the returned rows, so pruning can only ever skip files that hold
-  // no matching row. `SELECT … WHERE id = ?` on a 100 TB catalog table
-  // now opens the files a needle CAN live in, not all of them.
+  // LOG-NATIVE SKIPPING FOR THE SQL SURFACE: the catalog relation's
+  // filtered scan ([[TxLogCatalog]]) reads through [[readForFilters]]:
+  // the files [[keptForFilters]] keeps from one snapshot, scanned on
+  // that snapshot. The composer runs every rung this log records —
+  // numeric min/max stats, string byte bounds, partition values,
+  // per-file bloom filters — on that snapshot and combines their
+  // answers by the filter tree. Strictly conservative: a rung that
+  // cannot answer keeps its files, unknown filter shapes prune nothing,
+  // and the caller re-applies every filter on the returned rows, so
+  // pruning only skips files that hold no matching row.
   // ---------------------------------------------------------------------
 
+  /** [[keptForFilters]] over the snapshot at `asOf`. */
   private[graft] def pruneForFilters(spark: SparkSession, table: String,
                                      filters: Seq[org.apache.spark.sql.sources.Filter],
-                                     asOf: Option[Long]): Seq[String] = {
+                                     asOf: Option[Long]): Seq[String] =
+    keptForFilters(spark, table, snapshot(spark, table, asOf), filters)
+
+  /** The catalog scan's rows: [[readPruned]] keeping [[keptForFilters]]. */
+  private[graft] def readForFilters(spark: SparkSession, table: String,
+                                    filters: Seq[org.apache.spark.sql.sources.Filter],
+                                    asOf: Option[Long]): DataFrame =
+    readPruned(spark, table, asOf)(keptForFilters(spark, table, _, filters))
+
+  /** The live files of `snap` that pushed `filters` cannot rule out.
+    * A rung runs only for a column it recorded something for; an `IN`
+    * list is hashed once and a column's sidecars read once per call. */
+  private def keptForFilters(spark: SparkSession, table: String, snap: Snapshot,
+                             filters: Seq[org.apache.spark.sql.sources.Filter]
+                            ): Seq[String] = {
     import org.apache.spark.sql.sources._
-    val snap = snapshot(spark, table, asOf)
     val live = snap.files
     if (filters.isEmpty || live.isEmpty) return live
-    // the snapshot's stats answer which rungs recorded ANYTHING for which
-    // physical column — a rung is consulted only when it can possibly
-    // prune, so a table (or column) with no stats/blooms/partition
-    // values pays nothing beyond this fold: the common catalog read
-    // stays one replay, never one-replay-per-rung-per-predicate (and the
-    // bloom probe's hashing job never launches for unbloomed columns)
     val recorded: Set[(String, Char)] =
       snap.stats.flatMap(_.split('|') match {
         case Array(_, c, _, _) => Some((c, 'n'))
@@ -2721,26 +2704,35 @@ object TxLog {
     def rangeKeep(attr: String, lo: Long, hi: Long): Set[String] =
       if (lo > hi) Set.empty
       else if (!has(attr, 'n')) live.toSet
-      else pruneFilesMulti(spark, table, Seq((attr, lo, hi)), asOf)._1.toSet
-    def eqKeep(attr: String, v: Any): Set[String] = {
+      else keepRanges(snap, Seq((attr, lo, hi))).toSet
+    val sidecars = scala.collection.mutable.Map.empty[String, Map[String, BloomFilter]]
+    // the files some value of `vs` can live in (an EqualTo is a 1-list)
+    def eqKeep(attr: String, vs: Seq[Any]): Set[String] = {
       if (attr.contains('.')) return live.toSet // nested: no record
-      val rungs = Seq(
-        longOf(v).map(n => rangeKeep(attr, n, n)),
-        v match {
-          case s: String =>
-            val byStats =
-              if (!has(attr, 's')) live.toSet
-              else pruneFilesString(spark, table, attr, s, s, asOf)._1.toSet
-            val byPart =
-              if (!has(attr, 'p')) live.toSet
-              else pruneFilesPartition(spark, table, attr, s, asOf)._1.toSet
-            Some(byStats.intersect(byPart))
-          case _ => None
-        },
-        if (v == null || !has(attr, 'b')) None
-        else try Some(pruneFilesBloom(spark, table, attr, v, asOf)._1.toSet)
-        catch { case scala.util.control.NonFatal(_) => None })
-      rungs.flatten.foldLeft(live.toSet)(_ intersect _)
+      val byBloom: Seq[Option[Set[String]]] =
+        if (!has(attr, 'b')) vs.map(_ => None)
+        else try {
+          val filters = sidecars.getOrElseUpdate(attr,
+            bloomFiltersIn(spark, table, snap, attr))
+          vs.zip(probeHashes(spark, table, snap, attr, vs)).map { case (v, h) =>
+            if (v == null) None else Some(keepBloom(snap, filters, Seq(h)).toSet)
+          }
+        } catch { case scala.util.control.NonFatal(_) => vs.map(_ => None) }
+      vs.zip(byBloom).map { case (v, bloom) =>
+        val rungs = Seq(
+          longOf(v).map(n => rangeKeep(attr, n, n)),
+          v match {
+            case s: String =>
+              val byStats =
+                if (!has(attr, 's')) live.toSet else keepString(snap, attr, s, s).toSet
+              val byPart =
+                if (!has(attr, 'p')) live.toSet else keepPartition(snap, attr, s).toSet
+              Some(byStats.intersect(byPart))
+            case _ => None
+          },
+          bloom)
+        rungs.flatten.foldLeft(live.toSet)(_ intersect _)
+      }.reduce(_ union _)
     }
     // one filter → the files it keeps; None = cannot answer (keep all)
     def keep(f: Filter): Option[Set[String]] = f match {
@@ -2749,9 +2741,8 @@ object TxLog {
         case (a, b) => a.orElse(b)
       }
       case Or(l, r) => for (a <- keep(l); b <- keep(r)) yield a.union(b)
-      case EqualTo(attr, v) => Some(eqKeep(attr, v))
-      case In(attr, vs) if vs.nonEmpty =>
-        Some(vs.map(v => eqKeep(attr, v)).reduce(_ union _))
+      case EqualTo(attr, v) => Some(eqKeep(attr, Seq(v)))
+      case In(attr, vs) if vs.nonEmpty => Some(eqKeep(attr, vs.toSeq))
       case GreaterThan(attr, v) => longOf(v).map(n =>
         if (n == Long.MaxValue) Set.empty[String]
         else rangeKeep(attr, n + 1, Long.MaxValue))
@@ -2763,27 +2754,19 @@ object TxLog {
       case LessThanOrEqual(attr, v) =>
         longOf(v).map(n => rangeKeep(attr, Long.MinValue, n))
       case StringStartsWith(attr, p) if p.nonEmpty && has(attr, 's') =>
-        // LIKE 'p%' = the byte range [p, next(p)) against string stats
-        Some(pruneFilesPrefix(spark, table, attr, p, asOf)._1.toSet)
+        // LIKE 'p%' = the byte range [p, next(p)): next(p) drops trailing
+        // 0xFF bytes and increments the last remaining one (the smallest
+        // bytes above EVERY string with the prefix; all-0xFF: unbounded)
+        val b = p.getBytes("UTF-8")
+        val i = b.lastIndexWhere(_ != 0xFF.toByte)
+        val next = if (i < 0) None else Some(b.take(i) :+ (b(i) + 1).toByte)
+        Some(keepBytes(snap, attr, b, next, hiExclusive = true).toSet)
       case _ => None // IsNull / Not / EndsWith / …: no pruning
     }
     val keptSet = filters.flatMap(keep)
       .foldLeft(live.toSet)(_ intersect _)
     live.filter(keptSet) // preserve first-added order
   }
-
-  /** Scan exactly `kept` (a pruning answer) under the declared schema
-    * with deletion vectors anti-applied — the row source of the catalog
-    * scan and of every skipping read; an empty `kept` is the empty frame
-    * under the table's schema. */
-  private[graft] def readFiles(spark: SparkSession, table: String,
-                               kept: Seq[String],
-                               asOf: Option[Long]): DataFrame =
-    if (kept.isEmpty) read(spark, table, asOf).limit(0)
-    else {
-      val snap = snapshot(spark, table, asOf)
-      scanLive(spark, table, snap, kept, snap.schema, snap.liveDvs)
-    }
 
   /** Point-equality read with log-native bloom skipping — the
     * needle-in-haystack lookup ([[readWhere]]'s range twin for columns
@@ -2794,8 +2777,8 @@ object TxLog {
   def readWhereEquals(spark: SparkSession, table: String, bloomCol: String,
                       value: Any, asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    val (kept, _) = pruneFilesBloom(spark, table, bloomCol, value, asOf)
-    readFiles(spark, table, kept, asOf).filter(col(bloomCol) === lit(value))
+    readPruned(spark, table, asOf)(keepBloomValues(spark, table, _, bloomCol, Seq(value)))
+      .filter(col(bloomCol) === lit(value))
   }
 
   // ---------------------------------------------------------------------
@@ -3088,17 +3071,22 @@ object TxLog {
     }.toMap
   }
 
-  /** The live files a `partCol = value` read must scan: (kept, total
-    * live) — kept by recorded partition value ALONE (no stats, no
-    * footers); files without a recorded value can never be skipped. */
+  /** Partition rung: the live files whose recorded partition value for
+    * `partCol` is `value` (no stats, no footers); files without a
+    * recorded value can never be skipped. */
+  private def keepPartition(snap: Snapshot, partCol: String,
+                            value: String): Seq[String] = {
+    val pv = partitionValuesIn(snap, partCol)
+    snap.files.filter(p => pv.get(p).forall(_ == value))
+  }
+
+  /** The live files a `partCol = value` read must scan
+    * ([[keepPartition]]): (kept, live count). */
   private[graft] def pruneFilesPartition(spark: SparkSession, table: String,
                                          partCol: String, value: String,
                                          asOf: Option[Long] = None
-                                        ): (Seq[String], Int) = {
-    val snap = snapshot(spark, table, asOf)
-    val pv = partitionValuesIn(snap, partCol)
-    (snap.files.filter(p => pv.get(p).forall(_ == value)), snap.files.size)
-  }
+                                        ): (Seq[String], Int) =
+    pruned(spark, table, asOf)(keepPartition(_, partCol, value))
 
   /** Equality read on the partition column, COMPOSED with optional
     * range predicates: files are kept only if the recorded partition
@@ -3121,14 +3109,11 @@ object TxLog {
                             asOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions.col
     require(eqs.nonEmpty, "txlog: at least one partition equality")
-    val keptP = eqs.map { case (c, v) =>
-      pruneFilesPartition(spark, table, c, v, asOf)._1.toSet
-    }.reduce(_ intersect _)
-    val kept = if (preds.isEmpty) keptP
-      else keptP intersect pruneFilesMulti(spark, table, preds, asOf)._1.toSet
-    // preserve first-added order for deterministic multi-file scans
-    val base = readFiles(spark, table,
-      snapshotFiles(spark, table, asOf).filter(kept), asOf)
+    val base = readPruned(spark, table, asOf) { snap =>
+      val keep = eqs.map { case (c, v) => keepPartition(snap, c, v).toSet } :+
+        keepRanges(snap, preds).toSet
+      snap.files.filter(f => keep.forall(_(f)))
+    }
     val eqFiltered = eqs.foldLeft(base) { case (df, (c, v)) =>
       df.filter(col(c).cast("string") === v)
     }
@@ -3203,9 +3188,7 @@ object TxLog {
                   lo: Long, hi: Long): Long = {
     val snap = latestSnapshot(spark, table, "delete")
     val base = snap.version
-    val stats = statsIn(snap, statsCol)
-    val touched = snap.files.filter(p =>
-      stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
+    val touched = keepRanges(snap, Seq((statsCol, lo, hi)))
     if (touched.isEmpty) return base // no file can contain a match
     import org.apache.spark.sql.functions.col
     // the rewrite must anti-apply any existing deletion vectors on the
@@ -3247,9 +3230,7 @@ object TxLog {
     import org.apache.spark.sql.functions.col
     val snap = latestSnapshot(spark, table, "delete")
     val base = snap.version
-    val stats = statsIn(snap, statsCol)
-    val touched = snap.files.filter(p =>
-      stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
+    val touched = keepRanges(snap, Seq((statsCol, lo, hi)))
     if (touched.isEmpty) return base // no file can contain a match
     // positions of the rows to delete, addressed physically: the raw
     // per-file row index (NOT dv-filtered — positions of already-deleted
@@ -4245,7 +4226,6 @@ object TxLog {
     // driver-side membership sweep stops paying for itself).
     val liveAll = snap.files
     val live = {
-      import org.apache.spark.sql.functions.xxhash64
       // hash through the TABLE's key type: a legally narrower batch key
       // (upcast at physicalize time) must probe as the stored type, or
       // a hash mismatch would skip files that DO hold matches
@@ -4254,12 +4234,11 @@ object TxLog {
       keyType match {
         case None => liveAll // undeclared legacy table: no safe probe type
         case Some(t) =>
-          val probeHashes = updates
-            .select(xxhash64(col(keys.head).cast(t))).distinct()
-            .limit(MaxMergeBloomProbes + 1).collect().map(_.getLong(0))
-          if (probeHashes.length > MaxMergeBloomProbes) liveAll
-          else pruneFilesBloomHashes(spark, table, snap, keys.head, probeHashes)
-            .map(_._1).getOrElse(liveAll)
+          val filters = bloomFiltersIn(spark, table, snap, keys.head)
+          lazy val hashes = updates.select(bloomHash(col(keys.head), t)).distinct()
+            .limit(MaxMergeBloomProbes + 1).collect().map(_.getLong(0)).toSeq
+          if (filters.isEmpty || hashes.length > MaxMergeBloomProbes) liveAll
+          else keepBloom(snap, filters, hashes)
       }
     }
     // under an evolution the EVOLVED schema governs every read and

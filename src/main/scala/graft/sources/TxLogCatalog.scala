@@ -39,12 +39,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * loads resolve through the same [[TxLog.read]]/[[TxLog.versionAtTime]]
   * the library API uses, so SQL and library reads can never diverge.
   *
-  * Read path: the table surfaces as a [[V1Scan]] whose relation builds
-  * the pinned [[TxLog.read]] frame — snapshot resolution, deletion
-  * vectors, column mapping, and declared-schema promotion all ride the
-  * one implementation. Filters/pruning still apply above the scan;
-  * the file-skipping entry points ([[TxLog.readWhere]] family) remain
-  * the surgical path for stats-pruned scans.
+  * Read path: the table surfaces as a [[V1Scan]] whose relation is a
+  * `PrunedFilteredScan` on the read path of [[TxLog.read]] and the
+  * `readWhere*` family, so snapshot resolution, deletion vectors,
+  * column mapping and declared-schema promotion ride one
+  * implementation. Its `buildScan(requiredColumns, filters)` picks the
+  * files to scan by the log's records ([[TxLog.readForFilters]]: min/max
+  * stats, string bounds, partition values, bloom filters) and scans
+  * them on the snapshot they were pruned from. Spark 4.1 plans a
+  * `V1Scan` through the no-filter `buildScan()` (`PushedFilters: []`),
+  * so a SQL query scans every live file and filters above the scan.
   *
   * Write path: every SQL write funnels into the SAME OCC commits the
   * library uses — `INSERT INTO` = [[TxLog.append]] (the no-conflict
@@ -217,9 +221,8 @@ class TxLogCatalog extends TableCatalog {
 }
 
 /** A pinned TxLog snapshot as a DSv2 table: schema and rows come from
-  * the SAME [[TxLog.read]] the library serves, via a V1 scan relation
-  * (declarative enough for Catalyst to push filters/pruning above it;
-  * the stats-pruned entry points remain the surgical path). Writes and
+  * the SAME read path the library serves, via a V1 scan relation that
+  * can prune files by filters handed to it. Writes and
   * deletes funnel into the library's OCC commits — see [[TxLogCatalog]]. */
 private[graft] class TxLogV2Table(private[graft] val tablePath: String,
                                   private[graft] val asOf: Option[Long])
@@ -442,23 +445,22 @@ private[graft] class TxLogV2Table(private[graft] val tablePath: String,
         }
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T =
-          // PrunedFilteredScan: pushed filters drive LOG-NATIVE file
-          // skipping (min/max stats, string bounds, partition values,
-          // bloom filters — [[TxLog.pruneForFilters]]); Spark re-applies
+          // PrunedFilteredScan: filters handed to buildScan drive
+          // LOG-NATIVE file skipping (min/max stats, string bounds,
+          // partition values, bloom filters — [[TxLog.readForFilters]]),
+          // pruned and scanned on one snapshot; the caller re-applies
           // every filter on the returned rows (unhandledFilters default),
-          // so the skip is conservative-correct by construction. A point
-          // SELECT on a catalog table opens the files the needle can
-          // live in, not the table.
+          // so the skip is conservative-correct by construction. Spark's
+          // planner runs a V1Scan through the no-filter buildScan(), so
+          // a SQL query reads every live file.
           new BaseRelation with TableScan with PrunedFilteredScan {
             override def sqlContext: SQLContext = context
             override def schema: StructType = TxLogV2Table.this.schema()
             override def buildScan(): RDD[Row] = snapshot.rdd
             override def buildScan(requiredColumns: Array[String],
                                    filters: Array[Filter]): RDD[Row] = {
-              val spark = SparkSession.active
-              val kept = TxLog.pruneForFilters(spark, tablePath,
+              val base = TxLog.readForFilters(SparkSession.active, tablePath,
                 filters.toSeq, asOf)
-              val base = TxLog.readFiles(spark, tablePath, kept, asOf)
               (if (requiredColumns.isEmpty) base
                else base.select(requiredColumns.map(base.col(_)).toSeq: _*))
                 .rdd

@@ -1,12 +1,16 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import graft.sources.TxLog
+import org.apache.spark.sql.connector.read.V1Scan
+import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThan, In,
+  PrunedFilteredScan, TableScan}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import graft.sources.{TxLog, TxLogV2Table}
 
 /** The local file system, counting `listStatus` and `getFileStatus`
   * calls per (call, path). Installed for the `file` scheme (with the
@@ -23,6 +27,39 @@ class ListingCountingFileSystem extends LocalFileSystem {
   }
 }
 
+/** The local file system, running an armed action once, right after a
+  * `_log` listing of the armed table returns; the action's own listings
+  * do not re-trigger it. Installed only inside [[ListingHook.armed]]. */
+class ListingHookFileSystem extends LocalFileSystem {
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val listed = super.listStatus(p)
+    ListingHook.fire(p)
+    listed
+  }
+}
+
+object ListingHook {
+  private val pending = new AtomicReference[(String, () => Unit)]()
+
+  private[graft] def fire(p: Path): Unit = {
+    val armed = pending.get
+    if (armed != null &&
+      Path.getPathWithoutSchemeAndAuthority(p).toString == armed._1 &&
+      pending.compareAndSet(armed, null)) armed._2()
+  }
+
+  /** Run `body` with `action` armed to run after the first `_log`
+    * listing of `table`; true iff the action ran. */
+  def armed(spark: org.apache.spark.sql.SparkSession, table: String)(
+      action: => Unit)(body: => Unit): Boolean = {
+    pending.set((new Path(table, "_log").toString, () => action))
+    try {
+      ListingCounts.withFileSystem(spark, classOf[ListingHookFileSystem])(body)
+      pending.get == null
+    } finally pending.set(null)
+  }
+}
+
 object ListingCounts {
   private[graft] val counts = new ConcurrentHashMap[(String, String), AtomicInteger]()
 
@@ -32,19 +69,26 @@ object ListingCounts {
     ()
   }
 
-  /** Run `body` with the counting file system installed, counts reset. */
-  def counting(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Unit = {
+  /** Run `body` with `fs` serving the `file` scheme (FileSystem cache
+    * off, so every `getFileSystem` builds one). */
+  def withFileSystem(spark: org.apache.spark.sql.SparkSession, fs: Class[_])(
+      body: => Unit): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
     val saved = keys.map(k => k -> Option(conf.get(k)))
-    conf.set("fs.file.impl", classOf[ListingCountingFileSystem].getName)
+    conf.set("fs.file.impl", fs.getName)
     conf.setBoolean("fs.file.impl.disable.cache", true)
-    counts.clear()
     try body
     finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  /** Run `body` with the counting file system installed, counts reset. */
+  def counting(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Unit = {
+    counts.clear()
+    withFileSystem(spark, classOf[ListingCountingFileSystem])(body)
   }
 
   /** `_log` listings of `table` while `body` runs. */
@@ -257,5 +301,140 @@ class TxLogListingSpec extends SparkSpec {
     Seq(Some(8L), None).foreach { v =>
       assert(rows(copy, v) == rows(t, v), s"at $v")
     }
+  }
+
+  /** Six commits: two partitioned by `lang`, two with a bloom filter on
+    * `k`, all with stats on `id` and `s`; a MOR delete of id 5 binds a
+    * deletion vector (v4); a plain append lands v5. */
+  private def skippable(name: String): String = {
+    val t = java.nio.file.Files.createTempDirectory(s"graft-skip-$name")
+      .toString + "/t"
+    def rows(lo: Long, lang: String) = (lo until lo + 10)
+      .map(i => (i, s"s$i", lang, s"k$i")).toDF("id", "s", "lang", "k").repartition(1)
+    TxLog.appendPartitioned(spark, t, rows(0, "de"), "lang", "id", "s")
+    TxLog.appendPartitioned(spark, t, rows(10, "en"), "lang", "id", "s")
+    TxLog.appendWithBloom(spark, t, rows(20, "de"), "k", "id", "s")
+    TxLog.appendWithBloom(spark, t, rows(30, "en"), "k", "id", "s")
+    TxLog.deleteWhereMor(spark, t, "id", 5L, 5L)
+    TxLog.appendWithStats(spark, t, rows(40, "fr"), "id", "s")
+    assert(TxLog.latestVersion(spark, t) == 5L)
+    t
+  }
+
+  /** The catalog table's V1 scan relation, as Spark's planner gets it. */
+  private def relation(t: String, asOf: Option[Long]): PrunedFilteredScan =
+    new TxLogV2Table(t, asOf).newScanBuilder(CaseInsensitiveStringMap.empty())
+      .build().asInstanceOf[V1Scan]
+      .toV1TableScan[BaseRelation with TableScan](spark.sqlContext)
+      .asInstanceOf[PrunedFilteredScan]
+
+  private def ids(df: DataFrame): Seq[Long] =
+    df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+
+  Seq(None -> "latest", Some(4L) -> "a pinned version").foreach { case (asOf, at) =>
+    test(s"each skipping reader and the catalog's filtered scan list _log once at $at") {
+      import org.apache.spark.sql.functions.col
+      val t = skippable(at.split(' ').last)
+      val all = TxLog.read(spark, t, asOf)
+      val pushed: Array[Filter] =
+        Array(EqualTo("lang", "de"), GreaterThan("id", 3L), In("k", Array("k25", "k7")))
+      val readers: Seq[(String, () => Seq[Long], Seq[Long])] = Seq(
+        ("readWhere", () => ids(TxLog.readWhere(spark, t, "id", 3L, 12L, asOf)),
+          ids(all.filter(col("id").between(3L, 12L)))),
+        ("readWhereAll", () => ids(TxLog.readWhereAll(spark, t,
+          Seq(("id", 3L, 32L), ("id", 8L, 40L)), asOf)),
+          ids(all.filter(col("id").between(8L, 32L)))),
+        ("readWhereString", () => ids(TxLog.readWhereString(spark, t, "s", "s1", "s2", asOf)),
+          ids(all.filter(col("s").between("s1", "s2")))),
+        ("readWhereEquals", () => ids(TxLog.readWhereEquals(spark, t, "k", "k25", asOf)),
+          Seq(25L)),
+        ("readWherePartition", () => ids(TxLog.readWherePartition(spark, t, "lang", "de",
+          Seq(("id", 0L, 25L)), asOf)),
+          ids(all.filter(col("lang") === "de" && col("id").between(0L, 25L)))),
+        ("readWherePartitionAll", () => ids(TxLog.readWherePartitionAll(spark, t,
+          Seq(("lang", "en")), asOf = asOf)),
+          ids(all.filter(col("lang") === "en"))),
+        // the relation returns the kept files' rows; Spark re-applies
+        ("catalog buildScan(requiredColumns, filters)", {
+          val rel = relation(t, asOf)
+          () => rel.buildScan(Array("id", "lang", "k"), pushed).collect()
+            .filter(r => r.getString(1) == "de" && r.getLong(0) > 3L &&
+              Set("k25", "k7")(r.getString(2)))
+            .map(_.getLong(0)).sorted.toSeq
+        }, ids(all.filter(col("lang") === "de" && col("id") > 3L &&
+          col("k").isin("k25", "k7")))))
+      readers.foreach { case (name, run, expected) =>
+        assert(expected.nonEmpty, s"$name: the fixture must match rows")
+        var got: Seq[Long] = Nil
+        val n = ListingCounts.during(spark, t) { got = run() }
+        assert(n == 1, s"$name listed _log $n times at $at")
+        assert(got == expected, s"$name at $at")
+      }
+      assert(!ids(all).contains(5L), "the deletion vector must be bound")
+    }
+  }
+
+  test("a bloom IN list of one and of three values launches the same jobs") {
+    val t = skippable("in")
+    TxLog.read(spark, t).createOrReplaceTempView("txlog_in_plain")
+    val rel = relation(t, None)
+    def viaRelation(vs: String*): (Int, Seq[Long]) = {
+      var got: Seq[Long] = Nil
+      val jobs = jobsDuring {
+        got = rel.buildScan(Array("id", "k"), Array[Filter](In("k", vs.toArray[Any])))
+          .collect().filter(r => vs.contains(r.getString(1))).map(_.getLong(0))
+          .sorted.toSeq
+      }
+      (jobs, got)
+    }
+    def viaSql(table: String, in: String): (Int, Seq[Long]) = {
+      var got: Seq[Long] = Nil
+      val jobs = jobsDuring { got = ids(spark.sql(s"SELECT id FROM $table WHERE k IN ($in)")) }
+      (jobs, got)
+    }
+    val (oneJobs, one) = viaRelation("k25")
+    val (threeJobs, three) = viaRelation("k25", "k27", "k33")
+    assert(one == Seq(25L) && three == Seq(25L, 27L, 33L))
+    assert(oneJobs == threeJobs, s"IN of one value: $oneJobs jobs, of three: $threeJobs")
+    Seq("'k25'", "'k25', 'k27', 'k33'").foreach { in =>
+      val plain = ids(spark.sql(s"SELECT id FROM txlog_in_plain WHERE k IN ($in)"))
+      assert(viaSql(s"graft.`$t`", in)._2 == plain, s"IN ($in)")
+    }
+    val (sqlOne, _) = viaSql(s"graft.`$t`", "'k25'")
+    val (sqlThree, _) = viaSql(s"graft.`$t`", "'k25', 'k27', 'k33'")
+    assert(sqlOne == sqlThree, s"catalog IN of one value: $sqlOne jobs, of three: $sqlThree")
+  }
+
+  test("a compact landing between a skipping read's prune and its scan " +
+    "brings back no deleted row") {
+    val t = java.nio.file.Files.createTempDirectory("graft-torn").toString + "/t"
+    def rows(lo: Long) = (lo until lo + 10).map(i => (i, s"v$i")).toDF("id", "s")
+      .repartition(1)
+    (0L to 20L by 10L).foreach(lo => TxLog.appendWithStats(spark, t, rows(lo), "id"))
+    // id 5's file is masked, then rewritten by the compaction
+    TxLog.deleteWhereMor(spark, t, "id", 5L, 5L)
+    val v = TxLog.latestVersion(spark, t)
+    var read: DataFrame = null
+    assert(ListingHook.armed(spark, t)(TxLog.compact(spark, t)) {
+      read = TxLog.readWhere(spark, t, "id", 0L, 29L)
+    }, "the compaction must land inside the read")
+    assert(TxLog.latestVersion(spark, t) == v + 1)
+    val oneVersion = (0L until 30L).filterNot(_ == 5L)
+    assert(ids(TxLog.read(spark, t, Some(v))) == oneVersion)
+    assert(ids(TxLog.read(spark, t)) == oneVersion)
+    assert(ids(read) == oneVersion)
+    // the catalog: armed after analysis, before execution
+    TxLog.appendWithStats(spark, t, rows(30L), "id")
+    TxLog.deleteWhereMor(spark, t, "id", 35L, 35L)
+    val w = TxLog.latestVersion(spark, t)
+    val query = spark.sql(s"SELECT id FROM graft.`$t` WHERE id BETWEEN 0 AND 39")
+    var got: Seq[Long] = Nil
+    assert(ListingHook.armed(spark, t)(TxLog.compact(spark, t)) { got = ids(query) },
+      "the compaction must land inside the catalog query")
+    assert(TxLog.latestVersion(spark, t) == w + 1)
+    val expected = (0L until 40L).filterNot(Set(5L, 35L))
+    assert(ids(TxLog.read(spark, t, Some(w))) == expected)
+    assert(ids(TxLog.read(spark, t)) == expected)
+    assert(got == expected)
   }
 }

@@ -150,6 +150,14 @@ class TxLogSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       TxLog.read(spark, t, asOf = Some(cv - 1)))
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
+    // the skipping readers take the same gate
+    Seq[() => Any](
+      () => TxLog.readWhere(spark, t, "id", 1L, 60L, asOf = Some(cv - 1)),
+      () => TxLog.readWherePartition(spark, t, "s", "x1", asOf = Some(cv - 1))
+    ).foreach { r =>
+      val e2 = intercept[IllegalArgumentException](r())
+      assert(e2.getMessage.contains("vacuumed"), e2.getMessage)
+    }
     // vacuum with everything retained removes nothing
     assert(TxLog.vacuum(spark, t, retainLast = 10, minFileAgeMs = 0L).isEmpty)
   }
