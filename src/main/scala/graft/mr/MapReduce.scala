@@ -12,10 +12,17 @@ import org.apache.spark.sql.functions._
   * a value iterator handed to the user reduce (`/root/reference/mapreduce.c:64-154`).
   * The Spark-native expression of exactly that plan is ONE shuffle:
   *
-  *   textFile → flatMap(mapper) → repartition(n, partitionExpr)
+  *   textFile → flatMap(mapper) [→ per-task combiner]
+  *            → repartition(n, key) | repartitionById(n, bucket)
   *            → sortWithinPartitions(key) → mapPartitions(group-run walk)
   *
-  * `repartition` is the shuffle write (O4/O5), `sortWithinPartitions` is
+  * `SortedPartition32` shuffles with `repartitionById`: the bucket IS the
+  * partition id, as in `MR_SortedPartition`, so reading the partitions in
+  * index order yields bucket-major, key-minor output with no global sort.
+  * The optional combiner (Dean & Ghemawat's Combiner, OSDI '04 §4.3)
+  * merges each map task's values per key before the shuffle write.
+  *
+  * The repartition is the shuffle write (O4/O5), `sortWithinPartitions` is
   * the in-partition sort (TimSort, spillable — replaces the reference's
   * O(n²) insertion sort, `mapreduce.c:86-101`), and the group-run walk in
   * `mapPartitions` is the `reducer_run`/`get_next` loop
@@ -77,6 +84,17 @@ object MapReduce {
     * the reference's effective-mapper rule (`mapreduce.c:111-122`,
     * asserted by `tests/15.run`). 0 = let Spark split by size (the right
     * default at scale; the cap exists for parity tests).
+    *
+    * `SortedPartition32` sends each key to partition = its bucket
+    * (`repartitionById`); since `bucket < 2^floor(log2 n) <= n` every id
+    * is in range, and partitions at or above `2^floor(log2 n)` stay empty.
+    *
+    * `combiner`, when set, must be an associative, commutative merge of
+    * two values of one key. Each map task then folds its output into one
+    * partial value per key before the shuffle, flushing its table every
+    * [[CombineBound]] distinct keys, so the reducer's run for a key holds
+    * partials rather than raw values. Off by default: the reducer then
+    * sees exactly the mapper's emissions, as in the reference.
     */
   def run(
       spark: SparkSession,
@@ -85,21 +103,51 @@ object MapReduce {
       reducer: (String, Iterator[String]) => IterableOnce[(String, String)],
       numPartitions: Int,
       partitioner: PartitionStrategy = HashPartition,
-      numMappers: Int = 0): Dataset[(String, String)] = {
+      numMappers: Int = 0,
+      combiner: Option[(String, String) => String] = None): Dataset[(String, String)] = {
     import spark.implicits._
     val lines = spark.read.textFile(files: _*)
     val capped =
       if (numMappers > 0) lines.coalesce(math.min(numMappers, files.size))
       else lines
-    val kv = capped.flatMap(mapper).toDF("key", "value")
-    val partExpr: Column = partitioner match {
-      case HashPartition     => col("key")
-      case SortedPartition32 => sortedBucket32(col("key"), numPartitions)
+    val emitted = combiner match {
+      case None    => capped.flatMap(mapper)
+      case Some(f) => capped.mapPartitions(it => combine(it.flatMap(mapper), f))
     }
-    kv.repartition(numPartitions, partExpr)
+    val kv = emitted.toDF("key", "value")
+    val shuffled = partitioner match {
+      case HashPartition => kv.repartition(numPartitions, col("key"))
+      case SortedPartition32 =>
+        kv.repartitionById(numPartitions,
+          sortedBucket32(col("key"), numPartitions).cast("int"))
+    }
+    shuffled
       .sortWithinPartitions("key")
       .as[(String, String)]
       .mapPartitions(it => groupRuns(it, reducer))
+  }
+
+  /** Distinct keys one map task's combiner table holds before it emits
+    * its partials and starts over: bounds the task's memory whatever the
+    * key cardinality, at the price of one more partial per key per flush. */
+  private[graft] val CombineBound = 1 << 14
+
+  /** Map-side combine: fold `it` into one partial value per key with `f`,
+    * emitting the table's partials (and clearing it) whenever it reaches
+    * [[CombineBound]] keys and once more at the end of the input. */
+  private def combine(
+      it: Iterator[(String, String)],
+      f: (String, String) => String): Iterator[(String, String)] = {
+    val table = scala.collection.mutable.HashMap.empty[String, String]
+    Iterator.continually {
+      while (it.hasNext && table.size < CombineBound) {
+        val (k, v) = it.next()
+        table.updateWith(k)(partial => Some(partial.fold(v)(f(_, v))))
+      }
+      val partials = table.toArray
+      table.clear()
+      partials
+    }.takeWhile(_.nonEmpty).flatten
   }
 
   /** Walk a key-sorted partition group-by-group, handing each contiguous

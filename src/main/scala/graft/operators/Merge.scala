@@ -881,16 +881,16 @@ object Merge {
       .orderBy("doc_id")
   }
 
-  /** QW — SQL FILTER PUSHDOWN INTO LOG-NATIVE SKIPPING
-    * ([[graft.sources.TxLog.pruneForFilters]] behind the catalog scan's
-    * `PrunedFilteredScan`): documents lands in FOUR range-banded
-    * stats-covered waves, then plain `SELECT … WHERE doc_id = ?` SQL —
-    * no library call anywhere in the read — must open only the band
-    * the needle lives in. The row REQUIREs the pushed point filter
-    * keeps 1 file of 4 and the pushed OR-of-points keeps the 2 end
-    * bands; the served rows hash-match the closed form (Spark
-    * re-applies every pushed filter on the kept files, so the skip
-    * decides files, never rows — conservative-correct by construction). */
+  /** QW — LOG-NATIVE SKIPPING FOR SQL-SHAPED FILTERS
+    * ([[graft.sources.TxLog.pruneForFilters]]): documents lands in FOUR
+    * range-banded stats-covered waves. The row REQUIREs that
+    * `pruneForFilters`, called directly with the filters a
+    * `WHERE doc_id = ?` would push, keeps 1 file of 4 for the point
+    * filter and the 2 end bands for the OR-of-points. The served rows
+    * come from plain SQL over the catalog and hash-match the closed
+    * form. That SQL read does not prune: the catalog scan is planned
+    * through the no-filter `buildScan()` and reads every live file,
+    * so the skip is checked only where it is called directly. */
   def qwSqlPrune(spark: SparkSession, d: String): DataFrame = {
     import graft.sources.TxLog
     import org.apache.spark.sql.sources.{EqualTo, Or}

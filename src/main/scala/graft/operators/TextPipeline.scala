@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.mr.MapReduce
 import graft.mr.MapReduce.{HashPartition, SortedPartition32}
 
@@ -16,7 +15,8 @@ object TextPipeline {
   /** `wordcount` app (O11, `/root/reference/map___reduce/wordcount.c:9-40`):
     * key = whole input line, value = "1", reduce = sum of atoi(value).
     * Canonical output (what the reference's parser prints): `key count`
-    * lines sorted by key.
+    * lines sorted by key. Counts are summed per map task before the
+    * shuffle (sum is associative), so the reducer sums partial counts.
     */
   def wordCount(
       spark: SparkSession,
@@ -33,7 +33,8 @@ object TextPipeline {
       },
       numPartitions = numPartitions,
       partitioner = HashPartition,
-      numMappers = numMappers)
+      numMappers = numMappers,
+      combiner = Some((a, b) => (a.toLong + b.toLong).toString))
     kv.toDF("key", "cnt").orderBy("key")
   }
 
@@ -41,7 +42,9 @@ object TextPipeline {
     * whole line, reduce drains duplicates and emits the key once ⇒
     * DISTINCT; output order = (SortedPartition32 bucket asc, then
     * lexicographic) — byte-identical to `tests/{1,11,23}.out` including
-    * the atoi-overflow bucket placement.
+    * the atoi-overflow bucket placement. The order needs no global sort:
+    * partition i holds exactly bucket i, and `sortWithinPartitions` orders
+    * each one by key, so the partitions read in index order are the output.
     */
   def distinctSorted(
       spark: SparkSession,
@@ -59,8 +62,6 @@ object TextPipeline {
       numPartitions = numPartitions,
       partitioner = SortedPartition32,
       numMappers = numMappers)
-    kv.toDF("key", "v")
-      .orderBy(MapReduce.sortedBucket32(col("key"), numPartitions), col("key"))
-      .select("key").as[String]
+    kv.toDF("key", "v").select("key").as[String]
   }
 }

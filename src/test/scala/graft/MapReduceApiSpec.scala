@@ -169,4 +169,78 @@ class MapReduceApiSpec extends SparkSpec {
     }
     assert(results(0) == results(1) && results(1) == results(2))
   }
+
+  test("SortedPartition32: partition i holds exactly bucket i (MR_SortedPartition)") {
+    // one key per 2^26 step covers every bucket up to P = 64, plus the
+    // atoi wrap, negative and non-numeric keys
+    val keys = (0 until 64).map(i => (i * 67108864L + 12345L).toString) ++
+      Seq("3333333333", "-5", "notanum", "42abc")
+    val input = textFile(keys)
+    Seq(1, 4, 5, 7).foreach { p =>
+      val out = MapReduce.run(
+        spark, Seq(input),
+        line => Iterator((line, "1")),
+        (k, vs) => { while (vs.hasNext) vs.next(); Iterator((k, TaskContext.getPartitionId().toString)) },
+        numPartitions = p,
+        partitioner = SortedPartition32)
+      assert(out.rdd.getNumPartitions == p)
+      val got = out.toDF("key", "pid")
+        .select(col("key"), col("pid").cast("long"),
+          MapReduce.sortedBucket32(col("key"), p).as("b"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      assert(got.map(_._1).sorted.toSeq == keys.sorted, s"p=$p")
+      got.foreach { case (k, pid, b) => assert(pid == b, s"p=$p key=$k in partition $pid, bucket $b") }
+      // 2^floor(log2 p) buckets: partitions 4.. of P = 5 and 7 stay empty
+      val used = if (p == 1) 1 else 4
+      assert(got.map(_._2).toSet == (0L until used).toSet, s"p=$p")
+    }
+  }
+
+  test("job counts: distinctSorted at P = 4 runs 2 jobs, wordCount 4") {
+    val files = Seq(
+      textFile((0 until 2000).map(i => (i * 2147483L % 4294967296L).toString)),
+      textFile((0 until 2000).map(i => (i * 7 % 500).toString)))
+    // one shuffle map job and one result job: no range sampling, no
+    // second shuffle for a global sort
+    assert(jobsDuring(graft.operators.TextPipeline.distinctSorted(spark, files, 4).collect()) == 2)
+    // wordCount keeps its orderBy("key"): sampling plus a second shuffle
+    assert(jobsDuring(graft.operators.TextPipeline.wordCount(spark, files, 4).collect()) == 4)
+  }
+
+  private val sumValues: (String, Iterator[String]) => Iterator[(String, String)] =
+    (k, vs) => { var n = 0L; while (vs.hasNext) n += vs.next().toLong; Iterator((k, n.toString)) }
+  private val sum: (String, String) => String = (a, b) => (a.toLong + b.toLong).toString
+
+  test("combiner: same rows with and without it (skewed corpus, capped mappers)") {
+    // three files, about 60% one hot key, a Zipf-like tail and singletons
+    val files = (0 until 3).map(f => textFile((0 until 900).map { i =>
+      if (i % 5 < 3) "hot" else if (i % 5 == 3) s"w${i % 17}" else s"${f * 1000 + i}"
+    }))
+    for (p <- Seq(1, 3, 7); part <- Seq(HashPartition, SortedPartition32)) {
+      def counts(combiner: Option[(String, String) => String]) =
+        MapReduce.run(spark, files, line => Iterator((line, "1")), sumValues,
+          numPartitions = p, partitioner = part, numMappers = 2, combiner = combiner)
+          .collect().sorted.toSeq
+      val plain = counts(None)
+      assert(plain.find(_._1 == "hot").contains(("hot", "1620")))
+      assert(counts(Some(sum)) == plain, s"p=$p partitioner=$part")
+    }
+  }
+
+  test("combiner: a map task with more distinct keys than its table holds flushes and stays exact") {
+    // one file, one map task, CombineBound + 100 distinct keys, each twice
+    // in a row: the table merges each pair unless a flush falls between them
+    val n = MapReduce.CombineBound + 100
+    val input = textFile((0 until n).flatMap(i => Seq(s"k$i", s"k$i")))
+    val partials = MapReduce.run(spark, Seq(input), line => Iterator((line, "1")),
+      (k, vs) => Iterator((k, vs.toSeq.mkString(","))),
+      numPartitions = 3, numMappers = 1, combiner = Some(sum))
+      .collect()
+    assert(partials.length == n)
+    val shipped = partials.map(_._2.split(",").length).sum
+    assert(shipped < 2 * n, s"$shipped partials for ${2 * n} values: nothing combined")
+    assert(shipped > n, "no key was split across a flush: the table never flushed mid-task")
+    val counts = partials.map { case (k, v) => k -> v.split(",").map(_.toLong).sum }
+    assert(counts.forall(_._2 == 2L), counts.find(_._2 != 2L).toString)
+  }
 }

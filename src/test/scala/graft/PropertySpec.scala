@@ -48,6 +48,32 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** `MR_SortedPartition`'s bucket, computed the C way: `atoi` (skip
+    * whitespace, optional sign, digit run; anything else is 0), then
+    * `(unsigned)` — mod 2^32 — and the top floor(log2 p) bits. */
+  private def cBucket(key: String, p: Int): Long = {
+    val s = key.dropWhile(" \t\r\n\u000b\f".contains(_))
+    val sign = s.takeWhile("+-".contains(_)).take(1)
+    val digits = s.drop(sign.length).takeWhile(c => c >= '0' && c <= '9')
+    val atoi = if (digits.isEmpty) 0L else (sign + digits).toLongOption.getOrElse(0L)
+    val bits = 31 - Integer.numberOfLeadingZeros(p)
+    if (bits == 0) 0L else java.lang.Math.floorMod(atoi, 1L << 32) >>> (32 - bits)
+  }
+
+  test("distinctSorted at P in {2,3,4,5,8} == bucket-major, key-minor distinct model") {
+    // the shuffle is tiny, so this is also the guard that AQE does not
+    // coalesce the partitions the output order is read from
+    samples(corpus, 5).zipWithIndex.foreach { case (lines, i) =>
+      val files = toFiles(lines, 2)
+      Seq(2, 3, 4, 5, 8).foreach { p =>
+        val got = TextPipeline.distinctSorted(spark, files, numPartitions = p)
+          .collect().toSeq
+        val want = lines.distinct.sortBy(k => (cBucket(k, p), k))
+        assert(got == want, s"sample=$i p=$p corpus=$lines")
+      }
+    }
+  }
+
   test("aggregation result is invariant under partition count (matrix axis)") {
     samples(Gen.zip(corpus, Gen.oneOf(1, 2, 7)), 4).foreach { case (lines, p) =>
       val files = toFiles(lines, 2)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,4 +39,35 @@ abstract class SparkSpec extends AnyFunSuite {
   /** sf0.001 keeps unit tests fast; sf0.01 is the driver's oracle SF. */
   val sfTiny = "/root/testdata/sf0.001"
   val sfSmall = "/root/testdata/sf0.01"
+
+  /** Spark jobs started while `body` runs: a listener counts job starts
+    * between two sentinel jobs (listener events arrive in order, so once
+    * the closing sentinel's start is seen, every earlier start was). */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.test.sentinel"
+    val seen = new AtomicInteger()
+    val opened = new CountDownLatch(1)
+    val closed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("open") => opened.countDown()
+          case Some("close") => closed.countDown()
+          case _ => if (opened.getCount == 0 && closed.getCount > 0) seen.incrementAndGet()
+        }
+    }
+    def sentinel(which: String, latch: CountDownLatch): Unit = {
+      sc.setLocalProperty(key, which)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(latch.await(60, TimeUnit.SECONDS), s"sentinel $which never arrived")
+    }
+    sc.addSparkListener(listener)
+    try {
+      sentinel("open", opened)
+      body
+      sentinel("close", closed)
+      seen.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

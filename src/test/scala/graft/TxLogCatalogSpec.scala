@@ -893,19 +893,20 @@ class TxLogCatalogSpec extends SparkSpec {
       Seq(StringStartsWith("s", "b")), None).size == 1)
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$t` WHERE s LIKE 'b%'")
       .head().getLong(0) == 10L)
-    // the SQL surface rides the same skip and stays exact
+    // SQL over the catalog returns exact rows (its scan reads every live
+    // file; the skip itself is checked through pruneForFilters above)
     assert(spark.sql(s"SELECT s FROM graft.`$t` WHERE id = 15")
       .head().getString(0) == "b15")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$t` WHERE id > 20")
       .head().getLong(0) == 10L)
-    // a contradictory conjunction keeps zero files yet stays well-typed
+    // a contradictory conjunction returns no rows yet stays well-typed
     assert(spark.sql(s"SELECT id, s FROM graft.`$t` WHERE id > 20 AND id < 5")
       .count() == 0L)
-    // VERSION AS OF prunes against the pinned snapshot's files
+    // VERSION AS OF reads the pinned snapshot's files
     assert(spark.sql(
       s"SELECT COUNT(*) FROM graft.`$t` VERSION AS OF 0 WHERE id >= 5")
       .head().getLong(0) == 6L)
-    // a MOR delete's mask still applies on the pruned scan
+    // a MOR delete's mask still applies on the filtered SQL read
     TxLog.deleteWhereMorExpr(spark, t, "id = 15")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$t` WHERE id >= 11 AND id <= 20")
       .head().getLong(0) == 9L,

@@ -1,10 +1,9 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.connector.read.V1Scan
 import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThan, In,
@@ -165,37 +164,6 @@ class TxLogListingSpec extends SparkSpec {
     assert(row.getLong(4) == TxLog.snapshotFiles(spark, t).size.toLong)
     assert(row.getLong(6) == 1L && row.getBoolean(7))
     assert(row.getLong(8) == 10L)
-  }
-
-  /** Spark jobs started while `body` runs: a listener counts job starts
-    * between two sentinel jobs (listener events arrive in order, so once
-    * the closing sentinel's start is seen, every earlier start was). */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val key = "graft.test.sentinel"
-    val seen = new AtomicInteger()
-    val opened = new CountDownLatch(1)
-    val closed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some("open") => opened.countDown()
-          case Some("close") => closed.countDown()
-          case _ => if (opened.getCount == 0 && closed.getCount > 0) seen.incrementAndGet()
-        }
-    }
-    def sentinel(which: String, latch: CountDownLatch): Unit = {
-      sc.setLocalProperty(key, which)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
-      assert(latch.await(60, TimeUnit.SECONDS), s"sentinel $which never arrived")
-    }
-    sc.addSparkListener(listener)
-    try {
-      sentinel("open", opened)
-      body
-      sentinel("close", closed)
-      seen.get
-    } finally sc.removeSparkListener(listener)
   }
 
   /** A table of 40 files (above Spark's 32-path parallel-listing
