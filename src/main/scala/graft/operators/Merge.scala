@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.sources.TxLog.Layout
 
 /** MERGE INTO — the incremental-corpus maintenance operator (upsert +
   * delete in one pass), the missing piece between append-only ingest
@@ -230,8 +231,8 @@ object Merge {
   }
 
   /** QW5 — log-native DATA SKIPPING under the hash gate: orders lands
-    * in three range-disjoint [[graft.sources.TxLog.appendWithStats]]
-    * commits (per-file min/max of `o_orderkey` recorded from the
+    * in three range-disjoint [[graft.sources.TxLog.append]] commits
+    * with `Layout(stats = …)` (per-file min/max of `o_orderkey` recorded from the
     * parquet footers INTO the commit lines), and a range read
     * ([[graft.sources.TxLog.readWhere]]) prunes its file list from the
     * log alone — the row REQUIRES that at least one live file was
@@ -245,15 +246,15 @@ object Merge {
     TxLog.destroy(spark, table)
     val maxKey = orders.agg(max("o_orderkey")).head().getLong(0)
     val (b1, b2) = (maxKey / 3, 2 * maxKey / 3)
-    TxLog.appendWithStats(spark, table,
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") < b1).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+      Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b1 && col("o_orderkey") < b2)
-        .repartitionByRange(2, col("o_orderkey")), "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+        .repartitionByRange(2, col("o_orderkey")), Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b2).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
+      Layout(stats = Seq("o_orderkey")))
     val (lo, hi) = (maxKey / 6, maxKey / 3)
     val (kept, live) = TxLog.pruneFiles(spark, table, "o_orderkey", lo, hi)
     require(kept.size < live,
@@ -274,15 +275,15 @@ object Merge {
     TxLog.destroy(spark, table)
     val maxKey = orders.agg(max("o_orderkey")).head().getLong(0)
     val (b1, b2) = (maxKey / 3, 2 * maxKey / 3)
-    TxLog.appendWithStats(spark, table,
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") < b1).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+      Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b1 && col("o_orderkey") < b2)
-        .repartitionByRange(2, col("o_orderkey")), "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+        .repartitionByRange(2, col("o_orderkey")), Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b2).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
+      Layout(stats = Seq("o_orderkey")))
     val before = TxLog.snapshotFiles(spark, table).toSet
     val (lo, hi) = (maxKey / 6, maxKey / 3)
     val (wouldTouch, _) = TxLog.pruneFiles(spark, table, "o_orderkey", lo, hi)
@@ -317,9 +318,9 @@ object Merge {
       orders.filter(col("o_orderkey") >= b1 && col("o_orderkey") < b2),
       orders.filter(col("o_orderkey") >= b2)
     ).foreach { wave =>
-      TxLog.appendWithStats(spark, table,
+      TxLog.append(spark, table,
         wave.repartitionByRange(2, col("o_custkey")),
-        "o_orderkey", "o_custkey")
+        Layout(stats = Seq("o_orderkey", "o_custkey")))
     }
     val (loK, hiK) = (maxKey / 6, maxKey / 3)    // inside wave 1 + wave 2
     val (loC, hiC) = (0L, maxCust / 4)           // lower custkey quartile
@@ -350,15 +351,15 @@ object Merge {
     TxLog.destroy(spark, table)
     val maxKey = orders.agg(max("o_orderkey")).head().getLong(0)
     val (b1, b2) = (maxKey / 3, 2 * maxKey / 3)
-    TxLog.appendWithStats(spark, table,
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") < b1).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+      Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b1 && col("o_orderkey") < b2)
-        .repartitionByRange(2, col("o_orderkey")), "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+        .repartitionByRange(2, col("o_orderkey")), Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b2).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
+      Layout(stats = Seq("o_orderkey")))
     val before = TxLog.snapshotFiles(spark, table).toSet
     // two OVERLAPPING erasures: [max/6, max/3] then [max/4, max/2] — the
     // second re-masks files the first already masked (position union)
@@ -737,7 +738,7 @@ object Merge {
       docs.filter(col("lang") >= "es" && col("lang") < "g"),    // es, fr
       docs.filter(col("lang") >= "g")                           // zh
     ).foreach(wave =>
-      TxLog.appendWithStats(spark, table, wave.coalesce(1), "lang"))
+      TxLog.append(spark, table, wave.coalesce(1), Layout(stats = Seq("lang"))))
     val (kept, live) = TxLog.pruneFilesString(spark, table, "lang", "d", "ez")
     require(kept.size < live,
       s"txlog: string stats pruned nothing (${kept.size} of $live files kept)")
@@ -793,15 +794,15 @@ object Merge {
     TxLog.destroy(spark, table)
     val maxKey = orders.agg(max("o_orderkey")).head().getLong(0)
     val (b1, b2) = (maxKey / 3, 2 * maxKey / 3)
-    TxLog.appendWithStats(spark, table,
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") < b1).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+      Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b1 && col("o_orderkey") < b2)
-        .repartitionByRange(2, col("o_orderkey")), "o_orderkey")
-    TxLog.appendWithStats(spark, table,
+        .repartitionByRange(2, col("o_orderkey")), Layout(stats = Seq("o_orderkey")))
+    TxLog.append(spark, table,
       orders.filter(col("o_orderkey") >= b2).repartitionByRange(2, col("o_orderkey")),
-      "o_orderkey")
+      Layout(stats = Seq("o_orderkey")))
     val goodVersion = TxLog.latestVersion(spark, table)
     val goodFiles = TxLog.snapshotFiles(spark, table)
     TxLog.deleteWhere(spark, table, "o_orderkey", maxKey / 6, maxKey / 3) // CoW damage
@@ -851,8 +852,8 @@ object Merge {
     TxLog.read(spark, dst).orderBy("doc_id")
   }
 
-  /** QW — LOG-NATIVE BLOOM SKIPPING ([[graft.sources.TxLog
-    * .appendWithBloom]] / [[graft.sources.TxLog.readWhereEquals]])
+  /** QW — LOG-NATIVE BLOOM SKIPPING ([[graft.sources.TxLog.Layout]]'s
+    * `bloom` / [[graft.sources.TxLog.readWhereEquals]])
     * under the hash gate: documents lands in 8 single-file waves split
     * `doc_id % 8` — every file spans the FULL doc_id range, so min/max
     * stats cannot skip ANY file for a point probe — each wave recording
@@ -865,8 +866,9 @@ object Merge {
     import graft.sources.TxLog
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txbloom", d, "t")
-    (0 until 8).foreach(r => TxLog.appendWithBloom(spark, table,
-      docs.filter(col("doc_id") % 8 === r).repartition(1), "doc_id"))
+    (0 until 8).foreach(r => TxLog.append(spark, table,
+      docs.filter(col("doc_id") % 8 === r).repartition(1),
+      Layout(bloom = Some("doc_id"))))
     val bounds = docs.agg(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     require(lo < hi, "txlog: bloom fixture needs at least two documents")
@@ -898,8 +900,9 @@ object Merge {
     val table = Fixtures.table("txsqlprune", d, "t")
     val banded = docs.withColumn("_b",
       ntile(4).over(Window.orderBy("doc_id")))
-    (1 to 4).foreach(b => TxLog.appendWithStats(spark, table,
-      banded.filter(col("_b") === b).drop("_b").repartition(1), "doc_id"))
+    (1 to 4).foreach(b => TxLog.append(spark, table,
+      banded.filter(col("_b") === b).drop("_b").repartition(1),
+      Layout(stats = Seq("doc_id"))))
     val bounds = docs.agg(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     require(lo < hi, "txlog: pushdown fixture needs two documents")
@@ -920,10 +923,13 @@ object Merge {
   /** QW — DECLARED PARTITIONING BEHIND PLAIN SQL (r16): `CREATE TABLE
     * … PARTITIONED BY (lang)` persists the partition columns in
     * commit-0 metadata, and every later plain `INSERT INTO` lands
-    * through the partitioned append — per-file values recorded WITHOUT
-    * the writer naming them. The row REQUIREs a partition probe prunes
-    * (the declared contract actually held) and that the pushed catalog
-    * filter rides the same rung; the served snapshot is the identity. */
+    * partitioned by them inside the append's commit path — per-file
+    * values recorded WITHOUT the writer naming them. The row REQUIREs a
+    * partition probe prunes (the declared contract actually held) and
+    * that [[graft.sources.TxLog.pruneForFilters]], called directly,
+    * keeps no more files than that probe (a SQL read pushes no filter
+    * to the relation, so the rung is checked here, not through SQL);
+    * the served snapshot is the identity. */
   def qwSqlPartition(spark: SparkSession, d: String): DataFrame = {
     import graft.sources.TxLog
     import org.apache.spark.sql.sources.EqualTo
@@ -945,7 +951,7 @@ object Merge {
       s"txlog: declared partitioning must prune: kept ${kept.size} of $total")
     require(TxLog.pruneForFilters(spark, table,
       Seq(EqualTo("lang", probe)), None).size <= kept.size,
-      "txlog: the pushed catalog filter must ride the partition rung")
+      "txlog: pruneForFilters must ride the partition rung")
     spark.sql(s"SELECT doc_id, lang, n_chars FROM graft.`$table` " +
       "ORDER BY doc_id")
   }
@@ -963,8 +969,8 @@ object Merge {
     import graft.sources.TxLog
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txmetaagg", d, "t")
-    (0 until 3).foreach(r => TxLog.appendWithStats(spark, table,
-      docs.filter(col("doc_id") % 3 === r).repartition(1), "doc_id"))
+    (0 until 3).foreach(r => TxLog.append(spark, table,
+      docs.filter(col("doc_id") % 3 === r).repartition(1), Layout(stats = Seq("doc_id"))))
     TxLog.deleteWhereMorExpr(spark, table, "lang = 'de' AND doc_id % 3 = 0")
     val (n, fromFooter, maskedFiles) = TxLog.countRowsDetail(spark, table)
     require(fromFooter == 0,
@@ -989,8 +995,8 @@ object Merge {
     import graft.sources.TxLog
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txaggpush", d, "t")
-    (0 until 3).foreach(r => TxLog.appendWithStats(spark, table,
-      docs.filter(col("doc_id") % 3 === r).repartition(1), "doc_id"))
+    (0 until 3).foreach(r => TxLog.append(spark, table,
+      docs.filter(col("doc_id") % 3 === r).repartition(1), Layout(stats = Seq("doc_id"))))
     TxLog.deleteWhereMorExpr(spark, table, "lang = 'de' AND doc_id % 3 = 0")
     val df = spark.sql(s"SELECT COUNT(*) AS n, MIN(doc_id) AS lo, " +
       s"MAX(doc_id) AS hi FROM graft.`$table`")
@@ -1013,8 +1019,8 @@ object Merge {
     import graft.sources.TxLog
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txagggrp", d, "t")
-    (0 until 2).foreach(w => TxLog.appendPartitioned(spark, table,
-      docs.filter(col("doc_id") % 2 === w), "lang"))
+    (0 until 2).foreach(w => TxLog.append(spark, table,
+      docs.filter(col("doc_id") % 2 === w), Layout(partitionBy = Seq("lang"))))
     TxLog.restat(spark, table, "n_chars")
     val df = spark.sql(s"SELECT lang, COUNT(*) AS n, MIN(n_chars) AS lo, " +
       s"MAX(n_chars) AS hi FROM graft.`$table` GROUP BY lang ORDER BY lang")
@@ -1042,8 +1048,9 @@ object Merge {
     val table = Fixtures.table("txmergebloom", d, "t")
     TxLog.createTable(spark, table,
       StructType(docs.schema.fields.map(_.copy(nullable = true))))
-    (0 until 8).foreach(r => TxLog.appendWithBloom(spark, table,
-      docs.filter(col("doc_id") % 8 === r).repartition(1), "doc_id"))
+    (0 until 8).foreach(r => TxLog.append(spark, table,
+      docs.filter(col("doc_id") % 8 === r).repartition(1),
+      Layout(bloom = Some("doc_id"))))
     val b = docs.agg(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     require(lo < hi, "txlog: bloom-merge fixture needs two documents")
@@ -1072,8 +1079,9 @@ object Merge {
     import graft.sources.TxLog
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txrebloom", d, "t")
-    (0 until 8).foreach(r => TxLog.appendWithBloom(spark, table,
-      docs.filter(col("doc_id") % 8 === r).repartition(1), "doc_id"))
+    (0 until 8).foreach(r => TxLog.append(spark, table,
+      docs.filter(col("doc_id") % 8 === r).repartition(1),
+      Layout(bloom = Some("doc_id"))))
     val probe = docs.agg(max("doc_id")).head().getLong(0)
     TxLog.compact(spark, table, numFiles = 4)
     val (keptDegraded, totalDegraded) =
@@ -1108,8 +1116,9 @@ object Merge {
     val table = Fixtures.table("txrestat", d, "t")
     val banded = docs.withColumn("_b",
       ntile(4).over(Window.orderBy("doc_id")))
-    (1 to 4).foreach(b => TxLog.appendWithStats(spark, table,
-      banded.filter(col("_b") === b).drop("_b").repartition(1), "doc_id"))
+    (1 to 4).foreach(b => TxLog.append(spark, table,
+      banded.filter(col("_b") === b).drop("_b").repartition(1),
+      Layout(stats = Seq("doc_id"))))
     val probe = docs.agg(max("doc_id")).head().getLong(0)
     require(TxLog.pruneForFilters(spark, table,
       Seq(EqualTo("doc_id", probe)), None).size == 1,
@@ -1240,7 +1249,7 @@ object Merge {
     TxLog.read(spark, table).orderBy("doc_id")
   }
 
-  /** QW17 — PARTITION PRUNING ([[graft.sources.TxLog.appendPartitioned]])
+  /** QW17 — PARTITION PRUNING ([[graft.sources.TxLog.Layout]]'s `partitionBy`)
     * under the hash gate: documents lands in three doc_id-range waves,
     * each laid out Hive-style by `lang` with the per-file partition
     * value recorded in the commit and per-file doc_id stats alongside —
@@ -1261,7 +1270,8 @@ object Merge {
       docs.filter(col("doc_id") >= b1 && col("doc_id") < b2),
       docs.filter(col("doc_id") >= b2)
     ).foreach(wave =>
-      TxLog.appendPartitioned(spark, table, wave.coalesce(1), "lang", "doc_id"))
+      TxLog.append(spark, table, wave.coalesce(1),
+        Layout(stats = Seq("doc_id"), partitionBy = Seq("lang"))))
     val (keptPart, live) = TxLog.pruneFilesPartition(spark, table, "lang", "de")
     require(keptPart.size < live,
       s"txlog: partition value pruned nothing (${keptPart.size} of $live)")
@@ -1648,7 +1658,7 @@ object Merge {
       part.filter(col("doc_id") >= b1 && col("doc_id") < b2),
       part.filter(col("doc_id") >= b2)
     ).foreach(wave =>
-      TxLog.appendPartitioned(spark, table, wave.coalesce(1), "lang"))
+      TxLog.append(spark, table, wave.coalesce(1), Layout(partitionBy = Seq("lang"))))
     TxLog.append(spark, table,
       docs.filter(col("doc_id") % 11 === 3).coalesce(1)) // value-less
     val before = TxLog.snapshotFiles(spark, table).toSet

@@ -750,12 +750,18 @@ object TxLog {
         n -> ((t(0).toLong, t(1).toLong, t(2).toLong))
       }
 
-    /** The write-boundary declarations (CHECK / generated / identity
-      * metas): a write gated against one value must re-gate when a
-      * commit it lands on top of changed them. */
+    /** The declared `PARTITIONED BY` columns ([[createTablePartitioned]]);
+      * empty for an undeclared table. */
+    lazy val partitionCols: Seq[String] =
+      metas.get(PartitionColsKey).filter(_.nonEmpty)
+        .map(_.split(",").toSeq).getOrElse(Seq.empty)
+
+    /** The write-boundary declarations (CHECK / generated / identity /
+      * partition metas): a write gated against one value must re-gate
+      * when a commit it lands on top of changed them. */
     lazy val boundary: Map[String, String] = metas.filter { case (k, _) =>
       k.startsWith(CheckKeyPrefix) || k.startsWith(GenKeyPrefix) ||
-        k.startsWith(IdentityKeyPrefix)
+        k.startsWith(IdentityKeyPrefix) || k == PartitionColsKey
     }
   }
 
@@ -1001,20 +1007,62 @@ object TxLog {
     * progress, so the system as a whole never stalls). */
   private val maxCommitAttempts = 1000
 
-  /** Append `df` as a new commit; returns the committed version.
-    * Concurrency-safe: the data files are written once to a unique
-    * directory, then the commit claim retries at the next free version
-    * until it lands — an append's adds depend on no prior table state,
-    * so it can NEVER truly conflict (the no-conflict row of the public
-    * lakehouse conflict matrix). */
-  def append(spark: SparkSession, table: String, df: DataFrame): Long =
-    appendCommit(spark, table, df, "append", None, Seq.empty).get
+  /** How an append lays out and records its files — one argument for
+    * every append entry point instead of one entry point per shape:
+    *  - `stats`: per-file min/max recorded in the commit, for
+    *    log-native skipping. The caller controls the rows' order (e.g.
+    *    `df.repartitionByRange(n, col)` makes the recorded ranges
+    *    disjoint and the skipping maximally selective);
+    *  - `bloom`: a per-file bloom filter over that column (needle
+    *    lookups on a column the layout is not sorted by), built from
+    *    the just-written batch ([[buildBloomLines]]);
+    *  - `partitionBy`: Hive-style per-value directories, each file's
+    *    value recorded, so [[readWherePartition]] prunes from the log
+    *    alone. Multi-level partitioning nests (`a=…/b=…`); partition
+    *    columns must be non-null (Hive's default-partition sentinel
+    *    would make the recorded value lie). Empty means the table's
+    *    declared `PARTITIONED BY` columns ([[createTablePartitioned]]),
+    *    if any.
+    * The default is the plain parquet write. Bloom and partitioning do
+    * not combine. */
+  final case class Layout(stats: Seq[String] = Nil,
+                          bloom: Option[String] = None,
+                          partitionBy: Seq[String] = Nil)
+
+  /** Append `df` as a new commit laid out by `layout`; returns the
+    * committed version. Concurrency-safe: the data files are written
+    * once to a unique directory, then the commit claim retries at the
+    * next free version until it lands — an append's adds depend on no
+    * prior table state, so it can NEVER truly conflict (the
+    * no-conflict row of the public lakehouse conflict matrix). */
+  def append(spark: SparkSession, table: String, df: DataFrame,
+             layout: Layout = Layout()): Long =
+    appendCommit(spark, table, df, "append", None, layout).get
+
+  /** The partition columns an append into `snap` lands by: the explicit
+    * `layout.partitionBy`, else the table's declared ones. Loud when an
+    * explicit list contradicts the declaration, or when bloom is asked
+    * of a partitioned write. */
+  private def partitionsFor(table: String, snap: Snapshot,
+                            layout: Layout): Seq[String] = {
+    val declared = snap.partitionCols
+    require(layout.partitionBy.isEmpty || declared.isEmpty ||
+      layout.partitionBy == declared,
+      s"txlog: $table is declared PARTITIONED BY (${declared.mkString(", ")}) " +
+        s"— an append cannot partition it by " +
+        s"(${layout.partitionBy.mkString(", ")})")
+    val parts = if (layout.partitionBy.nonEmpty) layout.partitionBy else declared
+    require(parts.isEmpty || layout.bloom.isEmpty,
+      "txlog: a bloom filter does not combine with a partitioned append")
+    parts
+  }
 
   /** The one append OCC loop every append flavor funnels through:
     * data written once to a unique dir, the commit claim retried at
     * the next free version until it lands (an append's adds depend on
     * no prior state, so it can never truly conflict). Optional txn
-    * marker (idempotent flavors) and optional per-file stats columns.
+    * marker (idempotent flavors); the file writer is picked once, from
+    * `layout` and the snapshot's declared partition columns.
     * Every gate — txn marker, generated columns, declared schema, CHECK
     * constraints, identity high-water — reads ONE [[Snapshot]], and the
     * claim goes to exactly its version + 1, so claim success implies
@@ -1028,12 +1076,11 @@ object TxLog {
     * safer than landing twice). The orphaned data dir is deleted. */
   private def appendCommit(spark: SparkSession, table: String, dfIn: DataFrame,
                            what: String, txn: Option[(String, Long)],
-                           statsCols: Seq[String],
-                           writeBatch: Option[(DataFrame, String, Snapshot) =>
-                             (Seq[String], Seq[String])] = None): Option[Long] = {
+                           layout: Layout): Option[Long] = {
     var snap = snapshot(spark, table)
     def replayed(s: Snapshot) = txn.exists { case (app, b) => s.landed(app, b) }
     if (replayed(snap)) return None
+    var parts = partitionsFor(table, snap, layout)
     def gated(): DataFrame = {
       val d = applyGeneratedColumns(table, snap, dfIn, what)
       requireFitsDeclared(snap, d, what)
@@ -1041,15 +1088,14 @@ object TxLog {
       d
     }
     var df = gated()
-    statsCols.foreach(c => require(df.schema.fieldNames.contains(c) ||
-      snap.identities.contains(c),
-      s"txlog: stats column '$c' is not in the appended schema " +
-        s"(${df.schema.fieldNames.mkString(", ")}) nor engine-derived"))
     // identity minting reserves [next, next + n·step) against the
-    // snapshot's high-water; `writeBatch` lets a layout-owning flavor
-    // (partitioned / bloom append) land its own file shape from the
-    // minted logical frame + rel, returning (files, extra stats-channel
-    // lines); the default is the plain parquet write
+    // snapshot's high-water; the layout's writer then lands the minted
+    // logical frame — partitioned, or plain parquet plus an optional
+    // bloom sidecar — and its extra stats-channel lines. Layout columns
+    // are checked against the MINTED frame, so recording or
+    // partitioning by a generated or identity column works (the Delta
+    // idiom `PARTITIONED BY (date_bucket)` where date_bucket is
+    // GENERATED ALWAYS AS (…)).
     def land(): (Path, Seq[String], Seq[String], Seq[String]) = {
       val idCols = snap.identities.toSeq.sortBy(_._1)
       val dfW = idCols.foldLeft(df) { case (acc, (n, (_, st, nx))) =>
@@ -1059,18 +1105,30 @@ object TxLog {
       val idMetas = idCols.map { case (n, (s0, st, nx)) =>
         metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + batchN * st}")
       }
+      val have = dfW.schema.fieldNames
+      (layout.stats ++ layout.bloom).foreach(c => require(have.contains(c),
+        s"txlog: layout column '$c' is neither in the appended schema " +
+          s"(${have.mkString(", ")}) nor engine-derived"))
+      if (parts.nonEmpty) requirePartitionArgs(dfW, parts, layout.stats)
       val rel = f"data/v${snap.version + 1}%08d-${uniq()}"
-      val (files, stats) = writeBatch match {
-        case Some(wb) => wb(dfW, rel, snap)
-        case None =>
-          physicalize(dfW, snap.schema).write.parquet(new Path(table, rel).toString)
-          val files = writtenFiles(spark, table, rel)
-          (files, requiredStats(spark, table, snap, files, statsCols))
-      }
+      val phys = physicalize(dfW, snap.schema)
+      val (files, partLines) =
+        if (parts.nonEmpty) {
+          val (fvs, lines) = writePartitioned(spark, table, phys,
+            parts.map(snap.physical), rel, onePerLeaf = false)
+          (fvs.map(_._1), lines)
+        } else {
+          phys.write.parquet(new Path(table, rel).toString)
+          (writtenFiles(spark, table, rel), Seq.empty)
+        }
+      val bloomLines = layout.bloom.toSeq.flatMap(c =>
+        buildBloomLines(spark, table, files, snap.physical(c), s"$rel-bloom"))
       // every data-landing commit records its files' row counts and
       // sizes, so COUNT(*) is a log fold ([[countRows]]) and a scan is
       // built from the log ([[scanFiles]]) forever after
-      (new Path(table, rel), files, stats ++ landedLines(spark, table, files),
+      (new Path(table, rel), files,
+        partLines ++ requiredStats(spark, table, snap, files, layout.stats) ++
+          bloomLines ++ landedLines(spark, table, files),
         idMetas)
     }
     var (dir, files, stats, idMetas) = land()
@@ -1093,13 +1151,15 @@ object TxLog {
       // a write-boundary change that landed while we retried must gate
       // THIS batch too: an ADD CONSTRAINT re-validates, a generated /
       // identity declaration (possible while the table is still empty)
-      // re-derives the frame, and an identity high-water advance
-      // re-mints (a contending append on an identity table always
-      // advances it). Gated data never lands, so the dir goes first.
+      // re-derives the frame, an identity high-water advance re-mints
+      // (a contending append on an identity table always advances it),
+      // and a partition declaration re-lays the files. Gated data never
+      // lands, so the dir goes first.
       val regate = fresh.boundary != snap.boundary
       snap = fresh
       if (regate) {
         fs(spark, dir).delete(dir, true)
+        parts = partitionsFor(table, snap, layout)
         df = gated()
         val re = land()
         dir = re._1; files = re._2; stats = re._3; idMetas = re._4
@@ -1278,11 +1338,12 @@ object TxLog {
   private[graft] val PartitionColsKey = "partition-cols"
 
   /** [[createTable]] that also DECLARES the table's partition columns
-    * (persisted in the same commit-0 metadata): every catalog INSERT
-    * and streaming epoch then lands through [[appendPartitionedBy]],
-    * recording per-file partition values WITHOUT the writer naming
-    * them — the `CREATE TABLE … PARTITIONED BY` contract behind plain
-    * SQL, kept at the write boundary instead of trusted to callers. */
+    * (persisted in the same commit-0 metadata): every append — library
+    * call, catalog INSERT or streaming epoch — then lands partitioned
+    * inside [[appendCommit]], recording per-file partition values
+    * WITHOUT the writer naming them — the `CREATE TABLE … PARTITIONED
+    * BY` contract behind plain SQL, kept at the write boundary instead
+    * of trusted to callers. */
   def createTablePartitioned(spark: SparkSession, table: String,
                              schema: org.apache.spark.sql.types.StructType,
                              partCols: Seq[String]): Long = {
@@ -1296,11 +1357,10 @@ object TxLog {
   }
 
   /** The partition columns [[createTablePartitioned]] declared (empty
-    * for undeclared tables — the caller-driven partitioned appends
-    * still work there). */
+    * for undeclared tables — a caller-named [[Layout.partitionBy]]
+    * still works there). */
   def declaredPartitionCols(spark: SparkSession, table: String): Seq[String] =
-    commitMetas(spark, table).get(PartitionColsKey)
-      .map(_.split(",").toSeq).getOrElse(Seq.empty)
+    stateAt(spark, table, None).partitionCols
 
   /** The file index of a scan built from the log: `files` with their
     * recorded sizes and modification times, answered with no
@@ -1949,16 +2009,6 @@ object TxLog {
     }
   }
 
-  /** [[append]] that also records per-file min/max of `statsCol` in the
-    * commit. The caller controls file layout (e.g.
-    * `df.repartitionByRange(n, col)` makes the recorded ranges disjoint
-    * and the skipping maximally selective). */
-  def appendWithStats(spark: SparkSession, table: String, df: DataFrame,
-                      statsCols: String*): Long = {
-    require(statsCols.nonEmpty, "txlog: appendWithStats needs at least one column")
-    appendCommit(spark, table, df, "append", None, statsCols).get
-  }
-
   /** [[compactClustered]] that re-records stats for the FIRST key —
     * after the rewrite the new files' ranges are pairwise disjoint
     * ([[FileFormats.writeRangeClustered]]), the layout where log-native
@@ -2390,10 +2440,10 @@ object TxLog {
   // but a point lookup on a high-cardinality column the layout is NOT
   // sorted by (needle-in-haystack: one doc id, one user hash, one URL
   // in a 100 TB table) intersects every file's [min,max] and scans
-  // everything. appendWithBloom records one bloom filter PER DATA FILE
-  // over the column's values — the filters live in a sidecar parquet
-  // next to the data (like deletion vectors; far too big for log
-  // lines), referenced from the stats channel (payload
+  // everything. An append with a [[Layout.bloom]] column records one
+  // bloom filter PER DATA FILE over the column's values — the filters
+  // live in a sidecar parquet next to the data (like deletion vectors;
+  // far too big for log lines), referenced from the stats channel (payload
   // `file|physCol|sidecarRel|numBits|bf`, checkpoint-replayed and
   // rename-stable like every stats line) — and an equality read skips
   // every file whose filter excludes the probe: no false negatives
@@ -2408,43 +2458,20 @@ object TxLog {
 
   private val BloomSuffix = "bf"
 
-  /** [[append]] that additionally records a per-file bloom filter over
-    * `bloomCol` (plus optional min/max `statsCols`, as in
-    * [[appendWithStats]]). Sizing: one filter per file, all sized for
-    * the batch's LARGEST file (footer row counts — no data scan) at
-    * `fpp`; build is ONE extra pass over the just-written batch (a
-    * file-grouped aggregate — no shuffle wider than the batch), riding
-    * inside [[appendCommit]]'s claim loop so a lost claim rebuilds
-    * data AND filters against the re-minted frame. */
-  def appendWithBloom(spark: SparkSession, table: String, df: DataFrame,
-                      bloomCol: String, statsCols: String*): Long =
-    appendWithBloomFpp(spark, table, df, bloomCol, 0.01, statsCols: _*)
-
-  /** [[appendWithBloom]] with an explicit false-positive rate. */
-  def appendWithBloomFpp(spark: SparkSession, table: String, df: DataFrame,
-                         bloomCol: String, fpp: Double,
-                         statsCols: String*): Long = {
-    require(fpp > 0 && fpp < 0.5, s"txlog: bloom fpp out of range: $fpp")
-    appendCommit(spark, table, df, "append", None, statsCols,
-      writeBatch = Some { (dfW, rel, snap) =>
-        require(dfW.schema.fieldNames.contains(bloomCol),
-          s"txlog: bloom column '$bloomCol' is not in the appended schema " +
-            s"(${dfW.schema.fieldNames.mkString(", ")})")
-        physicalize(dfW, snap.schema)
-          .write.parquet(new Path(table, rel).toString)
-        val files = writtenFiles(spark, table, rel)
-        (files, requiredStats(spark, table, snap, files, statsCols) ++
-          buildBloomLines(spark, table, files, snap.physical(bloomCol), fpp,
-            s"$rel-bloom"))
-      }).get
-  }
+  /** The false-positive rate every per-file bloom filter is sized for. */
+  private val BloomFpp = 0.01
 
   /** Build the per-file bloom sidecar `sidecarRel` over the column
     * physically named `phys` for `files` (a freshly written batch, or
     * [[rebloom]]'s unfiltered live files); returns their stats-channel
-    * lines. */
+    * lines. Sizing: one filter per file, all sized for the batch's
+    * LARGEST file (footer row counts — no data scan) at [[BloomFpp]];
+    * the build is ONE extra pass over the files (a file-grouped
+    * aggregate — no shuffle wider than the batch). From an append it
+    * rides inside [[appendCommit]]'s claim loop, so a lost claim
+    * rebuilds data AND filters against the re-minted frame. */
   private def buildBloomLines(spark: SparkSession, table: String,
-                              files: Seq[String], phys: String, fpp: Double,
+                              files: Seq[String], phys: String,
                               sidecarRel: String): Seq[String] = {
     if (files.isEmpty) return Seq.empty
     require(!phys.contains('|') && !phys.contains('"') && !phys.contains('\\'),
@@ -2453,10 +2480,11 @@ object TxLog {
     // counts alone (metadata read, same as footerStats)
     val footers = files.map(f => f -> footerOf(spark, new Path(table, f)))
     val maxRows = footers.map(_._2.rows).max.max(1L)
-    // optimal bits for n items at fpp: -n·ln(p)/ln(2)²; clamp to keep a
-    // single sidecar row bounded (16 MiB ≈ 100M items at 1%)
+    // optimal bits for n items at false-positive rate p:
+    // -n·ln(p)/ln(2)²; clamp to keep a single sidecar row bounded
+    // (16 MiB ≈ 100M items at 1%)
     val numBits = math.min(1L << 27, math.max(64L,
-      math.ceil(-maxRows * math.log(fpp) / (math.log(2) * math.log(2))).toLong))
+      math.ceil(-maxRows * math.log(BloomFpp) / (math.log(2) * math.log(2))).toLong))
     graft.functions.GraftFunctions.ensureRegistered(spark)
     import org.apache.spark.sql.functions.{col, lit, xxhash64, call_function}
     // the files, physically named, under the schema they were written
@@ -2491,9 +2519,7 @@ object TxLog {
     * view maintenance skip it) and the sidecar is cleaned on an
     * aborted claim like any orphan. Returns the committed version, or
     * the current one when nothing is missing. */
-  def rebloom(spark: SparkSession, table: String, bloomCol: String,
-              fpp: Double = 0.01): Long = {
-    require(fpp > 0 && fpp < 0.5, s"txlog: bloom fpp out of range: $fpp")
+  def rebloom(spark: SparkSession, table: String, bloomCol: String): Long = {
     val snap = latestSnapshot(spark, table, "rebloom")
     val base = snap.version
     val existing = bloomsIn(snap, bloomCol)
@@ -2501,7 +2527,7 @@ object TxLog {
     if (missing.isEmpty) return base
     val sidecarRel = f"data/v${base + 1}%08d-rebloom-${uniq()}"
     val lines = buildBloomLines(spark, table, missing, snap.physical(bloomCol),
-      fpp, sidecarRel)
+      sidecarRel)
     commitRewrite(spark, table, base, Seq.empty, Seq.empty, "compact",
       new Path(table, sidecarRel), stats = lines)
   }
@@ -2922,65 +2948,6 @@ object TxLog {
     pvCols(partCols.length).foreach(d =>
       require(!have.contains(d),
         s"txlog: table schema collides with the partitioned writer's '$d'"))
-  }
-
-  /** Append `df` laid out and RECORDED by `partCol`: rows land in
-    * per-value directories, each file's partition value rides the
-    * commit, and [[readWherePartition]] prunes by value from the log
-    * alone — no stats, no footers. Optional `statsCols` additionally
-    * record min/max per file (composable pruning: partition equality
-    * AND ranges). Partition columns must be non-null (Hive's
-    * default-partition sentinel would make the recorded value lie). */
-  def appendPartitioned(spark: SparkSession, table: String, df: DataFrame,
-                        partCol: String, statsCols: String*): Long =
-    appendPartitionedBy(spark, table, df, Seq(partCol), statsCols)
-
-  /** [[appendPartitioned]] with MULTI-LEVEL partitioning (Hive's
-    * `a=…/b=…` nesting): every level's value is recorded per file, and
-    * equality pruning composes across levels (and with range stats). */
-  def appendPartitionedBy(spark: SparkSession, table: String, df: DataFrame,
-                          partCols: Seq[String],
-                          statsCols: Seq[String] = Seq.empty): Long =
-    appendPartitionedCommit(spark, table, df, partCols, statsCols, None).get
-
-  /** [[appendPartitionedBy]] with the txn marker — the partitioned twin
-    * of [[appendIdempotent]] (None = this (appId, batchId) already
-    * landed), so a streaming epoch into a PARTITIONED BY table records
-    * its files' partition values AND stays exactly-once. */
-  def appendPartitionedIdempotent(spark: SparkSession, table: String,
-                                  df: DataFrame, partCols: Seq[String],
-                                  appId: String, batchId: Long,
-                                  statsCols: Seq[String] = Seq.empty
-                                 ): Option[Long] = {
-    requireAppId(appId)
-    appendPartitionedCommit(spark, table, df, partCols, statsCols,
-      Some((appId, batchId)))
-  }
-
-  private def appendPartitionedCommit(spark: SparkSession, table: String,
-                                      df: DataFrame, partCols: Seq[String],
-                                      statsCols: Seq[String],
-                                      txn: Option[(String, Long)]
-                                     ): Option[Long] = {
-    // funnel through appendCommit's OCC loop: the partitioned flavor
-    // thereby inherits the SAME write-boundary discipline as a plain
-    // append — constraints/generated/identity commits that land while
-    // the claim retries re-gate THIS batch (re-validate, re-derive,
-    // re-mint), and claims never leapfrog an unscanned commit. Before
-    // r16 this path had its own leapfrogging loop with no recheck, so
-    // an ADD CONSTRAINT racing a violating partitioned append could
-    // admit the batch on the quiet (and identity was rejected outright).
-    // The arguments are validated against the MINTED frame, which
-    // already carries the generated and identity columns.
-    appendCommit(spark, table, df, "partitioned append", txn, statsCols,
-      writeBatch = Some { (dfW: DataFrame, rel: String, snap: Snapshot) =>
-        requirePartitionArgs(dfW, partCols, statsCols)
-        val (files, partLines) = writePartitioned(spark, table,
-          physicalize(dfW, snap.schema), partCols.map(snap.physical), rel,
-          onePerLeaf = false)
-        (files.map(_._1),
-          partLines ++ requiredStats(spark, table, snap, files.map(_._1), statsCols))
-      })
   }
 
   /** COMPACTION that PRESERVES the partition layout and its recorded
@@ -4217,7 +4184,7 @@ object TxLog {
       s"txlog: merge batch names key (${dup.headOption.map(_.mkString(", "))
         .getOrElse("")}) more than once — a merge must name each key once")
     // bloom-accelerated address scan (r16): when the leading key column
-    // carries per-file filters ([[appendWithBloom]]), skip every file
+    // carries per-file filters ([[Layout.bloom]]), skip every file
     // whose filter excludes ALL batch keys — no false negatives means a
     // skipped file holds zero superseded rows, so the mask, the
     // duplicate guard, and the identity join-back are unaffected; the
@@ -4630,10 +4597,11 @@ object TxLog {
     * monotonically increasing per appId — Structured Streaming's
     * foreachBatch contract. */
   def appendIdempotent(spark: SparkSession, table: String, df: DataFrame,
-                       appId: String, batchId: Long): Option[Long] = {
+                       appId: String, batchId: Long,
+                       layout: Layout = Layout()): Option[Long] = {
     requireAppId(appId)
     appendCommit(spark, table, df, "idempotent append",
-      Some((appId, batchId)), Seq.empty)
+      Some((appId, batchId)), layout)
   }
 
   /** CAS-style first materialization: append `df` as version 0 with a
@@ -4707,42 +4675,33 @@ object TxLog {
   }
 
   /** `foreachBatch` adapter: every micro-batch lands as one versioned
-    * append — the streaming-ingest sink for a versioned table (each
-    * commit is a replayable offset: "train on everything up to version
-    * V" is reproducible even while the stream keeps writing). Empty
-    * micro-batches are skipped, so versions always carry data.
+    * append laid out by `layout` — the streaming-ingest sink for a
+    * versioned table (each commit is a replayable offset: "train on
+    * everything up to version V" is reproducible even while the stream
+    * keeps writing). Empty micro-batches are skipped, so versions
+    * always carry data. A [[Layout.bloom]] column keeps point-lookup
+    * skipping WITHOUT a maintenance pass: each micro-batch's files
+    * arrive filtered.
     *
-    * AT-LEAST-ONCE: a batch replayed after a crash between this append
-    * and the streaming checkpoint's commit write lands TWICE — use
-    * [[appendSinkExactlyOnce]] when duplicates matter (they almost
-    * always do; this adapter survives for sinks that dedup downstream).
+    * With `appId`, EXACTLY-ONCE: a replayed micro-batch is detected by
+    * its (appId, batchId) txn marker and skipped ([[appendIdempotent]];
+    * StreamingFailureSpec injects the exact crash window and proves
+    * it). Without it, AT-LEAST-ONCE: a batch replayed after a crash
+    * between this append and the streaming checkpoint's commit write
+    * lands TWICE — pass an appId when duplicates matter (they almost
+    * always do; the bare sink survives for sinks that dedup downstream).
     *
     * Usage: `stream.writeStream.foreachBatch(TxLog.appendSink(table)).start()` */
-  def appendSink(table: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) { append(batch.sparkSession, table, batch); () }
-
-  /** [[appendSink]] recording a per-file bloom filter over `bloomCol`
-    * on every micro-batch ([[appendWithBloom]]): the streaming-ingested
-    * table keeps point-lookup skipping WITHOUT a maintenance pass —
-    * each micro-batch's files arrive filtered, so a needle probe skips
-    * the whole ingest history except the files that might hold it. */
-  def appendSinkWithBloom(table: String,
-                          bloomCol: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) {
-        appendWithBloom(batch.sparkSession, table, batch, bloomCol); ()
-      }
-
-  /** [[appendSink]] with the txn guard: a replayed micro-batch is
-    * detected by its (appId, batchId) marker and skipped — exactly-once
-    * landing under foreachBatch's at-least-once replay contract
-    * (StreamingFailureSpec injects the exact crash window and proves
-    * it). */
-  def appendSinkExactlyOnce(table: String, appId: String): (DataFrame, Long) => Unit =
+  def appendSink(table: String, layout: Layout = Layout(),
+                 appId: Option[String] = None): (DataFrame, Long) => Unit =
     (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
-        appendIdempotent(batch.sparkSession, table, batch, appId, batchId); ()
+        val spark = batch.sparkSession
+        appId match {
+          case Some(app) => appendIdempotent(spark, table, batch, app, batchId, layout)
+          case None => append(spark, table, batch, layout)
+        }
+        ()
       }
 
   /** Drop the table directory (test/fixture reset). */

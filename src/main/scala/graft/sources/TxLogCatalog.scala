@@ -122,10 +122,10 @@ class TxLogCatalog extends TableCatalog {
     * ([[TxLog.createTable]]); CTAS follows with the insert through
     * [[TxLogV2Table.newWriteBuilder]]. Bare-column PARTITIONED BY
     * declares the columns in the same commit-0 metadata
-    * ([[TxLog.createTablePartitioned]]), and every later INSERT /
-    * streaming epoch lands through the partitioned append so per-file
-    * values are recorded WITHOUT the writer naming them; bucket/expr
-    * transforms stay loud. */
+    * ([[TxLog.createTablePartitioned]]), and every later append —
+    * INSERT, streaming epoch or library call — lands partitioned by
+    * them, so per-file values are recorded WITHOUT the writer naming
+    * them; bucket/expr transforms stay loud. */
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: util.Map[String, String]): Table = {
@@ -520,20 +520,16 @@ private[graft] class TxLogV2Table(private[graft] val tablePath: String,
                       s"txlog: REPLACE WHERE predicate not translatable: $f")))
                   TxLog.replaceWhere(spark, tablePath, data,
                     preds.map(p => s"($p)").mkString(" AND "))
-                case None =>
-                  val pcols = TxLog.declaredPartitionCols(spark, tablePath)
-                  if (overwriteAll) {
-                    require(pcols.isEmpty,
-                      "txlog: INSERT OVERWRITE on a PARTITIONED BY table " +
-                        "would land value-less files and silently degrade " +
-                        "partition pruning — DELETE + INSERT, or the " +
-                        "library overwrite + compactPartitioned")
-                    TxLog.overwrite(spark, tablePath, data)
-                  } else if (pcols.nonEmpty)
-                    // the declared contract: every INSERT records its
-                    // files' partition values
-                    TxLog.appendPartitionedBy(spark, tablePath, data, pcols)
-                  else TxLog.append(spark, tablePath, data)
+                case None if overwriteAll =>
+                  require(TxLog.declaredPartitionCols(spark, tablePath).isEmpty,
+                    "txlog: INSERT OVERWRITE on a PARTITIONED BY table " +
+                      "would land value-less files and silently degrade " +
+                      "partition pruning — DELETE + INSERT, or the " +
+                      "library overwrite + compactPartitioned")
+                  TxLog.overwrite(spark, tablePath, data)
+                // a PARTITIONED BY table's declared columns apply inside
+                // the append's commit path
+                case None => TxLog.append(spark, tablePath, data)
               }
               ()
             }

@@ -24,8 +24,8 @@ import org.apache.spark.sql.types._
   * ([[TxLog.appendIdempotent]] with appId = the streaming query's
   * stable id, batchId = the epoch), so a crashed-and-restarted query
   * re-offers its last epoch and the txn marker lands it EXACTLY ONCE —
-  * the same contract the library's `foreachBatch` sinks
-  * ([[TxLog.appendSinkExactlyOnce]]) certify, now reachable with zero
+  * the same contract the library's `foreachBatch` sink
+  * ([[TxLog.appendSink]] with an appId) certifies, now reachable with zero
   * library calls in the pipeline.
   *
   * Write path: executors stage rows as plain parquet under
@@ -72,7 +72,7 @@ private[sources] object TxLogStreamingWrite {
         case other => throw new IllegalArgumentException(
           s"txlog: streaming write does not support column '${f.name}' of " +
             s"type ${other.catalogString} — stage through foreachBatch + " +
-            "TxLog.appendSinkExactlyOnce for complex types")
+            "TxLog.appendSink with an appId for complex types")
       }
       b.addField(p.named(f.name))
     }
@@ -116,13 +116,10 @@ private[sources] class TxLogStreamingWriteImpl(table: String,
           .parquet(rels.map(r => new Path(table, r).toString): _*)
         // full write-boundary recheck + txn-marked OCC claim; None =
         // the epoch already landed (zombie-twin replay) — exactly-once.
-        // A PARTITIONED BY table's epochs land through the partitioned
-        // flavor, so streaming ingest keeps per-file partition values.
-        val pcols = TxLog.declaredPartitionCols(spark, table)
-        if (pcols.nonEmpty)
-          TxLog.appendPartitionedIdempotent(spark, table, staged, pcols,
-            appId, epochId)
-        else TxLog.appendIdempotent(spark, table, staged, appId, epochId)
+        // A PARTITIONED BY table's epochs land partitioned by its
+        // declared columns inside the append, so streaming ingest keeps
+        // per-file partition values.
+        TxLog.appendIdempotent(spark, table, staged, appId, epochId)
         ()
       }
     } finally fsys.delete(dir, true)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** The `graft-txlog` streaming source's CHANGE-FEED mode
   * (`readChangeFeed=true`), pinned: insert/delete image delivery per
@@ -109,8 +110,9 @@ class StreamingCdfSpec extends SparkSpec {
     import graft.streaming.StreamingCdc
     val base = java.nio.file.Files.createTempDirectory("graft-scdf-drop").toString
     val (src, dst) = (s"$base/src", s"$base/dst")
-    TxLog.appendPartitioned(spark, src,
-      Seq(("de", 1L), ("en", 2L), ("fr", 3L)).toDF("k", "v"), "k")
+    TxLog.append(spark, src,
+      Seq(("de", 1L), ("en", 2L), ("fr", 3L)).toDF("k", "v"),
+      Layout(partitionBy = Seq("k")))
     // mask one row first: the dropped file's images must EXCLUDE it
     TxLog.deleteWhereMorExpr(spark, src, "k = 'de' AND v = 1")
     val q = StreamingCdc.replicate(spark, src, dst, Seq("k"), s"$base/ck")

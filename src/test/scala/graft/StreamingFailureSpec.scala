@@ -13,7 +13,7 @@ import graft.sources.TxLog
   * replayable by construction) — and prove:
   *  - the plain [[TxLog.appendSink]] duplicates the batch (the hazard
   *    is real; this is the control that shows the injection works);
-  *  - [[TxLog.appendSinkExactlyOnce]] detects the replayed (appId,
+  *  - [[TxLog.appendSink]] with an appId detects the replayed (appId,
   *    batchId) via the txn marker INSIDE the table's own commit log
   *    and lands nothing twice;
   *  - [[graft.streaming.StreamingCdc.applyChangesVersioned]] with
@@ -67,14 +67,14 @@ class StreamingFailureSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-fail-ckpt1").toString
     TxLog.append(spark, src, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     TxLog.append(spark, src, Seq((3L, "c")).toDF("id", "s"))
-    val q = streamInto(src, ckpt, TxLog.appendSinkExactlyOnce(dst, "ingest1"))
+    val q = streamInto(src, ckpt, TxLog.appendSink(dst, appId = Some("ingest1")))
     try q.processAllAvailable() finally q.stop()
     val versionsBefore = TxLog.versions(spark, dst)
     val contentBefore = TxLog.read(spark, dst).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(contentBefore == Set((1L, "a"), (2L, "b"), (3L, "c")))
     dropLastCheckpointCommit(ckpt)
-    val q2 = streamInto(src, ckpt, TxLog.appendSinkExactlyOnce(dst, "ingest1"))
+    val q2 = streamInto(src, ckpt, TxLog.appendSink(dst, appId = Some("ingest1")))
     try {
       q2.processAllAvailable()
       // exactly-once: no new version, no duplicate rows

@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** Log-native per-file bloom filters
-  * ([[graft.sources.TxLog.appendWithBloom]] /
+  * ([[graft.sources.TxLog.Layout]]'s `bloom` /
   * [[graft.sources.TxLog.readWhereEquals]]): point-equality skipping on
   * columns the layout is NOT clustered by. Contracts pinned:
   *  - NO FALSE NEGATIVES: every present value's file is kept, for every
@@ -36,8 +37,8 @@ class TxLogBloomSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructType(rows.schema.fields
         .map(_.copy(nullable = true))))
     (0 until 8).foreach { r =>
-      TxLog.appendWithBloom(spark, t,
-        rows.filter(col("id") % 8 === r).repartition(1), "sk")
+      TxLog.append(spark, t,
+        rows.filter(col("id") % 8 === r).repartition(1), Layout(bloom = Some("sk")))
     }
     t
   }
@@ -69,8 +70,8 @@ class TxLogBloomSpec extends AnyFunSuite {
   test("long-typed probes hash through the column type") {
     val t = bandedTable("txbloom-long")
     // re-bloom on the LONG column in a 9th append
-    TxLog.appendWithBloom(spark, t,
-      Seq((9001L, "extra", 7L)).toDF("id", "sk", "v"), "sk")
+    TxLog.append(spark, t,
+      Seq((9001L, "extra", 7L)).toDF("id", "sk", "v"), Layout(bloom = Some("sk")))
     val got = TxLog.readWhereEquals(spark, t, "id", 131L) // id never bloomed
     assert(got.count() == 1L, "unbloomed column must fall back to full scan")
     // an Int probe against the Long column must cast, not hash as Int
@@ -80,8 +81,9 @@ class TxLogBloomSpec extends AnyFunSuite {
 
   test("mixed appends: files without filters are conservatively kept") {
     val t = freshTable("txbloom-mixed")
-    TxLog.appendWithBloom(spark, t,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "sk").repartition(1), "sk")
+    TxLog.append(spark, t,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "sk").repartition(1),
+      Layout(bloom = Some("sk")))
     TxLog.append(spark, t, Seq((3L, "c")).toDF("id", "sk").repartition(1))
     val (kept, total) = TxLog.pruneFilesBloom(spark, t, "sk", "zzz")
     assert(total == 2 && kept.size == 1,
@@ -150,8 +152,8 @@ class TxLogBloomSpec extends AnyFunSuite {
     TxLog.createTable(spark, t,
       org.apache.spark.sql.types.StructType(rows.schema.fields
         .map(_.copy(nullable = true))))
-    (0 until 4).foreach(r => TxLog.appendWithBloom(spark, t,
-      rows.filter(col("id") % 4 === r).repartition(1), "id"))
+    (0 until 4).foreach(r => TxLog.append(spark, t,
+      rows.filter(col("id") % 4 === r).repartition(1), Layout(bloom = Some("id"))))
     // an INT-keyed batch against the LONG column: legal (upcast), and
     // the probe must hash as LONG — a raw-type hash would skip the
     // matching file and land the key twice
@@ -185,7 +187,7 @@ class TxLogBloomSpec extends AnyFunSuite {
 
   test("the streaming sink records filters per micro-batch") {
     val t = freshTable("txbloom-sink")
-    val sink = TxLog.appendSinkWithBloom(t, "sk")
+    val sink = TxLog.appendSink(t, Layout(bloom = Some("sk")))
     (0 until 4).foreach { b =>
       sink((1L to 25L).map(i => (b * 25L + i, s"k${b * 25 + i}"))
         .toDF("id", "sk").repartition(1), b.toLong)
@@ -203,8 +205,8 @@ class TxLogBloomSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("txbloom-clone").toString
     val src = s"$base/src"; val dst = s"$base/dst"
     val rows = (1L to 160L).map(i => (i, s"k$i")).toDF("id", "sk")
-    (0 until 4).foreach(r => TxLog.appendWithBloom(spark, src,
-      rows.filter(col("id") % 4 === r).repartition(1), "sk"))
+    (0 until 4).foreach(r => TxLog.append(spark, src,
+      rows.filter(col("id") % 4 === r).repartition(1), Layout(bloom = Some("sk"))))
     TxLog.shallowClone(spark, src, dst)
     val (kept, total) = TxLog.pruneFilesBloom(spark, dst, "sk", "k57")
     assert(total == 4 && kept.size <= 2,

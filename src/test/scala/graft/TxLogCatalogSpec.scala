@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** The TxLog SQL catalog ([[graft.sources.TxLogCatalog]]), pinned:
   * pure-SQL reads ≡ library reads at every version, VERSION AS OF /
@@ -861,15 +862,15 @@ class TxLogCatalogSpec extends SparkSpec {
     val t = fresh("prune")
     // three files with disjoint id ranges and disjoint string prefixes,
     // min/max stats recorded for both columns at append time
-    TxLog.appendWithStats(spark, t,
+    TxLog.append(spark, t,
       (1L to 10L).map(i => (i, s"a$i")).toDF("id", "s").repartition(1),
-      "id", "s")
-    TxLog.appendWithStats(spark, t,
+      Layout(stats = Seq("id", "s")))
+    TxLog.append(spark, t,
       (11L to 20L).map(i => (i, s"b$i")).toDF("id", "s").repartition(1),
-      "id", "s")
-    TxLog.appendWithStats(spark, t,
+      Layout(stats = Seq("id", "s")))
+    TxLog.append(spark, t,
       (21L to 30L).map(i => (i, s"c$i")).toDF("id", "s").repartition(1),
-      "id", "s")
+      Layout(stats = Seq("id", "s")))
     assert(TxLog.snapshotFiles(spark, t, None).size == 3)
     // point equality on the long column keeps exactly the middle file
     assert(TxLog.pruneForFilters(spark, t, Seq(EqualTo("id", 15L)), None)
@@ -962,9 +963,9 @@ class TxLogCatalogSpec extends SparkSpec {
       .map(i => (i, if (i % 2 == 0) "de" else "en")).toDF("id", "lang")
     // two waves, both langs in each → 2 recorded files per lang
     (0 until 2).foreach { w =>
-      TxLog.appendPartitioned(spark, t,
+      TxLog.append(spark, t,
         rows.filter(if (w == 0) col("id") <= 20 else col("id") > 20)
-          .repartition(1), "lang")
+          .repartition(1), Layout(partitionBy = Seq("lang")))
     }
     val pv0 = TxLog.partitionValuesAt(spark, t, "lang")
     val enFiles = pv0.filter(_._2 == "en").keys.toSet
@@ -1008,9 +1009,9 @@ class TxLogCatalogSpec extends SparkSpec {
 
   test("COUNT/MIN/MAX collapse to a driver-side log fold (LocalScan)") {
     val t = fresh("aggpush")
-    (0 until 3).foreach(r => TxLog.appendWithStats(spark, t,
+    (0 until 3).foreach(r => TxLog.append(spark, t,
       (1L to 30L).filter(_ % 3 == r).map(i => (i, s"v$i")).toDF("id", "s")
-        .repartition(1), "id"))
+        .repartition(1), Layout(stats = Seq("id"))))
     TxLog.deleteWhereMorExpr(spark, t, "id = 30")
     val df = spark.sql(
       s"SELECT COUNT(*) AS n, MIN(id) AS lo, MAX(id) AS hi FROM graft.`$t`")

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** SHALLOW CLONE ([[graft.sources.TxLog.shallowClone]]): a zero-copy
   * metadata-only fork. Contracts pinned here:
@@ -151,9 +152,9 @@ class TxLogCloneSpec extends AnyFunSuite {
     val src = s"$base/src"; val dst = s"$base/dst"
     val rows = (1L to 90L).map(i => (i, s"r$i")).toDF("k", "s")
     (0 until 3).foreach { b =>
-      TxLog.appendWithStats(spark, src,
+      TxLog.append(spark, src,
         rows.filter(col("k") > b * 30 && col("k") <= (b + 1) * 30)
-          .repartition(1), "k")
+          .repartition(1), Layout(stats = Seq("k")))
     }
     TxLog.shallowClone(spark, src, dst)
     val (kept, total) = TxLog.pruneFiles(spark, dst, "k", 65L, 99L)

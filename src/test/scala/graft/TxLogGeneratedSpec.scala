@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType, StringType}
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** Generated columns ([[graft.sources.TxLog.addGeneratedColumn]]):
   * declared before data, stored on write — absent columns computed,
@@ -103,8 +104,9 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     TxLog.addGeneratedColumn(spark, t, "v_bucket", LongType, "v div 10")
     // the batch never carries v_bucket; the write boundary derives it
     // and the partitioned layout records it per file
-    TxLog.appendPartitioned(spark, t,
-      Seq((1L, 15L), (2L, 27L), (3L, 12L)).toDF("k", "v"), "v_bucket")
+    TxLog.append(spark, t,
+      Seq((1L, 15L), (2L, 27L), (3L, 12L)).toDF("k", "v"),
+      Layout(partitionBy = Seq("v_bucket")))
     val rows = TxLog.read(spark, t).select("k", "v", "v_bucket")
       .as[(Long, Long, Long)].collect().toSet
     assert(rows == Set((1L, 15L, 1L), (2L, 27L, 2L), (3L, 12L, 1L)))
@@ -114,11 +116,12 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     val pruned = TxLog.readWherePartition(spark, t, "v_bucket", "1")
     assert(pruned.select("k").as[Long].collect().toSet == Set(1L, 3L))
     // a wrong explicit derivation still rejects through this path
-    intercept[IllegalArgumentException](TxLog.appendPartitioned(spark, t,
-      Seq((4L, 10L, 99L)).toDF("k", "v", "v_bucket"), "v_bucket"))
+    intercept[IllegalArgumentException](TxLog.append(spark, t,
+      Seq((4L, 10L, 99L)).toDF("k", "v", "v_bucket"),
+      Layout(partitionBy = Seq("v_bucket"))))
     // a column that is neither in the batch nor derived stays loud
-    intercept[IllegalArgumentException](TxLog.appendPartitioned(spark, t,
-      Seq((4L, 10L)).toDF("k", "v"), "nope"))
+    intercept[IllegalArgumentException](TxLog.append(spark, t,
+      Seq((4L, 10L)).toDF("k", "v"), Layout(partitionBy = Seq("nope"))))
   }
 
   test("SQL ADD COLUMN ... GENERATED ALWAYS AS; plain ADD COLUMN delegates") {

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** Identity columns ([[graft.sources.TxLog.addIdentityColumn]]): the
   * log is the sequence — ids minted per commit against the persisted
@@ -79,7 +80,7 @@ class TxLogIdentitySpec extends AnyFunSuite {
       TxLog.mergeMor(spark, t,
         Seq((1L, "w", 42L)).toDF("k", "s", "row_id"), Seq("k")))
     // partitioned append mints through the shared OCC loop
-    TxLog.appendPartitionedBy(spark, t, Seq((9L, "x")).toDF("k", "s"), Seq("s"))
+    TxLog.append(spark, t, Seq((9L, "x")).toDF("k", "s"), Layout(partitionBy = Seq("s")))
     assert(TxLog.read(spark, t).filter(col("k") === 9L)
       .select("row_id").as[Long].head() == 4L)
     // OVERWRITE retires every id and mints fresh, CONTINUING the sequence
@@ -142,10 +143,11 @@ class TxLogIdentitySpec extends AnyFunSuite {
     // commit records its per-file min/max — id-range reads then prune
     // from the log alone (each commit's reservation is contiguous, so
     // per-commit files have naturally disjoint id ranges)
-    TxLog.appendWithStats(spark, t,
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s").coalesce(1), "row_id")
-    TxLog.appendWithStats(spark, t,
-      Seq((4L, "d"), (5L, "e")).toDF("k", "s").coalesce(1), "row_id")
+    TxLog.append(spark, t,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s").coalesce(1),
+      Layout(stats = Seq("row_id")))
+    TxLog.append(spark, t,
+      Seq((4L, "d"), (5L, "e")).toDF("k", "s").coalesce(1), Layout(stats = Seq("row_id")))
     val hit = TxLog.readWhere(spark, t, "row_id", 4L, 5L)
     assert(hit.select("k").as[Long].collect().toSet == Set(4L, 5L))
     // the skip decides FILES: the second commit's file alone serves it
@@ -153,8 +155,8 @@ class TxLogIdentitySpec extends AnyFunSuite {
       s"id-range read must prune to the one covering file, " +
         s"scanned ${hit.inputFiles.length}")
     // a stats column that is neither in the batch nor minted stays loud
-    intercept[IllegalArgumentException](TxLog.appendWithStats(spark, t,
-      Seq((6L, "f")).toDF("k", "s"), "nope"))
+    intercept[IllegalArgumentException](TxLog.append(spark, t,
+      Seq((6L, "f")).toDF("k", "s"), Layout(stats = Seq("nope"))))
   }
 
   test("racing MERGEs keep ids unique: serializable abort + retry") {

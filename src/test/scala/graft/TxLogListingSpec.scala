@@ -10,6 +10,7 @@ import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThan,
   PrunedFilteredScan, TableScan}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.{TxLog, TxLogV2Table}
+import graft.sources.TxLog.Layout
 
 /** The local file system, counting `listStatus` and `getFileStatus`
   * calls per (call, path). Installed for the `file` scheme (with the
@@ -117,8 +118,8 @@ class TxLogListingSpec extends SparkSpec {
   private def grown(name: String): String = {
     val t = java.nio.file.Files.createTempDirectory(s"graft-list-$name")
       .toString + "/t"
-    (0 until 8).foreach(i => TxLog.appendWithStats(spark, t,
-      Seq((i.toLong, s"v$i")).toDF("id", "s"), "id"))
+    (0 until 8).foreach(i => TxLog.append(spark, t,
+      Seq((i.toLong, s"v$i")).toDF("id", "s"), Layout(stats = Seq("id"))))
     TxLog.deleteWhereMorExpr(spark, t, "id = 3")
     TxLog.addColumn(spark, t, "n", org.apache.spark.sql.types.LongType)
     (0 until 3).foreach(i => TxLog.append(spark, t,
@@ -279,12 +280,16 @@ class TxLogListingSpec extends SparkSpec {
       .toString + "/t"
     def rows(lo: Long, lang: String) = (lo until lo + 10)
       .map(i => (i, s"s$i", lang, s"k$i")).toDF("id", "s", "lang", "k").repartition(1)
-    TxLog.appendPartitioned(spark, t, rows(0, "de"), "lang", "id", "s")
-    TxLog.appendPartitioned(spark, t, rows(10, "en"), "lang", "id", "s")
-    TxLog.appendWithBloom(spark, t, rows(20, "de"), "k", "id", "s")
-    TxLog.appendWithBloom(spark, t, rows(30, "en"), "k", "id", "s")
+    TxLog.append(spark, t, rows(0, "de"),
+      Layout(stats = Seq("id", "s"), partitionBy = Seq("lang")))
+    TxLog.append(spark, t, rows(10, "en"),
+      Layout(stats = Seq("id", "s"), partitionBy = Seq("lang")))
+    TxLog.append(spark, t, rows(20, "de"),
+      Layout(stats = Seq("id", "s"), bloom = Some("k")))
+    TxLog.append(spark, t, rows(30, "en"),
+      Layout(stats = Seq("id", "s"), bloom = Some("k")))
     TxLog.deleteWhereMor(spark, t, "id", 5L, 5L)
-    TxLog.appendWithStats(spark, t, rows(40, "fr"), "id", "s")
+    TxLog.append(spark, t, rows(40, "fr"), Layout(stats = Seq("id", "s")))
     assert(TxLog.latestVersion(spark, t) == 5L)
     t
   }
@@ -378,7 +383,8 @@ class TxLogListingSpec extends SparkSpec {
     val t = java.nio.file.Files.createTempDirectory("graft-torn").toString + "/t"
     def rows(lo: Long) = (lo until lo + 10).map(i => (i, s"v$i")).toDF("id", "s")
       .repartition(1)
-    (0L to 20L by 10L).foreach(lo => TxLog.appendWithStats(spark, t, rows(lo), "id"))
+    (0L to 20L by 10L).foreach(lo => TxLog.append(spark, t, rows(lo),
+      Layout(stats = Seq("id"))))
     // id 5's file is masked, then rewritten by the compaction
     TxLog.deleteWhereMor(spark, t, "id", 5L, 5L)
     val v = TxLog.latestVersion(spark, t)
@@ -392,7 +398,7 @@ class TxLogListingSpec extends SparkSpec {
     assert(ids(TxLog.read(spark, t)) == oneVersion)
     assert(ids(read) == oneVersion)
     // the catalog: armed after analysis, before execution
-    TxLog.appendWithStats(spark, t, rows(30L), "id")
+    TxLog.append(spark, t, rows(30L), Layout(stats = Seq("id")))
     TxLog.deleteWhereMor(spark, t, "id", 35L, 35L)
     val w = TxLog.latestVersion(spark, t)
     val query = spark.sql(s"SELECT id FROM graft.`$t` WHERE id BETWEEN 0 AND 39")

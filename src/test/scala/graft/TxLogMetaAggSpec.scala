@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 /** Metadata-only aggregates ([[graft.sources.TxLog.countRows]] /
   * [[graft.sources.TxLog.minMaxSkipping]]): COUNT(*) is a log fold
@@ -54,9 +55,9 @@ class TxLogMetaAggSpec extends AnyFunSuite {
     val t = freshTable("txmeta-minmax")
     val rows = (1L to 90L).map(i => (i, i % 9)).toDF("k", "band")
     // three stats-covered files split by k range
-    (0 until 3).foreach(b => TxLog.appendWithStats(spark, t,
+    (0 until 3).foreach(b => TxLog.append(spark, t,
       rows.filter(col("k") > b * 30 && col("k") <= (b + 1) * 30)
-        .repartition(1), "k"))
+        .repartition(1), Layout(stats = Seq("k"))))
     val (lo0, hi0, scanned0) = TxLog.minMaxSkipping(spark, t, "k")
     assert((lo0, hi0) == ((1L, 90L)))
     assert(scanned0 == 0, "clean covered files must serve from the log")

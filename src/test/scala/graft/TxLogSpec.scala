@@ -3,6 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import graft.sources.TxLog
+import graft.sources.TxLog.Layout
 
 class TxLogSpec extends SparkSpec {
   import spark.implicits._
@@ -199,8 +200,8 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable("ckptall")
     // stats + dv + schema + metas (an active and a cleared CHECK) + txn
     // marks of two appIds all cross the cadence inside the checkpoints
-    (0 until 5).foreach(i => TxLog.appendWithStats(spark, t,
-      Seq((i.toLong, s"v$i")).toDF("id", "s"), "id")) // v0..v4
+    (0 until 5).foreach(i => TxLog.append(spark, t,
+      Seq((i.toLong, s"v$i")).toDF("id", "s"), Layout(stats = Seq("id")))) // v0..v4
     TxLog.addCheckConstraint(spark, t, "pos", "id >= 0") // v5
     TxLog.addCheckConstraint(spark, t, "small", "id < 1000") // v6
     assert(TxLog.appendIdempotent(spark, t, Seq((5L, "v5")).toDF("id", "s"),
@@ -430,8 +431,9 @@ class TxLogSpec extends SparkSpec {
     import org.apache.spark.sql.sources.EqualTo
     val t = freshTable("restat")
     // wave 0 covered at append time; wave 1 lands unrecorded
-    TxLog.appendWithStats(spark, t,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "s").repartition(1), "id", "s")
+    TxLog.append(spark, t,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s").repartition(1),
+      Layout(stats = Seq("id", "s")))
     TxLog.append(spark, t,
       Seq((10L, "x"), (11L, "y")).toDF("id", "s").repartition(1))
     // the unrecorded file can never be skipped: point filter keeps 2
@@ -862,9 +864,9 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable("stats")
     // three range-disjoint appends, 2 files each (repartitionByRange)
     Seq((0L, 100L), (100L, 200L), (200L, 300L)).foreach { case (lo, hi) =>
-      TxLog.appendWithStats(spark, t,
+      TxLog.append(spark, t,
         (lo until hi).map(i => (i, s"r$i")).toDF("id", "s")
-          .repartitionByRange(2, $"id"), "id")
+          .repartitionByRange(2, $"id"), Layout(stats = Seq("id")))
     }
     val stats = TxLog.statsAt(spark, t, "id")
     assert(stats.size == 6, s"all six files must carry stats: $stats")
@@ -888,9 +890,9 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable("stats-ckpt")
     // 12 commits → past the checkpoint cadence (10)
     (0 until 12).foreach { i =>
-      TxLog.appendWithStats(spark, t,
+      TxLog.append(spark, t,
         Seq(((i * 10).toLong, s"a$i"), ((i * 10 + 9).toLong, s"b$i"))
-          .toDF("id", "s").coalesce(1), "id")
+          .toDF("id", "s").coalesce(1), Layout(stats = Seq("id")))
     }
     assert(TxLog.checkpointVersions(spark, t).nonEmpty, "cadence must have checkpointed")
     // replay goes ckpt+suffix; every live file still has its stats
@@ -914,8 +916,9 @@ class TxLogSpec extends SparkSpec {
   test("deleteWhere: a partial rewrite — untouched files survive byte-identical, pinned reads keep the past") {
     val t = freshTable("delete")
     Seq((0L, 100L), (100L, 200L), (200L, 300L)).foreach { case (lo, hi) =>
-      TxLog.appendWithStats(spark, t,
-        (lo until hi).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
+      TxLog.append(spark, t,
+        (lo until hi).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+        Layout(stats = Seq("id")))
     }
     val before = TxLog.snapshotFiles(spark, t)
     assert(before.size == 3)
@@ -955,8 +958,9 @@ class TxLogSpec extends SparkSpec {
   test("deleteWhereMor: deletion vectors mask rows without touching data files; compact materializes") {
     val t = freshTable("mor")
     Seq((0L, 100L), (100L, 200L), (200L, 300L)).foreach { case (lo, hi) =>
-      TxLog.appendWithStats(spark, t,
-        (lo until hi).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
+      TxLog.append(spark, t,
+        (lo until hi).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+        Layout(stats = Seq("id")))
     }
     val before = TxLog.snapshotFiles(spark, t)
     val preVersion = TxLog.latestVersion(spark, t)
@@ -1005,8 +1009,9 @@ class TxLogSpec extends SparkSpec {
 
   test("deleteWhereMor: vectors survive checkpoints and vacuum keeps referenced sidecars") {
     val t = freshTable("mor-ckpt")
-    TxLog.appendWithStats(spark, t,
-      (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
+    TxLog.append(spark, t,
+      (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
     TxLog.deleteWhereMor(spark, t, "id", 10, 19)
     // cross the checkpoint cadence with plain appends: the ckpt must
     // carry the dv binding, or the suffix replay would resurrect rows
@@ -1036,7 +1041,8 @@ class TxLogSpec extends SparkSpec {
       val rows = (0L until 50L).map { k =>
         (ai * 1000L + k, bi * 1000L + k, s"$ai-$bi-$k")
       }
-      TxLog.appendWithStats(spark, t, rows.toDF("a", "b", "s").coalesce(1), "a", "b")
+      TxLog.append(spark, t, rows.toDF("a", "b", "s").coalesce(1),
+        Layout(stats = Seq("a", "b")))
     }
     // box over a-range 0, b-range 1: exactly one of four files survives
     val (kept, live) = TxLog.pruneFilesMulti(spark, t,
@@ -1051,10 +1057,12 @@ class TxLogSpec extends SparkSpec {
 
   test("column mapping: rename is metadata-only; stats, pruning, and appends follow the new name") {
     val t = freshTable("rename")
-    TxLog.appendWithStats(spark, t,
-      (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
-    TxLog.appendWithStats(spark, t,
-      (100L until 200L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
+    TxLog.append(spark, t,
+      (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
+    TxLog.append(spark, t,
+      (100L until 200L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
     val preFiles = TxLog.snapshotFiles(spark, t)
     val preRename = TxLog.latestVersion(spark, t)
     TxLog.renameColumn(spark, t, "id", "key")
@@ -1066,8 +1074,9 @@ class TxLogSpec extends SparkSpec {
     assert(live == 2 && kept.size == 1, s"$kept of $live")
     assert(TxLog.readWhere(spark, t, "key", 0, 50).count() == 51L)
     // appends under the new name carry stats that compose with the old
-    TxLog.appendWithStats(spark, t,
-      (200L until 300L).map(i => (i, s"r$i")).toDF("key", "s").coalesce(1), "key")
+    TxLog.append(spark, t,
+      (200L until 300L).map(i => (i, s"r$i")).toDF("key", "s").coalesce(1),
+      Layout(stats = Seq("key")))
     assert(TxLog.readWhere(spark, t, "key", 150, 250).count() == 101L)
     val (kept3, live3) = TxLog.pruneFiles(spark, t, "key", 250, 260)
     assert(live3 == 3 && kept3.size == 1)
@@ -1136,7 +1145,7 @@ class TxLogSpec extends SparkSpec {
     val t = freshTable("strstats")
     Seq(("a", "f"), ("g", "m"), ("n", "z")).zipWithIndex.foreach { case ((lo, hi), i) =>
       val rows = (0 until 40).map(k => (i * 100L + k, s"$lo-word-$k"))
-      TxLog.appendWithStats(spark, t, rows.toDF("id", "s").coalesce(1), "s")
+      TxLog.append(spark, t, rows.toDF("id", "s").coalesce(1), Layout(stats = Seq("s")))
     }
     val (kept, live) = TxLog.pruneFilesString(spark, t, "s", "a", "f")
     assert(live == 3 && kept.size == 1, s"$kept of $live")
@@ -1161,8 +1170,9 @@ class TxLogSpec extends SparkSpec {
     (0 until 6).foreach(r => TxLog.append(spark, t,
       Seq((5000L + r, s"tiny$r")).toDF("id", "s").coalesce(1)))
     // a MOR delete masks one small file's row: the pack must materialize it
-    TxLog.appendWithStats(spark, t,
-      Seq((9000L, "victim"), (9001L, "keeper")).toDF("id", "s").coalesce(1), "id")
+    TxLog.append(spark, t,
+      Seq((9000L, "victim"), (9001L, "keeper")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
     TxLog.deleteWhereMor(spark, t, "id", 9000L, 9000L)
     // and a MatView watching the table must stay incremental across the pack
     val mv = freshTable("binpack-mv")
@@ -1192,8 +1202,9 @@ class TxLogSpec extends SparkSpec {
 
   test("plan pin: the deletion-vector anti-join is a BROADCAST probe, never a shuffle of the data side") {
     val t = freshTable("dvplan")
-    TxLog.appendWithStats(spark, t,
-      (0L until 500L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
+    TxLog.append(spark, t,
+      (0L until 500L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
     TxLog.deleteWhereMor(spark, t, "id", 10, 20)
     val p = TxLog.read(spark, t).queryExecution.executedPlan.toString
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
@@ -1204,10 +1215,12 @@ class TxLogSpec extends SparkSpec {
 
   test("restore: metadata-only rollback across deletes, masks, and a rename; history preserved") {
     val t = freshTable("restore")
-    TxLog.appendWithStats(spark, t,
-      (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
-    TxLog.appendWithStats(spark, t,
-      (100L until 200L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1), "id")
+    TxLog.append(spark, t,
+      (0L until 100L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
+    TxLog.append(spark, t,
+      (100L until 200L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
+      Layout(stats = Seq("id")))
     val good = TxLog.latestVersion(spark, t)
     val goodFiles = TxLog.snapshotFiles(spark, t)
     // damage: CoW delete + MOR mask + a RENAME
@@ -1229,8 +1242,8 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.restore(spark, t, rv) == rv &&
       TxLog.latestVersion(spark, t) == rv)
     // writes keep working after the restore (schema + stats composing)
-    TxLog.appendWithStats(spark, t,
-      Seq((500L, "post")).toDF("id", "s").coalesce(1), "id")
+    TxLog.append(spark, t,
+      Seq((500L, "post")).toDF("id", "s").coalesce(1), Layout(stats = Seq("id")))
     assert(TxLog.readWhere(spark, t, "id", 500, 500).count() == 1L)
   }
 
