@@ -1,8 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated parquet tables (see /root/repo/TESTDATA.md).
   *
@@ -12,6 +18,14 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * Columnar scans give free predicate pushdown + column pruning — at 100 TB
   * the scan is the dominant cost, so every query should select only the
   * columns it needs (Catalyst prunes the rest down to the parquet reader).
+  *
+  * Every load hands the reader its schema up front, read from one parquet
+  * footer on the driver ([[footerSchema]]). A bare `spark.read.parquet`
+  * infers the same schema by launching a one-task Spark job per call,
+  * which would cost a job per table while a query plan is only being
+  * built (10 of the 50 jobs of a perfbench `mr_sql` pass). Reading the
+  * footer here keeps planning free of Spark jobs: every job a query
+  * starts executes it.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -27,8 +41,41 @@ object Tables {
     */
   val broadcastable: Set[String] = Set("region", "nation")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, read on the
+    * driver from one footer instead of by a Spark job. The footer is the
+    * one Spark's non-merging inference reads: the file itself for a file
+    * path; for a directory, `_common_metadata`, else `_metadata`, else
+    * the first visible data file in path order (hidden `_`/`.` names are
+    * skipped by Spark's own listing rule). The conversion is Spark's own,
+    * configured from this session's conf (`binaryAsString`,
+    * `nanosAsLong`, `inferTimestampNTZ`, …), and prefers the Spark schema
+    * a Spark writer stores in the footer, exactly as inference does. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => GraftSqlShims.hiddenPathName(c.getPath.getName))
+        .flatMap(leaves(_))
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no parquet file under $path to read a schema from"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Dimension loader: broadcast-hints the genuinely bounded dims, leaves
     * everything else to AQE's join selection. The hint survives

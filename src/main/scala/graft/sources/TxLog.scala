@@ -1112,15 +1112,7 @@ object TxLog {
       if (parts.nonEmpty) requirePartitionArgs(dfW, parts, layout.stats)
       val rel = f"data/v${snap.version + 1}%08d-${uniq()}"
       val phys = physicalize(dfW, snap.schema)
-      val (files, partLines) =
-        if (parts.nonEmpty) {
-          val (fvs, lines) = writePartitioned(spark, table, phys,
-            parts.map(snap.physical), rel, onePerLeaf = false)
-          (fvs.map(_._1), lines)
-        } else {
-          phys.write.parquet(new Path(table, rel).toString)
-          (writtenFiles(spark, table, rel), Seq.empty)
-        }
+      val (files, partLines) = writeAppend(spark, table, snap, phys, parts, rel)
       val bloomLines = layout.bloom.toSeq.flatMap(c =>
         buildBloomLines(spark, table, files, snap.physical(c), s"$rel-bloom"))
       // every data-landing commit records its files' row counts and
@@ -1180,6 +1172,21 @@ object TxLog {
         s"txlog: no parquet footer carried statistics for '$c' — " +
           "the files would be permanently unprunable")
       forCol
+    }
+
+  /** Write an append's physical frame under `rel`: partitioned by the
+    * logical `parts` when there are any (with their per-file value
+    * lines), else as plain parquet. Returns (files, partition lines). */
+  private def writeAppend(spark: SparkSession, table: String, snap: Snapshot,
+                          phys: DataFrame, parts: Seq[String],
+                          rel: String): (Seq[String], Seq[String]) =
+    if (parts.nonEmpty) {
+      val (fvs, lines) = writePartitioned(spark, table, phys,
+        parts.map(snap.physical), rel, onePerLeaf = false)
+      (fvs.map(_._1), lines)
+    } else {
+      phys.write.parquet(new Path(table, rel).toString)
+      (writtenFiles(spark, table, rel), Seq.empty)
     }
 
   // ---------------------------------------------------------------------
@@ -1272,14 +1279,18 @@ object TxLog {
     val intended = snap.version + 1
     val rel = f"data/v$intended%08d-${uniq()}"
     val dataDir = new Path(table, rel)
-    physicalize(df, Some(evolved)).write.parquet(dataDir.toString)
-    val files = writtenFiles(spark, table, rel)
+    // a declared PARTITIONED BY table lands partitioned here too, so the
+    // commit records each file's values
+    val parts = snap.partitionCols
+    if (parts.nonEmpty) requirePartitionArgs(df, parts, Nil)
+    val (files, partLines) =
+      writeAppend(spark, table, snap, physicalize(df, Some(evolved)), parts, rel)
     val schemaB64 = Some(encodeSchema(evolved))
-    val counts = landedLines(spark, table, files)
+    val stats = partLines ++ landedLines(spark, table, files)
     var v = intended
     var attempts = 0
     while (!tryCommit(spark, table, v, files, Seq.empty, None, schemaB64,
-      Seq.empty, counts)) {
+      Seq.empty, stats)) {
       attempts += 1
       require(attempts < maxCommitAttempts,
         s"txlog: evolving append to $table still contended after $attempts attempts")

@@ -29,7 +29,9 @@ object EventStreams {
 
   /** File-source stream over a directory of event parquet files,
     * encoding-adaptive: a streaming source needs its schema up front, so
-    * probe the files with a one-footer batch read and then apply the SAME
+    * read it from one footer on the driver
+    * ([[graft.sources.Tables.footerSchema]], the directory rule of
+    * Spark's inference without its Spark job) and then apply the SAME
     * normalization as the batch loader (long nanos → µs timestamps,
     * TIMESTAMP_NTZ → instant cast, already-instant passthrough). Deriving
     * the on-disk schema instead of hardcoding an encoding means a driver
@@ -37,7 +39,7 @@ object EventStreams {
     * silently desynchronize stream and batch — they normalize through one
     * code path or fail loudly together. */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val onDisk = spark.read.parquet(dir).schema
+    val onDisk = graft.sources.Tables.footerSchema(spark, dir)
     val raw = spark.readStream.schema(onDisk).parquet(dir)
     onDisk("ts").dataType match {
       case LongType => raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))

@@ -16,4 +16,11 @@ object GraftSqlShims {
   /** `StructType.asNullable`: the nullability `DataSource` gives the data
     * schema of every file scan. */
   def asNullable(s: StructType): StructType = s.asNullable
+
+  /** `HadoopFSUtils.shouldFilterOutPathName`: the names a file-source
+    * listing hides (`_`/`.` prefixes, except the parquet summary files
+    * and `_k=v` partition directories). [[graft.sources.Tables]] picks
+    * its schema footer by the same rule. */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

@@ -38,6 +38,31 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  /** Keys whose UTF-8 byte order differs from `String.compareTo`'s UTF-16
+    * order: U+FF21 sorts after a surrogate pair in UTF-16 but before the
+    * 4-byte UTF-8 encoding of U+1F600 / U+1D11E. */
+  private val unicodeWord = Gen.oneOf("a", "ab", "Z", "\u00e9", "\u00df", "\u4e2d\u6587",
+    "\uFF21", "\uFFFD", "\uD83D\uDE00", "\uD834\uDD1E", "a\uD83D\uDE00", "a\uFF21")
+  private val unicodeCorpus = Gen.resize(40, Gen.nonEmptyListOf(unicodeWord))
+
+  test("wordCount rows come back in UTF-8 byte order of key at P in {1, 3, 7}") {
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def byteLess(a: String, b: String) =
+      java.util.Arrays.compareUnsigned(utf8(a), utf8(b)) < 0
+    var utf16Differs = false
+    samples(unicodeCorpus, 4).foreach { lines =>
+      val files = toFiles(lines, 2)
+      val want = lines.distinct.sortWith(byteLess)
+      utf16Differs ||= lines.distinct.sorted != want
+      Seq(1, 3, 7).foreach { p =>
+        val got = TextPipeline.wordCount(spark, files, numPartitions = p)
+          .collect().map(_.getString(0)).toSeq
+        assert(got == want, s"p=$p corpus=$lines")
+      }
+    }
+    assert(utf16Differs, "no corpus told UTF-8 byte order from UTF-16 order")
+  }
+
   test("distinctSorted == sorted distinct model; idempotent under re-distinct") {
     samples(corpus, 5).foreach { lines =>
       val files = toFiles(lines, 2)

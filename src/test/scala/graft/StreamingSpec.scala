@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.EventStreams
@@ -220,8 +221,10 @@ class StreamingSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     Seq(ev(1, "10:00"), ev(2, "10:30")).toDF()
       .write.mode("overwrite").parquet(dir)
-    val q = EventStreams.hourlyWindowedAgg(
-      EventStreams.readEventStream(spark, dir))
+    var stream: DataFrame = null
+    val jobs = jobsDuring { stream = EventStreams.readEventStream(spark, dir) }
+    assert(jobs == 0, s"building the stream launched $jobs Spark jobs")
+    val q = EventStreams.hourlyWindowedAgg(stream)
       .writeStream.format("memory").queryName("file_stream").outputMode("complete").start()
     try {
       q.processAllAvailable()

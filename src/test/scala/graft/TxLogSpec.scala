@@ -813,6 +813,26 @@ class TxLogSpec extends SparkSpec {
       s"pre-evolution slice must read the new column as null: $got")
   }
 
+  test("evolution: an evolving append to a PARTITIONED BY table records its values") {
+    val t = freshTable("evo-part")
+    val rows = Seq(("de", 1L), ("en", 2L)).toDF("lang", "v")
+    TxLog.createTablePartitioned(spark, t, rows.schema, Seq("lang"))
+    TxLog.append(spark, t, rows)
+    TxLog.appendEvolve(spark, t,
+      Seq(("de", 3L, "x"), ("fr", 4L, "y")).toDF("lang", "v", "note"))
+    val live = TxLog.snapshotFiles(spark, t)
+    val pv = TxLog.partitionValuesAt(spark, t, "lang")
+    assert(live.size == 4 && live.toSet == pv.keySet,
+      s"every file must record its declared partition value: $pv")
+    val (kept, total) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    assert(total == 4 && kept.toSet == pv.collect { case (f, "de") => f }.toSet,
+      s"a partition probe must keep only the de files: kept $kept of $pv")
+    val got = TxLog.read(spark, t).collect()
+      .map(r => (r.getString(0), r.getLong(1), Option(r.getString(2)))).toSet
+    assert(got == Set(("de", 1L, None), ("en", 2L, None),
+      ("de", 3L, Some("x")), ("fr", 4L, Some("y"))))
+  }
+
   test("evolution: two concurrent evolvers — one wins, or the loser aborts; never silent loss") {
     val t = freshTable("evo-race")
     TxLog.append(spark, t, Seq((1L, "a")).toDF("id", "s"))
