@@ -11,7 +11,10 @@ import graft.functions.FunctionBuilders
   * Registers the engine's native expressions so they are callable from
   * both the Column API (`expr("simhash64(...)")`) and plain SQL, and
   * injects the [[graft.plans.BroadcastBoundedDims]] optimizer rule
-  * (bounded dims broadcast even when the query author forgot the hint).
+  * (bounded dims broadcast even when the query author forgot the hint)
+  * and the [[graft.plans.SmallSortOnePartition]] AQE runtime rule (a
+  * global sort over a measured input of at most one advisory partition
+  * sorts in a single partition, with no range-sampling job).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -22,6 +25,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         (children: Seq[Expression]) => builder(children)))
     }
     ext.injectOptimizerRule(_ => graft.plans.BroadcastBoundedDims)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSortOnePartition)
     // transparent MV routing: a matching fresh aggregate over a source
     // table serves from its registered materialized view instead
     // (opt-in via spark.graft.mv.route; correct-first — stale or

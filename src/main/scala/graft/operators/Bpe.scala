@@ -263,7 +263,7 @@ object Bpe {
     merges.orderBy("step").coalesce(1).write.mode("overwrite").parquet(dir)
 
   def loadVocab(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    T.parquet(spark, dir)
 
   /** PRODUCTION encode: apply a learned merge table of ANY depth via
     * the native `bpe_apply` expression — the vocabulary ships once as

@@ -472,7 +472,7 @@ object Similarity {
     * bit-for-bit; [[qsPqRecall]] runs the stored path under the
     * driver's gate. */
   def loadPqIndex(spark: SparkSession, dir: String): PqIndex = {
-    val rows = spark.read.parquet(s"$dir/codebook")
+    val rows = T.parquet(spark, s"$dir/codebook")
       .select("subspace", "code", "center").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     require(rows.nonEmpty, s"loadPqIndex: empty codebook at $dir/codebook")
@@ -481,7 +481,7 @@ object Similarity {
       rows.filter(_._1 == s).sortBy(_._2).map(_._3)
     }
     val model = PqModel(m, codebooks.head.head.length, codebooks)
-    PqIndex(model, spark.read.parquet(s"$dir/codes"))
+    PqIndex(model, T.parquet(spark, s"$dir/codes"))
   }
 
   /** The declarative HOF encode, kept as the differential oracle for
@@ -593,7 +593,7 @@ object Similarity {
   /** Load a stored IVF-PQ index; SimilaritySpec pins save→load→serve ≡
     * the freshly-built path bit-for-bit. */
   def loadIvfPqIndex(spark: SparkSession, dir: String): IvfPqIndex = {
-    val cents = spark.read.parquet(s"$dir/centroids")
+    val cents = T.parquet(spark, s"$dir/centroids")
       .select("cl", "cv").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
     require(cents.nonEmpty, s"loadIvfPqIndex: empty centroids at $dir/centroids")

@@ -87,9 +87,9 @@ object TextIndex {
   final case class Handle(postings: DataFrame, df: DataFrame, stats: DataFrame)
 
   def load(spark: SparkSession, dir: String): Handle = Handle(
-    spark.read.parquet(s"$dir/postings"),
-    spark.read.parquet(s"$dir/df"),
-    spark.read.parquet(s"$dir/stats"))
+    graft.sources.Tables.parquet(spark, s"$dir/postings"),
+    graft.sources.Tables.parquet(spark, s"$dir/df"),
+    graft.sources.Tables.parquet(spark, s"$dir/stats"))
 
   /** Score a (query_id, term) workload from the stored index — no
     * corpus access. `terms` are collected driver-side (bounded by the

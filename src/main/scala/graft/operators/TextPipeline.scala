@@ -17,6 +17,9 @@ object TextPipeline {
     * Canonical output (what the reference's parser prints): `key count`
     * lines sorted by key. Counts are summed per map task before the
     * shuffle (sum is associative), so the reducer sums partial counts.
+    * The final `orderBy("key")` costs one shuffle and no range-sampling
+    * job while the reduced output is at most one advisory partition:
+    * [[graft.plans.SmallSortOnePartition]] sorts it in a single partition.
     */
   def wordCount(
       spark: SparkSession,

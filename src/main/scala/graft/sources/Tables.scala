@@ -41,10 +41,13 @@ object Tables {
     */
   val broadcastable: Set[String] = Set("region", "nation")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema read from a footer
+    * ([[footerSchema]]) instead of inferred by a Spark job. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(footerSchema(spark, path)).parquet(path)
-  }
 
   /** The schema `spark.read.parquet(path)` would infer, read on the
     * driver from one footer instead of by a Spark job. The footer is the

@@ -100,7 +100,10 @@ class BpeSpec extends SparkSpec {
     for (steps <- Seq(3, 16)) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-vocab$steps").toString
       Bpe.saveVocab(Bpe.learnMerges(docs, steps), dir)
-      val stored = rows(Bpe.encodeWith(docs, Bpe.loadVocab(spark, dir)))
+      var vocab: org.apache.spark.sql.DataFrame = null
+      assert(jobsDuring { vocab = Bpe.loadVocab(spark, dir) } == 0,
+        "the vocab schema comes from its parquet footer, not an inference job")
+      val stored = rows(Bpe.encodeWith(docs, vocab))
       val inOrder = rows(Bpe.encode(docs, steps))
       assert(stored == inOrder,
         s"steps=$steps first diff: ${stored.zip(inOrder).find(p => p._1 != p._2)}")

@@ -196,15 +196,16 @@ class MapReduceApiSpec extends SparkSpec {
     }
   }
 
-  test("job counts: distinctSorted at P = 4 runs 2 jobs, wordCount 4") {
+  test("job counts: distinctSorted at P = 4 runs 2 jobs, wordCount 3") {
     val files = Seq(
       textFile((0 until 2000).map(i => (i * 2147483L % 4294967296L).toString)),
       textFile((0 until 2000).map(i => (i * 7 % 500).toString)))
     // one shuffle map job and one result job: no range sampling, no
     // second shuffle for a global sort
     assert(jobsDuring(graft.operators.TextPipeline.distinctSorted(spark, files, 4).collect()) == 2)
-    // wordCount keeps its orderBy("key"): sampling plus a second shuffle
-    assert(jobsDuring(graft.operators.TextPipeline.wordCount(spark, files, 4).collect()) == 4)
+    // wordCount keeps its orderBy("key") and its second shuffle, but the
+    // small reduced output sorts in one partition: no range-sampling job
+    assert(jobsDuring(graft.operators.TextPipeline.wordCount(spark, files, 4).collect()) == 3)
   }
 
   private val sumValues: (String, Iterator[String]) => Iterator[(String, String)] =

@@ -144,7 +144,9 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-pq-store").toString
     val built = Similarity.buildPqIndex(e, m = 8, nbits = 4)
     Similarity.savePqIndex(built, dir)
-    val loaded = Similarity.loadPqIndex(spark, dir)
+    var loaded: Similarity.PqIndex = null
+    // one job, the codebook collect: both schemas come from parquet footers
+    assert(jobsDuring { loaded = Similarity.loadPqIndex(spark, dir) } == 1)
     // model round-trips exactly: same shape, bit-equal centroids
     assert(loaded.model.m == built.model.m && loaded.model.subDim == built.model.subDim)
     (loaded.model.codebooks zip built.model.codebooks).foreach { case (ls, bs) =>
@@ -185,7 +187,9 @@ class SimilaritySpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-store").toString
     val built = Similarity.buildIvfPqIndex(e, nlist = 8, m = 8, nbits = 4)
     Similarity.saveIvfPqIndex(built, dir)
-    val loaded = Similarity.loadIvfPqIndex(spark, dir)
+    var loaded: Similarity.IvfPqIndex = null
+    // two jobs, the centroid and codebook collects: no schema inference
+    assert(jobsDuring { loaded = Similarity.loadIvfPqIndex(spark, dir) } == 2)
     assert(loaded.centroids.map(_._1) == built.centroids.map(_._1))
     (loaded.centroids zip built.centroids).foreach { case ((_, lc), (_, bc)) =>
       assert(lc == bc) }

@@ -40,6 +40,13 @@ abstract class SparkSpec extends AnyFunSuite {
   val sfTiny = "/root/testdata/sf0.001"
   val sfSmall = "/root/testdata/sf0.01"
 
+  /** Runs `body` with the session conf `k` set to `v`, then restores it. */
+  def withConf[T](k: String, v: String)(body: => T): T = {
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
   /** Spark jobs started while `body` runs: a listener counts job starts
     * between two sentinel jobs (listener events arrive in order, so once
     * the closing sentinel's start is seen, every earlier start was). */

@@ -36,12 +36,6 @@ class TablesSpec extends SparkSpec {
     loaded
   }
 
-  private def withConf[T](k: String, v: String)(body: => T): T = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-  }
-
   Seq("sfTiny" -> sfTiny, "sfSmall" -> sfSmall).foreach { case (label, sf) =>
     test(s"every $label table loads with the inferred schema and rows, launching no job") {
       Tables.all.foreach(assertLoadsLikeInference(sf, _))
