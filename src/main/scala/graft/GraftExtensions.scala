@@ -13,8 +13,8 @@ import graft.functions.FunctionBuilders
   * injects the [[graft.plans.BroadcastBoundedDims]] optimizer rule
   * (bounded dims broadcast even when the query author forgot the hint)
   * and the [[graft.plans.SmallSortOnePartition]] AQE runtime rule (a
-  * global sort over a measured input of at most one advisory partition
-  * sorts in a single partition, with no range-sampling job).
+  * global sort over a measured input that AQE would coalesce to one
+  * partition sorts in a single partition, with no range-sampling job).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -18,8 +18,10 @@ object TextPipeline {
     * lines sorted by key. Counts are summed per map task before the
     * shuffle (sum is associative), so the reducer sums partial counts.
     * The final `orderBy("key")` costs one shuffle and no range-sampling
-    * job while the reduced output is at most one advisory partition:
-    * [[graft.plans.SmallSortOnePartition]] sorts it in a single partition.
+    * job while AQE would coalesce the reduced output to one partition (at
+    * most `spark.sql.adaptive.coalescePartitions.minPartitionSize`, 1 MB
+    * by default): [[graft.plans.SmallSortOnePartition]] sorts it in a
+    * single partition.
     */
   def wordCount(
       spark: SparkSession,

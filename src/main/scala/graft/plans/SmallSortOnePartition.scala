@@ -1,29 +1,42 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Repartition, Sort, Tail}
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, GlobalLimit, LocalLimit, LogicalPlan, Offset, Project, Repartition, Sort, Tail}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.internal.SQLConf
 
 /** Injected AQE runtime optimizer rule ([[graft.GraftExtensions]]): a
-  * global sort whose input is already measured and at most one advisory
-  * partition (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) sorts in
-  * a single partition instead of range-partitioning.
+  * global sort whose measured input AQE's partition coalescer would pack
+  * into one partition anyway sorts in a single partition instead of
+  * range-partitioning.
   *
   * A global sort plans a range exchange, and a range exchange first runs
   * a sampling job that recomputes the whole stage below it to pick its
-  * bounds. For an input that fits in one advisory partition, AQE would
-  * give the sort about one partition's worth of work anyway; one
-  * `SinglePartition` shuffle satisfies the sort's `OrderedDistribution`
-  * with no sampling job, and the shuffle count stays the same.
+  * bounds. When AQE would then coalesce that exchange to one partition,
+  * one `SinglePartition` shuffle satisfies the sort's
+  * `OrderedDistribution` with the same single task, no sampling job, and
+  * the same shuffle count.
   *
-  * The size must come from runtime statistics: the rule fires only when
-  * every leaf below the sort is a materialized query stage. A sort over
-  * a raw scan (an estimate) keeps its range exchange. A sort under a
-  * limit is left alone, so `orderBy(...).limit(k)` still plans
-  * `TakeOrderedAndProject`. The rewrite is idempotent across AQE's
-  * re-optimizations: a sort already over a one-partition repartition, or
-  * over the query stage that repartition became, is not rewritten again.
+  * The bound is the coalescer's own. With
+  * `spark.sql.adaptive.coalescePartitions.parallelismFirst` (Spark's
+  * default, kept by [[graft.GraftSession]]) AQE splits an input larger
+  * than `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB by
+  * default) across the default parallelism, so that is the bound; without
+  * it, the larger of that size and
+  * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. With coalescing off
+  * the rule does not fire.
+  *
+  * The stages below the sort are measured: the rule fires only when every
+  * leaf of its input is a materialized query stage, so a sort over a raw
+  * scan keeps its range exchange. The operators between the stages and
+  * the sort are sized by Spark's estimate, the one AQE also uses to pick
+  * broadcast joins; it assumes a unary operator emits no more rows than it
+  * reads, so a sort over a `Generate` (`explode` and kin, which multiply
+  * rows) keeps its range exchange too. A sort under a limit is left alone,
+  * so `orderBy(...).limit(k)` still plans `TakeOrderedAndProject`. The
+  * rewrite is idempotent across AQE's re-optimizations: a sort already
+  * over a one-partition repartition, or over the query stage that
+  * repartition became, is not rewritten again.
   */
 object SmallSortOnePartition extends Rule[LogicalPlan] {
 
@@ -46,10 +59,19 @@ object SmallSortOnePartition extends Rule[LogicalPlan] {
       case _ => false
     }
     !onePartition &&
+      conf.coalesceShufflePartitionsEnabled &&
       child.collectLeaves().forall {
         case q: LogicalQueryStage => q.isMaterialized
         case _ => false
       } &&
-      child.stats.sizeInBytes <= conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      child.find(_.isInstanceOf[Generate]).isEmpty &&
+      child.stats.sizeInBytes <= onePartitionBytes
+  }
+
+  /** The largest shuffle input AQE's coalescer packs into one partition. */
+  private def onePartitionBytes: Long = {
+    val minSize = conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+    if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST)) minSize
+    else minSize max conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
   }
 }

@@ -5,13 +5,16 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Limit, Repartition, Sort}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper,
   LogicalQueryStage, ShuffleQueryStageExec}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, explode, lit, sequence}
 import graft.plans.SmallSortOnePartition
 
 /** [[graft.plans.SmallSortOnePartition]]: a global sort over a measured
-  * input of at most one advisory partition sorts in a single partition,
-  * with no range-sampling job. Every other sort keeps its plan: an input
-  * above the advisory size, an unmeasured scan, a sort under a limit. */
+  * input that AQE's coalescer would pack into one partition sorts in a
+  * single partition, with no range-sampling job. Every other sort keeps
+  * its plan: an input the coalescer would spread (above minPartitionSize
+  * under parallelismFirst, above the advisory size without it), coalescing
+  * off, a row-multiplying Generate above the stages, an unmeasured scan, a
+  * sort under a limit. */
 class SmallSortOnePartitionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Spark's own switch for AQE optimizer rules turns the rule off. */
@@ -49,11 +52,48 @@ class SmallSortOnePartitionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(jobs == offJobs - 1, s"jobs $jobs with the rule, $offJobs without")
   }
 
-  test("does not fire: an input above the advisory partition size keeps its range exchange") {
-    val (rows, _, plan) =
-      withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16")(run(counts))
+  private val MinSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+  private val Advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+  private val ParallelismFirst = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+
+  test("does not fire: under parallelismFirst, an input above minPartitionSize and below the advisory size keeps its range exchange") {
+    // AQE spreads this input over the default parallelism, so the sort
+    // and what follows it keep their parallel tasks
+    assert(spark.conf.get(ParallelismFirst) == "true")
+    val (rows, _, plan) = withConf(MinSize, "64")(run(counts))
     assert(plan.contains("rangepartitioning"), plan)
     assert(pairs(rows) == model)
+  }
+
+  test("without parallelismFirst the bound is the advisory size") {
+    withConf(ParallelismFirst, "false") {
+      withConf(MinSize, "64") {
+        val (rows, _, plan) = run(counts)
+        assert(!plan.contains("rangepartitioning"), plan)
+        assert(pairs(rows) == model)
+        val (aboveRows, _, abovePlan) = withConf(Advisory, "64")(run(counts))
+        assert(abovePlan.contains("rangepartitioning"), abovePlan)
+        assert(pairs(aboveRows) == model)
+      }
+    }
+  }
+
+  test("does not fire: with partition coalescing off the sort keeps its range exchange") {
+    val (rows, _, plan) = withConf("spark.sql.adaptive.coalescePartitions.enabled", "false")(run(counts))
+    assert(plan.contains("rangepartitioning"), plan)
+    assert(pairs(rows) == model)
+  }
+
+  test("does not fire: a sort over explode of a small measured stage keeps its range exchange") {
+    // Spark sizes a Generate at its input, whatever rows it emits
+    val exploded = spark.range(0, 50)
+      .select((col("id") % 7).as("k")).groupBy("k").count()
+      .select(col("k"), explode(sequence(lit(1), lit(200))).as("i"))
+      .orderBy("k", "i")
+    val (rows, _, plan) = run(exploded)
+    assert(plan.contains("rangepartitioning"), plan)
+    assert(rows.map(r => (r.getLong(0), r.getInt(1))) ==
+      (for (k <- 0L until 7L; i <- 1 to 200) yield (k, i)))
   }
 
   test("does not fire: a sort over an unmeasured scan (q40_scalar_subquery) keeps its plan") {
