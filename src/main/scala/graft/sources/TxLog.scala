@@ -509,26 +509,27 @@ object TxLog {
       metaPayload(IdentityKeyPrefix + name, s"$startWith|$stepBy|$startWith"))
   }
 
+  /** `df` without identity column `name`. A batch CARRYING non-null
+    * values for it is rejected — GENERATED ALWAYS means the engine owns
+    * the value. `what` names the batch in the error. */
+  private def withoutIdentity(df: DataFrame, name: String,
+                              what: String = "batch"): DataFrame =
+    if (!df.columns.contains(name)) df
+    else {
+      val nonNull = df.agg(org.apache.spark.sql.functions.count(name)).head().getLong(0)
+      require(nonNull == 0L,
+        s"txlog: $what carries $nonNull explicit values for identity " +
+          s"column '$name' — it is GENERATED ALWAYS AS IDENTITY")
+      df.drop(name)
+    }
+
   /** Mint ids for one identity column over the whole batch: global
     * zipWithIndex (one extra count job — the price of a contiguous
     * reservation), values `next + i·step`, appended as the declared
-    * LongType field. A batch CARRYING non-null values is rejected —
-    * GENERATED ALWAYS means the engine owns the value. */
+    * LongType field ([[withoutIdentity]] vets the batch first). */
   private def assignIdentityIds(df: DataFrame, name: String, next: Long,
                                 step: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-    val base =
-      if (!df.columns.contains(name)) df
-      else {
-        val r = df.agg(
-          sum(when(col(name).isNotNull, 1L).otherwise(0L)).as("nn"),
-          count(lit(1)).as("n")).head()
-        val nonNull = if (r.isNullAt(0)) 0L else r.getLong(0)
-        require(nonNull == 0L,
-          s"txlog: batch carries $nonNull explicit values for identity " +
-            s"column '$name' — it is GENERATED ALWAYS AS IDENTITY")
-        df.drop(name)
-      }
+    val base = withoutIdentity(df, name)
     val schema2 = base.schema.add(name, org.apache.spark.sql.types.LongType,
       nullable = true)
     val rdd = base.rdd.zipWithIndex().map { case (row, i) =>
@@ -584,6 +585,17 @@ object TxLog {
     * data PATH (the log claim, not the path, decides who wins). */
   private def uniq(): String =
     java.util.UUID.randomUUID.toString.substring(0, 8)
+
+  /** Runs a writer's `body` with every Spark job it launches described
+    * as `txlog:<op> <table>@v<n>`, n being the version the writer
+    * commits on top of `snap`; the caller's description is restored. */
+  private def withJobTag[T](spark: SparkSession, op: String, table: String,
+                            snap: Snapshot)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"txlog:$op $table@v${snap.version + 1}")
+    try body finally sc.setJobDescription(prior)
+  }
 
   /** Parse one commit/checkpoint line of the fixed two-field format —
     * validated, so a corrupt or reordered line fails LOUDLY with the
@@ -1784,7 +1796,8 @@ object TxLog {
     * commit at all invalidates an OVERWRITE (serializable "replace the
     * table as I read it"). On abort the orphaned data files are
     * deleted and [[TxLogConcurrentModificationException]] is thrown —
-    * no commit was made. */
+    * no commit was made. `checkpoint = false` leaves the checkpoint to
+    * the caller, so a failure here means the commit did not land. */
   private[graft] def commitRewrite(spark: SparkSession, table: String,
                                    baseVersion: Long, adds: Seq[String],
                                    removes: Seq[String], tag: String,
@@ -1794,7 +1807,8 @@ object TxLog {
                                    dvs: Seq[String] = Seq.empty,
                                    extraTxns: Seq[(String, Long)] = Seq.empty,
                                    schemaB64: Option[String] = None,
-                                   metas: Seq[String] = Seq.empty): Long = {
+                                   metas: Seq[String] = Seq.empty,
+                                   checkpoint: Boolean = true): Long = {
     // every data-landing commit records its files' row counts and sizes
     // ([[landedLines]]); rewrites funnel here, appends through appendCommit
     val statsAll = stats ++ landedLines(spark, table, adds)
@@ -1840,7 +1854,7 @@ object TxLog {
       }
       v = math.max(v + 1, latest + 1)
     }
-    maybeCheckpoint(spark, table, v)
+    if (checkpoint) maybeCheckpoint(spark, table, v)
     v
   }
 
@@ -3207,85 +3221,88 @@ object TxLog {
                      lo: Long, hi: Long): Long = {
     import org.apache.spark.sql.functions.col
     val snap = latestSnapshot(spark, table, "delete")
-    val base = snap.version
     val touched = keepRanges(snap, Seq((statsCol, lo, hi)))
-    if (touched.isEmpty) return base // no file can contain a match
-    // positions of the rows to delete, addressed physically: the raw
-    // per-file row index (NOT dv-filtered — positions of already-deleted
-    // rows may re-match; the union dedups them). Raw = physical schema
-    // and physical predicate name (the _metadata struct needs the
-    // un-projected scan)
-    val newPos = scanFiles(spark, table, touched, snap.schema, snap.sizes)
-      .filter(col(snap.physical(statsCol))
-        .between(lo, hi))
-      .select(col("_metadata.file_name").as("file"),
-        col("_metadata.row_index").as("pos"))
-    bindDeletionVectors(spark, table, snap, newPos, touched)
+    if (touched.isEmpty) return snap.version // no file can contain a match
+    withJobTag(spark, "delete", table, snap) {
+      // positions of the rows to delete, addressed physically: the raw
+      // per-file row index (NOT dv-filtered — positions of already-deleted
+      // rows may re-match; the union dedups them). Raw = physical schema
+      // and physical predicate name (the _metadata struct needs the
+      // un-projected scan)
+      val newPos = scanFiles(spark, table, touched, snap.schema, snap.sizes)
+        .filter(col(snap.physical(statsCol)).between(lo, hi))
+        .select(col("_metadata.file_name").as("file"),
+          col("_metadata.row_index").as("pos"))
+      bindDeletionVectors(spark, table, snap, newPos, touched)
+    }
   }
 
-  /** The MOR-delete commit tail shared by the range and free-predicate
-    * flavors: union the new (file, pos) matches with the prior vectors
-    * of every re-masked file in `scope`, write ONE sidecar, and commit
-    * dv bindings for exactly the files that have matches. Returns the
-    * committed version, or `base` unchanged when nothing matched. */
+  /** The merge-on-read commit tail every deletion-vector writer shares:
+    * union the new (file, pos) matches with the prior vectors of every
+    * re-masked file in `scope`, write ONE sidecar, and commit dv
+    * bindings for exactly the files with a new match, plus the images
+    * the caller wrote (`adds`, one directory). Returns the committed
+    * version, or `base` unchanged when nothing matched and there are no
+    * images. Any failure before the commit lands (a lost race included)
+    * deletes the sidecar and the images, so neither is left orphaned. */
   private def bindDeletionVectors(spark: SparkSession, table: String,
                                   snap: Snapshot, newPosRaw: DataFrame,
                                   scope: Seq[String],
                                   adds: Seq[String] = Seq.empty,
                                   tag: String = "delete",
-                                  commitOnNoMatch: Boolean = false,
                                   schemaB64: Option[String] = None,
                                   metas: Seq[String] = Seq.empty): Long = {
-    import org.apache.spark.sql.functions.{col, lit, max, sum}
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{col, collect_set, lit, max, when}
     val base = snap.version
-    val oldDvs = snap.liveDvs
-    val scopeNames = scope.map(p => p.split('/').last)
     // prior vectors for the re-masked files ride into the new vector,
     // so "last binding wins" stays exact
-    val oldPos = oldDvs.filter { case (f, _) => scope.contains(f) }
+    val oldPos = snap.liveDvs.filter { case (f, _) => scope.contains(f) }
       .values.toSeq.distinct match {
       case Nil => None
       case dirs => Some(dvScan(spark, table, snap, dirs)
-        .filter(col("file").isin(scopeNames: _*)))
+        .filter(col("file").isin(scope.map(_.split('/').last): _*)))
     }
-    // ONE materialization for the whole commit tail (r17, guide §1.2/§2.4):
-    // tag new-vs-prior, dedup per (file, pos) keeping the tag, checkpoint;
-    // a single collect of the per-file tag sums then answers BOTH probes
-    // the r16 shape paid four actions for (newPos checkpoint + isEmpty +
-    // allPos checkpoint + match-map collect) — "any new match?" is a
-    // positive tag sum anywhere, and the match map is the collected file
-    // set itself (bounded by touched files). The masked-position scan
-    // still runs exactly once, at the checkpoint; the sidecar write
-    // re-reads checkpointed blocks, never the table.
     val tagged = oldPos.fold(newPosRaw.withColumn("_n", lit(1)))(op =>
       newPosRaw.withColumn("_n", lit(1))
         .unionByName(op.withColumn("_n", lit(0))))
-    val allPos = tagged.groupBy(col("file"), col("pos"))
-      .agg(max(col("_n")).as("_n"))
-      .localCheckpoint(true) // consumed twice: the match probe and the write
-    val perFile = allPos.groupBy(col("file"))
-      .agg(sum(col("_n")).as("_new")).collect()
-    if (!perFile.exists(_.getLong(1) > 0L)) {
-      // no superseded row: a delete no-ops; a merge still lands its
-      // appended images (pure-insert batch) as one tagged commit
-      if (!commitOnNoMatch || adds.isEmpty) return base
-      return commitRewrite(spark, table, base, adds, Seq.empty, tag,
-        new Path(table, adds.head).getParent, schemaB64 = schemaB64,
-        metas = metas)
-    }
-    val matchedFiles = perFile.map(_.getString(0)).toSet
+    val imageDir = adds.headOption.map(a => new Path(table, a).getParent)
+    def discard(dirs: Seq[Path]): Unit = dirs.foreach(d => fs(spark, d).delete(d, true))
+    val matched = Observation()
     val rel = f"data/v${base + 1}%08d-dv-${uniq()}"
     val dvDir = new Path(table, rel)
-    allPos.select("file", "pos").repartition(1).write.parquet(dvDir.toString)
-    val bindings = scope
-      .filter(p => matchedFiles.contains(p.split('/').last))
-      .map(p => s"$p|$rel")
-    // the sidecar's files ride in the log with their sizes, so a masked
-    // read scans them without listing the dir ([[dvScan]])
-    val sidecar = writtenFiles(spark, table, rel)
-      .map(f => sizeLine(f, footerOf(spark, new Path(table, f))))
-    commitRewrite(spark, table, base, adds, Seq.empty, tag, dvDir,
-      stats = sidecar, dvs = bindings, schemaB64 = schemaB64, metas = metas)
+    // Two jobs: the shuffle of new and prior positions into one partition
+    // (which already satisfies the per-(file, pos) dedup, so no second
+    // exchange is planned), and the sidecar write, whose observation
+    // reports the files that gained a new position. Any failure before
+    // the commit lands deletes the sidecar and the images; the checkpoint
+    // runs after, so a failure there deletes nothing the log references.
+    val v = try {
+      tagged.repartition(1)
+        .groupBy(col("file"), col("pos")).agg(max(col("_n")).as("_n"))
+        .observe(matched, collect_set(when(col("_n") === 1, col("file"))).as("files"))
+        .select("file", "pos").write.parquet(dvDir.toString)
+      val matchedFiles = matched.get("files").asInstanceOf[Seq[String]].toSet
+      if (matchedFiles.isEmpty) {
+        // no superseded row: the sidecar goes; a delete no-ops, a merge
+        // still lands its appended images (pure-insert batch)
+        discard(Seq(dvDir))
+        imageDir.fold(base)(dir => commitRewrite(spark, table, base, adds,
+          Seq.empty, tag, dir, schemaB64 = schemaB64, metas = metas, checkpoint = false))
+      } else {
+        val bindings = scope
+          .filter(p => matchedFiles.contains(p.split('/').last))
+          .map(p => s"$p|$rel")
+        // the sidecar's files ride in the log with their sizes, so a
+        // masked read scans them without listing the dir ([[dvScan]])
+        val sidecar = writtenFiles(spark, table, rel)
+          .map(f => sizeLine(f, footerOf(spark, new Path(table, f))))
+        commitRewrite(spark, table, base, adds, Seq.empty, tag, dvDir, stats = sidecar,
+          dvs = bindings, schemaB64 = schemaB64, metas = metas, checkpoint = false)
+      }
+    } catch { case e: Throwable => discard(dvDir +: imageDir.toSeq); throw e }
+    if (v != base) maybeCheckpoint(spark, table, v)
+    v
   }
 
   /** MOR DELETE with a FREE predicate over the table's logical columns
@@ -3299,12 +3316,14 @@ object TxLog {
                          predicateSql: String): Long = {
     import org.apache.spark.sql.functions.{col, expr}
     val snap = latestSnapshot(spark, table, "delete")
-    // positions of already-deleted rows may re-match: the union with the
-    // prior vectors dedups them
-    val newPos = addressedRows(spark, table, snap)
-      .filter(expr(predicateSql))
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    bindDeletionVectors(spark, table, snap, newPos, snap.files)
+    withJobTag(spark, "delete", table, snap) {
+      // positions of already-deleted rows may re-match: the union with
+      // the prior vectors dedups them
+      val newPos = addressedRows(spark, table, snap)
+        .filter(expr(predicateSql))
+        .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+      bindDeletionVectors(spark, table, snap, newPos, snap.files)
+    }
   }
 
   /** REPLACE WHERE (the public Delta `INSERT INTO … REPLACE WHERE` /
@@ -3328,48 +3347,42 @@ object TxLog {
     * MatView folds it. */
   def replaceWhere(spark: SparkSession, table: String, df: DataFrame,
                    predicateSql: String): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit, not}
     val snap = latestSnapshot(spark, table, "merge")
-    val base = snap.version
-    // identity: explicit values rejected (GENERATED ALWAYS), fresh ids
-    // minted for every image — all images are NEW rows by definition
-    val idCols = snap.identities.toSeq.sortBy(_._1)
-    val cleaned = idCols.foldLeft(df) { case (acc, (n, _)) =>
-      if (!acc.columns.contains(n)) acc
-      else {
-        val r = acc.agg(sum(when(col(n).isNotNull, 1L).otherwise(0L))).head()
-        val nonNull = if (r.isNullAt(0)) 0L else r.getLong(0)
-        require(nonNull == 0L,
-          s"txlog: REPLACE WHERE batch carries $nonNull explicit values " +
-            s"for identity column '$n' — it is GENERATED ALWAYS AS IDENTITY")
-        acc.drop(n)
+    withJobTag(spark, "replace-where", table, snap) {
+      val base = snap.version
+      // identity: explicit values rejected (GENERATED ALWAYS), fresh ids
+      // minted for every image — all images are NEW rows by definition
+      val idCols = snap.identities.toSeq.sortBy(_._1)
+      val cleaned = idCols.foldLeft(df) { case (acc, (n, _)) =>
+        withoutIdentity(acc, n, "REPLACE WHERE batch")
       }
+      val images0 = applyGeneratedColumns(table, snap, cleaned, "merge")
+      requireFitsDeclared(snap, images0, "merge")
+      requireSatisfiesConstraints(table, snap, images0, "merge")
+      val outside = images0
+        .filter(not(coalesce(expr(predicateSql), lit(false)))).count()
+      require(outside == 0L,
+        s"txlog: $outside incoming rows fall OUTSIDE the REPLACE WHERE " +
+          s"slice ($predicateSql) — a backfill must stay inside the slice " +
+          "it replaces, or it silently duplicates rows it did not erase")
+      val images = idCols.foldLeft(images0) { case (acc, (n, (_, st, nx))) =>
+        assignIdentityIds(acc, n, nx, st)
+      }
+      val nImg = if (idCols.isEmpty) 0L else images.count()
+      val idMetas = idCols.map { case (n, (s0, st, nx)) =>
+        metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + nImg * st}")
+      }
+      val rel = f"data/v${base + 1}%08d-replace-${uniq()}"
+      physicalize(images, snap.schema).write.parquet(new Path(table, rel).toString)
+      val adds = writtenFiles(spark, table, rel)
+      // addresses of the replaced slice — the deleteWhereMorExpr scan
+      val newPos = addressedRows(spark, table, snap)
+        .filter(expr(predicateSql))
+        .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+      bindDeletionVectors(spark, table, snap, newPos, snap.files, adds = adds,
+        tag = "merge", metas = idMetas)
     }
-    val images0 = applyGeneratedColumns(table, snap, cleaned, "merge")
-    requireFitsDeclared(snap, images0, "merge")
-    requireSatisfiesConstraints(table, snap, images0, "merge")
-    val outside = images0
-      .filter(not(coalesce(expr(predicateSql), lit(false)))).count()
-    require(outside == 0L,
-      s"txlog: $outside incoming rows fall OUTSIDE the REPLACE WHERE " +
-        s"slice ($predicateSql) — a backfill must stay inside the slice " +
-        "it replaces, or it silently duplicates rows it did not erase")
-    val images = idCols.foldLeft(images0) { case (acc, (n, (_, st, nx))) =>
-      assignIdentityIds(acc, n, nx, st)
-    }
-    val nImg = if (idCols.isEmpty) 0L else images.count()
-    val idMetas = idCols.map { case (n, (s0, st, nx)) =>
-      metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + nImg * st}")
-    }
-    val rel = f"data/v${base + 1}%08d-replace-${uniq()}"
-    physicalize(images, snap.schema).write.parquet(new Path(table, rel).toString)
-    val adds = writtenFiles(spark, table, rel)
-    // addresses of the replaced slice — the deleteWhereMorExpr scan
-    val newPos = addressedRows(spark, table, snap)
-      .filter(expr(predicateSql))
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    bindDeletionVectors(spark, table, snap, newPos, snap.files, adds = adds,
-      tag = "merge", commitOnNoMatch = true, metas = idMetas)
   }
 
   /** The rows of `files` under their logical names ALONGSIDE the
@@ -3392,25 +3405,23 @@ object TxLog {
     }
   }
 
-  /** The live-row universe at `base`, addressed for MOR writes: logical
-    * column names plus the physical address columns
-    * (`_g_dv_file`, `_g_dv_pos`), prior deletion vectors anti-applied
-    * with scanLive's per-file scoping (rows of files a later restore
-    * UNBOUND stay live), so a dead physical copy can neither re-mask nor
-    * re-image. Every MOR write (UPDATE / conditional MERGE) derives its
-    * masks and images from this frame. */
-  private def liveAddressed(spark: SparkSession, table: String,
-                            snap: Snapshot): DataFrame = {
+  /** The live rows of `addressed` (rows carrying the address columns
+    * `_g_dv_file`, `_g_dv_pos`, as [[addressedRows]] does), prior
+    * deletion vectors anti-applied with scanLive's per-file scoping
+    * (rows of files a later restore UNBOUND stay live), so a dead
+    * physical copy can neither re-mask nor re-image. Every MOR write
+    * (UPDATE / MERGE) derives its masks and images from this frame. */
+  private def liveAddressed(spark: SparkSession, table: String, snap: Snapshot,
+                            addressed: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val logical = addressedRows(spark, table, snap)
     val priorDvs = snap.liveDvs
-    if (priorDvs.isEmpty) logical else {
+    if (priorDvs.isEmpty) addressed else {
       val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
       val dvRows = dvScan(spark, table, snap, priorDvs.values.toSeq)
         .filter(col("file").isin(boundNames: _*))
-      logical.join(broadcast(dvRows),
-        logical("_g_dv_file") === dvRows("file") &&
-          logical("_g_dv_pos") === dvRows("pos"), "left_anti")
+      addressed.join(broadcast(dvRows),
+        addressed("_g_dv_file") === dvRows("file") &&
+          addressed("_g_dv_pos") === dvRows("pos"), "left_anti")
     }
   }
 
@@ -3421,8 +3432,13 @@ object TxLog {
     * .MatView]] folds it signed). `sets` assigns LOGICAL columns from
     * SQL expressions over the row's logical view (`n = n + 1` works).
     * Zero data files rewritten, moved, or removed — the SQL `UPDATE`
-    * shape at 100 TB. Probe-first: no matching row, no commit.
-    * Serializable like a merge (the mask is derived against `base`). */
+    * shape at 100 TB. No matching row, no commit: the image write
+    * counts the matched rows, and on zero its output is deleted.
+    * Serializable like a merge (the mask is derived against `base`).
+    *
+    * Jobs: the prior vectors' broadcast for each of the two scans of
+    * `matched` (the image write, and [[bindDeletionVectors]]' shuffle),
+    * those two, and the sidecar write. */
   def updateMorExpr(spark: SparkSession, table: String, predicateSql: String,
                     sets: Seq[(String, String)]): Long = {
     import org.apache.spark.sql.functions.{col, expr}
@@ -3430,78 +3446,88 @@ object TxLog {
     require(sets.map(_._1).distinct.size == sets.size,
       s"txlog: a column is assigned twice (${sets.map(_._1).mkString(", ")})")
     val snap = latestSnapshot(spark, table, "update")
-    val base = snap.version
-    val declared = snap.schema
-    val logicalCols = declared.map(_.fieldNames.toSeq).getOrElse(
-      inferredSchema(spark, table, snap.files).fieldNames.toSeq)
-    sets.foreach { case (c, _) => require(logicalCols.contains(c),
-      s"txlog: UPDATE assigns unknown column '$c' " +
-        s"(table has: ${logicalCols.mkString(", ")})") }
-    // the matched subframe feeds BOTH the mask and the images; prior
-    // deletion vectors anti-apply ([[liveAddressed]]) so an
-    // already-deleted row can neither re-mask nor re-image
-    val matched = liveAddressed(spark, table, snap).filter(expr(predicateSql))
-    val newPos = matched
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    if (newPos.isEmpty) return base // probe-first: nothing matched
-    // ONE projection, so every RHS binds to the PRE-update row — SQL
-    // UPDATE semantics. A foldLeft of withColumn would let a later
-    // assignment's RHS see an earlier assignment's NEW value
-    // (`SET a = b, b = a` must swap, not duplicate)
-    val setsByCol = sets.toMap
-    // GENERATED ALWAYS: assignment is forbidden (SQL standard) and the
-    // stored values are RECOMPUTED from the updated images — dropping
-    // them first makes applyGeneratedColumns take its compute path, so
-    // an update to a source column can never leave a stale derivation
-    val gens = snap.gens.keySet
-    sets.foreach { case (c, _) => require(!gens.contains(c),
-      s"txlog: cannot assign to generated column '$c' — it is " +
-        "GENERATED ALWAYS and recomputed from its expression") }
-    // identity ids are STABLE under update: images carry the existing
-    // values; only assignment to the column itself is forbidden
-    val idents = snap.identities.keySet
-    sets.foreach { case (c, _) => require(!idents.contains(c),
-      s"txlog: cannot assign to identity column '$c' — it is " +
-        "GENERATED ALWAYS AS IDENTITY") }
-    val images = applyGeneratedColumns(table, snap,
-      matched.select(logicalCols.map(c =>
-        setsByCol.get(c).map(v => expr(v).as(c)).getOrElse(col(c))): _*)
-        .drop(gens.toSeq: _*),
-      "update")
-    requireFitsDeclared(snap, images, "update")
-    requireSatisfiesConstraints(table, snap, images, "update")
-    val rel = f"data/v${base + 1}%08d-update-${uniq()}"
-    val dataDir = new Path(table, rel)
-    physicalize(images, declared).write.parquet(dataDir.toString)
-    val adds = writtenFiles(spark, table, rel)
-    try bindDeletionVectors(spark, table, snap, newPos, snap.files,
-      adds = adds, tag = "merge", commitOnNoMatch = true)
-    catch { case e: Throwable =>
-      fs(spark, dataDir).delete(dataDir, true) // no orphans on a lost race
-      throw e
+    withJobTag(spark, "update", table, snap) {
+      val base = snap.version
+      val declared = snap.schema
+      val logicalCols = declared.map(_.fieldNames.toSeq).getOrElse(
+        inferredSchema(spark, table, snap.files).fieldNames.toSeq)
+      sets.foreach { case (c, _) => require(logicalCols.contains(c),
+        s"txlog: UPDATE assigns unknown column '$c' " +
+          s"(table has: ${logicalCols.mkString(", ")})") }
+      // the matched subframe feeds BOTH the mask and the images; prior
+      // deletion vectors anti-apply ([[liveAddressed]]) so an
+      // already-deleted row can neither re-mask nor re-image
+      val matched = liveAddressed(spark, table, snap, addressedRows(spark, table, snap))
+        .filter(expr(predicateSql))
+      val newPos = matched
+        .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+      // ONE projection, so every RHS binds to the PRE-update row — SQL
+      // UPDATE semantics. A foldLeft of withColumn would let a later
+      // assignment's RHS see an earlier assignment's NEW value
+      // (`SET a = b, b = a` must swap, not duplicate)
+      val setsByCol = sets.toMap
+      // GENERATED ALWAYS: assignment is forbidden (SQL standard) and the
+      // stored values are RECOMPUTED from the updated images — dropping
+      // them first makes applyGeneratedColumns take its compute path, so
+      // an update to a source column can never leave a stale derivation
+      val gens = snap.gens.keySet
+      sets.foreach { case (c, _) => require(!gens.contains(c),
+        s"txlog: cannot assign to generated column '$c' — it is " +
+          "GENERATED ALWAYS and recomputed from its expression") }
+      // identity ids are STABLE under update: images carry the existing
+      // values; only assignment to the column itself is forbidden
+      val idents = snap.identities.keySet
+      sets.foreach { case (c, _) => require(!idents.contains(c),
+        s"txlog: cannot assign to identity column '$c' — it is " +
+          "GENERATED ALWAYS AS IDENTITY") }
+      val images = applyGeneratedColumns(table, snap,
+        matched.select(logicalCols.map(c =>
+          setsByCol.get(c).map(v => expr(v).as(c)).getOrElse(col(c))): _*)
+          .drop(gens.toSeq: _*),
+        "update")
+      requireFitsDeclared(snap, images, "update")
+      requireSatisfiesConstraints(table, snap, images, "update")
+      // nothing matched: no image, no commit
+      val adds = writeImages(spark, table, snap, "update", physicalize(images, declared))
+      if (adds.isEmpty) base
+      else bindDeletionVectors(spark, table, snap, newPos, snap.files,
+        adds = adds, tag = "merge")
     }
+  }
+
+  /** Writes `images` to a fresh `data/v<n>-<kind>-…` directory and
+    * returns its files. The write's own observation counts the rows: an
+    * empty write is deleted and returns no file. */
+  private def writeImages(spark: SparkSession, table: String, snap: Snapshot,
+                          kind: String, images: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.Observation
+    import org.apache.spark.sql.functions.{count, lit}
+    val rel = f"data/v${snap.version + 1}%08d-$kind-${uniq()}"
+    val dir = new Path(table, rel)
+    val written = Observation()
+    images.observe(written, count(lit(1)).as("rows")).write.parquet(dir.toString)
+    if (written.get("rows") != 0L) writtenFiles(spark, table, rel)
+    else { fs(spark, dir).delete(dir, true); Seq.empty }
   }
 
   /** MOR DELETE of every row whose key appears in `keys` — the
     * delete-by-id-list (GDPR erasure) shape: one broadcast semi-join
     * scan for positions, kilobytes of deletion vector written, zero
     * data files rewritten. `WHEN MATCHED THEN DELETE` merges and the
-    * library's id-list erasure both land here. Probe-first: keys that
-    * match nothing commit nothing. */
+    * library's id-list erasure both land here. Keys that match nothing
+    * commit nothing: the sidecar write finds no new position, and the
+    * sidecar is deleted. */
   def deleteKeysMor(spark: SparkSession, table: String, keys: DataFrame,
                     keyCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.{broadcast, col}
     require(keyCols.nonEmpty, "txlog: deleteKeysMor needs key columns")
     val snap = latestSnapshot(spark, table, "delete")
-    val pKeys = keyCols.map(snap.physical)
-    val batchKeys = physicalize(keys.select(keyCols.map(col): _*).distinct(),
-      snap.schema)
-    val newPos = scanFiles(spark, table, snap.files, snap.schema, snap.sizes)
-      .withColumn("_g_dv_file", col("_metadata.file_name"))
-      .withColumn("_g_dv_pos", col("_metadata.row_index"))
-      .join(broadcast(batchKeys), pKeys, "left_semi")
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    bindDeletionVectors(spark, table, snap, newPos, snap.files)
+    withJobTag(spark, "delete-keys", table, snap) {
+      val newPos = addressedRows(spark, table, snap)
+        .join(broadcast(keys.select(keyCols.map(col): _*).distinct()), keyCols, "left_semi")
+        .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+      bindDeletionVectors(spark, table, snap, newPos, snap.files)
+    }
   }
 
   /** RESTORE the table to the state of `toVersion` as a NEW commit —
@@ -4129,176 +4155,173 @@ object TxLog {
     import org.apache.spark.sql.functions.{broadcast, col, count, lit}
     require(keys.nonEmpty, "txlog: mergeMor needs at least one key column")
     val snap = latestSnapshot(spark, table, "merge")
-    val base = snap.version
-    // identity columns (r16): a MERGE is the default upsert idiom on an
-    // identity table — matched keys KEEP their existing id untouched
-    // (joined back from the same address scan that computes the mask),
-    // not-matched keys mint fresh ids against the high-water observed
-    // at `base`, and the advanced high-water rides INSIDE the merge
-    // commit. Race-proof without a re-mint loop because a merge is
-    // serializable: commitRewrite aborts on ANY intervening commit, so
-    // the commit landing at base+1 PROVES no other writer advanced the
-    // sequence since we read it. Keying ON an identity column is
-    // rejected — GENERATED ALWAYS means a source can never legitimately
-    // carry the ids an upsert-by-id would need.
-    val idCols = snap.identities.toSeq.sortBy(_._1)
-    idCols.foreach { case (n, _) => require(!keys.contains(n),
-      s"txlog: merge into $table cannot key on identity column '$n' — " +
-        "it is GENERATED ALWAYS AS IDENTITY, so a merge source never " +
-        "legitimately carries its values; key on the natural key instead") }
-    val cleaned = idCols.foldLeft(updatesIn) { case (acc, (n, _)) =>
-      if (!acc.columns.contains(n)) acc
-      else {
-        import org.apache.spark.sql.functions.{sum, when}
-        val r = acc.agg(sum(when(col(n).isNotNull, 1L).otherwise(0L))).head()
-        val nonNull = if (r.isNullAt(0)) 0L else r.getLong(0)
-        require(nonNull == 0L,
-          s"txlog: merge batch carries $nonNull explicit values for " +
-            s"identity column '$n' — it is GENERATED ALWAYS AS IDENTITY")
-        acc.drop(n)
+    withJobTag(spark, "merge", table, snap) {
+      val base = snap.version
+      // identity columns (r16): a MERGE is the default upsert idiom on an
+      // identity table — matched keys KEEP their existing id untouched
+      // (joined back from the same address scan that computes the mask),
+      // not-matched keys mint fresh ids against the high-water observed
+      // at `base`, and the advanced high-water rides INSIDE the merge
+      // commit. Race-proof without a re-mint loop because a merge is
+      // serializable: commitRewrite aborts on ANY intervening commit, so
+      // the commit landing at base+1 PROVES no other writer advanced the
+      // sequence since we read it. Keying ON an identity column is
+      // rejected — GENERATED ALWAYS means a source can never legitimately
+      // carry the ids an upsert-by-id would need.
+      val idCols = snap.identities.toSeq.sortBy(_._1)
+      idCols.foreach { case (n, _) => require(!keys.contains(n),
+        s"txlog: merge into $table cannot key on identity column '$n' — " +
+          "it is GENERATED ALWAYS AS IDENTITY, so a merge source never " +
+          "legitimately carries its values; key on the natural key instead") }
+      val cleaned = idCols.foldLeft(updatesIn) { case (acc, (n, _)) =>
+        withoutIdentity(acc, n, "merge batch")
       }
-    }
-    // complete/validate generated columns BEFORE evolution sees the
-    // batch schema — a merge image must land the stored derivation
-    val updates = applyGeneratedColumns(table, snap, cleaned, "merge")
-    // `evolve` (r15): `MERGE WITH SCHEMA EVOLUTION` — the batch's extra
-    // columns are ADDED to the declared schema (old files read them as
-    // null) and its wider numeric types WIDEN it (old files read
-    // promoted), under exactly [[evolveSchema]]'s contract; anything
-    // incompatible fails loudly before any write. The schema action
-    // rides INSIDE the merge commit, so the evolution is atomic with
-    // the data that introduced it and time travel reads each version's
-    // own schema. Without the flag, a batch beyond the declared schema
-    // stays a loud error (requireFitsDeclared) — evolution is opt-in.
-    val evolution: Option[StructType] = if (!evolve) {
-      requireFitsDeclared(snap, updates, "merge")
-      None
-    } else {
-      val cur = snap.schema.getOrElse(inferredSchema(spark, table, snap.files))
-      keys.foreach(k => require(cur.fieldNames.contains(k),
-        s"txlog: merge key '$k' is not a column of $table — a merge " +
-          "cannot key on a column the evolution itself introduces"))
-      val evolved = evolveSchema(cur, updates.schema)
-      val needsDeclare = snap.schema match {
-        case Some(d) => evolved != d
-        case None => evolved != StructType(cur.fields.map(_.copy(nullable = true)))
-      }
-      if (!needsDeclare) {
+      // complete/validate generated columns BEFORE evolution sees the
+      // batch schema — a merge image must land the stored derivation
+      val updates = applyGeneratedColumns(table, snap, cleaned, "merge")
+      // `evolve` (r15): `MERGE WITH SCHEMA EVOLUTION` — the batch's extra
+      // columns are ADDED to the declared schema (old files read them as
+      // null) and its wider numeric types WIDEN it (old files read
+      // promoted), under exactly [[evolveSchema]]'s contract; anything
+      // incompatible fails loudly before any write. The schema action
+      // rides INSIDE the merge commit, so the evolution is atomic with
+      // the data that introduced it and time travel reads each version's
+      // own schema. Without the flag, a batch beyond the declared schema
+      // stays a loud error (requireFitsDeclared) — evolution is opt-in.
+      val evolution: Option[StructType] = if (!evolve) {
         requireFitsDeclared(snap, updates, "merge")
         None
-      } else Some(evolved)
-    }
-    requireSatisfiesConstraints(table, snap, updates, "merge")
-    val dup = updates.groupBy(keys.map(col): _*).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"txlog: merge batch names key (${dup.headOption.map(_.mkString(", "))
-        .getOrElse("")}) more than once — a merge must name each key once")
-    // bloom-accelerated address scan (r16): when the leading key column
-    // carries per-file filters ([[Layout.bloom]]), skip every file
-    // whose filter excludes ALL batch keys — no false negatives means a
-    // skipped file holds zero superseded rows, so the mask, the
-    // duplicate guard, and the identity join-back are unaffected; the
-    // merge's scan cost tracks the TOUCHED files, not the table. Capped
-    // at [[MaxMergeBloomProbes]] distinct keys (beyond that the
-    // driver-side membership sweep stops paying for itself).
-    val liveAll = snap.files
-    val live = {
-      // hash through the TABLE's key type: a legally narrower batch key
-      // (upcast at physicalize time) must probe as the stored type, or
-      // a hash mismatch would skip files that DO hold matches
-      val keyType = evolution.orElse(snap.schema)
-        .flatMap(_.fields.find(_.name == keys.head)).map(_.dataType)
-      keyType match {
-        case None => liveAll // undeclared legacy table: no safe probe type
-        case Some(t) =>
-          val filters = bloomFiltersIn(spark, table, snap, keys.head)
-          lazy val hashes = updates.select(bloomHash(col(keys.head), t)).distinct()
-            .limit(MaxMergeBloomProbes + 1).collect().map(_.getLong(0)).toSeq
-          if (filters.isEmpty || hashes.length > MaxMergeBloomProbes) liveAll
-          else keepBloom(snap, filters, hashes)
+      } else {
+        val cur = snap.schema.getOrElse(inferredSchema(spark, table, snap.files))
+        keys.foreach(k => require(cur.fieldNames.contains(k),
+          s"txlog: merge key '$k' is not a column of $table — a merge " +
+            "cannot key on a column the evolution itself introduces"))
+        val evolved = evolveSchema(cur, updates.schema)
+        val needsDeclare = snap.schema match {
+          case Some(d) => evolved != d
+          case None => evolved != StructType(cur.fields.map(_.copy(nullable = true)))
+        }
+        if (!needsDeclare) {
+          requireFitsDeclared(snap, updates, "merge")
+          None
+        } else Some(evolved)
       }
-    }
-    // under an evolution the EVOLVED schema governs every read and
-    // write below: old files scan with the new columns null / the
-    // widened types promoted (the same read path a declared ADD
-    // COLUMN produces), and the images land physicalized to it
-    val declared = evolution.orElse(snap.schema)
-    // positions of the superseded rows: physical scan (the _metadata
-    // struct needs the un-projected scan) + broadcast semi-join on the
-    // batch's keys — the 100 TB side never shuffles
-    val raw = scanFiles(spark, table, live, declared, snap.sizes)
-    val pKeys = keys.map(snap.physical)
-    val batchKeys = physicalize(updates.select(keys.map(col): _*).distinct(),
-      declared)
-    // the hidden _metadata struct resolves only on the scan itself —
-    // materialize the address columns BEFORE the semi-join
-    val addressed = raw
-      .withColumn("_g_dv_file", col("_metadata.file_name"))
-      .withColumn("_g_dv_pos", col("_metadata.row_index"))
-      .join(broadcast(batchKeys), pKeys, "left_semi")
-    // LIVE matched rows only (prior vectors anti-applied, per-file like
-    // scanLive): dead physical copies from earlier merges must neither
-    // trip the duplicate guard below nor depend on harmless re-masking
-    val priorDvs = snap.liveDvs
-    val liveMatched = (if (priorDvs.isEmpty) addressed else {
-      val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
-      val dvRows = dvScan(spark, table, snap, priorDvs.values.toSeq)
-        .filter(col("file").isin(boundNames: _*))
-      addressed.join(broadcast(dvRows),
-        addressed("_g_dv_file") === dvRows("file") &&
-          addressed("_g_dv_pos") === dvRows("pos"), "left_anti")
-    }).select(pKeys.map(col) ++
-        idCols.map { case (n, _) =>
-          col(snap.physical(n)).as(s"_g_id_$n")
-        } ++ Seq(col("_g_dv_file"), col("_g_dv_pos")): _*)
-      .localCheckpoint(true) // narrow (keys+ids+address), consumed twice:
-    // the guard and the mask. A keyed merge on a DUPLICATE-keyed target
-    // would silently collapse the copies into one image — fail loudly
-    // instead (SQL MERGE keeps every copy; this engine's merge is the
-    // CDC one-image-per-key upsert, and the two must never blur silently)
-    import org.apache.spark.sql.functions.countDistinct
-    val guard = liveMatched
-      .agg(count(lit(1)), countDistinct(pKeys.head, pKeys.tail: _*)).head()
-    val (posCnt, keyCnt) = (guard.getLong(0), guard.getLong(1))
-    require(posCnt == keyCnt,
-      s"txlog: merge matched $posCnt live rows across $keyCnt keys — " +
-        s"$table carries duplicate-keyed rows a keyed merge would " +
-        "collapse; deduplicate first (exactDedup / deleteKeysMor)")
-    val newPos = liveMatched
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    // identity fill: matched keys inherit their existing id from the
-    // address scan (broadcast key→id map, batch-sized); unmatched keys
-    // mint [next, next + n·step) — the commit carries the advance
-    val (images, idMetas) = if (idCols.isEmpty) (updates, Seq.empty[String])
-    else {
-      val keyIds = liveMatched.select(
-        keys.zip(pKeys).map { case (l, p) => col(p).as(l) } ++
-          idCols.map { case (n, _) => col(s"_g_id_$n").as(n) }: _*)
-      val enriched = updates.join(broadcast(keyIds), keys, "left")
-      val firstId = idCols.head._1
-      val toMint = enriched.filter(col(firstId).isNull)
-        .drop(idCols.map(_._1): _*)
-      val kept = enriched.filter(col(firstId).isNotNull)
-      val mintN = toMint.count()
-      val minted = idCols.foldLeft(toMint) { case (acc, (n, (_, st, nx))) =>
-        assignIdentityIds(acc, n, nx, st)
+      requireSatisfiesConstraints(table, snap, updates, "merge")
+      // Jobs, in order: the batch's key counts (a shuffle and its
+      // collect); the bloom sidecar read, if the key column has filters;
+      // the broadcasts of the batch keys and of any prior vectors; the
+      // address scan's collect; the identity-mint count, on an identity
+      // table; the image write; and bindDeletionVectors' two. The key
+      // counts are collected once: a key named twice fails here, and the
+      // rows are the address join's broadcast side.
+      val keyCountPlan = updates.groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as("_g_n"))
+      val keyCounts = keyCountPlan.collect()
+      val dup = keyCounts.find(_.getLong(keys.size) > 1L)
+      require(dup.isEmpty,
+        s"txlog: merge batch names key (${dup.map(_.mkString(", "))
+          .getOrElse("")}) more than once — a merge must name each key once")
+      val batchKeyRows = spark.createDataFrame(
+        java.util.Arrays.asList(keyCounts: _*), keyCountPlan.schema).drop("_g_n")
+      // bloom-accelerated address scan (r16): when the leading key column
+      // carries per-file filters ([[Layout.bloom]]), skip every file
+      // whose filter excludes ALL batch keys — no false negatives means a
+      // skipped file holds zero superseded rows, so the mask, the
+      // duplicate guard, and the identity join-back are unaffected; the
+      // merge's scan cost tracks the TOUCHED files, not the table. Capped
+      // at [[MaxMergeBloomProbes]] distinct keys (beyond that the
+      // driver-side membership sweep stops paying for itself).
+      val liveAll = snap.files
+      val live = {
+        // hash through the TABLE's key type: a legally narrower batch key
+        // (upcast at physicalize time) must probe as the stored type, or
+        // a hash mismatch would skip files that DO hold matches
+        val keyType = evolution.orElse(snap.schema)
+          .flatMap(_.fields.find(_.name == keys.head)).map(_.dataType)
+        keyType match {
+          case None => liveAll // undeclared legacy table: no safe probe type
+          case Some(t) =>
+            val filters = bloomFiltersIn(spark, table, snap, keys.head)
+            // a projection of the local key rows: evaluated on the driver
+            lazy val hashes = batchKeyRows.select(bloomHash(col(keys.head), t))
+              .collect().map(_.getLong(0)).distinct.toSeq
+            if (filters.isEmpty || hashes.length > MaxMergeBloomProbes) liveAll
+            else keepBloom(snap, filters, hashes)
+        }
       }
-      (kept.unionByName(minted), idCols.map { case (n, (s0, st, nx)) =>
-        metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + mintN * st}")
-      })
-    }
-    // new images land as appended files regardless of match state
-    val rel = f"data/v${base + 1}%08d-merge-${uniq()}"
-    val dataDir = new Path(table, rel)
-    physicalize(images, declared).write.parquet(dataDir.toString)
-    val adds = writtenFiles(spark, table, rel)
-    try bindDeletionVectors(spark, table, snap, newPos, live,
-      adds = adds, tag = "merge", commitOnNoMatch = true,
-      schemaB64 = evolution.map(encodeSchema), metas = idMetas)
-    catch { case e: Throwable =>
-      fs(spark, dataDir).delete(dataDir, true) // no orphans on a lost race
-      throw e
+      // under an evolution the EVOLVED schema governs every read and
+      // write below: old files scan with the new columns null / the
+      // widened types promoted (the same read path a declared ADD
+      // COLUMN produces), and the images land physicalized to it
+      val declared = evolution.orElse(snap.schema)
+      // positions of the superseded rows: physical scan (the _metadata
+      // struct needs the un-projected scan) + broadcast semi-join on the
+      // batch's keys — the 100 TB side never shuffles
+      val raw = scanFiles(spark, table, live, declared, snap.sizes)
+      val pKeys = keys.map(snap.physical)
+      val batchKeys = physicalize(batchKeyRows, declared)
+      // the hidden _metadata struct resolves only on the scan itself —
+      // materialize the address columns BEFORE the semi-join
+      val addressed = raw
+        .withColumn("_g_dv_file", col("_metadata.file_name"))
+        .withColumn("_g_dv_pos", col("_metadata.row_index"))
+        .join(broadcast(batchKeys), pKeys, "left_semi")
+      // LIVE matched rows only (prior vectors anti-applied, per-file like
+      // scanLive): dead physical copies from earlier merges must neither
+      // trip the duplicate guard below nor depend on harmless re-masking
+      val liveMatchedPlan = liveAddressed(spark, table, snap, addressed)
+        .select(pKeys.map(col) ++ idCols.map { case (n, _) =>
+          col(snap.physical(n)).as(s"_g_id_$n") } ++
+          Seq(col("_g_dv_file"), col("_g_dv_pos")): _*)
+      // narrow (keys + ids + address), collected once for the guard, the
+      // mask and the identity join-back. A keyed merge on a DUPLICATE-keyed
+      // target would silently collapse the copies into one image — fail
+      // loudly instead (SQL MERGE keeps every copy; this merge is the CDC
+      // one-image-per-key upsert). Every match carries a batch key, so more
+      // matches than keys proves a duplicate: no partition ships past that.
+      val nKeys = keyCounts.length
+      val liveRows = liveMatchedPlan.rdd.mapPartitions(_.take(nKeys + 1)).collect()
+      val liveMatched = spark.createDataFrame(
+        java.util.Arrays.asList(liveRows: _*), liveMatchedPlan.schema)
+      val posCnt = liveRows.length
+      val keyCnt = liveRows.map(r => pKeys.indices.map(r.get(_) match {
+        case a: Array[_] => a.toSeq // binary keys compare by content
+        case v => v
+      })).distinct.length
+      require(posCnt <= nKeys && posCnt == keyCnt, "txlog: merge matched " +
+        (if (posCnt > nKeys) s"more than $nKeys live rows for $nKeys batch keys"
+        else s"$posCnt live rows across $keyCnt keys") + s" — $table carries " +
+        "duplicate-keyed rows a keyed merge would collapse; deduplicate " +
+        "first (exactDedup / deleteKeysMor)")
+      val newPos = liveMatched
+        .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+      // identity fill: matched keys inherit their existing id from the
+      // address scan (broadcast key→id map, batch-sized); unmatched keys
+      // mint [next, next + n·step) — the commit carries the advance
+      val (images, idMetas) = if (idCols.isEmpty) (updates, Seq.empty[String])
+      else {
+        val keyIds = liveMatched.select(
+          keys.zip(pKeys).map { case (l, p) => col(p).as(l) } ++
+            idCols.map { case (n, _) => col(s"_g_id_$n").as(n) }: _*)
+        val enriched = updates.join(broadcast(keyIds), keys, "left")
+        val firstId = idCols.head._1
+        val toMint = enriched.filter(col(firstId).isNull)
+          .drop(idCols.map(_._1): _*)
+        val kept = enriched.filter(col(firstId).isNotNull)
+        val mintN = toMint.count()
+        val minted = idCols.foldLeft(toMint) { case (acc, (n, (_, st, nx))) =>
+          assignIdentityIds(acc, n, nx, st)
+        }
+        (kept.unionByName(minted), idCols.map { case (n, (s0, st, nx)) =>
+          metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + mintN * st}")
+        })
+      }
+      // new images land as appended files regardless of match state
+      val rel = f"data/v${base + 1}%08d-merge-${uniq()}"
+      physicalize(images, declared).write.parquet(new Path(table, rel).toString)
+      bindDeletionVectors(spark, table, snap, newPos, live,
+        adds = writtenFiles(spark, table, rel), tag = "merge",
+        schemaB64 = evolution.map(encodeSchema), metas = idMetas)
     }
   }
 
@@ -4322,8 +4345,8 @@ object TxLog {
     * images appended, zero files rewritten — so the change feed and
     * [[graft.operators.MatView]]'s signed fold treat it identically.
     * SQL cardinality rule enforced: two source rows firing for the same
-    * target row fail loudly (never a silent double-image). Probe-first:
-    * nothing fired, nothing committed.
+    * target row fail loudly (never a silent double-image). Nothing fired,
+    * nothing committed (an image write that counts no row is deleted).
     *
     * `residual` (r15) extends the ON beyond key equality: match =
     * `keys equal AND residual`, where residual is SQL over the merge
@@ -4343,7 +4366,7 @@ object TxLog {
     * batch (the matched side joins src in; the not-matched side
     * anti-joins src's row ids against the pair join's matched ids, a
     * ≤|src| frame — never a distinct of the 100 TB side's keys, r14
-    * advice); masks and images are batch-sized. */
+    * advice); masks and images scale with the fired rows. */
   def mergeMorConditional(spark: SparkSession, table: String,
                           source: DataFrame, keys: Seq[String],
                           matched: Seq[MergeMatchedClause],
@@ -4367,212 +4390,199 @@ object TxLog {
     keys.foreach(k => require(source.columns.contains(k),
       s"txlog: merge source carries no key column '$k'"))
     val snap = latestSnapshot(spark, table, "merge")
-    val base = snap.version
-    // identity columns (r16): matched/by-source images keep the target
-    // row's id untouched (they project the target's columns, so the id
-    // rides through — SET naming it is rejected below, mirroring MOR
-    // UPDATE); not-matched INSERT images mint fresh ids against the
-    // high-water at `base`, whose advance rides inside the merge commit
-    // — serializable like mergeMor, so no re-mint loop is needed.
-    val idCols = snap.identities.toSeq.sortBy(_._1)
-    val idents = idCols.map(_._1).toSet
-    idCols.foreach { case (n, _) => require(!keys.contains(n),
-      s"txlog: merge into $table cannot key on identity column '$n' — " +
-        "it is GENERATED ALWAYS AS IDENTITY; key on the natural key") }
-    val live = snap.files
-    val declared = snap.schema
-    val target = liveAddressed(spark, table, snap)
-    val tgtSchema = org.apache.spark.sql.types.StructType(
-      target.schema.filterNot(f => f.name.startsWith("_g_dv_")))
-    val logicalCols = tgtSchema.fieldNames.toSeq
-    require(logicalCols.forall(c => !c.startsWith("_src_")),
-      "txlog: conditional merge reserves the _src_ column prefix")
-    (matched ++ bySource).foreach {
-      case MergeMatchedUpdate(_, sets) =>
-        require(sets.nonEmpty, "txlog: UPDATE clause assigns no column")
-        sets.foreach { case (c, _) =>
+    withJobTag(spark, "merge", table, snap) {
+      val base = snap.version
+      // identity columns (r16): matched/by-source images keep the target
+      // row's id untouched (they project the target's columns, so the id
+      // rides through — SET naming it is rejected below, mirroring MOR
+      // UPDATE); not-matched INSERT images mint fresh ids against the
+      // high-water at `base`, whose advance rides inside the merge commit
+      // — serializable like mergeMor, so no re-mint loop is needed.
+      val idCols = snap.identities.toSeq.sortBy(_._1)
+      val idents = idCols.map(_._1).toSet
+      idCols.foreach { case (n, _) => require(!keys.contains(n),
+        s"txlog: merge into $table cannot key on identity column '$n' — " +
+          "it is GENERATED ALWAYS AS IDENTITY; key on the natural key") }
+      val live = snap.files
+      val declared = snap.schema
+      val target = liveAddressed(spark, table, snap, addressedRows(spark, table, snap))
+      val tgtSchema = org.apache.spark.sql.types.StructType(
+        target.schema.filterNot(f => f.name.startsWith("_g_dv_")))
+      val logicalCols = tgtSchema.fieldNames.toSeq
+      require(logicalCols.forall(c => !c.startsWith("_src_")),
+        "txlog: conditional merge reserves the _src_ column prefix")
+      (matched ++ bySource).foreach {
+        case MergeMatchedUpdate(_, sets) =>
+          require(sets.nonEmpty, "txlog: UPDATE clause assigns no column")
+          sets.foreach { case (c, _) =>
+            require(logicalCols.contains(c),
+              s"txlog: merge UPDATE assigns unknown column '$c'")
+            require(!idents.contains(c),
+              s"txlog: merge cannot assign to identity column '$c' — it is " +
+                "GENERATED ALWAYS AS IDENTITY (matched rows keep their id)") }
+        case _: MergeMatchedDelete => ()
+      }
+      notMatched.foreach { ins =>
+        require(ins.values.nonEmpty, "txlog: INSERT clause assigns no column")
+        ins.values.foreach { case (c, _) =>
           require(logicalCols.contains(c),
-            s"txlog: merge UPDATE assigns unknown column '$c'")
+            s"txlog: merge INSERT assigns unknown column '$c'")
           require(!idents.contains(c),
-            s"txlog: merge cannot assign to identity column '$c' — it is " +
-              "GENERATED ALWAYS AS IDENTITY (matched rows keep their id)") }
-      case _: MergeMatchedDelete => ()
-    }
-    notMatched.foreach { ins =>
-      require(ins.values.nonEmpty, "txlog: INSERT clause assigns no column")
-      ins.values.foreach { case (c, _) =>
-        require(logicalCols.contains(c),
-          s"txlog: merge INSERT assigns unknown column '$c'")
-        require(!idents.contains(c),
-          s"txlog: merge INSERT cannot name identity column '$c' — it is " +
-            "GENERATED ALWAYS AS IDENTITY (inserted rows mint fresh ids)") }
-    }
-    // the source, namespaced: every column rides as _src_<name>, plus a
-    // per-row id (_g_src_rid) the not-matched classification keys on —
-    // under a residual ON, "this source row matched" is not a function
-    // of its key columns alone. Tiny relative to the target at 100 TB —
-    // broadcast both joins below.
-    val src = source.select(
-      source.columns.map(c => col(c).as(s"_src_$c")).toSeq: _*)
-      .withColumn("_g_src_rid", monotonically_increasing_id())
-      .localCheckpoint(true) // pin the ids: both classification joins
-    // must see the SAME id per row, and the source may be nondeterministic
-    def fireCol(conds: Seq[Option[String]]): org.apache.spark.sql.Column =
-      // first-true-wins: clause i fires iff its condition is true and no
-      // earlier clause's was (NULL conditions read as false, SQL WHEN)
-      conds.zipWithIndex.foldRight(lit(-1)) { case ((c, i), rest) =>
-        when(coalesce(c.map(expr).getOrElse(lit(true)), lit(false)),
-          lit(i)).otherwise(rest)
+            s"txlog: merge INSERT cannot name identity column '$c' — it is " +
+              "GENERATED ALWAYS AS IDENTITY (inserted rows mint fresh ids)") }
       }
-    // ---- matched side: pair join (broadcast hash on the equi keys,
-    // residual as its non-equi filter), fire, mask + update images (an
-    // insert-only merge constant-folds this side to empty — the
-    // lit(false) filter keeps the target from being scanned for it) ----
-    val equiCond = keys.map(k => target(k) === src(s"_src_$k"))
-      .reduceOption(_ && _)
-    val joinCond = (equiCond, residual.map(expr)) match {
-      case (Some(e), Some(r)) => e && r
-      case (Some(e), None) => e
-      case (None, Some(r)) => r // pure-theta: broadcast nested loop
-      case (None, None) => lit(false) // unreachable (require above)
-    }
-    val fired = target.join(broadcast(src), joinCond, "inner")
-      .withColumn("_g_fire", fireCol(matched.map(_.cond)))
-      .filter(if (matched.isEmpty) lit(false) else col("_g_fire") >= 0)
-      .localCheckpoint(true) // batch-sized; guard + mask + images below
-    val guard = fired.agg(count(lit(1)),
-      countDistinct(col("_g_dv_file"), col("_g_dv_pos"))).head()
-    require(guard.getLong(0) == guard.getLong(1),
-      s"txlog: merge fired ${guard.getLong(0)} times across " +
-        s"${guard.getLong(1)} target rows — multiple source rows match " +
-        "one target row (SQL MERGE cardinality violation); deduplicate " +
-        "the source")
-    val newPos = fired
-      .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
-    val updIdx = matched.zipWithIndex.collect {
-      case (u: MergeMatchedUpdate, i) => (u.sets.toMap, i)
-    }
-    val updateImages = fired
-      .filter(col("_g_fire").isin(updIdx.map(_._2): _*))
-      .select(logicalCols.map { c =>
-        updIdx.foldRight(col(c)) { case ((sets, i), older) =>
-          sets.get(c).fold(older)(rhs =>
-            when(col("_g_fire") === i, expr(rhs)).otherwise(older))
-        }.as(c)
-      }: _*)
-    // ---- unmatched-TARGET side (WHEN NOT MATCHED BY SOURCE): the
-    // source keys broadcast into a left-anti probe of the one target
-    // scan; masks and images stay bounded by the FIRED rows, so a
-    // selective condition keeps the commit batch-sized even though the
-    // clause's domain is the whole unmatched table ----
-    val bySourceSides = if (bySource.isEmpty) None else {
-      // "no source match" under a residual ON must test the FULL ON,
-      // not just key presence — anti-join the streamed target against
-      // the broadcast source on equi+residual; without a residual the
-      // narrower distinct-keys probe keeps the broadcast minimal
-      val unmatchedTarget = residual match {
-        case None =>
-          val srcKeys = src
-            .select(keys.map(k => col(s"_src_$k").as(k)): _*).distinct()
-          target.join(broadcast(srcKeys), keys, "left_anti")
-        case Some(_) => target.join(broadcast(src), joinCond, "left_anti")
-      }
-      val firedBs = unmatchedTarget
-        .withColumn("_g_fire", fireCol(bySource.map(_.cond)))
-        .filter(col("_g_fire") >= 0)
-        .localCheckpoint(true) // consumed by the mask AND the images
-      val bsUpdIdx = bySource.zipWithIndex.collect {
-        case (u: MergeMatchedUpdate, i) => (u.sets.toMap, i)
-      }
-      val img = firedBs
-        .filter(col("_g_fire").isin(bsUpdIdx.map(_._2): _*))
-        .select(logicalCols.map { c =>
-          bsUpdIdx.foldRight(col(c)) { case ((sets, i), older) =>
-            sets.get(c).fold(older)(rhs =>
-              when(col("_g_fire") === i, expr(rhs)).otherwise(older))
-          }.as(c)
-        }: _*)
-      Some((firedBs.select(col("_g_dv_file").as("file"),
-        col("_g_dv_pos").as("pos")), img))
-    }
-    // ---- unmatched-source side: a source row is unmatched iff NO
-    // target row satisfied the full ON for it — classified by the pair
-    // join's matched source-row ids (≤|src|, broadcast), NEVER by a
-    // distinct of the target's keys (unbounded at 100 TB, and
-    // collecting it for broadcast risks driver OOM — r14 advice). The
-    // classification pass streams the target scan against the
-    // broadcast batch, prunes to the ON's columns, and shuffles
-    // nothing. ----
-    val insImages = if (notMatched.isEmpty) None else {
-      val matchedRids = target.join(broadcast(src), joinCond, "inner")
-        .select(col("_g_src_rid")).distinct()
-      val unmatched = src.join(broadcast(matchedRids), Seq("_g_src_rid"),
-        "left_anti")
-        .withColumn("_g_fire", fireCol(notMatched.map(_.cond)))
-        .filter(col("_g_fire") >= 0)
-      // r14 advice: an INSERT value whose resolved type does not WIDEN
-      // to the declared column must fail loudly BEFORE the cast below
-      // wraps/nulls it (the UPDATE path lands uncast and is checked by
-      // requireFitsDeclared; this makes the INSERT path as loud).
-      // Values bind only _src_ columns, so they resolve against src.
-      notMatched.foreach(_.values.foreach { case (c, rhs) =>
-        val f = tgtSchema(tgtSchema.fieldIndex(c))
-        val t = src.select(expr(rhs).as("_g_t")).schema.head.dataType
-        require(t == org.apache.spark.sql.types.NullType || t == f.dataType ||
-          org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(t, f.dataType),
-          s"txlog: merge INSERT value for '$c' has type " +
-            s"${t.catalogString}, which does not widen to the declared " +
-            s"${f.dataType.catalogString} — cast explicitly in the INSERT " +
-            "clause if the narrowing is intended")
-      })
-      Some(unmatched.select(tgtSchema.map { f =>
-        notMatched.zipWithIndex.foldRight(
-          lit(null).cast(f.dataType): org.apache.spark.sql.Column) {
-          case ((ins, i), older) =>
-            ins.values.toMap.get(f.name).fold(older)(rhs =>
-              when(col("_g_fire") === i, expr(rhs).cast(f.dataType))
-                .otherwise(older))
-        }.as(f.name)
-      }: _*))
-    }
-    val allPos = bySourceSides.fold(newPos)(s => newPos.unionByName(s._1))
-    val withBs = bySourceSides.fold(updateImages)(s =>
-      updateImages.unionByName(s._2))
-    // identity mint for the INSERT images only — update/by-source images
-    // carry the target row's existing id through their projection. The
-    // typed-NULL id the unassigned-column fill produced is replaced by
-    // the minted value; the high-water advance rides the merge commit.
-    val (insMinted, idMetas) =
-      if (idCols.isEmpty || insImages.isEmpty) (insImages, Seq.empty[String])
-      else {
-        val pinned = insImages.get.localCheckpoint(true) // count + write
-        val mintN = pinned.count()
-        val mintedIns = idCols.foldLeft(pinned) { case (acc, (n, (_, st, nx))) =>
-          assignIdentityIds(acc, n, nx, st)
+      // the source, namespaced: every column rides as _src_<name>, plus a
+      // per-row id (_g_src_rid) the not-matched classification keys on —
+      // under a residual ON, "this source row matched" is not a function
+      // of its key columns alone. Tiny relative to the target at 100 TB —
+      // broadcast both joins below.
+      val src = source.select(
+        source.columns.map(c => col(c).as(s"_src_$c")).toSeq: _*)
+        .withColumn("_g_src_rid", monotonically_increasing_id())
+        .localCheckpoint(true) // pin the ids: both classification joins
+      // must see the SAME id per row, and the source may be nondeterministic
+      def fireCol(conds: Seq[Option[String]]): org.apache.spark.sql.Column =
+        // first-true-wins: clause i fires iff its condition is true and no
+        // earlier clause's was (NULL conditions read as false, SQL WHEN)
+        conds.zipWithIndex.foldRight(lit(-1)) { case ((c, i), rest) =>
+          when(coalesce(c.map(expr).getOrElse(lit(true)), lit(false)),
+            lit(i)).otherwise(rest)
         }
-        (Some(mintedIns), idCols.map { case (n, (s0, st, nx)) =>
-          metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + mintN * st}")
-        })
+      // ---- matched side: pair join (broadcast hash on the equi keys,
+      // residual as its non-equi filter), fire, mask + update images (an
+      // insert-only merge constant-folds this side to empty — the
+      // lit(false) filter keeps the target from being scanned for it) ----
+      val equiCond = keys.map(k => target(k) === src(s"_src_$k"))
+        .reduceOption(_ && _)
+      val joinCond = (equiCond, residual.map(expr)) match {
+        case (Some(e), Some(r)) => e && r
+        case (Some(e), None) => e
+        case (None, Some(r)) => r // pure-theta: broadcast nested loop
+        case (None, None) => lit(false) // unreachable (require above)
       }
-    val images = applyGeneratedColumns(table, snap,
-      insMinted.fold(withBs)(withBs.unionByName(_)), "merge")
-    requireFitsDeclared(snap, images, "merge")
-    requireSatisfiesConstraints(table, snap, images, "merge")
-    if (images.isEmpty) {
-      // delete-only (or nothing-fired) batch: mask without images (no
-      // insert fired, so there is no identity advance to record)
-      return bindDeletionVectors(spark, table, snap, allPos, live,
-        tag = "merge")
-    }
-    val rel = f"data/v${base + 1}%08d-merge-${uniq()}"
-    val dataDir = new Path(table, rel)
-    physicalize(images, declared).write.parquet(dataDir.toString)
-    val adds = writtenFiles(spark, table, rel)
-    try bindDeletionVectors(spark, table, snap, allPos, live,
-      adds = adds, tag = "merge", commitOnNoMatch = true, metas = idMetas)
-    catch { case e: Throwable =>
-      fs(spark, dataDir).delete(dataDir, true) // no orphans on a lost race
-      throw e
+      // one source row may fire for many target rows (a low-cardinality
+      // ON), so the fired rows stay on the executors
+      val fired = target.join(broadcast(src), joinCond, "inner")
+        .withColumn("_g_fire", fireCol(matched.map(_.cond)))
+        .filter(if (matched.isEmpty) lit(false) else col("_g_fire") >= 0)
+        .localCheckpoint(true) // consumed by the guard, the mask and the images
+      val guard = fired.agg(count(lit(1)),
+        countDistinct(col("_g_dv_file"), col("_g_dv_pos"))).head()
+      require(guard.getLong(0) == guard.getLong(1),
+        s"txlog: merge fired ${guard.getLong(0)} times across " +
+          s"${guard.getLong(1)} target rows — multiple source rows match " +
+          "one target row (SQL MERGE cardinality violation); deduplicate " +
+          "the source")
+      val newPos = fired
+        .select(col("_g_dv_file").as("file"), col("_g_dv_pos").as("pos"))
+      // the images of `firedRows` whose clause (index `_g_fire`) is an
+      // UPDATE: that clause's assignments, every other column unchanged
+      def updateImagesOf(firedRows: DataFrame,
+                         clauses: Seq[MergeMatchedClause]): DataFrame = {
+        val upd = clauses.zipWithIndex.collect {
+          case (u: MergeMatchedUpdate, i) => (u.sets.toMap, i)
+        }
+        firedRows.filter(col("_g_fire").isin(upd.map(_._2): _*))
+          .select(logicalCols.map { c =>
+            upd.foldRight(col(c)) { case ((sets, i), older) =>
+              sets.get(c).fold(older)(rhs =>
+                when(col("_g_fire") === i, expr(rhs)).otherwise(older))
+            }.as(c)
+          }: _*)
+      }
+      val updateImages = updateImagesOf(fired, matched)
+      // ---- unmatched-TARGET side (WHEN NOT MATCHED BY SOURCE): the
+      // source keys broadcast into a left-anti probe of the one target
+      // scan; masks and images stay bounded by the FIRED rows, so a
+      // selective condition keeps the commit batch-sized even though the
+      // clause's domain is the whole unmatched table ----
+      val bySourceSides = if (bySource.isEmpty) None else {
+        // "no source match" under a residual ON must test the FULL ON,
+        // not just key presence — anti-join the streamed target against
+        // the broadcast source on equi+residual; without a residual the
+        // narrower distinct-keys probe keeps the broadcast minimal
+        val unmatchedTarget = residual match {
+          case None =>
+            val srcKeys = src
+              .select(keys.map(k => col(s"_src_$k").as(k)): _*).distinct()
+            target.join(broadcast(srcKeys), keys, "left_anti")
+          case Some(_) => target.join(broadcast(src), joinCond, "left_anti")
+        }
+        val firedBs = unmatchedTarget
+          .withColumn("_g_fire", fireCol(bySource.map(_.cond)))
+          .filter(col("_g_fire") >= 0)
+          .localCheckpoint(true) // consumed by the mask AND the images
+        Some((firedBs.select(col("_g_dv_file").as("file"),
+          col("_g_dv_pos").as("pos")), updateImagesOf(firedBs, bySource)))
+      }
+      // ---- unmatched-source side: a source row is unmatched iff NO
+      // target row satisfied the full ON for it — classified by the pair
+      // join's matched source-row ids (≤|src|, broadcast), NEVER by a
+      // distinct of the target's keys (unbounded at 100 TB, and
+      // collecting it for broadcast risks driver OOM — r14 advice). The
+      // classification pass streams the target scan against the
+      // broadcast batch, prunes to the ON's columns, and shuffles
+      // nothing. ----
+      val insImages = if (notMatched.isEmpty) None else {
+        val matchedRids = target.join(broadcast(src), joinCond, "inner")
+          .select(col("_g_src_rid")).distinct()
+        val unmatched = src.join(broadcast(matchedRids), Seq("_g_src_rid"),
+          "left_anti")
+          .withColumn("_g_fire", fireCol(notMatched.map(_.cond)))
+          .filter(col("_g_fire") >= 0)
+        // r14 advice: an INSERT value whose resolved type does not WIDEN
+        // to the declared column must fail loudly BEFORE the cast below
+        // wraps/nulls it (the UPDATE path lands uncast and is checked by
+        // requireFitsDeclared; this makes the INSERT path as loud).
+        // Values bind only _src_ columns, so they resolve against src.
+        notMatched.foreach(_.values.foreach { case (c, rhs) =>
+          val f = tgtSchema(tgtSchema.fieldIndex(c))
+          val t = src.select(expr(rhs).as("_g_t")).schema.head.dataType
+          require(t == org.apache.spark.sql.types.NullType || t == f.dataType ||
+            org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(t, f.dataType),
+            s"txlog: merge INSERT value for '$c' has type " +
+              s"${t.catalogString}, which does not widen to the declared " +
+              s"${f.dataType.catalogString} — cast explicitly in the INSERT " +
+              "clause if the narrowing is intended")
+        })
+        Some(unmatched.select(tgtSchema.map { f =>
+          notMatched.zipWithIndex.foldRight(
+            lit(null).cast(f.dataType): org.apache.spark.sql.Column) {
+            case ((ins, i), older) =>
+              ins.values.toMap.get(f.name).fold(older)(rhs =>
+                when(col("_g_fire") === i, expr(rhs).cast(f.dataType))
+                  .otherwise(older))
+          }.as(f.name)
+        }: _*))
+      }
+      val allPos = bySourceSides.fold(newPos)(s => newPos.unionByName(s._1))
+      val withBs = bySourceSides.fold(updateImages)(s =>
+        updateImages.unionByName(s._2))
+      // identity mint for the INSERT images only — update/by-source images
+      // carry the target row's existing id through their projection. The
+      // typed-NULL id the unassigned-column fill produced is replaced by
+      // the minted value; the high-water advance rides the merge commit.
+      val (insMinted, idMetas) =
+        if (idCols.isEmpty || insImages.isEmpty) (insImages, Seq.empty[String])
+        else {
+          val pinned = insImages.get.localCheckpoint(true) // count + write
+          val mintN = pinned.count()
+          val mintedIns = idCols.foldLeft(pinned) { case (acc, (n, (_, st, nx))) =>
+            assignIdentityIds(acc, n, nx, st)
+          }
+          (Some(mintedIns), idCols.map { case (n, (s0, st, nx)) =>
+            metaPayload(IdentityKeyPrefix + n, s"$s0|$st|${nx + mintN * st}")
+          })
+        }
+      val images = applyGeneratedColumns(table, snap,
+        insMinted.fold(withBs)(withBs.unionByName(_)), "merge")
+      requireFitsDeclared(snap, images, "merge")
+      requireSatisfiesConstraints(table, snap, images, "merge")
+      // a delete-only (or nothing-fired) batch writes no image and has
+      // no identity advance to record
+      val adds = writeImages(spark, table, snap, "merge", physicalize(images, declared))
+      bindDeletionVectors(spark, table, snap, allPos, live, adds = adds,
+        tag = "merge", metas = if (adds.isEmpty) Seq.empty else idMetas)
     }
   }
 

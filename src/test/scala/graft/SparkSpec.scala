@@ -1,7 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -47,13 +49,17 @@ abstract class SparkSpec extends AnyFunSuite {
     try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
   }
 
-  /** Spark jobs started while `body` runs: a listener counts job starts
-    * between two sentinel jobs (listener events arrive in order, so once
-    * the closing sentinel's start is seen, every earlier start was). */
-  def jobsDuring(body: => Unit): Int = {
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = jobPropertiesDuring(body).size
+
+  /** The local properties of each Spark job started while `body` runs: a
+    * listener records job starts between two sentinel jobs (listener
+    * events arrive in order, so once the closing sentinel's start is
+    * seen, every earlier start was). */
+  def jobPropertiesDuring(body: => Unit): Seq[Properties] = {
     val sc = spark.sparkContext
     val key = "graft.test.sentinel"
-    val seen = new AtomicInteger()
+    val seen = new ConcurrentLinkedQueue[Properties]()
     val opened = new CountDownLatch(1)
     val closed = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -61,7 +67,8 @@ abstract class SparkSpec extends AnyFunSuite {
         Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
           case Some("open") => opened.countDown()
           case Some("close") => closed.countDown()
-          case _ => if (opened.getCount == 0 && closed.getCount > 0) seen.incrementAndGet()
+          case _ => if (opened.getCount == 0 && closed.getCount > 0)
+            seen.add(Option(e.properties).getOrElse(new Properties()))
         }
     }
     def sentinel(which: String, latch: CountDownLatch): Unit = {
@@ -74,7 +81,7 @@ abstract class SparkSpec extends AnyFunSuite {
       sentinel("open", opened)
       body
       sentinel("close", closed)
-      seen.get
+      seen.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
 }
