@@ -1481,53 +1481,200 @@ object TxLog {
     StructField("file", org.apache.spark.sql.types.StringType),
     StructField("pos", LongType)))
 
-  /** The (file, pos) rows of deletion-vector dirs `dirs`, scanned from
-    * the sidecar files `snap` records for them; a dir bound by a build
-    * that did not record its sidecar is listed. */
+  /** Rows per page of a deletion-vector sidecar (parquet-mr's default is
+    * 20000): a reader loading one file's positions decodes every row of
+    * the pages that hold them, so a load costs about the file's own
+    * positions plus two pages. */
+  private val DvPageRows = 1000
+
+  /** The sidecar files of deletion-vector dir `dir`: those `snap`
+    * records, or, for a dir bound by a build that did not record its
+    * sidecar, a listing of the dir. */
+  private def dvSidecars(spark: SparkSession, table: String, snap: Snapshot,
+                         dir: String): Seq[String] =
+    snap.dvFiles.getOrElse(dir, writtenFiles(spark, table, dir))
+
+  /** The (file, pos) rows of deletion-vector dirs `dirs`, as a scan. */
   private def dvScan(spark: SparkSession, table: String, snap: Snapshot,
                      dirs: Seq[String]): DataFrame =
-    scanFiles(spark, table, dirs.distinct.flatMap(d =>
-      snap.dvFiles.getOrElse(d, writtenFiles(spark, table, d))),
+    scanFiles(spark, table, dirs.distinct.flatMap(dvSidecars(spark, table, snap, _)),
       Some(DvSchema), snap.sizes)
 
+  /** The one deletion-vector sidecar reader: calls `each(name, pos)`
+    * for every (file, pos) record of the sidecar parquet `files` whose
+    * file name is in `names`, with parquet-mr and no Spark job. The
+    * reader filters on `file`, and a sidecar is written sorted by
+    * (file, pos), so row groups and pages holding only other files'
+    * positions are skipped: a load decodes about its own names'
+    * positions, not the whole vector. The driver calls it for
+    * metadata-only counts, executors through [[DvMask]]. */
+  private[sources] def dvRecords(conf: org.apache.hadoop.conf.Configuration,
+                                 files: Seq[Path], names: Set[String])(
+      each: (String, Long) => Unit): Unit = if (names.nonEmpty) {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.FilterApi
+    import org.apache.parquet.filter2.predicate.Operators.BinaryColumn
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.GroupReadSupport
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    val byName = FilterCompat.get(FilterApi.in[Binary, BinaryColumn](
+      FilterApi.binaryColumn("file"), names.map(Binary.fromString).asJava))
+    files.foreach { p =>
+      // built on an InputFile so the reader runs under `conf`: the Path
+      // builder first loads a default Configuration, parsing the Hadoop
+      // XML resources off the classpath on every call
+      val r = new ParquetReader.Builder[Group](HadoopInputFile.fromPath(p, conf)) {
+        override protected def getReadSupport = new GroupReadSupport()
+      }.withFilter(byName).build()
+      try {
+        var g = r.read()
+        val (fi, pi) = if (g == null) (0, 0)
+          else (g.getType.getFieldIndex("file"), g.getType.getFieldIndex("pos"))
+        while (g != null) {
+          if (g.getFieldRepetitionCount(pi) > 0)
+            each(g.getBinary(fi, 0).toStringUsingUTF8, g.getLong(pi, 0))
+          g = r.read()
+        }
+      } finally r.close()
+    }
+  }
+
+  /** The deleted positions of each data-file name in `names`, sorted
+    * (names with none are absent), read by [[dvRecords]]. */
+  private[sources] def dvPositions(conf: org.apache.hadoop.conf.Configuration,
+                                   files: Seq[Path],
+                                   names: Set[String]): Map[String, Array[Long]] = {
+    val got = scala.collection.mutable.HashMap
+      .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    dvRecords(conf, files, names)((n, pos) =>
+      got.getOrElseUpdate(n, new scala.collection.mutable.ArrayBuilder.ofLong).addOne(pos))
+    got.map { case (n, b) =>
+      val ps = b.result()
+      java.util.Arrays.sort(ps)
+      n -> ps
+    }.toMap
+  }
+
+  /** Positions [[DvMask]] loaded on this JVM, keyed by (sidecar file
+    * paths, data-file name). Sidecars are immutable and uniquely named,
+    * so an entry never goes stale: every task after the first that meets
+    * a file of one vector, in any scan on this JVM, finds its positions
+    * here. At most [[DvCacheLongs]] positions are held, least recently
+    * used out first; a larger load is not kept. */
+  private object DvCache {
+    private val DvCacheLongs = 1L << 20
+    private[this] var held = 0L
+    private[this] val entries =
+      new java.util.LinkedHashMap[(Seq[String], String), Array[Long]](16, 0.75f, true)
+
+    def apply(files: Seq[String], name: String)(load: => Array[Long]): Array[Long] = {
+      val key = (files, name)
+      val hit = synchronized(entries.get(key))
+      if (hit != null) hit else {
+        val got = load
+        if (got.length <= DvCacheLongs) synchronized {
+          if (entries.put(key, got) == null) held += got.length
+          val it = entries.values.iterator
+          while (held > DvCacheLongs) { held -= it.next().length; it.remove() }
+        }
+        got
+      }
+    }
+  }
+
+  /** A deletion-vector mask over rows addressed by (data-file name, row
+    * position): `bound` maps each masked file's name to the sidecar
+    * files (relative to `table`) of ITS OWN bound vector, so an old dir
+    * holding a superseded or restore-unbound copy of another file's
+    * positions never masks that file. Equal by (table, bound), so two
+    * reads of one snapshot plan equal; the Hadoop conf reaches the
+    * executors as one broadcast per mask. Nothing is read at
+    * construction. On an executor a file's positions are loaded the
+    * first time a task meets the file's name, unless [[DvCache]] holds
+    * them, and each task memoizes the last file's array, so a row costs
+    * one binary search. */
+  private case class DvMask(table: String, bound: Map[String, Seq[String]])(
+      conf: org.apache.spark.broadcast.Broadcast[SerializableHadoopConf])
+    extends ((String, Long) => Boolean) {
+    @transient private[this] var last: (String, Array[Long]) = _
+
+    /** Whether row `pos` of the data file named `name` is masked. */
+    def apply(name: String, pos: Long): Boolean = {
+      var l = last
+      if (l == null || l._1 != name) {
+        l = (name, bound.get(name).fold(Array.emptyLongArray) { fs =>
+          val paths = fs.map(new Path(table, _))
+          DvCache(paths.map(_.toString), name)(dvPositions(conf.value.value, paths, Set(name))
+            .getOrElse(name, Array.emptyLongArray))
+        })
+        last = l
+      }
+      java.util.Arrays.binarySearch(l._2, pos) >= 0
+    }
+
+    /** The mask as a column: true for a masked row. */
+    def masked(file: Column, pos: Column): Column =
+      org.apache.spark.sql.functions.udf(this).withName("txlog_dv_masked")(file, pos)
+
+    /** Every bound name's positions, read on the caller's side with
+      * each sidecar read once (names with no position are absent). */
+    def positions: Map[String, Array[Long]] =
+      bound.groupBy(_._2).flatMap { case (files, byName) =>
+        dvPositions(conf.value.value, files.map(new Path(table, _)), byName.keySet)
+      }
+  }
+
+  /** Each name of a file in `dvs` (data file → its bound deletion-vector
+    * dir, both relative) → the sidecar files of its own bound dir, taken
+    * from `snap`. */
+  private def dvBound(spark: SparkSession, table: String, snap: Snapshot,
+                      dvs: Map[String, String]): Map[String, Seq[String]] =
+    dvs.toSeq.groupBy(kv => new Path(kv._1).getName).map { case (n, fds) =>
+      n -> fds.map(_._2).distinct.flatMap(dvSidecars(spark, table, snap, _))
+    }
+
+  /** The [[DvMask]] of `dvs` (data file → its bound deletion-vector dir,
+    * both relative), the sidecar files taken from `snap`. */
+  private def dvMask(spark: SparkSession, table: String, snap: Snapshot,
+                     dvs: Map[String, String]): DvMask =
+    DvMask(table, dvBound(spark, table, snap, dvs))(spark.sparkContext.broadcast(
+      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)))
+
   /** Scan `files` (relative paths, recorded in `snap`) under the
-    * optional declared schema, ANTI-APPLYING each file's deletion
-    * vector: files bound to a dv dir are read WITH the parquet metadata
+    * optional declared schema, with each file's deletion vector
+    * applied: files bound to a dv dir are read with the parquet metadata
     * columns (`_metadata.file_name`, `_metadata.row_index` — stable
     * physical row positions, the public Delta deletion-vector
-    * addressing idea) and left-anti joined against the dv rows
-    * (file_name, pos); unbound files scan plain. Every scan is built
-    * from the log ([[scanFiles]]): the files' sizes and the vectors'
-    * sidecar files are recorded, so construction lists nothing, stats
-    * nothing and launches no job. The dv frame is a handful of rows per
-    * targeted file and is broadcast, so the read-side cost of
-    * merge-on-read is one map-side hash probe — never a shuffle of the
-    * 100 TB side. */
+    * addressing idea) and filtered by the snapshot's [[DvMask]]; unbound
+    * files scan plain. Every scan is built from the log ([[scanFiles]]):
+    * the files' sizes and the vectors' sidecar files are recorded, so
+    * construction lists nothing, stats nothing and launches no job. The
+    * scan that runs anyway applies the mask, so a masked read runs the
+    * jobs of the same read before any delete: the vector costs each task
+    * one filtered read of the sidecar pages holding each masked file's
+    * positions ([[dvRecords]]), and each row one binary search — never a
+    * join, a broadcast or a shuffle. */
   private def scanLive(spark: SparkSession, table: String, snap: Snapshot,
                        files: Seq[String], declared: Option[StructType],
                        dvs: Map[String, String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     // files are read under the PHYSICAL schema (identical to the
     // declared one unless a rename/drop enabled column mapping); logical
-    // names come back via logicalize at the END, after the dv anti-join
-    // — the hidden _metadata struct is only reachable on the raw scan
+    // names come back via logicalize at the END, after the mask — the
+    // hidden _metadata struct is only reachable on the raw scan
     def plainRead(rels: Seq[String]): DataFrame =
       scanFiles(spark, table, rels, declared, snap.sizes)
     val (masked, clean) = files.partition(dvs.contains)
     if (masked.isEmpty) return logicalize(plainRead(files), declared)
-    // (file, pos): deleted positions
-    val dvRows = dvScan(spark, table, snap, masked.map(dvs))
     val scanned = plainRead(masked)
     val cols = scanned.columns
     require(!cols.contains("_g_dv_file") && !cols.contains("_g_dv_pos"),
       "txlog: table schema collides with the dv scan's internal columns")
-    val alive = scanned
-      .withColumn("_g_dv_file", col("_metadata.file_name"))
-      .withColumn("_g_dv_pos", col("_metadata.row_index"))
-      .join(broadcast(dvRows),
-        col("_g_dv_file") === dvRows("file") && col("_g_dv_pos") === dvRows("pos"),
-        "left_anti")
-      .drop("_g_dv_file", "_g_dv_pos")
+    val alive = scanned.filter(!dvMask(spark, table, snap, masked.map(f => f -> dvs(f)).toMap)
+      .masked(col("_metadata.file_name"), col("_metadata.row_index")))
     logicalize(
       if (clean.isEmpty) alive else plainRead(clean).unionByName(alive),
       declared)
@@ -2296,10 +2443,10 @@ object TxLog {
   // count in the stats channel under the reserved `_g_rows` key, so
   // `SELECT COUNT(*)` on a 100 TB table is a driver-side log fold —
   // zero file opens, zero tasks — minus the deletion-vector mask counts
-  // (a scan of the TINY dv sidecars, never the data). MIN/MAX serve
-  // from recorded per-file bounds for every clean covered file and
-  // scan ONLY the files a mask touches or stats never covered — the
-  // aggregate's cost tracks the mask, not the table.
+  // (a driver-side read of the TINY dv sidecars, never the data).
+  // MIN/MAX serve from recorded per-file bounds for every clean covered
+  // file and scan ONLY the files a mask touches or stats never covered —
+  // the aggregate's cost tracks the mask, not the table.
   // ---------------------------------------------------------------------
 
   private val RowsStatsCol = "_g_rows"
@@ -2341,18 +2488,17 @@ object TxLog {
 
   /** Rows each live masked file's CURRENT deletion vector hides —
     * counted per (file → its own bound dir), never across dirs (an old
-    * dir may still hold a superseded copy of another file's positions). */
+    * dir may still hold a superseded copy of another file's positions),
+    * from the sidecars on the driver: no Spark job. */
   private def dvMaskedCounts(spark: SparkSession, table: String,
                              snap: Snapshot): Map[String, Long] = {
-    import org.apache.spark.sql.functions.col
-    snap.liveDvs.groupBy(_._2).flatMap { case (dir, bound) =>
-      val names = bound.keys.map(f => new Path(f).getName).toSeq
-      val got = dvScan(spark, table, snap, Seq(dir))
-        .filter(col("file").isin(names: _*))
-        .groupBy("file").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      bound.keys.map(f => f -> got.getOrElse(new Path(f).getName, 0L))
+    // a sidecar holds each (file, pos) once: a record is a masked row
+    val masked = scala.collection.mutable.HashMap.empty[String, Long].withDefaultValue(0L)
+    dvBound(spark, table, snap, snap.liveDvs).groupBy(_._2).foreach { case (files, byName) =>
+      dvRecords(spark.sparkContext.hadoopConfiguration, files.map(new Path(table, _)),
+        byName.keySet)((name, _) => masked(name) += 1)
     }
+    snap.liveDvs.keys.map(f => f -> masked(new Path(f).getName)).toMap
   }
 
   /** Metadata-only GROUP BY a recorded partition column: per-value
@@ -2700,6 +2846,13 @@ object TxLog {
     * driver-side files × keys membership sweep costs more than it
     * saves, and the merge falls back to the full address scan. */
   private val MaxMergeBloomProbes = 100000
+
+  /** Key ceiling for `mergeMor`'s hash-set address filter: a set of n
+    * keys costs O(n) on every plan string, task and pushed-down parquet
+    * filter, so above this the address scan semi-joins a broadcast of
+    * the keys instead, paying that broadcast's job. The crossover sat
+    * between 10^3 and 3 * 10^3 keys on a 4-core box (`local[4]`). */
+  private val MaxMergeKeySet = 1000
 
   // ---------------------------------------------------------------------
   // LOG-NATIVE SKIPPING FOR THE SQL SURFACE: the catalog relation's
@@ -3274,14 +3427,20 @@ object TxLog {
     // Two jobs: the shuffle of new and prior positions into one partition
     // (which already satisfies the per-(file, pos) dedup, so no second
     // exchange is planned), and the sidecar write, whose observation
-    // reports the files that gained a new position. Any failure before
+    // reports the files that gained a new position. The sidecar is sorted
+    // by (file, pos) in its one partition and cut into pages of
+    // [[DvPageRows]] rows, so a reader filtering on one file skips the
+    // others' row groups and pages. Any failure before
     // the commit lands deletes the sidecar and the images; the checkpoint
     // runs after, so a failure there deletes nothing the log references.
     val v = try {
       tagged.repartition(1)
         .groupBy(col("file"), col("pos")).agg(max(col("_n")).as("_n"))
+        .sortWithinPartitions("file", "pos")
         .observe(matched, collect_set(when(col("_n") === 1, col("file"))).as("files"))
-        .select("file", "pos").write.parquet(dvDir.toString)
+        .select("file", "pos").write
+        .option("parquet.page.row.count.limit", DvPageRows.toString)
+        .parquet(dvDir.toString)
       val matchedFiles = matched.get("files").asInstanceOf[Seq[String]].toSet
       if (matchedFiles.isEmpty) {
         // no superseded row: the sidecar goes; a delete no-ops, a merge
@@ -3406,23 +3565,17 @@ object TxLog {
   }
 
   /** The live rows of `addressed` (rows carrying the address columns
-    * `_g_dv_file`, `_g_dv_pos`, as [[addressedRows]] does), prior
-    * deletion vectors anti-applied with scanLive's per-file scoping
-    * (rows of files a later restore UNBOUND stay live), so a dead
+    * `_g_dv_file`, `_g_dv_pos`, as [[addressedRows]] does), filtered by
+    * the snapshot's prior deletion vectors ([[DvMask]], scoped per file:
+    * rows of files a later restore UNBOUND stay live), so a dead
     * physical copy can neither re-mask nor re-image. Every MOR write
     * (UPDATE / MERGE) derives its masks and images from this frame. */
   private def liveAddressed(spark: SparkSession, table: String, snap: Snapshot,
                             addressed: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val priorDvs = snap.liveDvs
-    if (priorDvs.isEmpty) addressed else {
-      val boundNames = priorDvs.keys.map(_.split('/').last).toSeq
-      val dvRows = dvScan(spark, table, snap, priorDvs.values.toSeq)
-        .filter(col("file").isin(boundNames: _*))
-      addressed.join(broadcast(dvRows),
-        addressed("_g_dv_file") === dvRows("file") &&
-          addressed("_g_dv_pos") === dvRows("pos"), "left_anti")
-    }
+    import org.apache.spark.sql.functions.col
+    if (snap.liveDvs.isEmpty) addressed
+    else addressed.filter(!dvMask(spark, table, snap, snap.liveDvs)
+      .masked(col("_g_dv_file"), col("_g_dv_pos")))
   }
 
   /** MOR UPDATE with a FREE predicate: rows matching `predicateSql`
@@ -3436,9 +3589,9 @@ object TxLog {
     * counts the matched rows, and on zero its output is deleted.
     * Serializable like a merge (the mask is derived against `base`).
     *
-    * Jobs: the prior vectors' broadcast for each of the two scans of
-    * `matched` (the image write, and [[bindDeletionVectors]]' shuffle),
-    * those two, and the sidecar write. */
+    * Jobs: the two scans of `matched` (the image write, and
+    * [[bindDeletionVectors]]' shuffle), each applying the prior vectors
+    * in the scan, and the sidecar write. */
   def updateMorExpr(spark: SparkSession, table: String, predicateSql: String,
                     sets: Seq[(String, String)]): Long = {
     import org.apache.spark.sql.functions.{col, expr}
@@ -4022,7 +4175,7 @@ object TxLog {
     * row appearing k times delivers k images. */
   def readChangesCdf(spark: SparkSession, table: String,
                      fromExclusive: Long, toInclusive: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val log = listLog(spark, table)
     val vs = log.commits
     require(vs.nonEmpty, s"txlog: no commits in $table")
@@ -4044,42 +4197,27 @@ object TxLog {
     def stamp(df: DataFrame, kind: String, v: Long): DataFrame =
       df.withColumn("_change_type", lit(kind))
         .withColumn("_commit_version", lit(v))
-    // positional delete images: the rows of `bindings`' files sitting at
-    // positions present in the NEW vectors but not the prior ones
+    // positional delete images: the rows of `bindings`' files masked by
+    // the NEW vectors but not by the prior ones — the bound files' scan
+    // under two masks. Whether any position is new is decided from the
+    // sidecars on the driver (no Spark job): none, no slice
     def morDeletes(v: Long, bindings: Seq[(String, String)]): Option[DataFrame] = {
       val bound = bindings.filter(_._2 != DvUnbound)
       if (bound.isEmpty) return None
-      val names = bound.map(_._1.split('/').last)
       val (now, before) = (at(v), at(v - 1))
-      val newPos = dvScan(spark, table, now, bound.map(_._2))
-        .filter(col("file").isin(names: _*))
       val prior = before.dvs.toMap
-      val priorDirs = bound.flatMap(b => prior.get(b._1))
-        .filter(_ != DvUnbound).distinct
-      val freshPlan = if (priorDirs.isEmpty) newPos
-        else {
-          val priorNames = bound
-            .filter(b => prior.get(b._1).exists(_ != DvUnbound))
-            .map(_._1.split('/').last)
-          newPos.exceptAll(dvScan(spark, table, before, priorDirs)
-            .filter(col("file").isin(priorNames: _*)))
-        }
-      // ONE action where the r16 shape paid three (checkpoint + isEmpty +
-      // the broadcast build's own job): collect the newly-masked (file,
-      // pos) set — the SAME bytes the broadcast join below was already
-      // shipping through the driver, so no new driver-size assumption —
-      // and hand the join a driver-local relation, whose broadcast builds
-      // without submitting a job (r17, guide §2.4).
-      val freshRows = freshPlan.collect()
-      if (freshRows.isEmpty) return None
-      val fresh = spark.createDataFrame(
-        java.util.Arrays.asList(freshRows: _*), freshPlan.schema)
+      val maskNow = dvMask(spark, table, now, bound.toMap)
+      val maskBefore = dvMask(spark, table, before, bound.flatMap { case (f, _) =>
+        prior.get(f).filter(_ != DvUnbound).map(f -> _) }.toMap)
+      val priorPos = maskBefore.positions
+      val anyFresh = maskNow.positions.exists { case (n, ps) =>
+        val old = priorPos.getOrElse(n, Array.emptyLongArray)
+        ps.exists(java.util.Arrays.binarySearch(old, _) < 0)
+      }
+      if (!anyFresh) return None
+      val (file, pos) = (col("_metadata.file_name"), col("_metadata.row_index"))
       val imaged = scanFiles(spark, table, bound.map(_._1), declared, now.sizes)
-        .withColumn("_g_dv_file", col("_metadata.file_name"))
-        .withColumn("_g_dv_pos", col("_metadata.row_index"))
-        .join(broadcast(fresh),
-          col("_g_dv_file") === fresh("file") && col("_g_dv_pos") === fresh("pos"))
-        .drop("_g_dv_file", "_g_dv_pos", "file", "pos")
+        .filter(maskNow.masked(file, pos) && !maskBefore.masked(file, pos))
       Some(logicalize(imaged, declared))
     }
     val slices: Seq[DataFrame] = range.flatMap { v =>
@@ -4152,7 +4290,7 @@ object TxLog {
     * Returns the committed version. */
   def mergeMor(spark: SparkSession, table: String, updatesIn: DataFrame,
                keys: Seq[String], evolve: Boolean = false): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit}
+    import org.apache.spark.sql.functions.{broadcast, col, count, lit, struct}
     require(keys.nonEmpty, "txlog: mergeMor needs at least one key column")
     val snap = latestSnapshot(spark, table, "merge")
     withJobTag(spark, "merge", table, snap) {
@@ -4209,11 +4347,12 @@ object TxLog {
       requireSatisfiesConstraints(table, snap, updates, "merge")
       // Jobs, in order: the batch's key counts (a shuffle and its
       // collect); the bloom sidecar read, if the key column has filters;
-      // the broadcasts of the batch keys and of any prior vectors; the
-      // address scan's collect; the identity-mint count, on an identity
-      // table; the image write; and bindDeletionVectors' two. The key
-      // counts are collected once: a key named twice fails here, and the
-      // rows are the address join's broadcast side.
+      // the keys' broadcast, past [[MaxMergeKeySet]] keys; the address
+      // scan's collect (the prior vectors applied in the scan); the
+      // identity join-back's broadcast and the identity-mint count, on an
+      // identity table; the image write; and bindDeletionVectors' two. The
+      // key counts are collected once: a key named twice fails here, and
+      // the rows are the address scan's key filter.
       val keyCountPlan = updates.groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("_g_n"))
       val keyCounts = keyCountPlan.collect()
@@ -4255,18 +4394,37 @@ object TxLog {
       // COLUMN produces), and the images land physicalized to it
       val declared = evolution.orElse(snap.schema)
       // positions of the superseded rows: physical scan (the _metadata
-      // struct needs the un-projected scan) + broadcast semi-join on the
-      // batch's keys — the 100 TB side never shuffles
+      // struct needs the un-projected scan) filtered by the batch's keys,
+      // so the 100 TB side never shuffles. Up to [[MaxMergeKeySet]] keys
+      // that is one hash set of the collected key rows (a struct per row
+      // for composite keys) and nothing is broadcast; a key with a null
+      // field matches no row under the ON's equality, so it is left out.
+      // Larger batches semi-join a broadcast of the keys
       val raw = scanFiles(spark, table, live, declared, snap.sizes)
       val pKeys = keys.map(snap.physical)
-      val batchKeys = physicalize(batchKeyRows, declared)
       // the hidden _metadata struct resolves only on the scan itself —
-      // materialize the address columns BEFORE the semi-join
-      val addressed = raw
+      // materialize the address columns BEFORE the key filter
+      val scanned = raw
         .withColumn("_g_dv_file", col("_metadata.file_name"))
         .withColumn("_g_dv_pos", col("_metadata.row_index"))
-        .join(broadcast(batchKeys), pKeys, "left_semi")
-      // LIVE matched rows only (prior vectors anti-applied, per-file like
+      val addressed = if (keyCounts.length > MaxMergeKeySet) {
+        scanned.join(broadcast(physicalize(batchKeyRows, declared)), pKeys, "left_semi")
+      } else {
+        val probe = keyCounts.filter(r => keys.indices.forall(!r.isNullAt(_)))
+        scanned.filter(
+          if (keys.size == 1) org.apache.spark.sql.GraftSqlShims.inSet(col(pKeys.head),
+            probe.map(_.get(0)), keyCountPlan.schema(0).dataType, raw.schema(pKeys.head).dataType)
+          else {
+            def keyStruct(t: Int => DataType) = StructType(keys.indices.map(i =>
+              StructField(s"_g_k$i", t(i))))
+            org.apache.spark.sql.GraftSqlShims.inSet(
+              struct(pKeys.zipWithIndex.map { case (p, i) => col(p).as(s"_g_k$i") }: _*),
+              probe.map(r => org.apache.spark.sql.Row(keys.indices.map(r.get): _*)),
+              keyStruct(keyCountPlan.schema(_).dataType),
+              keyStruct(i => raw.schema(pKeys(i)).dataType))
+          })
+      }
+      // LIVE matched rows only (prior vectors applied, per-file like
       // scanLive): dead physical copies from earlier merges must neither
       // trip the duplicate guard below nor depend on harmless re-masking
       val liveMatchedPlan = liveAddressed(spark, table, snap, addressed)

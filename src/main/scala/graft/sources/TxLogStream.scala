@@ -367,29 +367,18 @@ private[sources] object TxLogPartitionReader {
   /** Executor-side resolution of the positions commit-NEWLY masked in
     * `fileName`: the sidecar rows of `dvDir` minus those of
     * `priorDvDir` (both are tiny (file, pos) parquet sidecars — a
-    * delete's footprint in ONE file, kilobytes-to-megabytes). */
+    * delete's footprint in ONE file, kilobytes-to-megabytes), each dir
+    * listed and read with [[TxLog.dvPositions]]. */
   def newlyMaskedPositions(fileName: String, dvDir: String,
                            priorDvDir: Option[String],
                            conf: Configuration): java.util.HashSet[Long] = {
-    def positions(dir: String): Iterator[Long] = {
+    def positions(dir: String): Array[Long] = {
       val dirPath = new Path(dir)
-      val fsys = dirPath.getFileSystem(conf)
-      fsys.listStatus(dirPath).iterator
+      val files = dirPath.getFileSystem(conf).listStatus(dirPath).toSeq
         .map(_.getPath)
         .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-        .flatMap { p =>
-          val r = ParquetReader.builder(new GroupReadSupport(), p)
-            .withConf(conf).build()
-          Iterator.continually(r.read()).takeWhile { g =>
-            if (g == null) r.close(); g != null
-          }.flatMap { g =>
-            val idxF = g.getType.getFieldIndex("file")
-            val idxP = g.getType.getFieldIndex("pos")
-            if (new String(g.getBinary(idxF, 0).getBytes, "UTF-8") == fileName)
-              Some(g.getLong(idxP, 0))
-            else None
-          }
-        }
+      TxLog.dvPositions(conf, files, Set(fileName))
+        .getOrElse(fileName, Array.emptyLongArray)
     }
     val set = new java.util.HashSet[Long]()
     positions(dvDir).foreach(p => { set.add(p); () })

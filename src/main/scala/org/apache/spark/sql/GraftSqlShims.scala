@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bridges to `private[sql]`/`private[spark]` members (the same
   * package-shim pattern the public Delta and Iceberg connectors use). */
@@ -23,4 +25,18 @@ object GraftSqlShims {
     * its schema footer by the same rule. */
   def hiddenPathName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `c IN values` as ONE hash-set expression: the values are external
+    * (fields of collected rows) of type `from`, each converted once on
+    * the driver to `c`'s type `to`. It is what the optimizer turns a
+    * long literal IN list into, without an expression per value for the
+    * analyzer and optimizer to walk. */
+  def inSet(c: Column, values: Seq[Any], from: DataType, to: DataType): Column = {
+    val tz = Option(SQLConf.get.sessionLocalTimeZone)
+    val internal = values.map { v =>
+      val l = Literal.create(v, from)
+      if (from == to) l.value else Cast(l, to, tz).eval()
+    }
+    classic.ExpressionUtils.column(InSet(classic.ExpressionUtils.expression(c), internal.toSet))
+  }
 }

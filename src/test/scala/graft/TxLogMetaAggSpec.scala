@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.sources.TxLog
 import graft.sources.TxLog.Layout
@@ -10,8 +9,7 @@ import graft.sources.TxLog.Layout
   * (zero footer opens on engine-written tables, dv sidecar counts
   * subtracted per-binding), MIN/MAX serve log bounds for clean files
   * and scan only what a mask touches. */
-class TxLogMetaAggSpec extends AnyFunSuite {
-  private lazy val spark = SharedSpark.spark
+class TxLogMetaAggSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(prefix: String): String =
@@ -24,7 +22,10 @@ class TxLogMetaAggSpec extends AnyFunSuite {
       TxLog.append(spark, t, rows.filter(col("k") % 3 === r)))
     def check(tag: String): Unit = {
       val truth = TxLog.read(spark, t).count()
-      val (n, fromFooter, _) = TxLog.countRowsDetail(spark, t)
+      var detail = (0L, 0, 0)
+      val jobs = jobsDuring { detail = TxLog.countRowsDetail(spark, t) }
+      assert(jobs == 0, s"$tag: a log count ran $jobs Spark jobs")
+      val (n, fromFooter, _) = detail
       assert(n == truth, s"$tag: log count $n != scan truth $truth")
       assert(fromFooter == 0,
         s"$tag: engine-written files must be counted from the log alone")

@@ -70,7 +70,7 @@ class TxLogMorCommitSpec extends SparkSpec {
 
   test("jobs: updateMorExpr") {
     val t = fixture("pin-update")
-    pinJobs(t, "update", 5)(TxLog.updateMorExpr(spark, t, "id % 5 = 1", Seq("v" -> "v + 1")))
+    pinJobs(t, "update", 3)(TxLog.updateMorExpr(spark, t, "id % 5 = 1", Seq("v" -> "v + 1")))
     assert(TxLog.read(spark, t).filter(col("id") === 11L).select("v").as[Long]
       .collect().toSeq == Seq(111L))
   }
@@ -84,20 +84,73 @@ class TxLogMorCommitSpec extends SparkSpec {
   test("jobs: mergeMor") {
     val t = fixture("pin-merge")
     val batch = Seq((5L, "k1", 1L), (150L, "k2", 2L), (999L, "k3", 3L)).toDF("id", "k", "v")
-    pinJobs(t, "merge", 8)(TxLog.mergeMor(spark, t, batch, Seq("id")))
+    pinJobs(t, "merge", 6)(TxLog.mergeMor(spark, t, batch, Seq("id")))
     assert(TxLog.read(spark, t).filter(col("id").isin(5L, 150L, 999L))
       .select("v").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("jobs: mergeMor past the key-set ceiling semi-joins a broadcast of the keys") {
+    val t = fixture("pin-merge-wide")
+    // 1001 keys, one past the hash-set filter's ceiling: the keys'
+    // broadcast is one more job
+    val batch = (0L until 1001L).map(i => (i, "k1", -i)).toDF("id", "k", "v")
+    pinJobs(t, "merge", 7)(TxLog.mergeMor(spark, t, batch, Seq("id")))
+    assert(TxLog.read(spark, t).select("id", "v").as[(Long, Long)].collect().sorted.toSeq ==
+      (0L until 1001L).map(i => (i, -i)))
   }
 
   test("jobs: mergeMorConditional") {
     val t = fixture("pin-merge-cond")
     val batch = Seq((5L, "k1", 1L), (150L, "k2", 2L), (999L, "k3", 3L)).toDF("id", "k", "v")
-    pinJobs(t, "merge", 14)(TxLog.mergeMorConditional(spark, t, batch, Seq("id"),
+    pinJobs(t, "merge", 12)(TxLog.mergeMorConditional(spark, t, batch, Seq("id"),
       Seq(MergeMatchedUpdate(None, Seq("v" -> "_src_v"))),
       Seq(MergeNotMatchedInsert(None,
         Seq("id" -> "_src_id", "k" -> "_src_k", "v" -> "_src_v")))))
     assert(TxLog.read(spark, t).filter(col("id").isin(5L, 150L, 999L))
       .select("v").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("jobs: readChangesCdf over one MOR delete") {
+    val t = fixture("pin-cdf")
+    val v = TxLog.deleteWhereMorExpr(spark, t, "id % 10 = 5")
+    var got = Seq.empty[Long]
+    val jobs = jobsDuring {
+      got = TxLog.readChangesCdf(spark, t, v - 1, v).select("id").as[Long].collect().toSeq
+    }
+    assert(got.sorted == (5L until 300L by 10))
+    assert(jobs == 1, s"expected 1 Spark job, saw $jobs")
+  }
+
+  test("mergeMor keys with a null field match no target row, single and composite") {
+    def rows(t: String) = TxLog.read(spark, t).collect().map(_.mkString("|")).toSeq.sorted
+    val t = Files.createTempDirectory("graft-morcommit-nullkeys").toString + "/t"
+    TxLog.append(spark, t, Seq[(Option[Long], Option[String], Long)](
+      (Some(1L), Some("x"), 0L), (Some(2L), None, 0L), (None, Some("y"), 0L))
+      .toDF("a", "b", "v"))
+    TxLog.mergeMor(spark, t, Seq[(Option[Long], Option[String], Long)](
+      (Some(1L), Some("x"), 1L), (Some(2L), None, 1L), (None, Some("y"), 1L))
+      .toDF("a", "b", "v"), Seq("a", "b"))
+    // (1, x) is superseded; a key with a null field matches nothing under
+    // the ON's equality, so its image lands beside the old row
+    assert(rows(t) == Seq("1|x|1", "2|null|0", "2|null|1", "null|y|0", "null|y|1"))
+    val s = Files.createTempDirectory("graft-morcommit-nullkey").toString + "/t"
+    TxLog.append(spark, s, Seq[(Option[Long], Long)]((Some(1L), 0L), (None, 0L)).toDF("a", "v"))
+    TxLog.mergeMor(spark, s,
+      Seq[(Option[Long], Long)]((Some(1L), 5L), (None, 5L)).toDF("a", "v"), Seq("a"))
+    assert(rows(s) == Seq("1|5", "null|0", "null|5"))
+  }
+
+  test("mergeMor on a composite key supersedes exactly the named rows past the IN-set threshold") {
+    val t = Files.createTempDirectory("graft-morcommit-composite").toString + "/t"
+    TxLog.append(spark, t, (0L until 60L).map(i => (i % 20, s"b${i / 20}", 0L)).toDF("a", "b", "v"))
+    // 25 keys: Spark plans an IN list this long as a hash-set probe
+    val named = (0L until 25L).map(i => (i % 20, s"b${i % 3}", 1L))
+    TxLog.mergeMor(spark, t, named.toDF("a", "b", "v"), Seq("a", "b"))
+    val got = TxLog.read(spark, t).as[(Long, String, Long)].collect().toSeq
+    val keys = named.map(r => (r._1, r._2)).toSet
+    assert(keys.size == 25 && got.size == 60, "every named key is in the table")
+    assert(got.filter(r => keys((r._1, r._2))).map(_._3).toSet == Set(1L))
+    assert(got.count(_._3 == 0L) == 60 - keys.size)
   }
 
   test("a MOR delete whose stats range keeps a file but matches no row commits nothing and leaves no sidecar") {

@@ -1220,17 +1220,18 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, t, Some(v - 1)).count() == preRows)
   }
 
-  test("plan pin: the deletion-vector anti-join is a BROADCAST probe, never a shuffle of the data side") {
+  test("plan pin: the deletion-vector mask is a filter in the scan's own stage, never a join or an exchange") {
     val t = freshTable("dvplan")
     TxLog.append(spark, t,
       (0L until 500L).map(i => (i, s"r$i")).toDF("id", "s").coalesce(1),
       Layout(stats = Seq("id")))
     TxLog.deleteWhereMor(spark, t, "id", 10, 20)
-    val p = TxLog.read(spark, t).queryExecution.executedPlan.toString
-    assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
-      s"dv anti-apply must be a broadcast left-anti probe:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"dv anti-apply shuffled the data side:\n$p")
+    val read = TxLog.read(spark, t)
+    val p = read.queryExecution.executedPlan.toString
+    assert(p.contains("txlog_dv_masked"), s"dv mask must filter the scan:\n$p")
+    assert(!p.contains("Join") && !p.contains("Exchange"),
+      s"dv mask joined or shuffled:\n$p")
+    assert(read.count() == 489L)
   }
 
   test("restore: metadata-only rollback across deletes, masks, and a rename; history preserved") {
