@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In,
+  LessThanOrEqual}
 import graft.sources.Tables
 import graft.sources.TxLog.Layout
 
@@ -230,14 +232,24 @@ object Merge {
       .orderBy("o_orderkey")
   }
 
+  /** The filters a conjunction of `c BETWEEN lo AND hi` pushes to a
+    * scan ([[graft.sources.TxLog.pruneForFilters]]' input). */
+  private def pushedRanges(preds: Seq[(String, Any, Any)]): Seq[Filter] =
+    preds.flatMap { case (c, lo, hi) => Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi)) }
+
+  /** The same conjunction as a predicate over the read. */
+  private def inRanges(preds: Seq[(String, Any, Any)]): Column =
+    preds.map { case (c, lo, hi) => col(c).between(lo, hi) }.reduce(_ && _)
+
   /** QW5 — log-native DATA SKIPPING under the hash gate: orders lands
     * in three range-disjoint [[graft.sources.TxLog.append]] commits
     * with `Layout(stats = …)` (per-file min/max of `o_orderkey` recorded from the
     * parquet footers INTO the commit lines), and a range read
-    * ([[graft.sources.TxLog.readWhere]]) prunes its file list from the
-    * log alone — the row REQUIRES that at least one live file was
-    * skipped (so a silently stats-less build cannot pass), then must
-    * hash-match a plain SQL range scan. At 100 TB this is the lever
+    * (`TxLog.read(...).where(...)`, whose file index keeps the files
+    * [[graft.sources.TxLog.pruneForFilters]] keeps) prunes its file
+    * list from the log alone — the row REQUIRES that at least one live
+    * file was skipped (so a silently stats-less build cannot pass),
+    * then must hash-match a plain SQL range scan. At 100 TB this is the lever
     * that turns "open 100k footers" into "read one small log". */
   def qwPrunedRead(spark: SparkSession, d: String): DataFrame = {
     import graft.sources.TxLog
@@ -256,10 +268,12 @@ object Merge {
       orders.filter(col("o_orderkey") >= b2).repartitionByRange(2, col("o_orderkey")),
       Layout(stats = Seq("o_orderkey")))
     val (lo, hi) = (maxKey / 6, maxKey / 3)
-    val (kept, live) = TxLog.pruneFiles(spark, table, "o_orderkey", lo, hi)
+    val preds = Seq(("o_orderkey", lo, hi))
+    val kept = TxLog.pruneForFilters(spark, table, pushedRanges(preds))
+    val live = TxLog.snapshotFiles(spark, table).size
     require(kept.size < live,
       s"txlog: data skipping pruned nothing (${kept.size} of $live files kept)")
-    TxLog.readWhere(spark, table, "o_orderkey", lo, hi).orderBy("o_orderkey")
+    TxLog.read(spark, table).where(inRanges(preds)).orderBy("o_orderkey")
   }
 
   /** QW6 — stats-targeted DELETE under the hash gate: the same
@@ -286,7 +300,8 @@ object Merge {
       Layout(stats = Seq("o_orderkey")))
     val before = TxLog.snapshotFiles(spark, table).toSet
     val (lo, hi) = (maxKey / 6, maxKey / 3)
-    val (wouldTouch, _) = TxLog.pruneFiles(spark, table, "o_orderkey", lo, hi)
+    val wouldTouch = TxLog.pruneForFilters(spark, table,
+      pushedRanges(Seq(("o_orderkey", lo, hi))))
     TxLog.deleteWhere(spark, table, "o_orderkey", lo, hi)
     val after = TxLog.snapshotFiles(spark, table).toSet
     val untouched = before -- wouldTouch.toSet
@@ -325,14 +340,15 @@ object Merge {
     val (loK, hiK) = (maxKey / 6, maxKey / 3)    // inside wave 1 + wave 2
     val (loC, hiC) = (0L, maxCust / 4)           // lower custkey quartile
     val preds = Seq(("o_orderkey", loK, hiK), ("o_custkey", loC, hiC))
-    val (keptBoth, live) = TxLog.pruneFilesMulti(spark, table, preds)
-    val (keptKeyOnly, _) = TxLog.pruneFiles(spark, table, "o_orderkey", loK, hiK)
+    val keptBoth = TxLog.pruneForFilters(spark, table, pushedRanges(preds))
+    val keptKeyOnly = TxLog.pruneForFilters(spark, table, pushedRanges(preds.take(1)))
+    val live = TxLog.snapshotFiles(spark, table).size
     require(keptKeyOnly.size < live,
       s"txlog: o_orderkey stats pruned nothing (${keptKeyOnly.size} of $live)")
     require(keptBoth.size < keptKeyOnly.size,
       s"txlog: o_custkey stats added no pruning (${keptBoth.size} vs " +
         s"${keptKeyOnly.size} by o_orderkey alone)")
-    TxLog.readWhereAll(spark, table, preds).orderBy("o_orderkey", "o_custkey")
+    TxLog.read(spark, table).where(inRanges(preds)).orderBy("o_orderkey", "o_custkey")
   }
 
   /** QW8 — MERGE-ON-READ delete (deletion vectors) under the hash gate:
@@ -403,12 +419,14 @@ object Merge {
     val preds = Seq(
       ("o_orderkey", maxKey / 4, maxKey / 2),
       ("o_custkey", maxCust / 4, maxCust / 2))
-    val (keptLex, liveLex) = TxLog.pruneFilesMulti(spark, lex, preds)
-    val (keptZ, liveZ) = TxLog.pruneFilesMulti(spark, zed, preds)
+    val (keptLex, liveLex) = (TxLog.pruneForFilters(spark, lex, pushedRanges(preds)),
+      TxLog.snapshotFiles(spark, lex).size)
+    val (keptZ, liveZ) = (TxLog.pruneForFilters(spark, zed, pushedRanges(preds)),
+      TxLog.snapshotFiles(spark, zed).size)
     require(keptZ.size < keptLex.size,
       s"txlog: z-order pruned no better than lexicographic " +
         s"(${keptZ.size} of $liveZ vs ${keptLex.size} of $liveLex)")
-    TxLog.readWhereAll(spark, zed, preds).orderBy("o_orderkey", "o_custkey")
+    TxLog.read(spark, zed).where(inRanges(preds)).orderBy("o_orderkey", "o_custkey")
   }
 
   /** QW9h — [[qwZorderRead]]'s certification on the HILBERT curve
@@ -439,12 +457,14 @@ object Merge {
     val preds = Seq(
       ("o_orderkey", maxKey / 4, maxKey / 2),
       ("o_custkey", maxCust / 4, maxCust / 2))
-    val (keptLex, liveLex) = TxLog.pruneFilesMulti(spark, lex, preds)
-    val (keptH, liveH) = TxLog.pruneFilesMulti(spark, hil, preds)
+    val (keptLex, liveLex) = (TxLog.pruneForFilters(spark, lex, pushedRanges(preds)),
+      TxLog.snapshotFiles(spark, lex).size)
+    val (keptH, liveH) = (TxLog.pruneForFilters(spark, hil, pushedRanges(preds)),
+      TxLog.snapshotFiles(spark, hil).size)
     require(keptH.size < keptLex.size,
       s"txlog: hilbert pruned no better than lexicographic " +
         s"(${keptH.size} of $liveH vs ${keptLex.size} of $liveLex)")
-    TxLog.readWhereAll(spark, hil, preds).orderBy("o_orderkey", "o_custkey")
+    TxLog.read(spark, hil).where(inRanges(preds)).orderBy("o_orderkey", "o_custkey")
   }
 
   /** QW-CHECK — CHECK constraints at the write boundary (the Delta
@@ -739,11 +759,12 @@ object Merge {
       docs.filter(col("lang") >= "g")                           // zh
     ).foreach(wave =>
       TxLog.append(spark, table, wave.coalesce(1), Layout(stats = Seq("lang"))))
-    val (kept, live) = TxLog.pruneFilesString(spark, table, "lang", "d", "ez")
+    val preds = Seq(("lang", "d", "ez"))
+    val kept = TxLog.pruneForFilters(spark, table, pushedRanges(preds))
+    val live = TxLog.snapshotFiles(spark, table).size
     require(kept.size < live,
       s"txlog: string stats pruned nothing (${kept.size} of $live files kept)")
-    TxLog.readWhereString(spark, table, "lang", "d", "ez")
-      .orderBy("doc_id")
+    TxLog.read(spark, table).where(inRanges(preds)).orderBy("doc_id")
   }
 
   /** QW12 — BIN-PACKING incremental OPTIMIZE under the hash gate: 90%
@@ -853,7 +874,7 @@ object Merge {
   }
 
   /** QW — LOG-NATIVE BLOOM SKIPPING ([[graft.sources.TxLog.Layout]]'s
-    * `bloom` / [[graft.sources.TxLog.readWhereEquals]])
+    * `bloom`, skipped by `TxLog.read(...).where(...)`)
     * under the hash gate: documents lands in 8 single-file waves split
     * `doc_id % 8` — every file spans the FULL doc_id range, so min/max
     * stats cannot skip ANY file for a point probe — each wave recording
@@ -873,13 +894,14 @@ object Merge {
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     require(lo < hi, "txlog: bloom fixture needs at least two documents")
     Seq(lo, hi).foreach { k =>
-      val (kept, total) = TxLog.pruneFilesBloom(spark, table, "doc_id", k)
+      val kept = TxLog.pruneForFilters(spark, table, Seq(EqualTo("doc_id", k)))
+      val total = TxLog.snapshotFiles(spark, table).size
       require(total == 8 && kept.size <= 3, // 1 true hit + the fpp sliver
         s"txlog: bloom skip must prune the banded layout: " +
           s"kept ${kept.size} of $total for probe $k")
     }
-    TxLog.readWhereEquals(spark, table, "doc_id", lo)
-      .unionByName(TxLog.readWhereEquals(spark, table, "doc_id", hi))
+    TxLog.read(spark, table).where(col("doc_id") === lo)
+      .unionByName(TxLog.read(spark, table).where(col("doc_id") === hi))
       .orderBy("doc_id")
   }
 
@@ -889,13 +911,12 @@ object Merge {
     * `pruneForFilters`, called directly with the filters a
     * `WHERE doc_id = ?` would push, keeps 1 file of 4 for the point
     * filter and the 2 end bands for the OR-of-points. The served rows
-    * come from plain SQL over the catalog and hash-match the closed
-    * form. That SQL read does not prune: the catalog scan is planned
-    * through the no-filter `buildScan()` and reads every live file,
-    * so the skip is checked only where it is called directly. */
+    * come from plain SQL over the catalog, whose scan takes the same
+    * filters and reads only the kept files, and hash-match the closed
+    * form. */
   def qwSqlPrune(spark: SparkSession, d: String): DataFrame = {
     import graft.sources.TxLog
-    import org.apache.spark.sql.sources.{EqualTo, Or}
+    import org.apache.spark.sql.sources.Or
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txsqlprune", d, "t")
     val banded = docs.withColumn("_b",
@@ -924,15 +945,12 @@ object Merge {
     * … PARTITIONED BY (lang)` persists the partition columns in
     * commit-0 metadata, and every later plain `INSERT INTO` lands
     * partitioned by them inside the append's commit path — per-file
-    * values recorded WITHOUT the writer naming them. The row REQUIREs a
-    * partition probe prunes (the declared contract actually held) and
-    * that [[graft.sources.TxLog.pruneForFilters]], called directly,
-    * keeps no more files than that probe (a SQL read pushes no filter
-    * to the relation, so the rung is checked here, not through SQL);
-    * the served snapshot is the identity. */
+    * values recorded WITHOUT the writer naming them. The row REQUIREs
+    * that a partition probe through
+    * [[graft.sources.TxLog.pruneForFilters]] prunes (the declared
+    * contract actually held); the served snapshot is the identity. */
   def qwSqlPartition(spark: SparkSession, d: String): DataFrame = {
     import graft.sources.TxLog
-    import org.apache.spark.sql.sources.EqualTo
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txsqlpart", d, "t")
     spark.sql(s"CREATE TABLE graft.`$table` " +
@@ -946,12 +964,10 @@ object Merge {
       s"SELECT doc_id, lang, n_chars FROM $view WHERE doc_id % 2 = $w"))
     finally spark.catalog.dropTempView(view)
     val probe = docs.agg(min("lang")).head().getString(0)
-    val (kept, total) = TxLog.pruneFilesPartition(spark, table, "lang", probe)
+    val kept = TxLog.pruneForFilters(spark, table, Seq(EqualTo("lang", probe)))
+    val total = TxLog.snapshotFiles(spark, table).size
     require(kept.size < total,
       s"txlog: declared partitioning must prune: kept ${kept.size} of $total")
-    require(TxLog.pruneForFilters(spark, table,
-      Seq(EqualTo("lang", probe)), None).size <= kept.size,
-      "txlog: pruneForFilters must ride the partition rung")
     spark.sql(s"SELECT doc_id, lang, n_chars FROM graft.`$table` " +
       "ORDER BY doc_id")
   }
@@ -1059,8 +1075,9 @@ object Merge {
       .withColumn("n_chars", col("n_chars") + 1000L)
       .unionByName(docs.filter(col("doc_id") === hi)
         .withColumn("doc_id", col("doc_id") + 10000000L))
-    val (kept, total) = TxLog.pruneFilesBloomAny(spark, table, "doc_id",
-      Seq(lo, hi, hi + 10000000L))
+    val kept = TxLog.pruneForFilters(spark, table,
+      Seq(In("doc_id", Array(lo, hi, hi + 10000000L))))
+    val total = TxLog.snapshotFiles(spark, table).size
     require(total == 8 && kept.size <= 5, // ≤2-3 true hits + the 1%-fpp sliver
       s"txlog: needle merge must skip most files: kept ${kept.size} of $total")
     TxLog.mergeMor(spark, table, updates, Seq("doc_id"))
@@ -1084,17 +1101,17 @@ object Merge {
       Layout(bloom = Some("doc_id"))))
     val probe = docs.agg(max("doc_id")).head().getLong(0)
     TxLog.compact(spark, table, numFiles = 4)
-    val (keptDegraded, totalDegraded) =
-      TxLog.pruneFilesBloom(spark, table, "doc_id", probe)
-    require(keptDegraded.size == totalDegraded,
+    val keptDegraded = TxLog.pruneForFilters(spark, table, Seq(EqualTo("doc_id", probe)))
+    require(keptDegraded.size == TxLog.snapshotFiles(spark, table).size,
       "txlog: compacted output must start unbloomed (conservative keep)")
     val v = TxLog.rebloom(spark, table, "doc_id")
     require(v == TxLog.latestVersion(spark, table),
       "txlog: rebloom must land one maintenance commit")
-    val (kept, total) = TxLog.pruneFilesBloom(spark, table, "doc_id", probe)
+    val kept = TxLog.pruneForFilters(spark, table, Seq(EqualTo("doc_id", probe)))
+    val total = TxLog.snapshotFiles(spark, table).size
     require(kept.size < total,
       s"txlog: rebloom must restore skipping: kept ${kept.size} of $total")
-    TxLog.readWhereEquals(spark, table, "doc_id", probe)
+    TxLog.read(spark, table).where(col("doc_id") === probe)
       .unionByName(TxLog.read(spark, table).filter(col("doc_id") =!= probe))
       .orderBy("doc_id")
   }
@@ -1111,7 +1128,6 @@ object Merge {
     * open per rewritten file. */
   def qwRestatRead(spark: SparkSession, d: String): DataFrame = {
     import graft.sources.TxLog
-    import org.apache.spark.sql.sources.EqualTo
     val docs = T.documents(spark, d).select("doc_id", "lang", "n_chars")
     val table = Fixtures.table("txrestat", d, "t")
     val banded = docs.withColumn("_b",
@@ -1272,7 +1288,8 @@ object Merge {
     ).foreach(wave =>
       TxLog.append(spark, table, wave.coalesce(1),
         Layout(stats = Seq("doc_id"), partitionBy = Seq("lang"))))
-    val (keptPart, live) = TxLog.pruneFilesPartition(spark, table, "lang", "de")
+    val keptPart = TxLog.pruneForFilters(spark, table, Seq(EqualTo("lang", "de")))
+    val live = TxLog.snapshotFiles(spark, table).size
     require(keptPart.size < live,
       s"txlog: partition value pruned nothing (${keptPart.size} of $live)")
     val values = TxLog.partitionValuesAt(spark, table, "lang")
@@ -1281,12 +1298,12 @@ object Merge {
     // a doc_id range inside the first wave: stats must stack on top of
     // the partition rung and prune strictly further
     val preds = Seq(("doc_id", 0L, maxId / 6))
-    val keptBoth = keptPart.filter(
-      TxLog.pruneFilesMulti(spark, table, preds)._1.toSet)
+    val keptBoth = TxLog.pruneForFilters(spark, table,
+      EqualTo("lang", "de") +: pushedRanges(preds))
     require(keptBoth.size < keptPart.size,
       s"txlog: stats added no pruning over the partition rung " +
         s"(${keptBoth.size} vs ${keptPart.size})")
-    TxLog.readWherePartition(spark, table, "lang", "de", preds)
+    TxLog.read(spark, table).where(col("lang") === "de" && inRanges(preds))
       .orderBy("doc_id")
   }
 

@@ -738,6 +738,18 @@ object TxLog {
     def physical(c: String): String =
       schema.flatMap(_.fields.find(_.name == c)).map(physicalName).getOrElse(c)
 
+    /** Physical column → the skipping rungs some file records for it:
+      * 'n' integral min/max, 's' string bounds, 'p' partition value,
+      * 'b' bloom filter. */
+    lazy val rungs: Map[String, Set[Char]] =
+      stats.flatMap(_.split('|') match {
+        case Array(_, c, _, _) => Some((c, 'n'))
+        case Array(_, c, _, _, "s") => Some((c, 's'))
+        case Array(_, c, _, _, "p") => Some((c, 'p'))
+        case Array(_, c, _, _, BloomSuffix) => Some((c, 'b'))
+        case _ => None
+      }).groupMap(_._1)(_._2).map { case (c, rs) => c -> rs.toSet }
+
     /** True iff `appId` already committed `batchId` (or a later batch). */
     def landed(appId: String, batchId: Long): Boolean =
       txns.get(appId).exists(_ >= batchId)
@@ -1029,7 +1041,7 @@ object TxLog {
     *    lookups on a column the layout is not sorted by), built from
     *    the just-written batch ([[buildBloomLines]]);
     *  - `partitionBy`: Hive-style per-value directories, each file's
-    *    value recorded, so [[readWherePartition]] prunes from the log
+    *    value recorded, so an equality read prunes from the log
     *    alone. Multi-level partitioning nests (`a=…/b=…`); partition
     *    columns must be non-null (Hive's default-partition sentinel
     *    would make the recorded value lie). Empty means the table's
@@ -1385,24 +1397,40 @@ object TxLog {
   def declaredPartitionCols(spark: SparkSession, table: String): Seq[String] =
     stateAt(spark, table, None).partitionCols
 
-  /** The file index of a scan built from the log: `files` with their
-    * recorded sizes and modification times, answered with no
-    * file-system call (the public Delta TahoeFileIndex idea). The root
-    * paths are the files themselves, as `InMemoryFileIndex` gives for a
-    * scan of explicit file paths; case-class equality (by path) keeps
-    * two scans of the same files equal for exchange reuse and the cache
-    * manager, as `InMemoryFileIndex`'s root-path equality does. */
-  private final case class LogFileIndex(
-      files: Seq[org.apache.hadoop.fs.FileStatus])
+  /** The file index of a scan built from the log: `files` (the
+    * statuses of `rels`) with their recorded sizes and modification
+    * times, answered with no file-system call (the public Delta
+    * TahoeFileIndex idea). Built from a snapshot (`skipBy`), a listing
+    * keeps only the files [[keptForFilters]] keeps for the data filters
+    * Spark hands it, translated as for any data source; they name
+    * PHYSICAL columns, as the scan reads them. Pruning and scanning
+    * share that snapshot, and each filter set is pruned once per index.
+    * The root paths are the files themselves, as `InMemoryFileIndex`
+    * gives for a scan of explicit file paths; case-class equality (by
+    * path) keeps two scans of the same files equal for exchange reuse
+    * and the cache manager, as `InMemoryFileIndex`'s root-path equality
+    * does. */
+  private final case class LogFileIndex(files: Seq[org.apache.hadoop.fs.FileStatus])(
+      spark: SparkSession, table: String, rels: Seq[String], skipBy: Option[Snapshot])
     extends org.apache.spark.sql.execution.datasources.FileIndex {
+    import org.apache.spark.sql.catalyst.expressions.Expression
     import org.apache.spark.sql.execution.datasources.{FileStatusWithMetadata,
       PartitionDirectory}
+    private[this] val kept = scala.collection.concurrent.TrieMap
+      .empty[Seq[org.apache.spark.sql.sources.Filter], Seq[org.apache.hadoop.fs.FileStatus]]
     def rootPaths: Seq[Path] = files.map(_.getPath)
-    def listFiles(partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                  dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
-                 ): Seq[PartitionDirectory] =
+    def listFiles(partitionFilters: Seq[Expression],
+                  dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val pushed = dataFilters.flatMap(org.apache.spark.sql.GraftSqlShims.translateFilter)
+      val listed = skipBy.filter(_ => pushed.nonEmpty).fold(files) { snap =>
+        kept.getOrElseUpdate(pushed, {
+          val keep = keptForFilters(spark, table, snap, rels, pushed, identity).toSet
+          files.zip(rels).collect { case (f, r) if keep(r) => f }
+        })
+      }
       Seq(PartitionDirectory(org.apache.spark.sql.catalyst.InternalRow.empty,
-        files.map(FileStatusWithMetadata(_))))
+        listed.map(FileStatusWithMetadata(_))))
+    }
     def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
     def refresh(): Unit = ()
     def sizeInBytes: Long = files.map(_.getLen).sum
@@ -1455,22 +1483,24 @@ object TxLog {
 
   /** The one scan builder for table data and sidecars: a parquet relation
     * over exactly `rels` (relative paths) whose file index comes from the
-    * log ([[LogFileIndex]], sizes from `sizes`), under the PHYSICAL form
-    * of the declared schema — files written before an add-column read
-    * the new column as null, files written before a widening read
-    * promoted (native in Spark 4's vectorized parquet reader) — or,
-    * undeclared, the [[inferredSchema]]. Construction launches no Spark
-    * job and makes no file-system call for recorded files. */
+    * log ([[LogFileIndex]], sizes from `sizes`, skipping by `skipBy`'s
+    * records), under the PHYSICAL form of the declared schema — files
+    * written before an add-column read the new column as null, files
+    * written before a widening read promoted (native in Spark 4's
+    * vectorized parquet reader) — or, undeclared, the [[inferredSchema]].
+    * Construction launches no Spark job and makes no file-system call
+    * for recorded files. */
   private def scanFiles(spark: SparkSession, table: String, rels: Seq[String],
                         declared: Option[StructType],
-                        sizes: Map[String, (Long, Long)]): DataFrame = {
+                        sizes: Map[String, (Long, Long)],
+                        skipBy: Option[Snapshot]): DataFrame = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       LogicalRelation}
     val dataSchema = declared.map(s => org.apache.spark.sql.GraftSqlShims
       .asNullable(physicalSchema(s))).getOrElse(inferredSchema(spark, table, rels))
     org.apache.spark.sql.GraftSqlShims.ofRows(spark, LogicalRelation(HadoopFsRelation(
-      LogFileIndex(fileStatuses(spark, table, rels, sizes)), new StructType(),
-      dataSchema, None,
+      LogFileIndex(fileStatuses(spark, table, rels, sizes))(spark, table, rels, skipBy),
+      new StructType(), dataSchema, None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
       Map.empty)(spark)))
   }
@@ -1498,7 +1528,7 @@ object TxLog {
   private def dvScan(spark: SparkSession, table: String, snap: Snapshot,
                      dirs: Seq[String]): DataFrame =
     scanFiles(spark, table, dirs.distinct.flatMap(dvSidecars(spark, table, snap, _)),
-      Some(DvSchema), snap.sizes)
+      Some(DvSchema), snap.sizes, None)
 
   /** The one deletion-vector sidecar reader: calls `each(name, pos)`
     * for every (file, pos) record of the sidecar parquet `files` whose
@@ -1666,7 +1696,7 @@ object TxLog {
     // names come back via logicalize at the END, after the mask — the
     // hidden _metadata struct is only reachable on the raw scan
     def plainRead(rels: Seq[String]): DataFrame =
-      scanFiles(spark, table, rels, declared, snap.sizes)
+      scanFiles(spark, table, rels, declared, snap.sizes, Some(snap))
     val (masked, clean) = files.partition(dvs.contains)
     if (masked.isEmpty) return logicalize(plainRead(files), declared)
     val scanned = plainRead(masked)
@@ -1818,14 +1848,16 @@ object TxLog {
     * empty snapshot with a DECLARED schema ([[createTable]], or
     * evolution on an emptied table) reads as an empty frame with the
     * right columns; an empty snapshot with no declaration has no schema
-    * to produce one and throws — honest for a data table. */
+    * to produce one and throws — honest for a data table. A filter on
+    * the read reaches the scan's file index, which skips the files the
+    * log's records rule out ([[keptForFilters]]) on the same snapshot. */
   def read(spark: SparkSession, table: String,
            asOf: Option[Long] = None): DataFrame =
     readPruned(spark, table, asOf)(_.files)
 
-  /** The read path of [[read]], every skipping reader and the catalog
-    * scan: the vacuum watermark check (loud, never a missing-file
-    * failure at execution), one snapshot, the files `kept` chooses from
+  /** The read path of [[read]] and the catalog scan: the vacuum
+    * watermark check (loud, never a missing-file failure at
+    * execution), one snapshot, the files `kept` chooses from
     * it, and [[scanLive]] on that SAME snapshot, so pruning and deletion
     * vectors come from one version whatever commits land meanwhile. No
     * kept file reads as the empty frame under the table's columns. */
@@ -2202,7 +2234,7 @@ object TxLog {
     * [[compactClusteredWithStats]] prunes perfectly on the leading key
     * and not at all on the second alone; after a Z-order rewrite each
     * file covers ~√files of EACH axis, so an AND-of-ranges point read
-    * ([[readWhereAll]]) prunes on both — the two-axis lookup a
+    * (`read(...).where(...)`) prunes on both — the two-axis lookup a
     * (tenant, time) or (doc, shard) access pattern needs at 100 TB.
     * Same transaction shape as [[compact]]; both columns must be
     * bigint-valued and pre-normalized into [0, 2^31). */
@@ -2301,13 +2333,14 @@ object TxLog {
     * intersected with the live set. Files with no recorded stats are
     * simply absent (readers must treat absence as "cannot skip"). */
   def statsAt(spark: SparkSession, table: String, statsCol: String,
-              asOf: Option[Long] = None): Map[String, (Long, Long)] =
-    statsIn(snapshot(spark, table, asOf), statsCol)
+              asOf: Option[Long] = None): Map[String, (Long, Long)] = {
+    val snap = snapshot(spark, table, asOf)
+    statsIn(snap, snap.physical(statsCol))
+  }
 
-  /** [[statsAt]] over a snapshot already in hand. */
-  private def statsIn(snap: Snapshot, statsCol: String): Map[String, (Long, Long)] = {
-    // payloads are keyed by PHYSICAL name (rename-stable) — resolve
-    val phys = snap.physical(statsCol)
+  /** [[statsAt]] over a snapshot already in hand, for PHYSICAL column
+    * `phys` (payloads are keyed by physical name: rename-stable). */
+  private def statsIn(snap: Snapshot, phys: String): Map[String, (Long, Long)] =
     snap.stats.flatMap { payload =>
       payload.split('|') match {
         case Array(p, c, mn, mx) if c == phys && snap.liveSet.contains(p) =>
@@ -2315,13 +2348,11 @@ object TxLog {
         case _ => None
       }
     }.toMap
-  }
 
   /** [[statsIn]] for STRING-bounded columns: recorded UTF-8 byte bounds
     * per live file. */
-  private def stringStatsIn(snap: Snapshot, statsCol: String
+  private def stringStatsIn(snap: Snapshot, phys: String
                            ): Map[String, (Array[Byte], Array[Byte])] = {
-    val phys = snap.physical(statsCol)
     val dec = java.util.Base64.getDecoder
     snap.stats.flatMap { payload =>
       payload.split('|') match {
@@ -2332,110 +2363,14 @@ object TxLog {
     }.toMap
   }
 
-  // PRUNING RUNGS: functions of a snapshot in hand, each returning the
-  // live files it cannot rule out, in first-added order; absence of a
-  // record never skips. Readers pass rungs to [[readPruned]].
-
-  /** One rung over the snapshot at `asOf`: (kept, live count). */
-  private def pruned(spark: SparkSession, table: String, asOf: Option[Long])(
-      rung: Snapshot => Seq[String]): (Seq[String], Int) = {
-    val snap = snapshot(spark, table, asOf)
-    (rung(snap), snap.files.size)
+  /** The live files whose recorded [min, max] of logical `statsCol`
+    * meets `[lo, hi]`, in first-added order; a file without stats is
+    * kept. */
+  private def keepRange(snap: Snapshot, statsCol: String, lo: Long,
+                        hi: Long): Seq[String] = {
+    val stats = statsIn(snap, snap.physical(statsCol))
+    snap.files.filter(p => stats.get(p).forall { case (mn, mx) => mx >= lo && mn <= hi })
   }
-
-  /** Range rung: the live files whose recorded [min, max] intersects
-    * EVERY `(col, lo, hi)` — one predicate's miss skips the file (the
-    * AND-of-ranges pruning a Z-ordered layout is built for). */
-  private def keepRanges(snap: Snapshot,
-                         preds: Seq[(String, Long, Long)]): Seq[String] = {
-    val statsByCol = preds.map(_._1).distinct.map(c => c -> statsIn(snap, c)).toMap
-    snap.files.filter { p =>
-      preds.forall { case (c, lo, hi) =>
-        statsByCol(c).get(p).forall { case (mn, mx) => mx >= lo && mn <= hi }
-      }
-    }
-  }
-
-  /** String rung: the live files whose recorded UTF-8 byte bounds for
-    * `col` meet `[lo, hi]` (`[lo, hi)` when `hiExclusive`; no `hi` is
-    * unbounded). Bounds compare in UTF-8 byte order (= parquet's BINARY
-    * stats order = Spark's UTF8String order, so the skip can never
-    * disagree with the residual filter). */
-  private def keepBytes(snap: Snapshot, col: String, lo: Array[Byte],
-                        hi: Option[Array[Byte]], hiExclusive: Boolean): Seq[String] = {
-    val stats = stringStatsIn(snap, col)
-    snap.files.filter { p =>
-      stats.get(p).forall { case (mn, mx) =>
-        UnsignedBytes.compare(mx, lo) >= 0 && hi.forall { h =>
-          val c = UnsignedBytes.compare(mn, h)
-          if (hiExclusive) c < 0 else c <= 0
-        }
-      }
-    }
-  }
-
-  /** [[keepBytes]] for the string range `[lo, hi]`. */
-  private def keepString(snap: Snapshot, col: String, lo: String,
-                         hi: String): Seq[String] =
-    keepBytes(snap, col, lo.getBytes("UTF-8"), Some(hi.getBytes("UTF-8")),
-      hiExclusive = false)
-
-  /** The live files a string `[lo, hi]` range read must scan
-    * ([[keepString]]): (kept, live count). */
-  private[graft] def pruneFilesString(spark: SparkSession, table: String,
-                                      statsCol: String, lo: String, hi: String,
-                                      asOf: Option[Long] = None
-                                     ): (Seq[String], Int) =
-    pruned(spark, table, asOf)(keepString(_, statsCol, lo, hi))
-
-  /** String-range read with log-native file skipping — [[readWhere]]
-    * for a string column (the `WHERE lang BETWEEN 'de' AND 'fr'` shape
-    * a language- or tenant-partitioned 100 TB corpus serves daily).
-    * Deletion vectors anti-apply on the kept files as in [[read]]. */
-  def readWhereString(spark: SparkSession, table: String, statsCol: String,
-                      lo: String, hi: String,
-                      asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    readPruned(spark, table, asOf)(keepString(_, statsCol, lo, hi))
-      .filter(col(statsCol).between(lo, hi))
-  }
-
-  /** The live files a conjunction of `[lo, hi]` range predicates must
-    * scan ([[keepRanges]]): (kept, live count). Exposed for the spec's
-    * pruning assertions. */
-  private[graft] def pruneFilesMulti(spark: SparkSession, table: String,
-                                     preds: Seq[(String, Long, Long)],
-                                     asOf: Option[Long] = None): (Seq[String], Int) = {
-    require(preds.nonEmpty, "txlog: no pruning predicates")
-    pruned(spark, table, asOf)(keepRanges(_, preds))
-  }
-
-  private[graft] def pruneFiles(spark: SparkSession, table: String,
-                                statsCol: String, lo: Long, hi: Long,
-                                asOf: Option[Long] = None): (Seq[String], Int) =
-    pruneFilesMulti(spark, table, Seq((statsCol, lo, hi)), asOf)
-
-  /** Range read with log-native file skipping over a CONJUNCTION of
-    * range predicates: scans ONLY the live files every recorded range
-    * intersects (plus any file without stats for a column), then
-    * applies the exact residual filter. Equal to
-    * `read(...).filter(AND of betweens)` by construction — the stats
-    * decide file SKIPPING, never row membership. Deletion vectors are
-    * anti-applied on the kept files exactly as in [[read]]. */
-  def readWhereAll(spark: SparkSession, table: String,
-                   preds: Seq[(String, Long, Long)],
-                   asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(preds.nonEmpty, "txlog: no pruning predicates")
-    preds.foldLeft(readPruned(spark, table, asOf)(keepRanges(_, preds))) {
-      case (df, (c, lo, hi)) => df.filter(col(c).between(lo, hi))
-    }
-  }
-
-  /** Single-predicate [[readWhereAll]]. */
-  def readWhere(spark: SparkSession, table: String, statsCol: String,
-                lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame =
-    readWhereAll(spark, table, Seq((statsCol, lo, hi)), asOf)
 
   // ---------------------------------------------------------------------
   // METADATA-ONLY AGGREGATES (the public Delta "numRecords in the log"
@@ -2514,7 +2449,7 @@ object TxLog {
     val snap = snapshot(spark, table, asOf)
     val live = snap.files
     if (live.isEmpty) return Some(Map.empty)
-    val pv = partitionValuesIn(snap, partCol)
+    val pv = partitionValuesIn(snap, snap.physical(partCol))
     if (!live.forall(pv.contains)) return None
     val rows = statsIn(snap, RowsStatsCol)
     if (!live.forall(rows.contains)) return None
@@ -2539,9 +2474,9 @@ object TxLog {
     val live = snap.files
     if (live.isEmpty) return Some(Map.empty)
     if (snap.liveDvs.nonEmpty) return None
-    val pv = partitionValuesIn(snap, partCol)
+    val pv = partitionValuesIn(snap, snap.physical(partCol))
     if (!live.forall(pv.contains)) return None
-    val st = statsIn(snap, statsCol)
+    val st = statsIn(snap, snap.physical(statsCol))
     if (!live.forall(st.contains)) return None
     Some(live.groupBy(pv).map { case (v, fs) =>
       v -> ((fs.map(st(_)._1).min, fs.map(st(_)._2).max))
@@ -2585,7 +2520,7 @@ object TxLog {
     import org.apache.spark.sql.functions.{col, max, min}
     val snap = snapshot(spark, table, asOf)
     val live = snap.files
-    val stats = statsIn(snap, statsCol)
+    val stats = statsIn(snap, snap.physical(statsCol))
     val dvs = snap.liveDvs
     val (clean, dirty) = live.partition(f =>
       stats.contains(f) && !dvs.contains(f))
@@ -2661,7 +2596,7 @@ object TxLog {
     // the files, physically named, under the schema they were written
     // with (a declared table's physical one)
     val scanned = scanFiles(spark, table, files, None,
-      footers.map { case (f, ft) => f -> ((ft.size, ft.mtime)) }.toMap)
+      footers.map { case (f, ft) => f -> ((ft.size, ft.mtime)) }.toMap, None)
     require(!scanned.columns.contains("_g_bloom_file"),
       "txlog: table schema collides with the bloom build's internal column")
     scanned
@@ -2693,7 +2628,7 @@ object TxLog {
   def rebloom(spark: SparkSession, table: String, bloomCol: String): Long = {
     val snap = latestSnapshot(spark, table, "rebloom")
     val base = snap.version
-    val existing = bloomsIn(snap, bloomCol)
+    val existing = bloomsIn(snap, snap.physical(bloomCol))
     val missing = snap.files.filterNot(existing.contains)
     if (missing.isEmpty) return base
     val sidecarRel = f"data/v${base + 1}%08d-rebloom-${uniq()}"
@@ -2737,11 +2672,10 @@ object TxLog {
       stats = lines)
   }
 
-  /** Live files' bloom sidecar references for `bloomCol` as of `asOf`
+  /** Live files' bloom sidecar references for PHYSICAL column `phys`
     * (file → sidecar dir; empty when the column was never bloomed —
     * readers treat absence as "cannot skip"). */
-  private def bloomsIn(snap: Snapshot, bloomCol: String): Map[String, String] = {
-    val phys = snap.physical(bloomCol)
+  private def bloomsIn(snap: Snapshot, phys: String): Map[String, String] =
     snap.stats.flatMap { payload =>
       payload.split('|') match {
         case Array(p, c, sidecar, _, `BloomSuffix`)
@@ -2749,7 +2683,6 @@ object TxLog {
         case _ => None
       }
     }.toMap
-  }
 
   /** Bloom sidecar dirs referenced by the snapshot's live bloom lines —
     * the vacuum protection set (mirror of the dv-dir rule). */
@@ -2763,22 +2696,31 @@ object TxLog {
     }.toSet
   }
 
-  /** The probe hash: `c` as the column's stored type `t`, through the
-    * ENGINE's own xxhash64 the build uses, so probe and filter agree. */
-  private def bloomHash(c: Column, t: DataType): Column =
-    org.apache.spark.sql.functions.xxhash64(c.cast(t))
+  /** The probe hashes of `c` as a column of stored type `t`, through
+    * the ENGINE's own xxhash64 the build uses: as `t`, and as each
+    * narrower type a file may hold the column as (a narrower batch lands
+    * its files as written, and a file's filter hashes the file's own
+    * type; byte and short hash as int). A value a narrower type cannot
+    * hold hashes as null there and matches nothing. */
+  private def bloomHashes(c: Column, t: DataType): Seq[Column] = {
+    val v = c.cast(t)
+    (t +: Seq(IntegerType, LongType, FloatType).filter(s => s != t && widens(s, t)))
+      .map(s => org.apache.spark.sql.functions.xxhash64(if (s == t) v else v.try_cast(s)))
+  }
 
-  /** [[bloomHash]] of each of `values` as `bloomCol`'s type in `snap`:
-    * one constant projection over a local relation, however many. */
+  /** [[bloomHashes]] of each of `values` as PHYSICAL column `phys`'s
+    * type in `snap`, one group per value: one constant projection over
+    * a local relation, however many. */
   private def probeHashes(spark: SparkSession, table: String, snap: Snapshot,
-                          bloomCol: String, values: Seq[Any]): Seq[Long] = {
+                          phys: String, values: Seq[Any]): Seq[Seq[Long]] = {
     import org.apache.spark.sql.functions.{array, lit}
     import spark.implicits._
     val t = snap.schema
-      .flatMap(_.fields.find(_.name == bloomCol)).map(_.dataType)
-      .getOrElse(inferredSchema(spark, table, snap.files)(bloomCol).dataType)
-    Seq(0).toDF("_").select(array(values.map(v => bloomHash(lit(v), t)): _*))
-      .head().getSeq[Long](0)
+      .flatMap(_.fields.find(physicalName(_) == phys)).map(_.dataType)
+      .getOrElse(inferredSchema(spark, table, snap.files)(phys).dataType)
+    val each = values.map(v => bloomHashes(lit(v), t)) // as many per value
+    Seq(0).toDF("_").select(array(each.flatten: _*)).head().getSeq[Long](0)
+      .grouped(each.headOption.fold(1)(_.size)).toSeq
   }
 
   /** The bloom sidecar convention: one row per data-file name. */
@@ -2786,12 +2728,12 @@ object TxLog {
     StructField("file", org.apache.spark.sql.types.StringType),
     StructField("filter", org.apache.spark.sql.types.BinaryType)))
 
-  /** Live file → decoded bloom filter on `bloomCol` in `snap`, from one
-    * read of the column's sidecars under [[BloomSchema]]; files with no
-    * filter are absent. */
+  /** Live file → decoded bloom filter on PHYSICAL column `phys` in
+    * `snap`, from one read of the column's sidecars under
+    * [[BloomSchema]]; files with no filter are absent. */
   private def bloomFiltersIn(spark: SparkSession, table: String, snap: Snapshot,
-                             bloomCol: String): Map[String, BloomFilter] = {
-    val refs = bloomsIn(snap, bloomCol)
+                             phys: String): Map[String, BloomFilter] = {
+    val refs = bloomsIn(snap, phys)
     if (refs.isEmpty) return Map.empty
     val bytes = spark.read.schema(BloomSchema)
       .parquet(refs.values.toSeq.distinct.map(p => new Path(table, p).toString): _*)
@@ -2802,45 +2744,11 @@ object TxLog {
     }.toMap
   }
 
-  /** Bloom rung: the live files whose filter might hold one of `hashes`
-    * (taken only when some file has a filter), plus unfiltered files. */
-  private def keepBloom(snap: Snapshot, filters: Map[String, BloomFilter],
-                        hashes: => Seq[Long]): Seq[String] =
-    if (filters.isEmpty) snap.files
-    else {
-      val hs = hashes
-      snap.files.filter(f => filters.get(f).forall(bf => hs.exists(bf.mightContainLong)))
-    }
-
-  /** [[keepBloom]] for the probe `values` of `bloomCol`. */
-  private def keepBloomValues(spark: SparkSession, table: String, snap: Snapshot,
-                              bloomCol: String, values: Seq[Any]): Seq[String] = {
-    require(values.forall(_ != null), "txlog: bloom probe value must be " +
-      "non-null (equality to NULL matches no row)")
-    keepBloom(snap, bloomFiltersIn(spark, table, snap, bloomCol),
-      probeHashes(spark, table, snap, bloomCol, values))
-  }
-
-  /** The live files an equality probe `bloomCol = value` must scan:
-    * every file whose recorded filter might contain the probe, plus
-    * every file with no filter (conservative keep). Returns
-    * (kept, live-count). */
-  def pruneFilesBloom(spark: SparkSession, table: String, bloomCol: String,
-                      value: Any,
-                      asOf: Option[Long] = None): (Seq[String], Int) =
-    pruned(spark, table, asOf)(keepBloomValues(spark, table, _, bloomCol, Seq(value)))
-
-  /** Multi-probe bloom prune: the live files that might contain AT
-    * LEAST ONE of `values` in `bloomCol` — [[pruneFilesBloom]] for a
-    * key SET (the MERGE address scan's shape: a file no batch key can
-    * live in holds no superseded row, so the scan skips it whole).
-    * Unbloomed files are conservatively kept. */
-  def pruneFilesBloomAny(spark: SparkSession, table: String, bloomCol: String,
-                         values: Seq[Any],
-                         asOf: Option[Long] = None): (Seq[String], Int) = {
-    require(values.nonEmpty, "txlog: bloom multi-probe needs values")
-    pruned(spark, table, asOf)(keepBloomValues(spark, table, _, bloomCol, values))
-  }
+  /** Bloom rung: the `files` whose filter might hold one of `hashes`,
+    * plus unfiltered files. */
+  private def keepBloom(files: Seq[String], filters: Map[String, BloomFilter],
+                        hashes: Seq[Long]): Seq[String] =
+    files.filter(f => filters.get(f).forall(bf => hashes.exists(bf.mightContainLong)))
 
   /** Probe-key ceiling for the bloom-accelerated merge: above this the
     * driver-side files × keys membership sweep costs more than it
@@ -2855,49 +2763,70 @@ object TxLog {
   private val MaxMergeKeySet = 1000
 
   // ---------------------------------------------------------------------
-  // LOG-NATIVE SKIPPING FOR THE SQL SURFACE: the catalog relation's
-  // filtered scan ([[TxLogCatalog]]) reads through [[readForFilters]]:
-  // the files [[keptForFilters]] keeps from one snapshot, scanned on
-  // that snapshot. The composer runs every rung this log records —
-  // numeric min/max stats, string byte bounds, partition values,
-  // per-file bloom filters — on that snapshot and combines their
-  // answers by the filter tree. Strictly conservative: a rung that
-  // cannot answer keeps its files, unknown filter shapes prune nothing,
-  // and the caller re-applies every filter on the returned rows, so
-  // pruning only skips files that hold no matching row.
+  // LOG-NATIVE SKIPPING: every scan of table data is built on a
+  // [[LogFileIndex]] that lists only the files [[keptForFilters]] keeps
+  // for the filters Spark pushes to it, so `read(...).where(...)` skips
+  // by itself; the catalog's scan reads through [[readForFilters]]. The
+  // composer runs every rung this log records — numeric min/max stats,
+  // string byte bounds, partition values, per-file bloom filters — on
+  // one snapshot and combines their answers by the filter tree.
+  // Strictly conservative: a rung that cannot answer keeps its files,
+  // unknown filter shapes prune nothing, and every filter still runs on
+  // the scanned rows, so pruning only skips files that hold no
+  // matching row.
   // ---------------------------------------------------------------------
 
-  /** [[keptForFilters]] over the snapshot at `asOf`. */
+  /** The live files at `asOf` that `filters` (on logical columns)
+    * cannot rule out. */
   private[graft] def pruneForFilters(spark: SparkSession, table: String,
                                      filters: Seq[org.apache.spark.sql.sources.Filter],
-                                     asOf: Option[Long]): Seq[String] =
-    keptForFilters(spark, table, snapshot(spark, table, asOf), filters)
+                                     asOf: Option[Long] = None): Seq[String] = {
+    val snap = snapshot(spark, table, asOf)
+    keptForFilters(spark, table, snap, snap.files, filters, snap.physical)
+  }
 
-  /** The catalog scan's rows: [[readPruned]] keeping [[keptForFilters]]. */
+  /** The catalog scan's rows: [[readPruned]] keeping [[keptForFilters]]
+    * for `filters` on logical columns. */
   private[graft] def readForFilters(spark: SparkSession, table: String,
                                     filters: Seq[org.apache.spark.sql.sources.Filter],
                                     asOf: Option[Long]): DataFrame =
-    readPruned(spark, table, asOf)(keptForFilters(spark, table, _, filters))
+    readPruned(spark, table, asOf)(snap =>
+      keptForFilters(spark, table, snap, snap.files, filters, snap.physical))
 
-  /** The live files of `snap` that pushed `filters` cannot rule out.
-    * A rung runs only for a column it recorded something for; an `IN`
-    * list is hashed once and a column's sidecars read once per call. */
+  /** The `files` of `snap` that pushed `filters` cannot rule out, in
+    * their order; `phys` names the physical column a filter's attribute
+    * reads. A filter on no column with a recorded rung is dropped
+    * before any per-value work. A rung runs only for a column it
+    * recorded something for; a column's records are parsed, its IN list
+    * hashed and its bloom sidecars read once per call. */
   private def keptForFilters(spark: SparkSession, table: String, snap: Snapshot,
-                             filters: Seq[org.apache.spark.sql.sources.Filter]
-                            ): Seq[String] = {
+                             files: Seq[String],
+                             filters: Seq[org.apache.spark.sql.sources.Filter],
+                             phys: String => String): Seq[String] = {
     import org.apache.spark.sql.sources._
-    val live = snap.files
-    if (filters.isEmpty || live.isEmpty) return live
-    val recorded: Set[(String, Char)] =
-      snap.stats.flatMap(_.split('|') match {
-        case Array(_, c, _, _) => Some((c, 'n'))
-        case Array(_, c, _, _, "s") => Some((c, 's'))
-        case Array(_, c, _, _, "p") => Some((c, 'p'))
-        case Array(_, c, _, _, BloomSuffix) => Some((c, 'b'))
-        case _ => None
-      }).toSet
-    def has(attr: String, rung: Char): Boolean =
-      recorded.contains((snap.physical(attr), rung))
+    def rungsOf(attr: String): Set[Char] =
+      if (attr.contains('.')) Set.empty // nested: no record
+      else snap.rungs.getOrElse(phys(attr), Set.empty)
+    val useful = filters.filter(_.references.exists(rungsOf(_).nonEmpty))
+    if (useful.isEmpty || files.isEmpty) return files
+    val all = files.toSet
+    def once[V](load: String => V): String => V = {
+      val got = scala.collection.mutable.Map.empty[String, V]
+      c => got.getOrElseUpdate(c, load(c))
+    }
+    val nums = once(statsIn(snap, _))
+    val strs = once(stringStatsIn(snap, _))
+    val parts = once(partitionValuesIn(snap, _))
+    val blooms = once(bloomFiltersIn(spark, table, snap, _))
+    // the files whose record for `attr`'s rung satisfies `ok`, plus the
+    // unrecorded; every file when no file records that rung
+    def where[V](attr: String, rung: Char, recs: String => Map[String, V])(
+        ok: V => Boolean): Set[String] =
+      if (!rungsOf(attr).contains(rung)) all
+      else {
+        val r = recs(phys(attr))
+        files.filter(f => r.get(f).forall(ok)).toSet
+      }
     def longOf(v: Any): Option[Long] = v match {
       case n: java.lang.Long => Some(n)
       case n: java.lang.Integer => Some(n.longValue)
@@ -2905,38 +2834,58 @@ object TxLog {
       case n: java.lang.Byte => Some(n.longValue)
       case _ => None // doubles/decimals: integral stats cannot bound them
     }
-    def rangeKeep(attr: String, lo: Long, hi: Long): Set[String] =
+    def range(attr: String, lo: Long, hi: Long): Set[String] =
       if (lo > hi) Set.empty
-      else if (!has(attr, 'n')) live.toSet
-      else keepRanges(snap, Seq((attr, lo, hi))).toSet
-    val sidecars = scala.collection.mutable.Map.empty[String, Map[String, BloomFilter]]
+      else where(attr, 'n', nums) { case (mn, mx) => mx >= lo && mn <= hi }
+    // the UTF-8 byte range [lo, hi] ([lo, hi) when hiExclusive; no hi is
+    // unbounded), compared in UTF-8 byte order (= parquet's BINARY stats
+    // order = Spark's UTF8String order, so the skip can never disagree
+    // with the filter)
+    def bytes(attr: String, lo: Array[Byte], hi: Option[Array[Byte]],
+              hiExclusive: Boolean): Set[String] =
+      where(attr, 's', strs) { case (mn, mx) =>
+        UnsignedBytes.compare(mx, lo) >= 0 && hi.forall { h =>
+          val c = UnsignedBytes.compare(mn, h)
+          if (hiExclusive) c < 0 else c <= 0
+        }
+      }
+    def utf8(s: String): Array[Byte] = s.getBytes("UTF-8")
+    // `attr` at or above (`below`: at or below) `v`; a strict bound on an
+    // integral value tightens by one, and past the longs' end keeps none
+    def bound(attr: String, v: Any, below: Boolean, strict: Boolean): Option[Set[String]] =
+      v match {
+        case s: String => Some(
+          if (below) bytes(attr, Array.emptyByteArray, Some(utf8(s)), hiExclusive = strict)
+          else bytes(attr, utf8(s), None, hiExclusive = false))
+        case _ => longOf(v).map { n =>
+          if (strict && n == (if (below) Long.MinValue else Long.MaxValue)) Set.empty[String]
+          else {
+            val m = if (!strict) n else if (below) n - 1 else n + 1
+            if (below) range(attr, Long.MinValue, m) else range(attr, m, Long.MaxValue)
+          }
+        }
+      }
     // the files some value of `vs` can live in (an EqualTo is a 1-list)
     def eqKeep(attr: String, vs: Seq[Any]): Set[String] = {
-      if (attr.contains('.')) return live.toSet // nested: no record
-      val byBloom: Seq[Option[Set[String]]] =
-        if (!has(attr, 'b')) vs.map(_ => None)
-        else try {
-          val filters = sidecars.getOrElseUpdate(attr,
-            bloomFiltersIn(spark, table, snap, attr))
-          vs.zip(probeHashes(spark, table, snap, attr, vs)).map { case (v, h) =>
-            if (v == null) None else Some(keepBloom(snap, filters, Seq(h)).toSet)
-          }
-        } catch { case scala.util.control.NonFatal(_) => vs.map(_ => None) }
-      vs.zip(byBloom).map { case (v, bloom) =>
-        val rungs = Seq(
-          longOf(v).map(n => rangeKeep(attr, n, n)),
-          v match {
-            case s: String =>
-              val byStats =
-                if (!has(attr, 's')) live.toSet else keepString(snap, attr, s, s).toSet
-              val byPart =
-                if (!has(attr, 'p')) live.toSet else keepPartition(snap, attr, s).toSet
-              Some(byStats.intersect(byPart))
-            case _ => None
-          },
-          bloom)
-        rungs.flatten.foldLeft(live.toSet)(_ intersect _)
-      }.reduce(_ union _)
+      val filters: Map[String, BloomFilter] =
+        if (!rungsOf(attr).contains('b')) Map.empty
+        else try blooms(phys(attr)) catch { case scala.util.control.NonFatal(_) => Map.empty }
+      val hashes: Seq[Option[Seq[Long]]] =
+        if (filters.isEmpty) vs.map(_ => None)
+        else try probeHashes(spark, table, snap, phys(attr), vs).map(Some(_))
+        catch { case scala.util.control.NonFatal(_) => vs.map(_ => None) }
+      vs.zip(hashes).map {
+        case (null, _) => Set.empty[String] // equality to NULL matches no row
+        case (v, h) =>
+          val str = Some(v).collect { case s: String => s }
+          Seq(
+            longOf(v).map(n => range(attr, n, n)),
+            str.map(s => bytes(attr, utf8(s), Some(utf8(s)), hiExclusive = false)),
+            // partition values are recorded in their string form
+            str.orElse(longOf(v).map(_.toString)).map(s => where(attr, 'p', parts)(_ == s)),
+            h.map(keepBloom(files, filters, _).toSet)
+          ).flatten.foldLeft(all)(_ intersect _)
+      }.foldLeft(Set.empty[String])(_ union _)
     }
     // one filter → the files it keeps; None = cannot answer (keep all)
     def keep(f: Filter): Option[Set[String]] = f match {
@@ -2947,42 +2896,22 @@ object TxLog {
       case Or(l, r) => for (a <- keep(l); b <- keep(r)) yield a.union(b)
       case EqualTo(attr, v) => Some(eqKeep(attr, Seq(v)))
       case In(attr, vs) if vs.nonEmpty => Some(eqKeep(attr, vs.toSeq))
-      case GreaterThan(attr, v) => longOf(v).map(n =>
-        if (n == Long.MaxValue) Set.empty[String]
-        else rangeKeep(attr, n + 1, Long.MaxValue))
-      case GreaterThanOrEqual(attr, v) =>
-        longOf(v).map(n => rangeKeep(attr, n, Long.MaxValue))
-      case LessThan(attr, v) => longOf(v).map(n =>
-        if (n == Long.MinValue) Set.empty[String]
-        else rangeKeep(attr, Long.MinValue, n - 1))
-      case LessThanOrEqual(attr, v) =>
-        longOf(v).map(n => rangeKeep(attr, Long.MinValue, n))
-      case StringStartsWith(attr, p) if p.nonEmpty && has(attr, 's') =>
+      case GreaterThan(attr, v) => bound(attr, v, below = false, strict = true)
+      case GreaterThanOrEqual(attr, v) => bound(attr, v, below = false, strict = false)
+      case LessThan(attr, v) => bound(attr, v, below = true, strict = true)
+      case LessThanOrEqual(attr, v) => bound(attr, v, below = true, strict = false)
+      case StringStartsWith(attr, p) if p.nonEmpty =>
         // LIKE 'p%' = the byte range [p, next(p)): next(p) drops trailing
         // 0xFF bytes and increments the last remaining one (the smallest
         // bytes above EVERY string with the prefix; all-0xFF: unbounded)
-        val b = p.getBytes("UTF-8")
+        val b = utf8(p)
         val i = b.lastIndexWhere(_ != 0xFF.toByte)
         val next = if (i < 0) None else Some(b.take(i) :+ (b(i) + 1).toByte)
-        Some(keepBytes(snap, attr, b, next, hiExclusive = true).toSet)
+        Some(bytes(attr, b, next, hiExclusive = true))
       case _ => None // IsNull / Not / EndsWith / …: no pruning
     }
-    val keptSet = filters.flatMap(keep)
-      .foldLeft(live.toSet)(_ intersect _)
-    live.filter(keptSet) // preserve first-added order
-  }
-
-  /** Point-equality read with log-native bloom skipping — the
-    * needle-in-haystack lookup ([[readWhere]]'s range twin for columns
-    * the layout is NOT clustered by). The filters decide file
-    * SKIPPING, never row membership: the exact equality predicate runs
-    * on every kept file, and deletion vectors anti-apply as in
-    * [[read]]. */
-  def readWhereEquals(spark: SparkSession, table: String, bloomCol: String,
-                      value: Any, asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    readPruned(spark, table, asOf)(keepBloomValues(spark, table, _, bloomCol, Seq(value)))
-      .filter(col(bloomCol) === lit(value))
+    val keptSet = useful.flatMap(keep).foldLeft(all)(_ intersect _)
+    files.filter(keptSet)
   }
 
   // ---------------------------------------------------------------------
@@ -3172,7 +3101,7 @@ object TxLog {
     require(targetBytes > 0, s"txlog: target bytes must be positive")
     val snap = latestSnapshot(spark, table, "compact")
     val base = snap.version
-    val pv = partitionValuesIn(snap, partCol)
+    val pv = partitionValuesIn(snap, snap.physical(partCol))
     val scope = snap.files.filter(f => pv.get(f).contains(value))
     require(scope.nonEmpty,
       s"txlog: no live file of $table records $partCol=$value — nothing " +
@@ -3200,12 +3129,14 @@ object TxLog {
     * (files appended without partitioning are simply absent — readers
     * must treat absence as "cannot skip", like stats). */
   def partitionValuesAt(spark: SparkSession, table: String, partCol: String,
-                        asOf: Option[Long] = None): Map[String, String] =
-    partitionValuesIn(snapshot(spark, table, asOf), partCol)
+                        asOf: Option[Long] = None): Map[String, String] = {
+    val snap = snapshot(spark, table, asOf)
+    partitionValuesIn(snap, snap.physical(partCol))
+  }
 
-  private def partitionValuesIn(snap: Snapshot,
-                                partCol: String): Map[String, String] = {
-    val phys = snap.physical(partCol)
+  /** [[partitionValuesAt]] over a snapshot in hand, for PHYSICAL column
+    * `phys`. */
+  private def partitionValuesIn(snap: Snapshot, phys: String): Map[String, String] = {
     val dec = java.util.Base64.getDecoder
     snap.stats.flatMap { payload =>
       payload.split('|') match {
@@ -3214,57 +3145,6 @@ object TxLog {
         case _ => None
       }
     }.toMap
-  }
-
-  /** Partition rung: the live files whose recorded partition value for
-    * `partCol` is `value` (no stats, no footers); files without a
-    * recorded value can never be skipped. */
-  private def keepPartition(snap: Snapshot, partCol: String,
-                            value: String): Seq[String] = {
-    val pv = partitionValuesIn(snap, partCol)
-    snap.files.filter(p => pv.get(p).forall(_ == value))
-  }
-
-  /** The live files a `partCol = value` read must scan
-    * ([[keepPartition]]): (kept, live count). */
-  private[graft] def pruneFilesPartition(spark: SparkSession, table: String,
-                                         partCol: String, value: String,
-                                         asOf: Option[Long] = None
-                                        ): (Seq[String], Int) =
-    pruned(spark, table, asOf)(keepPartition(_, partCol, value))
-
-  /** Equality read on the partition column, COMPOSED with optional
-    * range predicates: files are kept only if the recorded partition
-    * value matches AND every range predicate's recorded min/max
-    * intersects — partition pruning and data skipping stack, exactly
-    * as in the public lakehouses. Residual filters keep the result
-    * exact; deletion vectors anti-apply as in [[read]]. */
-  def readWherePartition(spark: SparkSession, table: String, partCol: String,
-                         value: String,
-                         preds: Seq[(String, Long, Long)] = Seq.empty,
-                         asOf: Option[Long] = None): DataFrame =
-    readWherePartitionAll(spark, table, Seq((partCol, value)), preds, asOf)
-
-  /** [[readWherePartition]] over a CONJUNCTION of partition equalities
-    * (the multi-level layout's natural read: `lang = 'de' AND source =
-    * 'web'`), still composable with range stats. */
-  def readWherePartitionAll(spark: SparkSession, table: String,
-                            eqs: Seq[(String, String)],
-                            preds: Seq[(String, Long, Long)] = Seq.empty,
-                            asOf: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(eqs.nonEmpty, "txlog: at least one partition equality")
-    val base = readPruned(spark, table, asOf) { snap =>
-      val keep = eqs.map { case (c, v) => keepPartition(snap, c, v).toSet } :+
-        keepRanges(snap, preds).toSet
-      snap.files.filter(f => keep.forall(_(f)))
-    }
-    val eqFiltered = eqs.foldLeft(base) { case (df, (c, v)) =>
-      df.filter(col(c).cast("string") === v)
-    }
-    preds.foldLeft(eqFiltered) {
-      case (df, (c, lo, hi)) => df.filter(col(c).between(lo, hi))
-    }
   }
 
   /** DROP PARTITION — `DELETE FROM t WHERE partCol = value` against a
@@ -3286,7 +3166,7 @@ object TxLog {
     val snap = latestSnapshot(spark, table, "delete")
     val base = snap.version
     val live = snap.files
-    val recorded = partitionValuesIn(snap, partCol)
+    val recorded = partitionValuesIn(snap, snap.physical(partCol))
     val dropped = live.filter(p => recorded.get(p).contains(value))
     val unrecorded = live.filterNot(recorded.contains)
     if (dropped.isEmpty && unrecorded.isEmpty) return base
@@ -3333,7 +3213,7 @@ object TxLog {
                   lo: Long, hi: Long): Long = {
     val snap = latestSnapshot(spark, table, "delete")
     val base = snap.version
-    val touched = keepRanges(snap, Seq((statsCol, lo, hi)))
+    val touched = keepRange(snap, statsCol, lo, hi)
     if (touched.isEmpty) return base // no file can contain a match
     import org.apache.spark.sql.functions.col
     // the rewrite must anti-apply any existing deletion vectors on the
@@ -3374,7 +3254,7 @@ object TxLog {
                      lo: Long, hi: Long): Long = {
     import org.apache.spark.sql.functions.col
     val snap = latestSnapshot(spark, table, "delete")
-    val touched = keepRanges(snap, Seq((statsCol, lo, hi)))
+    val touched = keepRange(snap, statsCol, lo, hi)
     if (touched.isEmpty) return snap.version // no file can contain a match
     withJobTag(spark, "delete", table, snap) {
       // positions of the rows to delete, addressed physically: the raw
@@ -3382,7 +3262,7 @@ object TxLog {
       // rows may re-match; the union dedups them). Raw = physical schema
       // and physical predicate name (the _metadata struct needs the
       // un-projected scan)
-      val newPos = scanFiles(spark, table, touched, snap.schema, snap.sizes)
+      val newPos = scanFiles(spark, table, touched, snap.schema, snap.sizes, Some(snap))
         .filter(col(snap.physical(statsCol)).between(lo, hi))
         .select(col("_metadata.file_name").as("file"),
           col("_metadata.row_index").as("pos"))
@@ -3553,7 +3433,7 @@ object TxLog {
                             snap: Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.col
     val declared = snap.schema
-    val addressed = scanFiles(spark, table, snap.files, declared, snap.sizes)
+    val addressed = scanFiles(spark, table, snap.files, declared, snap.sizes, Some(snap))
       .withColumn("_g_dv_file", col("_metadata.file_name"))
       .withColumn("_g_dv_pos", col("_metadata.row_index"))
     declared.filter(mappingEnabled) match {
@@ -4137,7 +4017,7 @@ object TxLog {
         .collect { case ("stats", p) => p })
       // physical read + logical rename: slices from both sides of a
       // RENAME align under the range-end logical names
-      val slice = logicalize(scanFiles(spark, table, files, declared, sizes), declared)
+      val slice = logicalize(scanFiles(spark, table, files, declared, sizes, None), declared)
       slice.withColumn("_commit_version", org.apache.spark.sql.functions.lit(v))
     }.reduce(_ unionByName _)
   }
@@ -4216,7 +4096,8 @@ object TxLog {
       }
       if (!anyFresh) return None
       val (file, pos) = (col("_metadata.file_name"), col("_metadata.row_index"))
-      val imaged = scanFiles(spark, table, bound.map(_._1), declared, now.sizes)
+      val imaged = scanFiles(spark, table, bound.map(_._1), declared, now.sizes,
+        Some(now))
         .filter(maskNow.masked(file, pos) && !maskBefore.masked(file, pos))
       Some(logicalize(imaged, declared))
     }
@@ -4367,11 +4248,15 @@ object TxLog {
       // whose filter excludes ALL batch keys — no false negatives means a
       // skipped file holds zero superseded rows, so the mask, the
       // duplicate guard, and the identity join-back are unaffected; the
-      // merge's scan cost tracks the TOUCHED files, not the table. Capped
-      // at [[MaxMergeBloomProbes]] distinct keys (beyond that the
-      // driver-side membership sweep stops paying for itself).
+      // merge's scan cost tracks the TOUCHED files, not the table. A
+      // single-key batch of at most [[MaxMergeKeySet]] keys filters the
+      // scan by a hash set of its keys, so the scan's file index skips
+      // by that filter (every rung, the bloom filters included); a wider
+      // or composite-key batch has no such filter, so its skip runs
+      // here, capped at [[MaxMergeBloomProbes]] probe hashes (beyond
+      // that the driver-side membership sweep stops paying for itself).
       val liveAll = snap.files
-      val live = {
+      val live = if (keys.size == 1 && keyCounts.length <= MaxMergeKeySet) liveAll else {
         // hash through the TABLE's key type: a legally narrower batch key
         // (upcast at physicalize time) must probe as the stored type, or
         // a hash mismatch would skip files that DO hold matches
@@ -4380,12 +4265,12 @@ object TxLog {
         keyType match {
           case None => liveAll // undeclared legacy table: no safe probe type
           case Some(t) =>
-            val filters = bloomFiltersIn(spark, table, snap, keys.head)
+            val filters = bloomFiltersIn(spark, table, snap, snap.physical(keys.head))
             // a projection of the local key rows: evaluated on the driver
-            lazy val hashes = batchKeyRows.select(bloomHash(col(keys.head), t))
-              .collect().map(_.getLong(0)).distinct.toSeq
+            lazy val hashes = batchKeyRows.select(bloomHashes(col(keys.head), t): _*)
+              .collect().flatMap(r => r.toSeq.map(_.asInstanceOf[Long])).distinct.toSeq
             if (filters.isEmpty || hashes.length > MaxMergeBloomProbes) liveAll
-            else keepBloom(snap, filters, hashes)
+            else keepBloom(liveAll, filters, hashes)
         }
       }
       // under an evolution the EVOLVED schema governs every read and
@@ -4400,7 +4285,7 @@ object TxLog {
       // for composite keys) and nothing is broadcast; a key with a null
       // field matches no row under the ON's equality, so it is left out.
       // Larger batches semi-join a broadcast of the keys
-      val raw = scanFiles(spark, table, live, declared, snap.sizes)
+      val raw = scanFiles(spark, table, live, declared, snap.sizes, Some(snap))
       val pKeys = keys.map(snap.physical)
       // the hidden _metadata struct resolves only on the scan itself —
       // materialize the address columns BEFORE the key filter
@@ -4477,7 +4362,10 @@ object TxLog {
       // new images land as appended files regardless of match state
       val rel = f"data/v${base + 1}%08d-merge-${uniq()}"
       physicalize(images, declared).write.parquet(new Path(table, rel).toString)
-      bindDeletionVectors(spark, table, snap, newPos, live,
+      // the vector's scope: the files holding a superseded row (the bloom
+      // skip, when the index ran it, is not visible here)
+      val hit = liveRows.map(_.getAs[String]("_g_dv_file")).toSet
+      bindDeletionVectors(spark, table, snap, newPos, live.filter(f => hit(new Path(f).getName)),
         adds = writtenFiles(spark, table, rel), tag = "merge",
         schemaB64 = evolution.map(encodeSchema), metas = idMetas)
     }

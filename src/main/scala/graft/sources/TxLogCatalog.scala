@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder,
-  SupportsPushDownAggregates, V1Scan}
+  SupportsPushDownAggregates, SupportsPushDownFilters, V1Scan}
 import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite,
   SupportsTruncate, V1Write, Write, WriteBuilder}
@@ -40,15 +40,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the library API uses, so SQL and library reads can never diverge.
   *
   * Read path: the table surfaces as a [[V1Scan]] whose relation is a
-  * `PrunedFilteredScan` on the read path of [[TxLog.read]] and the
-  * `readWhere*` family, so snapshot resolution, deletion vectors,
-  * column mapping and declared-schema promotion ride one
-  * implementation. Its `buildScan(requiredColumns, filters)` picks the
-  * files to scan by the log's records ([[TxLog.readForFilters]]: min/max
-  * stats, string bounds, partition values, bloom filters) and scans
-  * them on the snapshot they were pruned from. Spark 4.1 plans a
-  * `V1Scan` through the no-filter `buildScan()` (`PushedFilters: []`),
-  * so a SQL query scans every live file and filters above the scan.
+  * `TableScan` on the read path of [[TxLog.read]], so snapshot
+  * resolution, deletion vectors, column mapping and declared-schema
+  * promotion ride one implementation. The scan builder takes the
+  * query's filters (`SupportsPushDownFilters`) and hands each one back
+  * as post-scan, so Spark still filters every row; the scan reads only
+  * the files the log's records keep for them
+  * ([[TxLog.readForFilters]]: min/max stats, string bounds, partition
+  * values, bloom filters), on the snapshot they were pruned from.
   *
   * Write path: every SQL write funnels into the SAME OCC commits the
   * library uses — `INSERT INTO` = [[TxLog.append]] (the no-conflict
@@ -222,18 +221,19 @@ class TxLogCatalog extends TableCatalog {
 
 /** A pinned TxLog snapshot as a DSv2 table: schema and rows come from
   * the SAME read path the library serves, via a V1 scan relation that
-  * can prune files by filters handed to it. Writes and
+  * reads only the files its pushed filters keep. The schema is read
+  * once per table, as Spark resolves a query against it. Writes and
   * deletes funnel into the library's OCC commits — see [[TxLogCatalog]]. */
 private[graft] class TxLogV2Table(private[graft] val tablePath: String,
                                   private[graft] val asOf: Option[Long])
   extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
-  private def snapshot = TxLog.read(SparkSession.active, tablePath, asOf)
+  private lazy val tableSchema = TxLog.read(SparkSession.active, tablePath, asOf).schema
 
   override def name(): String =
     tablePath + asOf.map(v => s" VERSION AS OF $v").getOrElse("")
 
-  override def schema(): StructType = snapshot.schema
+  override def schema(): StructType = tableSchema
 
   /** The declared PARTITIONED BY columns (identity transforms) — what
     * `CREATE TABLE` recorded; the write paths honor it. */
@@ -249,7 +249,7 @@ private[graft] class TxLogV2Table(private[graft] val tablePath: String,
       TableCapability.STREAMING_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with SupportsPushDownAggregates {
+    new ScanBuilder with SupportsPushDownAggregates with SupportsPushDownFilters {
       import org.apache.spark.sql.connector.expressions.NamedReference
       import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation,
         CountStar, Max, Min}
@@ -407,6 +407,15 @@ private[graft] class TxLogV2Table(private[graft] val tablePath: String,
         pushed.isDefined
       }
 
+      /** FILTER PUSHDOWN: the scan reads only the files the log keeps
+        * for the query's filters ([[TxLog.readForFilters]]). Every
+        * filter is handed back as post-scan — the skip is by file, not
+        * by row — as Spark's JDBC `V1Scan` does, so rows stay exact
+        * (and a filtered aggregate keeps its normal plan). */
+      private var filters: Array[Filter] = Array.empty
+      override def pushFilters(fs: Array[Filter]): Array[Filter] = { filters = fs; fs }
+      override def pushedFilters(): Array[Filter] = filters
+
       override def build(): Scan = pushed match {
         case Some((servedSchema, servedRows)) => new LocalScan {
           override def readSchema(): StructType = servedSchema
@@ -445,26 +454,11 @@ private[graft] class TxLogV2Table(private[graft] val tablePath: String,
         }
         override def toV1TableScan[T <: BaseRelation with TableScan](
             context: SQLContext): T =
-          // PrunedFilteredScan: filters handed to buildScan drive
-          // LOG-NATIVE file skipping (min/max stats, string bounds,
-          // partition values, bloom filters — [[TxLog.readForFilters]]),
-          // pruned and scanned on one snapshot; the caller re-applies
-          // every filter on the returned rows (unhandledFilters default),
-          // so the skip is conservative-correct by construction. Spark's
-          // planner runs a V1Scan through the no-filter buildScan(), so
-          // a SQL query reads every live file.
-          new BaseRelation with TableScan with PrunedFilteredScan {
+          new BaseRelation with TableScan {
             override def sqlContext: SQLContext = context
             override def schema: StructType = TxLogV2Table.this.schema()
-            override def buildScan(): RDD[Row] = snapshot.rdd
-            override def buildScan(requiredColumns: Array[String],
-                                   filters: Array[Filter]): RDD[Row] = {
-              val base = TxLog.readForFilters(SparkSession.active, tablePath,
-                filters.toSeq, asOf)
-              (if (requiredColumns.isEmpty) base
-               else base.select(requiredColumns.map(base.col(_)).toSeq: _*))
-                .rdd
-            }
+            override def buildScan(): RDD[Row] = TxLog.readForFilters(
+              SparkSession.active, tablePath, filters.toSeq, asOf).rdd
           }.asInstanceOf[T]
       }
     }

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, InSet, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -25,6 +25,13 @@ object GraftSqlShims {
     * its schema footer by the same rule. */
   def hiddenPathName(name: String): Boolean =
     org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** `DataSourceStrategy.translateFilter`: a scan's data filter as the
+    * `sources.Filter` a file source is handed (top-level columns only,
+    * as parquet's own pushdown translates it), or None. */
+  def translateFilter(e: Expression): Option[sources.Filter] =
+    execution.datasources.DataSourceStrategy.translateFilter(e,
+      supportNestedPredicatePushdown = false)
 
   /** `c IN values` as ONE hash-set expression: the values are external
     * (fields of collected rows) of type `from`, each converted once on

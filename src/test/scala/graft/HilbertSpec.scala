@@ -107,7 +107,7 @@ class HilbertSpec extends AnyFunSuite {
       assert(got.toSeq == df.orderBy("v").collect().map(_.toSeq).toSeq)
       // a two-axis box read prunes files on BOTH axes from the log alone
       val preds = Seq(("ax", 16L, 31L), ("ay", 16L, 31L))
-      val (kept, live) = TxLog.pruneFilesMulti(spark, table, preds)
+      val (kept, live) = Skipping.kept(spark, table, Skipping.ranges(preds))
       assert(live > 4 && kept.size < live,
         s"hilbert layout pruned nothing ($kept of $live)")
     } finally {

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 import graft.sources.TxLog
 import graft.sources.TxLog.Layout
 
@@ -20,14 +21,14 @@ class PartitionSpec extends SparkSpec {
       Seq(("de", 1L), ("en", 2L), ("fr", 3L)).toDF("lang", "v"),
       Layout(partitionBy = Seq("lang")))
     TxLog.append(spark, t, Seq(("de", 4L)).toDF("lang", "v")) // unrecorded
-    val (kept, live) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    val (kept, live) = Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))
     assert(live == 4 && kept.size == 2,
       "the de partition file AND the value-less plain file must be kept")
-    assert(TxLog.readWherePartition(spark, t, "lang", "de")
+    assert(TxLog.read(spark, t).where(col("lang") === "de")
       .collect().map(_.getLong(1)).sorted.toSeq == Seq(1L, 4L))
     // a value nobody wrote keeps only the unprunable plain file, and the
     // residual filter still returns zero rows
-    assert(TxLog.readWherePartition(spark, t, "lang", "zz").isEmpty)
+    assert(TxLog.read(spark, t).where(col("lang") === "zz").isEmpty)
   }
 
   test("partition values survive Hive path escaping and checkpoint replay") {
@@ -44,7 +45,7 @@ class PartitionSpec extends SparkSpec {
     assert(TxLog.checkpointVersions(spark, t).nonEmpty)
     val pv = TxLog.partitionValuesAt(spark, t, "k")
     assert(pv.values.toSet == Set("a:b c", "plain"))
-    assert(TxLog.readWherePartition(spark, t, "k", "a:b c")
+    assert(TxLog.read(spark, t).where(col("k") === "a:b c")
       .collect().map(_.getLong(1)).toSeq == Seq(1L))
   }
 
@@ -54,10 +55,9 @@ class PartitionSpec extends SparkSpec {
       Seq(("de", "web", 1L), ("de", "book", 2L), ("en", "web", 3L),
         ("en", "book", 4L)).toDF("lang", "src", "v"),
       Layout(partitionBy = Seq("lang", "src")))
-    val (keptLang, live) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    val (keptLang, live) = Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))
     assert(live == 4 && keptLang.size == 2)
-    val rows = TxLog.readWherePartitionAll(spark, t,
-      Seq(("lang", "de"), ("src", "web")))
+    val rows = TxLog.read(spark, t).where(col("lang") === "de" && col("src") === "web")
       .collect().map(_.getLong(2)).toSeq
     assert(rows == Seq(1L), "both equality rungs must compose")
     // the layout really nests on disk
@@ -70,18 +70,18 @@ class PartitionSpec extends SparkSpec {
     (0 to 2).foreach(i => TxLog.append(spark, t,
       Seq(("de", i * 10L), ("en", i * 10L + 1L), ("fr", i * 10L + 2L))
         .toDF("lang", "v"), Layout(partitionBy = Seq("lang"))))
-    assert(TxLog.pruneFilesPartition(spark, t, "lang", "de")._1.size == 3)
+    assert(Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))._1.size == 3)
     val rowsBefore = TxLog.read(spark, t).collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     val cv = TxLog.compactPartitioned(spark, t, Seq("lang"))
     assert(TxLog.commitKind(spark, t, cv).contains("compact"))
-    val (kept, liveAfter) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    val (kept, liveAfter) = Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))
     assert(liveAfter == 3, "one file per partition value after compaction")
     assert(kept.size == 1, "pruning must keep working on the compacted layout")
     assert(TxLog.read(spark, t).collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted.toSeq == rowsBefore,
       "partitioned compaction must be row-invisible")
-    assert(TxLog.readWherePartition(spark, t, "lang", "de")
+    assert(TxLog.read(spark, t).where(col("lang") === "de")
       .collect().map(_.getLong(1)).sorted.toSeq == Seq(0L, 10L, 20L))
   }
 
@@ -137,7 +137,7 @@ class PartitionSpec extends SparkSpec {
       Seq(("de", 1L), ("de", 2L), ("en", 3L)).toDF("k", "v"),
       Layout(partitionBy = Seq("k")))
     TxLog.deleteWhereMorExpr(spark, t2, "v = 1")
-    assert(TxLog.readWherePartition(spark, t2, "k", "de")
+    assert(TxLog.read(spark, t2).where(col("k") === "de")
       .collect().map(_.getLong(1)).toSeq == Seq(2L))
   }
 
@@ -153,10 +153,10 @@ class PartitionSpec extends SparkSpec {
     assert(live.size == 4 && live.toSet == pv.keySet,
       s"every file must record its declared partition value: $pv")
     assert(pv.values.toSet == Set("de", "en", "fr"))
-    val (kept, total) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    val (kept, total) = Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))
     assert(total == 4 && kept.size == 2,
       s"a partition probe must prune: kept ${kept.size} of $total")
-    assert(TxLog.readWherePartition(spark, t, "lang", "de")
+    assert(TxLog.read(spark, t).where(col("lang") === "de")
       .collect().map(_.getLong(1)).sorted.toSeq == Seq(1L, 4L))
   }
 

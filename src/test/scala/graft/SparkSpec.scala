@@ -6,7 +6,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (Spark sessions are
@@ -47,6 +47,21 @@ abstract class SparkSpec extends AnyFunSuite {
     val old = spark.conf.getOption(k)
     spark.conf.set(k, v)
     try body finally old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** The data files the executed plan of `df` reads: the distinct files
+    * of every `FileSourceScanExec`'s file-scan RDD, found by walking the
+    * executed plan's RDD lineage (through shuffles, unions and a catalog
+    * table's V1 scan), so the count is what the scans list after their
+    * file index skipped. Runs the plan's stages up to its last one. */
+  def scannedFiles(df: DataFrame): Int = {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.datasources.FileScanRDD
+    def files(r: RDD[_]): Seq[String] = (r match {
+      case f: FileScanRDD => f.filePartitions.flatMap(_.files.map(_.filePath.toString))
+      case _ => Nil
+    }) ++ r.dependencies.flatMap(d => files(d.rdd))
+    files(df.queryExecution.toRdd).distinct.size
   }
 
   /** Spark jobs started while `body` runs. */

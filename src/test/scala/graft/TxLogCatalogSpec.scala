@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 import graft.sources.TxLog
 import graft.sources.TxLog.Layout
 
@@ -894,8 +895,8 @@ class TxLogCatalogSpec extends SparkSpec {
       Seq(StringStartsWith("s", "b")), None).size == 1)
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$t` WHERE s LIKE 'b%'")
       .head().getLong(0) == 10L)
-    // SQL over the catalog returns exact rows (its scan reads every live
-    // file; the skip itself is checked through pruneForFilters above)
+    // SQL over the catalog returns exact rows (its scan reads the files
+    // pruneForFilters keeps; TxLogScanSkipSpec counts them)
     assert(spark.sql(s"SELECT s FROM graft.`$t` WHERE id = 15")
       .head().getString(0) == "b15")
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$t` WHERE id > 20")
@@ -923,7 +924,7 @@ class TxLogCatalogSpec extends SparkSpec {
     spark.sql(s"INSERT INTO graft.`$t` VALUES (3L, 'de')")
     val pv = TxLog.partitionValuesAt(spark, t, "lang")
     assert(pv.values.toSeq.sorted == Seq("de", "de", "en"), pv.toString)
-    val (kept, total) = TxLog.pruneFilesPartition(spark, t, "lang", "en")
+    val (kept, total) = Skipping.kept(spark, t, Seq(EqualTo("lang", "en")))
     assert(total == 3 && kept.size == 1, s"kept ${kept.size} of $total")
     // INSERT OVERWRITE would land value-less files — loud
     val e = intercept[Exception] {
@@ -999,7 +1000,7 @@ class TxLogCatalogSpec extends SparkSpec {
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.`$t` WHERE lang = 'de'")
       .head().getLong(0) == 19L)
     // the rewritten scope re-records its partition value: pruning holds
-    val (kept, total) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    val (kept, total) = Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))
     assert(total == 3 && kept.size == 1, s"kept ${kept.size} of $total")
     // a clustering curve reorders the whole live set — WHERE is loud
     val e = intercept[Exception](spark.sql(

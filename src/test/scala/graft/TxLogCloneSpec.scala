@@ -157,7 +157,7 @@ class TxLogCloneSpec extends AnyFunSuite {
           .repartition(1), Layout(stats = Seq("k")))
     }
     TxLog.shallowClone(spark, src, dst)
-    val (kept, total) = TxLog.pruneFiles(spark, dst, "k", 65L, 99L)
+    val (kept, total) = Skipping.kept(spark, dst, Skipping.between("k", 65L, 99L))
     assert(total == 3 && kept.size == 1,
       s"cloned stats must prune: scanned ${kept.size} of $total")
     assert(TxLog.read(spark, dst).filter(col("k") > 65).count() == 25)

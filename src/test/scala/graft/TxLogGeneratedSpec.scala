@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.EqualTo
 import org.apache.spark.sql.types.{LongType, StructField, StructType, StringType}
 import graft.sources.TxLog
 import graft.sources.TxLog.Layout
@@ -113,7 +114,13 @@ class TxLogGeneratedSpec extends AnyFunSuite {
     // the recorded partition values prune from the log alone
     assert(TxLog.partitionValuesAt(spark, t, "v_bucket")
       .map(_._2).toSet == Set("1", "2"))
-    val pruned = TxLog.readWherePartition(spark, t, "v_bucket", "1")
+    // a Long literal on the Long partition column prunes by the value's
+    // recorded string form
+    val recorded = TxLog.partitionValuesAt(spark, t, "v_bucket")
+    assert(TxLog.pruneForFilters(spark, t, Seq(EqualTo("v_bucket", 2L))).size == 1)
+    assert(TxLog.pruneForFilters(spark, t, Seq(EqualTo("v_bucket", 1L))).toSet ==
+      recorded.collect { case (f, "1") => f }.toSet)
+    val pruned = TxLog.read(spark, t).where(col("v_bucket") === 1L)
     assert(pruned.select("k").as[Long].collect().toSet == Set(1L, 3L))
     // a wrong explicit derivation still rejects through this path
     intercept[IllegalArgumentException](TxLog.append(spark, t,

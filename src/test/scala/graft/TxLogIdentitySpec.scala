@@ -1,6 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.sources.TxLog
@@ -10,8 +9,7 @@ import graft.sources.TxLog.Layout
   * log is the sequence — ids minted per commit against the persisted
   * high-water, unique and monotonic across commits, explicit values
   * rejected, unsupported write shapes loud. */
-class TxLogIdentitySpec extends AnyFunSuite {
-  private lazy val spark = SharedSpark.spark
+class TxLogIdentitySpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(prefix: String): String =
@@ -148,12 +146,12 @@ class TxLogIdentitySpec extends AnyFunSuite {
       Layout(stats = Seq("row_id")))
     TxLog.append(spark, t,
       Seq((4L, "d"), (5L, "e")).toDF("k", "s").coalesce(1), Layout(stats = Seq("row_id")))
-    val hit = TxLog.readWhere(spark, t, "row_id", 4L, 5L)
+    val hit = TxLog.read(spark, t).where(col("row_id").between(4L, 5L))
     assert(hit.select("k").as[Long].collect().toSet == Set(4L, 5L))
     // the skip decides FILES: the second commit's file alone serves it
-    assert(hit.inputFiles.length == 1,
-      s"id-range read must prune to the one covering file, " +
-        s"scanned ${hit.inputFiles.length}")
+    val scanned = scannedFiles(hit)
+    assert(scanned == 1,
+      s"id-range read must prune to the one covering file, scanned $scanned")
     // a stats column that is neither in the batch nor minted stays loud
     intercept[IllegalArgumentException](TxLog.append(spark, t,
       Seq((6L, "f")).toDF("k", "s"), Layout(stats = Seq("nope"))))

@@ -5,11 +5,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.connector.read.V1Scan
-import org.apache.spark.sql.sources.{BaseRelation, EqualTo, Filter, GreaterThan, In,
-  PrunedFilteredScan, TableScan}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.sources.{TxLog, TxLogV2Table}
+import org.apache.spark.sql.functions.col
+import graft.sources.TxLog
 import graft.sources.TxLog.Layout
 
 /** The local file system, counting `listStatus` and `getFileStatus`
@@ -294,46 +291,35 @@ class TxLogListingSpec extends SparkSpec {
     t
   }
 
-  /** The catalog table's V1 scan relation, as Spark's planner gets it. */
-  private def relation(t: String, asOf: Option[Long]): PrunedFilteredScan =
-    new TxLogV2Table(t, asOf).newScanBuilder(CaseInsensitiveStringMap.empty())
-      .build().asInstanceOf[V1Scan]
-      .toV1TableScan[BaseRelation with TableScan](spark.sqlContext)
-      .asInstanceOf[PrunedFilteredScan]
-
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).sorted.toSeq
 
   Seq(None -> "latest", Some(4L) -> "a pinned version").foreach { case (asOf, at) =>
     test(s"each skipping reader and the catalog's filtered scan list _log once at $at") {
-      import org.apache.spark.sql.functions.col
       val t = skippable(at.split(' ').last)
       val all = TxLog.read(spark, t, asOf)
-      val pushed: Array[Filter] =
-        Array(EqualTo("lang", "de"), GreaterThan("id", 3L), In("k", Array("k25", "k7")))
+      def read = TxLog.read(spark, t, asOf)
       val readers: Seq[(String, () => Seq[Long], Seq[Long])] = Seq(
-        ("readWhere", () => ids(TxLog.readWhere(spark, t, "id", 3L, 12L, asOf)),
+        ("read.where(id range)", () => ids(read.where(col("id").between(3L, 12L))),
           ids(all.filter(col("id").between(3L, 12L)))),
-        ("readWhereAll", () => ids(TxLog.readWhereAll(spark, t,
-          Seq(("id", 3L, 32L), ("id", 8L, 40L)), asOf)),
+        ("read.where(two id ranges)", () => ids(read.where(
+          col("id").between(3L, 32L) && col("id").between(8L, 40L))),
           ids(all.filter(col("id").between(8L, 32L)))),
-        ("readWhereString", () => ids(TxLog.readWhereString(spark, t, "s", "s1", "s2", asOf)),
+        ("read.where(string range)", () => ids(read.where(col("s").between("s1", "s2"))),
           ids(all.filter(col("s").between("s1", "s2")))),
-        ("readWhereEquals", () => ids(TxLog.readWhereEquals(spark, t, "k", "k25", asOf)),
+        ("read.where(bloomed equality)", () => ids(read.where(col("k") === "k25")),
           Seq(25L)),
-        ("readWherePartition", () => ids(TxLog.readWherePartition(spark, t, "lang", "de",
-          Seq(("id", 0L, 25L)), asOf)),
+        ("read.where(partition and range)", () => ids(read.where(
+          col("lang") === "de" && col("id").between(0L, 25L))),
           ids(all.filter(col("lang") === "de" && col("id").between(0L, 25L)))),
-        ("readWherePartitionAll", () => ids(TxLog.readWherePartitionAll(spark, t,
-          Seq(("lang", "en")), asOf = asOf)),
+        ("read.where(partition)", () => ids(read.where(col("lang") === "en")),
           ids(all.filter(col("lang") === "en"))),
-        // the relation returns the kept files' rows; Spark re-applies
+        // Spark re-applies every filter above the pruned scan
         ("catalog buildScan(requiredColumns, filters)", {
-          val rel = relation(t, asOf)
-          () => rel.buildScan(Array("id", "lang", "k"), pushed).collect()
-            .filter(r => r.getString(1) == "de" && r.getLong(0) > 3L &&
-              Set("k25", "k7")(r.getString(2)))
-            .map(_.getLong(0)).sorted.toSeq
+          val query = spark.sql(s"SELECT id FROM graft.`$t`" +
+            asOf.fold("")(v => s" VERSION AS OF $v") +
+            " WHERE lang = 'de' AND id > 3 AND k IN ('k25', 'k7')")
+          () => ids(query)
         }, ids(all.filter(col("lang") === "de" && col("id") > 3L &&
           col("k").isin("k25", "k7")))))
       readers.foreach { case (name, run, expected) =>
@@ -350,14 +336,9 @@ class TxLogListingSpec extends SparkSpec {
   test("a bloom IN list of one and of three values launches the same jobs") {
     val t = skippable("in")
     TxLog.read(spark, t).createOrReplaceTempView("txlog_in_plain")
-    val rel = relation(t, None)
-    def viaRelation(vs: String*): (Int, Seq[Long]) = {
+    def viaRead(vs: String*): (Int, Seq[Long]) = {
       var got: Seq[Long] = Nil
-      val jobs = jobsDuring {
-        got = rel.buildScan(Array("id", "k"), Array[Filter](In("k", vs.toArray[Any])))
-          .collect().filter(r => vs.contains(r.getString(1))).map(_.getLong(0))
-          .sorted.toSeq
-      }
+      val jobs = jobsDuring { got = ids(TxLog.read(spark, t).where(col("k").isin(vs: _*))) }
       (jobs, got)
     }
     def viaSql(table: String, in: String): (Int, Seq[Long]) = {
@@ -365,8 +346,8 @@ class TxLogListingSpec extends SparkSpec {
       val jobs = jobsDuring { got = ids(spark.sql(s"SELECT id FROM $table WHERE k IN ($in)")) }
       (jobs, got)
     }
-    val (oneJobs, one) = viaRelation("k25")
-    val (threeJobs, three) = viaRelation("k25", "k27", "k33")
+    val (oneJobs, one) = viaRead("k25")
+    val (threeJobs, three) = viaRead("k25", "k27", "k33")
     assert(one == Seq(25L) && three == Seq(25L, 27L, 33L))
     assert(oneJobs == threeJobs, s"IN of one value: $oneJobs jobs, of three: $threeJobs")
     Seq("'k25'", "'k25', 'k27', 'k33'").foreach { in =>
@@ -390,7 +371,7 @@ class TxLogListingSpec extends SparkSpec {
     val v = TxLog.latestVersion(spark, t)
     var read: DataFrame = null
     assert(ListingHook.armed(spark, t)(TxLog.compact(spark, t)) {
-      read = TxLog.readWhere(spark, t, "id", 0L, 29L)
+      read = TxLog.read(spark, t).where(col("id").between(0L, 29L))
     }, "the compaction must land inside the read")
     assert(TxLog.latestVersion(spark, t) == v + 1)
     val oneVersion = (0L until 30L).filterNot(_ == 5L)

@@ -99,6 +99,20 @@ class TxLogMorCommitSpec extends SparkSpec {
       (0L until 1001L).map(i => (i, -i)))
   }
 
+  test("jobs: mergeMor keyed on a bloom-filtered column reads its sidecars once") {
+    val t = Files.createTempDirectory("graft-morcommit-pin-merge-bloom").toString + "/t"
+    val rows = (0L until 300L).map(i => (i, s"k$i", i)).toDF("id", "k", "v")
+    TxLog.createTable(spark, t, org.apache.spark.sql.types.StructType(
+      rows.schema.fields.map(_.copy(nullable = true))))
+    (0 until 3).foreach(r => TxLog.append(spark, t,
+      rows.filter(col("id") % 3 === r).coalesce(1), Layout(bloom = Some("k"))))
+    val batch = Seq((5L, "k5", -1L), (999L, "k999", -2L)).toDF("id", "k", "v")
+    pinJobs(t, "merge", 7)(TxLog.mergeMor(spark, t, batch, Seq("k")))
+    assert(TxLog.read(spark, t).filter(col("k").isin("k5", "k999"))
+      .select("v").as[Long].collect().sorted.toSeq == Seq(-2L, -1L))
+    assert(TxLog.read(spark, t).count() == 301L)
+  }
+
   test("jobs: mergeMorConditional") {
     val t = fixture("pin-merge-cond")
     val batch = Seq((5L, "k1", 1L), (150L, "k2", 2L), (999L, "k3", 3L)).toDF("id", "k", "v")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.sources.EqualTo
 import graft.sources.TxLog
 import graft.sources.TxLog.Layout
 
@@ -153,8 +154,8 @@ class TxLogSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
     // the skipping readers take the same gate
     Seq[() => Any](
-      () => TxLog.readWhere(spark, t, "id", 1L, 60L, asOf = Some(cv - 1)),
-      () => TxLog.readWherePartition(spark, t, "s", "x1", asOf = Some(cv - 1))
+      () => TxLog.read(spark, t, Some(cv - 1)).where(col("id").between(1L, 60L)),
+      () => TxLog.read(spark, t, Some(cv - 1)).where(col("s") === "x1")
     ).foreach { r =>
       val e2 = intercept[IllegalArgumentException](r())
       assert(e2.getMessage.contains("vacuumed"), e2.getMessage)
@@ -428,7 +429,6 @@ class TxLogSpec extends SparkSpec {
   }
 
   test("restat re-records only the MISSING files' bounds, string columns included") {
-    import org.apache.spark.sql.sources.EqualTo
     val t = freshTable("restat")
     // wave 0 covered at append time; wave 1 lands unrecorded
     TxLog.append(spark, t,
@@ -824,7 +824,7 @@ class TxLogSpec extends SparkSpec {
     val pv = TxLog.partitionValuesAt(spark, t, "lang")
     assert(live.size == 4 && live.toSet == pv.keySet,
       s"every file must record its declared partition value: $pv")
-    val (kept, total) = TxLog.pruneFilesPartition(spark, t, "lang", "de")
+    val (kept, total) = Skipping.kept(spark, t, Seq(EqualTo("lang", "de")))
     assert(total == 4 && kept.toSet == pv.collect { case (f, "de") => f }.toSet,
       s"a partition probe must keep only the de files: kept $kept of $pv")
     val got = TxLog.read(spark, t).collect()
@@ -891,18 +891,18 @@ class TxLogSpec extends SparkSpec {
     val stats = TxLog.statsAt(spark, t, "id")
     assert(stats.size == 6, s"all six files must carry stats: $stats")
     // a window inside the first third prunes to ≤ 2 of 6 files
-    val (kept, live) = TxLog.pruneFiles(spark, t, "id", 10, 60)
+    val (kept, live) = Skipping.kept(spark, t, Skipping.between("id", 10, 60))
     assert(live == 6 && kept.size <= 2, s"kept ${kept.size} of $live")
     // pruned read ≡ full-scan filter, rows exact
-    val got = TxLog.readWhere(spark, t, "id", 10, 60)
+    val got = TxLog.read(spark, t).where(col("id").between(10, 60))
       .collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (10L to 60L), "skip decides files, never rows")
     // a file WITHOUT stats can never be skipped: plain append is opaque
     TxLog.append(spark, t, Seq((999L, "x")).toDF("id", "s"))
-    val (kept2, live2) = TxLog.pruneFiles(spark, t, "id", 10, 60)
+    val (kept2, live2) = Skipping.kept(spark, t, Skipping.between("id", 10, 60))
     assert(live2 == 7 && kept2.size == kept.size + 1,
       "the stats-less file must be conservatively kept")
-    assert(TxLog.readWhere(spark, t, "id", 900, 1000)
+    assert(TxLog.read(spark, t).where(col("id").between(900, 1000))
       .collect().map(_.getLong(0)).toSeq == Seq(999L))
   }
 
@@ -918,18 +918,19 @@ class TxLogSpec extends SparkSpec {
     // replay goes ckpt+suffix; every live file still has its stats
     assert(TxLog.statsAt(spark, t, "id").size ==
       TxLog.snapshotFiles(spark, t).size)
-    val (kept, live) = TxLog.pruneFiles(spark, t, "id", 0, 9)
+    val (kept, live) = Skipping.kept(spark, t, Skipping.between("id", 0, 9))
     assert(kept.size == 1 && live == 12, s"kept ${kept.size} of $live")
     // clustered rewrite re-records stats for the new disjoint layout
     TxLog.compactClusteredWithStats(spark, t, files = 3, "id")
-    val (kept2, live2) = TxLog.pruneFiles(spark, t, "id", 0, 9)
+    val (kept2, live2) = Skipping.kept(spark, t, Skipping.between("id", 0, 9))
     assert(live2 == 3 && kept2.size == 1,
       s"after clustered compact: kept ${kept2.size} of $live2")
-    assert(TxLog.readWhere(spark, t, "id", 0, 9)
+    assert(TxLog.read(spark, t).where(col("id").between(0, 9))
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 9L))
     // time travel: stats as of the pre-compact version still prune there
     val preCompact = TxLog.versions(spark, t).takeRight(2).head
-    val (kept3, live3) = TxLog.pruneFiles(spark, t, "id", 0, 9, Some(preCompact))
+    val (kept3, live3) = Skipping.kept(spark, t, Skipping.between("id", 0, 9),
+      Some(preCompact))
     assert(live3 == 12 && kept3.size == 1, "pinned-version pruning must use that version's stats")
   }
 
@@ -958,10 +959,10 @@ class TxLogSpec extends SparkSpec {
     // rewritten file carries fresh stats spanning the hole (min/max can't
     // express a gap — inherent to range stats): a read inside the erased
     // range keeps ONLY that file and still returns zero rows exactly
-    val (keptGap, liveGap) = TxLog.pruneFiles(spark, t, "id", 125, 145)
+    val (keptGap, liveGap) = Skipping.kept(spark, t, Skipping.between("id", 125, 145))
     assert(keptGap.size == 1 && liveGap == 3,
       s"only the rewritten file may survive the prune: $keptGap")
-    assert(TxLog.readWhere(spark, t, "id", 125, 145).count() == 0L)
+    assert(TxLog.read(spark, t).where(col("id").between(125, 145)).count() == 0L)
     // a delete whose range no live stats intersect is a no-op (no commit)
     val v2 = TxLog.deleteWhere(spark, t, "id", 5000, 6000)
     assert(v2 == v && TxLog.latestVersion(spark, t) == v, "no-op delete must not commit")
@@ -997,8 +998,9 @@ class TxLogSpec extends SparkSpec {
     assert(TxLog.read(spark, t).filter($"id".isin(119L, 151L)).count() == 2L)
     // pinned pre-delete read: no vector applies at that version
     assert(TxLog.read(spark, t, Some(preVersion)).count() == 300L)
-    // readWhere honors the vectors on its kept files too
-    assert(TxLog.readWhere(spark, t, "id", 110, 160).count() == (110L to 160L).size - 31L)
+    // a skipping read honors the vectors on its kept files too
+    assert(TxLog.read(spark, t).where(col("id").between(110, 160)).count() ==
+      (110L to 160L).size - 31L)
     // second OVERLAPPING delete re-masks the same file: positions union
     TxLog.deleteWhereMor(spark, t, "id", 140, 180)
     assert(TxLog.snapshotFiles(spark, t) == before)
@@ -1065,13 +1067,13 @@ class TxLogSpec extends SparkSpec {
         Layout(stats = Seq("a", "b")))
     }
     // box over a-range 0, b-range 1: exactly one of four files survives
-    val (kept, live) = TxLog.pruneFilesMulti(spark, t,
-      Seq(("a", 0L, 100L), ("b", 1000L, 1100L)))
+    val box = Seq(("a", 0L, 100L), ("b", 1000L, 1100L))
+    val (kept, live) = Skipping.kept(spark, t, Skipping.ranges(box))
     assert(live == 4 && kept.size == 1, s"$kept of $live")
-    val got = TxLog.readWhereAll(spark, t, Seq(("a", 0L, 100L), ("b", 1000L, 1100L)))
+    val got = TxLog.read(spark, t).where(col("a").between(0L, 100L) && col("b").between(1000L, 1100L))
     assert(got.count() == 50L)
     // a predicate on a column with NO recorded stats keeps every file
-    val (keptNoStats, _) = TxLog.pruneFilesMulti(spark, t, Seq(("nope", 0L, 1L)))
+    val (keptNoStats, _) = Skipping.kept(spark, t, Skipping.ranges(Seq(("nope", 0L, 1L))))
     assert(keptNoStats.size == 4, "absence of stats must never skip")
   }
 
@@ -1090,15 +1092,15 @@ class TxLogSpec extends SparkSpec {
       "rename must move zero data files")
     assert(TxLog.read(spark, t).columns.toSeq == Seq("key", "s"))
     // stats recorded under the OLD name still prune via the new one
-    val (kept, live) = TxLog.pruneFiles(spark, t, "key", 0, 50)
+    val (kept, live) = Skipping.kept(spark, t, Skipping.between("key", 0, 50))
     assert(live == 2 && kept.size == 1, s"$kept of $live")
-    assert(TxLog.readWhere(spark, t, "key", 0, 50).count() == 51L)
+    assert(TxLog.read(spark, t).where(col("key").between(0, 50)).count() == 51L)
     // appends under the new name carry stats that compose with the old
     TxLog.append(spark, t,
       (200L until 300L).map(i => (i, s"r$i")).toDF("key", "s").coalesce(1),
       Layout(stats = Seq("key")))
-    assert(TxLog.readWhere(spark, t, "key", 150, 250).count() == 101L)
-    val (kept3, live3) = TxLog.pruneFiles(spark, t, "key", 250, 260)
+    assert(TxLog.read(spark, t).where(col("key").between(150, 250)).count() == 101L)
+    val (kept3, live3) = Skipping.kept(spark, t, Skipping.between("key", 250, 260))
     assert(live3 == 3 && kept3.size == 1)
     // the old name is gone: appending under it fails loudly
     intercept[IllegalArgumentException](
@@ -1112,7 +1114,7 @@ class TxLogSpec extends SparkSpec {
     // compaction under mapping: physical layout rewritten, reads stable
     TxLog.compactClusteredWithStats(spark, t, 3, "key")
     assert(TxLog.read(spark, t).count() == 300L)
-    assert(TxLog.readWhere(spark, t, "key", 0, 50).count() == 51L)
+    assert(TxLog.read(spark, t).where(col("key").between(0, 50)).count() == 51L)
   }
 
   test("column mapping: drop hides the column; re-add never resurrects dropped data") {
@@ -1167,19 +1169,19 @@ class TxLogSpec extends SparkSpec {
       val rows = (0 until 40).map(k => (i * 100L + k, s"$lo-word-$k"))
       TxLog.append(spark, t, rows.toDF("id", "s").coalesce(1), Layout(stats = Seq("s")))
     }
-    val (kept, live) = TxLog.pruneFilesString(spark, t, "s", "a", "f")
+    val (kept, live) = Skipping.kept(spark, t, Skipping.between("s", "a", "f"))
     assert(live == 3 && kept.size == 1, s"$kept of $live")
-    assert(TxLog.readWhereString(spark, t, "s", "a", "f").count() == 40L)
+    assert(TxLog.read(spark, t).where(col("s").between("a", "f")).count() == 40L)
     // a range spanning two files' bounds keeps exactly those two
-    val (kept2, _) = TxLog.pruneFilesString(spark, t, "s", "a", "h")
+    val (kept2, _) = Skipping.kept(spark, t, Skipping.between("s", "a", "h"))
     assert(kept2.size == 2)
     // stats-less files are conservatively kept: a plain append joins in
     TxLog.append(spark, t, Seq((999L, "zz")).toDF("id", "s"))
-    val (kept3, live3) = TxLog.pruneFilesString(spark, t, "s", "a", "f")
+    val (kept3, live3) = Skipping.kept(spark, t, Skipping.between("s", "a", "f"))
     assert(live3 == 4 && kept3.size == 2, "absence of stats must never skip")
-    assert(TxLog.readWhereString(spark, t, "s", "a", "f").count() == 40L)
+    assert(TxLog.read(spark, t).where(col("s").between("a", "f")).count() == 40L)
     // skip decides files, never rows: equals the plain filtered read
-    assert(TxLog.readWhereString(spark, t, "s", "e", "h").count() ==
+    assert(TxLog.read(spark, t).where(col("s").between("e", "h")).count() ==
       TxLog.read(spark, t).filter($"s".between("e", "h")).count())
   }
 
@@ -1265,7 +1267,7 @@ class TxLogSpec extends SparkSpec {
     // writes keep working after the restore (schema + stats composing)
     TxLog.append(spark, t,
       Seq((500L, "post")).toDF("id", "s").coalesce(1), Layout(stats = Seq("id")))
-    assert(TxLog.readWhere(spark, t, "id", 500, 500).count() == 1L)
+    assert(TxLog.read(spark, t).where(col("id").between(500, 500)).count() == 1L)
   }
 
   test("history + timestamp time travel: per-commit kinds and a monotone clock mapping") {
